@@ -9,7 +9,7 @@ them are partial-aggregatable (map-side combine) so they scale linearly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from orion_spark.model import NODE_ID, OBJECT, PREDICATE, SUBJECT
@@ -19,10 +19,17 @@ from orion_spark.model import NODE_ID, OBJECT, PREDICATE, SUBJECT
 # A9: QC aggregations (orion/kgx_validation.py:44-204)
 # ---------------------------------------------------------------------------
 
+MISSING_PRIMARY_KNOWLEDGE_SOURCE = "missing_primary_knowledge_source"
+
+
+def _curie_prefix() -> Column:
+    return F.split(F.col(NODE_ID), ":").getItem(0)
+
+
 def curie_prefix_counts(nodes: DataFrame) -> DataFrame:
     """Node-id CURIE prefix histogram."""
     return (
-        nodes.select(F.split(F.col(NODE_ID), ":").getItem(0).alias("prefix"))
+        nodes.select(_curie_prefix().alias("prefix"))
         .groupBy("prefix")
         .agg(F.count("*").alias("n"))
     )
@@ -31,6 +38,52 @@ def curie_prefix_counts(nodes: DataFrame) -> DataFrame:
 def predicate_counts(edges: DataFrame) -> DataFrame:
     """Edge count per predicate."""
     return edges.groupBy(PREDICATE).agg(F.count("*").alias("n"))
+
+
+def node_census(nodes: DataFrame) -> DataFrame:
+    """One node aggregate for the metadata sidecars: per CURIE prefix,
+    the node count and the set of first categories seen under it —
+    the prefix histogram, the node count (its sum) and the category
+    vocabulary `spo_type_counts` encodes with (the union of the sets).
+
+    Keyed on the prefix alone, exactly like `curie_prefix_counts`, so
+    the histogram comes back in the same row order; the first category
+    rides along as a set-valued aggregate (partial-aggregatable, each
+    set bounded by the category vocabulary). Returns (prefix, n,
+    categories)."""
+    first_cat = (
+        F.col("category").getItem(0)
+        if "category" in nodes.columns
+        else F.lit(None).cast("string")
+    )
+    return nodes.groupBy(_curie_prefix().alias("prefix")).agg(
+        F.count("*").alias("n"), F.collect_set(first_cat).alias("categories")
+    )
+
+
+def edge_census(edges: DataFrame) -> DataFrame:
+    """One edge aggregate for the metadata sidecars: per predicate, the
+    edge count and the set of knowledge sources — primary (null becomes
+    ``missing_primary_knowledge_source``, the validation default) plus
+    every aggregator source when that column exists. Gives
+    `predicate_counts` (same key, same row order), the edge count and
+    the knowledge-source set validation checks, in one scan. Returns
+    (predicate, n, knowledge_sources)."""
+    sources = F.collect_set(
+        F.coalesce(
+            F.col("primary_knowledge_source"),
+            F.lit(MISSING_PRIMARY_KNOWLEDGE_SOURCE),
+        )
+    )
+    if "aggregator_knowledge_source" in edges.columns:
+        # a set of the (few distinct) aggregator lists, flattened
+        sources = F.array_union(
+            sources,
+            F.flatten(F.collect_set("aggregator_knowledge_source")),
+        )
+    return edges.groupBy(PREDICATE).agg(
+        F.count("*").alias("n"), sources.alias("knowledge_sources")
+    )
 
 
 def publications_per_predicate(edges: DataFrame) -> DataFrame:
@@ -48,6 +101,7 @@ def spo_type_counts(
     nodes: DataFrame,
     n_nodes: int | None = None,
     broadcast_max_nodes: int = 32_000_000,
+    categories: list[str] | None = None,
 ) -> DataFrame:
     """J6 + A9: (subject-category, predicate, object-category) triple counts.
 
@@ -62,14 +116,15 @@ def spo_type_counts(
     both endpoint joins and the edge set never shuffles at all. Above the
     cap, a slim sort-merge path ships only (subject, object, int codes) —
     roughly half the bytes of joining raw category/predicate strings.
-    Exact either way; `n_nodes` lets callers that already know the node
-    count (the sidecar writer observes it during the bundle write) skip
-    the extra count job.
+    Exact either way. Callers that already hold the node count and the
+    first-category vocabulary (the sidecar writer gets both from its
+    census) pass them and skip the count and distinct-collect jobs;
+    null vocabulary entries are ignored.
     """
     first_cat = F.col("category").getItem(0)
-    cat_vocab = sorted(
-        r[0] for r in nodes.select(first_cat).distinct().collect() if r[0] is not None
-    )
+    if categories is None:
+        categories = [r[0] for r in nodes.select(first_cat).distinct().collect()]
+    cat_vocab = sorted(c for c in categories if c is not None)
     code_of = F.create_map(
         *[F.lit(x) for c, i in ((c, i) for i, c in enumerate(cat_vocab)) for x in (c, i)]
     ) if cat_vocab else F.create_map().cast("map<string,int>")

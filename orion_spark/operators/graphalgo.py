@@ -881,9 +881,15 @@ def random_walks(
         # (partitionBy src, orderBy _bkt) spec — ≤ rank_buckets rows per
         # partition by construction — so one sort computes offset AND
         # out-degree total.
+        # collect (_bkt, dst) structs like the whole-src path: a struct is
+        # never null, so a null dst is kept here too (a bare
+        # collect_list("dst") would drop it and shift every rank after it)
         wb = Window.partitionBy("src").orderBy("_bkt")
         hb = hub.groupBy("src", "_bkt").agg(
-            F.array_sort(F.collect_list("dst")).alias("_dsts")
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("_bkt", "dst"))),
+                lambda s: s["dst"],
+            ).alias("_dsts")
         )
         hub_adj = hb.select(
             "src",

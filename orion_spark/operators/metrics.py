@@ -4,13 +4,15 @@ should report the counters ORION tracks as metadata — merge counts
 counts (orion/kgx_file_normalizer.py:204-221,355-364), per-prefix stats
 (366-401)).
 
-Each report is a handful of small aggregates collected driver-side; the
-heavy inputs are only scanned, never materialized to the driver.
+Each report is a handful of small aggregates collected into Python; the
+heavy inputs are only scanned, never collected. The
+merge report scans only the raw sources: the merged counts are observed
+on the bundle write that produces them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -18,19 +20,37 @@ from orion_spark.model import NODE_ID, OBJECT, SUBJECT
 from orion_spark.operators.normalize import prefix_stats
 
 
-def merge_report(raw_nodes: DataFrame, merged_nodes: DataFrame,
-                 raw_edges: DataFrame, merged_edges: DataFrame) -> dict:
+def merge_report(raw_nodes: DataFrame, raw_edges: DataFrame,
+                 merged_nodes: int, merged_edges: int) -> dict:
     """Counts before/after the merge stage (orion/kgx_file_merger.py:84-100
-    tracks source/merged counts per source)."""
-    rn, mn = raw_nodes.count(), merged_nodes.count()
-    re_, me = raw_edges.count(), merged_edges.count()
+    tracks source/merged counts per source).
+
+    `merged_nodes`/`merged_edges` are the written bundle's counts (the
+    write's observed metrics, `write_bundle(collect_counts=True)`). Both
+    raw counts come from ONE Spark job: the two raw frames, projected to
+    a side flag, union into a no-op write whose observed metrics count
+    each side — no shuffle, so no second job for a final aggregate."""
+    obs = Observation()
+    (
+        raw_nodes.select(F.lit(True).alias("_node"))
+        .unionByName(raw_edges.select(F.lit(False).alias("_node")))
+        .observe(
+            obs,
+            F.count_if(F.col("_node")).alias("nodes"),
+            F.count_if(~F.col("_node")).alias("edges"),
+        )
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    rn, re_ = int(obs.get["nodes"]), int(obs.get["edges"])
     return {
         "source_nodes": rn,
-        "merged_nodes": mn,
-        "nodes_merged_away": rn - mn,
+        "merged_nodes": merged_nodes,
+        "nodes_merged_away": rn - merged_nodes,
         "source_edges": re_,
-        "merged_edges": me,
-        "edges_merged_away": re_ - me,
+        "merged_edges": merged_edges,
+        "edges_merged_away": re_ - merged_edges,
     }
 
 
@@ -89,14 +109,3 @@ def normalization_report(
         "prefix_stats": [r.asDict() for r in prefix_stats(nodes, norm_map).collect()],
     }
 
-
-def observe_extract(df: DataFrame, name: str = "extract") -> DataFrame:
-    """P9: attach row-level counters that materialize with the next action
-    (Spark observe API) — the declarative version of the reference's
-    load_metadata skip counts (orion/extractor.py:21,56,66). Read them from
-    the observation after an action via `df.sparkSession` listeners or
-    `Observation` objects in callers that need exact values."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows_out"),
-    )

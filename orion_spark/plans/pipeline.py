@@ -230,9 +230,14 @@ def build_graph(
     - `dont_merge` appends verbatim after the merge
 
     `recorder` (plans/stage_metrics.PhaseRecorder) splits the build's
-    actions into measured phases — write_nodes / write_edges (where the
-    merge lineage executes), metadata_sidecars, merge_report — each with
-    shuffle/IO byte totals; see tools/build_stage_metrics.py.
+    actions into measured phases, each with shuffle/IO byte totals (see
+    tools/build_stage_metrics.py):
+    - write_nodes / write_edges: the merge lineage executes here, and the
+      writes observe the merged node and edge counts;
+    - metadata_sidecars: the node census, edge census and spo-type census
+      over the written bundle, which is read back with the written
+      frames' schemas (no inference job);
+    - merge_report: one job counting both raw source sides.
     """
     if recorder is None:
         from orion_spark.plans.stage_metrics import NullRecorder
@@ -300,18 +305,21 @@ def build_graph(
         merged_nodes = union_all([merged_nodes, v_nodes]).dropDuplicates(["id"])
         merged_edges = union_all([merged_edges, v_edges])
 
-    counts = write_bundle(
+    merged_counts = write_bundle(
         merged_nodes, merged_edges, out_dir, fmt=spec.output_format,
         recorder=recorder, collect_counts=True,
     )
-    nodes_back, edges_back = read_bundle(spark, out_dir, fmt=spec.output_format)
+    nodes_back, edges_back = read_bundle(
+        spark, out_dir, fmt=spec.output_format,
+        schemas=(merged_nodes.schema, merged_edges.schema),
+    )
     with recorder.phase("metadata_sidecars"):
         write_metadata_sidecars(
-            spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir,
-            node_count=counts[0], edge_count=counts[1],
+            spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir
         )
     # merge counters sidecar (kgx_file_merger.py:84-100): totals across
-    # every source tier (primary + subset + verbatim) vs the final bundle
+    # every source tier (primary + subset + verbatim) vs the final bundle,
+    # whose counts the write observed
     from orion_spark.operators.metrics import merge_report
     from orion_spark.sinks.metadata import write_merge_sidecar
 
@@ -327,7 +335,7 @@ def build_graph(
     )
     with recorder.phase("merge_report"):
         write_merge_sidecar(
-            merge_report(raw_nodes, nodes_back, raw_edges, edges_back), out_dir
+            merge_report(raw_nodes, raw_edges, *merged_counts), out_dir
         )
     with open(done_marker, "w") as fh:
         fh.write(spec.build_version)

@@ -4305,10 +4305,12 @@ def _register_random_walks():
         order-part bipartite graph — the DeepWalk/node2vec sampling pass
         with the RNG replaced by a keyed md5 pick, so an inherently
         randomized training-data generator is value-checked
-        cross-engine. Ranked adjacency + degree tables are built once
-        and persisted pre-partitioned on the join key; each of the 4
-        steps shuffles only the walk frontier (reference has no graph-ML
-        surface; north-star extension)."""
+        cross-engine. The adjacency is built once as per-src neighbor
+        arrays sorted by (md5-bucket, dst), each row carrying its
+        out-degree, and persisted pre-partitioned on src; each of the 4
+        steps is one join of the walk frontier against it plus an
+        element_at pick (reference has no graph-ML surface; north-star
+        extension)."""
         li = _t(spark, sf_dir, "lineitem")
         # symmetrize via a single explode instead of a 2-branch union:
         # Spark does not share common subtrees across union branches, so
@@ -4380,9 +4382,10 @@ def _register_walk_skipgrams():
         """Skip-gram (center, context, count) pairs within a 2-step
         window over the deterministic walks — the full
         walk->training-pairs chain of a DeepWalk pipeline, value-checked
-        end to end. The pair join is equi on walk_id with bounded
-        fan-out (walks are walk_length+1 rows), then one count
-        aggregate."""
+        end to end. One groupBy(walk_id) collect_list gathers each
+        walk's walk_length+1 (step, node) rows, the in-window pairs are
+        enumerated in-row by a transform/filter over that array (no
+        self-join), then one count aggregate."""
         li = _t(spark, sf_dir, "lineitem")
         # single-explode symmetrization (round 12): the 2-branch union
         # evaluated e0's 600k-row string dedup once PER BRANCH — Spark
@@ -11005,12 +11008,15 @@ def skew_walk_skipgrams_q(spark, sf_dir):
     """DeepWalk sampling + skip-gram extraction on the REGISTERED
     power-law fixture — the hub regime the round-10 verdict flagged for
     the walk adjacency: hub 0 owns N/2 spoke neighbors (50,000 at
-    sf0.1), which a single row_number-over-src window ranks in ONE task.
-    Round 11's two-level ranking (rank within (src, md5-bucket-of-dst),
-    re-based by a per-(src, bucket) cumulative-count offset — every
-    stage partial-aggregatable or bounded) splits the hub across
-    rank_buckets window partitions; this query certifies that plan on
-    real skew in every sweep. Starts = every 199th base node + all 16
+    sf0.1). Srcs above the hub-degree gate hold one neighbor array per
+    (src, md5-bucket-of-dst), each bounded at the bucket size and
+    re-based to the global rank by a cumulative bucket-size offset
+    window over at most rank_buckets rows per src; every other src holds
+    its whole sorted neighbor array in one row. Both paths realize the
+    same (bucket, dst) order. The hub path's rows are partitioned on src,
+    so one task still handles a hub's whole edge set; this query
+    certifies the plan on real skew in every sweep. Starts = every 199th
+    base node + all 16
     hubs, so walks both leave and pass through the hot node; full value
     oracle replays the (bucket, dst) neighbor order and the md5 pick
     bit-for-bit."""

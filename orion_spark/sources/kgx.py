@@ -114,12 +114,22 @@ def write_bundle(
 
 
 def read_bundle(
-    spark: SparkSession, path: str, fmt: str = "parquet"
+    spark: SparkSession, path: str, fmt: str = "parquet",
+    schemas: tuple[T.StructType, T.StructType] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
+    """Read a bundle's (nodes, edges).
+
+    `schemas` are the (node, edge) schemas of the frames the bundle was
+    just written from. Parquet keeps a frame's schema as written, so a
+    parquet read given them skips the footer schema-inference job each
+    side otherwise runs. JSON lines do not round-trip a schema (the
+    writer prunes empties, the reader widens numbers and drops all-null
+    columns), so a jsonl read always infers."""
     if fmt == "parquet":
+        node_schema, edge_schema = schemas or (None, None)
         return (
-            spark.read.parquet(os.path.join(path, "nodes")),
-            spark.read.parquet(os.path.join(path, "edges")),
+            spark.read.load(os.path.join(path, "nodes"), "parquet", node_schema),
+            spark.read.load(os.path.join(path, "edges"), "parquet", edge_schema),
         )
     return (
         read_kgx_nodes(spark, os.path.join(path, "nodes")),

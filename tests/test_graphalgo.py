@@ -278,6 +278,37 @@ def test_random_walks_hub_gate_invariant(spark):
     assert len(outs[0]) > 0
 
 
+def test_random_walks_null_dst_same_on_both_gate_paths(spark):
+    """A null dst is a neighbor on both adjacency paths: it takes the
+    same rank and counts in the same out-degree whether its src is a
+    hub or not, so the walks (some of which step onto the null and end
+    there) are identical under every threshold."""
+    from pyspark.sql import Row
+
+    from orion_spark.operators.graphalgo import random_walks
+
+    rows = [Row(src="h", dst=f"s{i:02d}") for i in range(30)]
+    rows += [Row(src=f"s{i:02d}", dst="h") for i in range(30)]
+    rows += [Row(src=f"s{i:02d}", dst=None) for i in range(0, 30, 3)]
+    rows += [Row(src="h", dst=None)]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+
+    outs = [
+        sorted(
+            map(
+                tuple,
+                random_walks(
+                    edges, walk_length=4, seed=7, hub_degree_threshold=th
+                ).collect(),
+            ),
+            key=lambda r: (r[0], r[1], r[2] or ""),
+        )
+        for th in (0, 10, 10**9)
+    ]
+    assert outs[0] == outs[1] == outs[2]
+    assert any(node is None for _, _, node in outs[0])
+
+
 def test_triangle_sampled_full_keep_is_exact(spark):
     """keep == denom (p = 1) degenerates to the exact count: every edge
     survives, the scale factor is 1, est == exact."""

@@ -233,7 +233,7 @@ def test_merge_and_normalization_sidecars(spark, tmp_path):
     merged_e = raw_e.dropDuplicates()
     out = str(tmp_path / "sidecars")
     MD.write_merge_sidecar(
-        MX.merge_report(raw, merged, raw_e, merged_e), out
+        MX.merge_report(raw, raw_e, merged.count(), merged_e.count()), out
     )
     rep = json.load(open(os.path.join(out, "merge-metadata.json")))
     assert rep["source_nodes"] == 3 and rep["merged_nodes"] == 2

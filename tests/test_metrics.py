@@ -20,7 +20,8 @@ def test_merge_report(spark):
              primary_knowledge_source="i", _source_ordinal=1)]
     )
     rep = MX.merge_report(
-        raw_nodes, merge_nodes(raw_nodes), raw_edges, merge_edges(raw_edges)
+        raw_nodes, raw_edges,
+        merge_nodes(raw_nodes).count(), merge_edges(raw_edges).count(),
     )
     assert rep["source_nodes"] == 3 and rep["merged_nodes"] == 2
     assert rep["nodes_merged_away"] == 1
