@@ -49,8 +49,9 @@ def pagerank(
         pr_0(v)   = 1/N
         pr_k+1(v) = (1-d)/N + d * sum_{(u,v) in E} pr_k(u) / outdeg(u)
 
-    Returns (id, pr) for every node. Deterministic up to float summation
-    order; callers round for cross-engine comparison.
+    Returns (id, pr) for every node, and an empty frame for an empty
+    graph. Deterministic up to float summation order; callers round for
+    cross-engine comparison.
     """
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     nodes = (
@@ -60,6 +61,8 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("pr", F.lit(0.0))
     deg = e.groupBy("_src").agg(F.count("*").alias("_outdeg"))
     # (src, dst, outdeg) is loop-invariant: materialize once, reuse per round
     graph = e.join(deg, "_src").localCheckpoint(eager=True)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from orion_spark.functions.scalars import flatten_ws
 from orion_spark.model import (
     FALLBACK_EDGE_PREDICATE,
     NODE_ID,
@@ -213,7 +214,7 @@ def flatten_whitespace(df: DataFrame, columns: list[str]) -> DataFrame:
     applied at orion/kgx_file_converter.py:369-374) — Neo4j-CSV safety."""
     out = df
     for c in columns:
-        out = out.withColumn(c, F.regexp_replace(F.col(c), r"[\n\r\t]", " "))
+        out = out.withColumn(c, flatten_ws(F.col(c)))
     return out
 
 

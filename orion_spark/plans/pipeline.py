@@ -23,6 +23,7 @@ import hashlib
 import json
 import os
 import shutil
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 import yaml
@@ -229,9 +230,12 @@ def build_graph(
     - `connected_edge_subset` keeps only rows touching the primary set (J4)
     - `dont_merge` appends verbatim after the merge
 
-    `recorder` (plans/stage_metrics.PhaseRecorder) splits the build's
-    actions into measured phases, each with shuffle/IO byte totals (see
-    tools/build_stage_metrics.py):
+    `recorder` (plans/stage_metrics.PhaseRecorder) runs the build's
+    actions as named phases, each under its own job group, so the status
+    tracker or the event log can attribute their jobs, tasks and shuffle
+    bytes (see tools/build_stage_metrics.py). The bundle reads stay under
+    the caller's job group, and without a recorder the build sets none.
+    The phases:
     - write_nodes / write_edges: the merge lineage executes here, and the
       writes observe the merged node and edge counts;
     - metadata_sidecars: the node census, edge census and spo-type census
@@ -239,10 +243,7 @@ def build_graph(
       frames' schemas (no inference job);
     - merge_report: one job counting both raw source sides.
     """
-    if recorder is None:
-        from orion_spark.plans.stage_metrics import NullRecorder
-
-        recorder = NullRecorder()
+    phase = recorder.phase if recorder else lambda _: nullcontext()
     out_dir = os.path.join(storage, "graphs", spec.graph_id, spec.build_version)
     done_marker = os.path.join(out_dir, "_BUILD_COMPLETE")
     if os.path.exists(done_marker) and not force:
@@ -313,7 +314,7 @@ def build_graph(
         spark, out_dir, fmt=spec.output_format,
         schemas=(merged_nodes.schema, merged_edges.schema),
     )
-    with recorder.phase("metadata_sidecars"):
+    with phase("metadata_sidecars"):
         write_metadata_sidecars(
             spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir
         )
@@ -333,7 +334,7 @@ def build_graph(
         + [e for _, e in subset_sources]
         + [e for _, e in verbatim]
     )
-    with recorder.phase("merge_report"):
+    with phase("merge_report"):
         write_merge_sidecar(
             merge_report(raw_nodes, raw_edges, *merged_counts), out_dir
         )

@@ -1,131 +1,52 @@
-"""Measured per-phase shuffle/IO accounting for composed pipelines.
+"""Named driver-side phases of a composed run, each its own Spark job group.
 
-SCALE.md's shuffle-accounting table stated where each operator family
-shuffles; this module turns those *asserted* rows into *measured* ones.
-Wrap each driver-side phase of a composed run in `PhaseRecorder.phase(...)`:
-the recorder snapshots the completed-job set through the Spark UI REST API
-(`/api/v1`, the stable monitoring surface) before and after the phase, then
-attributes every new job's stages to it and sums input / output /
-shuffle-read / shuffle-write bytes.
+Wrap each phase in `PhaseRecorder.phase(name)`: the jobs its block starts
+carry the job group `{tag}.{name}`, so the status tracker counts them
+while the session runs (`jobs(name)`) and the Spark event log attributes
+their stages and tasks after it stops (`perfbench/eventlog.parse`, as
+`tools/build_stage_metrics.py` does). The recorder itself keeps only each
+phase's wall time, and needs no Spark UI.
 
-Design notes:
-- Attribution is by job-id delta, not job groups: phases run sequentially
-  on the driver, so "jobs that appeared during the phase" is exact and
-  needs no thread-local group state.
-- Skipped stages (reused exchanges under AQE or shared lineage) surface no
-  metrics and contribute zero bytes — the honest accounting: a reused
-  shuffle is not re-paid.
-- Requires `spark.ui.enabled=true`. The engine's default sessions keep the
-  UI off (orion_spark/session.py), so measured runs opt in with their own
-  session (see tools/build_stage_metrics.py); constructing a recorder on a
-  UI-less session raises immediately with the config to set.
-
-On a real cluster the identical numbers come from the history server with
-the same endpoint shapes, so the accounting carries over beyond local[N].
+On exit, normal or not, a phase puts back the caller's job group and
+description, so jobs started between phases stay attributed to whatever
+group the caller set.
 """
 
 from __future__ import annotations
 
-import json
 import time
-import urllib.request
 from contextlib import contextmanager
 
 
-class NullRecorder:
-    """No-op stand-in so instrumented call sites need no branching."""
-
-    @contextmanager
-    def phase(self, name: str):
-        yield
-
-    def report(self) -> list[dict]:
-        return []
-
-
 class PhaseRecorder:
-    """Attributes per-stage byte metrics to named driver-side phases."""
+    """Runs named phases under job groups `{tag}.{name}` and records
+    their wall seconds in `walls`, in phase order."""
 
-    def __init__(self, spark):
-        sc = spark.sparkContext
-        self._base = sc.uiWebUrl
-        if not self._base:
-            raise RuntimeError(
-                "PhaseRecorder needs the Spark UI REST API: create the "
-                "session with spark.ui.enabled=true (the engine default "
-                "disables it; see tools/build_stage_metrics.py)"
-            )
-        self._app = sc.applicationId
-        self.phases: list[dict] = []
+    def __init__(self, spark, tag: str):
+        self.sc = spark.sparkContext
+        self.tag = tag
+        self.walls: dict[str, float] = {}
 
-    def _get(self, path: str):
-        url = f"{self._base}/api/v1/applications/{self._app}/{path}"
-        with urllib.request.urlopen(url) as resp:
-            return json.load(resp)
+    def group(self, name: str) -> str:
+        return f"{self.tag}.{name}"
 
-    def _job_ids(self) -> set[int]:
-        return {j["jobId"] for j in self._get("jobs")}
+    def _label(self, group: str | None, description: str | None) -> None:
+        self.sc.setLocalProperty("spark.jobGroup.id", group)
+        self.sc.setLocalProperty("spark.job.description", description)
 
     @contextmanager
     def phase(self, name: str):
-        before = self._job_ids()
-        t0 = time.monotonic()
-        yield
-        wall = time.monotonic() - t0
-        jobs = [j for j in self._get("jobs") if j["jobId"] not in before]
-        stage_ids = {sid for j in jobs for sid in j.get("stageIds", [])}
-        # stages endpoint returns one entry per attempt; completed attempts
-        # carry the executor-summed byte metrics
-        seen: set[tuple[int, int]] = set()
-        totals = {
-            "input_bytes": 0,
-            "output_bytes": 0,
-            "shuffle_read_bytes": 0,
-            "shuffle_write_bytes": 0,
-        }
-        n_stages = 0
-        for s in self._get("stages"):
-            key = (s["stageId"], s.get("attemptId", 0))
-            if s["stageId"] not in stage_ids or key in seen:
-                continue
-            seen.add(key)
-            if s.get("status") not in ("COMPLETE", "ACTIVE"):
-                continue  # SKIPPED/PENDING: no work executed, no bytes
-            n_stages += 1
-            totals["input_bytes"] += s.get("inputBytes", 0)
-            totals["output_bytes"] += s.get("outputBytes", 0)
-            totals["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-            totals["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        self.phases.append(
-            {
-                "phase": name,
-                "wall_s": round(wall, 3),
-                "n_jobs": len(jobs),
-                "n_stages": n_stages,
-                **totals,
-            }
-        )
+        caller = (self.sc.getLocalProperty("spark.jobGroup.id"),
+                  self.sc.getLocalProperty("spark.job.description"))
+        self._label(self.group(name), name)
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.walls[name] = (self.walls.get(name, 0.0)
+                                + time.perf_counter() - t0)
+            self._label(*caller)
 
-    def report(self) -> list[dict]:
-        return list(self.phases)
-
-
-def report_markdown(phases: list[dict]) -> str:
-    """Render a recorder report as the SCALE.md measured-bytes table."""
-
-    def mb(n: int) -> str:
-        return f"{n / 1e6:,.1f}"
-
-    lines = [
-        "| phase | wall s | jobs | stages | input MB | output MB "
-        "| shuffle read MB | shuffle write MB |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for p in phases:
-        lines.append(
-            f"| {p['phase']} | {p['wall_s']:.1f} | {p['n_jobs']} "
-            f"| {p['n_stages']} | {mb(p['input_bytes'])} "
-            f"| {mb(p['output_bytes'])} | {mb(p['shuffle_read_bytes'])} "
-            f"| {mb(p['shuffle_write_bytes'])} |"
-        )
-    return "\n".join(lines)
+    def jobs(self, name: str) -> int:
+        """Jobs the phase has started so far."""
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.group(name)))

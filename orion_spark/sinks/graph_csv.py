@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orion_spark.functions.scalars import flatten_ws
+
 ARRAY_DELIMITER = chr(31)
 
 _TYPE_SUFFIX = {
@@ -35,10 +37,6 @@ _TYPE_SUFFIX = {
     T.FloatType(): "float",
     T.BooleanType(): "boolean",
 }
-
-
-def _flatten_ws(col):
-    return F.regexp_replace(col, r"[\n\r\t]", " ")
 
 
 def _to_csv_column(field: T.StructField):
@@ -52,12 +50,12 @@ def _to_csv_column(field: T.StructField):
             inner = F.transform(c, lambda x: F.when(x, "true").otherwise("false"))
         else:
             inner = c.cast("array<string>")
-        return _flatten_ws(F.array_join(inner, ARRAY_DELIMITER))
+        return flatten_ws(F.array_join(inner, ARRAY_DELIMITER))
     if isinstance(dt, T.BooleanType):
         return F.when(c, "true").otherwise("false")
     if isinstance(dt, (T.StructType, T.MapType)):
-        return _flatten_ws(F.to_json(c))
-    return _flatten_ws(c.cast("string"))
+        return flatten_ws(F.to_json(c))
+    return flatten_ws(c.cast("string"))
 
 
 def _header_type(field: T.StructField) -> str:

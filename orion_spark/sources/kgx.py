@@ -20,6 +20,7 @@ KGX-compatibility boundary.
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,18 +77,16 @@ def write_bundle(
     derived jobs (closure expansion, Memgraph export, meta-KG) partition-
     prunable instead of full scans.
 
-    `recorder` (plans/stage_metrics.PhaseRecorder) attributes the two
-    write actions — which is where the whole upstream merge lineage
-    actually executes, Spark being lazy — to "write_nodes"/"write_edges"
-    phases with measured shuffle/IO bytes.
+    `recorder` (plans/stage_metrics.PhaseRecorder) runs the two write
+    actions — which is where the whole upstream merge lineage actually
+    executes, Spark being lazy — as its "write_nodes"/"write_edges"
+    phases, so their jobs carry those phases' job groups. Without one,
+    the writes run under whatever job group the caller set.
 
     `collect_counts=True` rides `observe()` metrics on the write actions
     and returns (node_count, edge_count) — the sidecar writer's counts for
     free, instead of two whole-bundle re-scan jobs afterwards."""
-    if recorder is None:
-        from orion_spark.plans.stage_metrics import NullRecorder
-
-        recorder = NullRecorder()
+    phase = recorder.phase if recorder else lambda _: nullcontext()
     obs_nodes = obs_edges = None
     if collect_counts:
         from pyspark.sql import Observation
@@ -96,17 +95,17 @@ def write_bundle(
         nodes = nodes.observe(obs_nodes, F.count(F.lit(1)).alias("n"))
         edges = edges.observe(obs_edges, F.count(F.lit(1)).alias("n"))
     if fmt == "parquet":
-        with recorder.phase("write_nodes"):
+        with phase("write_nodes"):
             nodes.write.mode("overwrite").parquet(os.path.join(path, "nodes"))
-        with recorder.phase("write_edges"):
+        with phase("write_edges"):
             ew = edges.write.mode("overwrite")
             if edge_partition_by:
                 ew = ew.partitionBy(*edge_partition_by)
             ew.parquet(os.path.join(path, "edges"))
     else:
-        with recorder.phase("write_nodes"):
+        with phase("write_nodes"):
             write_kgx(nodes, os.path.join(path, "nodes"), gzip=gzip)
-        with recorder.phase("write_edges"):
+        with phase("write_edges"):
             write_kgx(edges, os.path.join(path, "edges"), gzip=gzip)
     if collect_counts:
         return int(obs_nodes.get["n"]), int(obs_edges.get["n"])

@@ -3,7 +3,6 @@ Spark-job budget of the metadata it records after the bundle write."""
 
 import json
 import os
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Row
@@ -15,6 +14,7 @@ from orion_spark.operators.analyze import (
     spo_type_counts,
 )
 from orion_spark.plans import pipeline as P
+from orion_spark.plans.stage_metrics import PhaseRecorder
 from orion_spark.sources.kgx import read_bundle, write_bundle
 
 NODE_SCHEMA = "id string, name string, category array<string>"
@@ -58,27 +58,6 @@ SOURCES = {
 }
 
 
-class _PhaseJobs:
-    """Recorder stand-in for build_graph: each phase runs under its own
-    job group, everything else under the build's group, so the status
-    tracker can count the jobs of each."""
-
-    def __init__(self, sc, tag):
-        self.sc, self.tag = sc, tag
-
-    @contextmanager
-    def phase(self, name):
-        self.sc.setJobGroup(f"{self.tag}.{name}", name)
-        try:
-            yield
-        finally:
-            self.sc.setJobGroup(self.tag, "build")
-
-    def jobs(self, phase=None):
-        group = f"{self.tag}.{phase}" if phase else self.tag
-        return len(self.sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     """The build's output dir, its source frames and its per-phase job
@@ -96,7 +75,9 @@ def built(spark, tmp_path_factory):
                  for sid, (strategy, _, _) in SOURCES.items()],
     )
     sc = spark.sparkContext
-    rec = _PhaseJobs(sc, f"sidecar-build-{id(root)}")
+    rec = PhaseRecorder(spark, f"sidecar-build-{id(root)}")
+    # the recorder puts this group back after each phase, so it collects
+    # the jobs the build starts outside its phases
     sc.setJobGroup(rec.tag, "build")
     try:
         out = P.build_graph(spark, spec, paths, str(root / "storage"),
@@ -105,7 +86,7 @@ def built(spark, tmp_path_factory):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = {p: rec.jobs(p) for p in ("metadata_sidecars", "merge_report")}
-    jobs["outside phases"] = rec.jobs()
+    jobs["outside phases"] = len(sc.statusTracker().getJobIdsForGroup(rec.tag))
     return out, frames, jobs
 
 

@@ -30,6 +30,15 @@ def test_pagerank_star_sink_accumulates(spark):
     assert all(v >= leaf - 1e-12 for v in out.values())
 
 
+def test_pagerank_empty_graph_is_empty(spark):
+    """No edges means no nodes: an empty (id, pr) frame, not a division
+    by the zero node count."""
+    edges = spark.createDataFrame([], "src string, dst string")
+    out = pagerank(edges, iterations=3)
+    assert out.dtypes == [("id", "string"), ("pr", "double")]
+    assert out.collect() == []
+
+
 def test_triangle_count_known_graph(spark):
     """K4 plus a pendant vertex: C(4,3)=4 triangles, 7 edges, 5 nodes."""
     from orion_spark.operators.graphalgo import triangle_count

@@ -689,34 +689,49 @@ def test_cli_worker_reclaim(tmp_path, capsys):
     assert os.path.exists(os.path.join(spool, "pending", f"{tid}.json"))
 
 
-def test_phase_recorder_requires_ui(spark):
-    """The shared test session keeps the UI off (engine default) — the
-    recorder must fail loudly with the config to set, not silently
-    record zeros."""
+def test_phase_recorder_restores_the_callers_job_group(spark):
+    """Each phase's jobs land in `{tag}.{name}`; after the phase, normal
+    or raising, the caller's job group and description are back, so a
+    job run between phases stays in the caller's group."""
     import pytest as _pytest
 
     from orion_spark.plans.stage_metrics import PhaseRecorder
 
-    with _pytest.raises(RuntimeError, match="spark.ui.enabled"):
-        PhaseRecorder(spark)
+    sc = spark.sparkContext
+    caller = f"recorder-caller-{id(sc)}"
+    rec = PhaseRecorder(spark, f"recorder-nesting-{id(sc)}")
 
+    def current():
+        return (sc.getLocalProperty("spark.jobGroup.id"),
+                sc.getLocalProperty("spark.job.description"))
 
-def test_null_recorder_is_transparent():
-    from orion_spark.plans.stage_metrics import NullRecorder
-
-    rec = NullRecorder()
-    with rec.phase("anything"):
-        pass
-    assert rec.report() == []
+    sc.setJobGroup(caller, "caller")
+    try:
+        with rec.phase("ok"):
+            assert current() == (rec.group("ok"), "ok")
+            spark.range(3).collect()
+        assert current() == (caller, "caller")
+        with _pytest.raises(ValueError):
+            with rec.phase("boom"):
+                spark.range(4).collect()
+                raise ValueError("phase failed")
+        assert current() == (caller, "caller")
+        spark.range(5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rec.jobs("ok") >= 1 and rec.jobs("boom") >= 1
+    assert len(sc.statusTracker().getJobIdsForGroup(caller)) >= 1
+    assert list(rec.walls) == ["ok", "boom"]
 
 
 def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
     """End-to-end measured build (tools/build_stage_metrics.py) at
-    sf0.001 in its own UI-enabled session: every build phase must report
-    completed stages, and the merge-bearing write phases must show
-    nonzero shuffle bytes (the A3 groupBy-agg exchange). Subprocess on
-    purpose — the UI flag is fixed at context creation, so the shared
-    session can't host this."""
+    sf0.001 in its own session with the event log on: every build phase
+    is recorded in both passes, and the merge-bearing write phases run
+    jobs and tasks and write shuffle bytes (the A3 groupBy-agg
+    exchange). Subprocess on purpose — the event log is fixed at context
+    creation, so the shared session can't host this."""
     import json as _json
     import subprocess
     import sys as _sys
@@ -748,11 +763,9 @@ def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
         }
         # the node/edge writes execute the merge lineage: real exchanges
         for name in ("write_nodes", "write_edges"):
-            assert phases[name]["n_stages"] > 0
-            assert phases[name]["shuffle_write_bytes"] > 0, phases[name]
-    for key in ("totals_cold", "totals_warm"):
-        assert payload[key]["shuffle_read_bytes"] > 0
-        assert payload[key]["output_bytes"] > 0
+            assert phases[name]["jobs"] > 0, phases[name]
+            assert phases[name]["tasks"] > 0, phases[name]
+            assert phases[name]["shuffle_write_mb"] > 0, phases[name]
     # caching moves walls, never shuffle volume: at sf0.001 the two
-    # passes must account identical shuffle/output bytes
+    # passes must account identical shuffle bytes
     assert payload["byte_drift"] == []

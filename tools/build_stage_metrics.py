@@ -13,10 +13,12 @@ merge does real cross-source property unioning on ~2/3 of rows, plus a
 qualified lineitem-edge source under `connected_edge_subset` so the J4
 join path is exercised and measured too.
 
-Runs in its own session with the UI enabled (the REST /api/v1 surface is
-how plans/stage_metrics.PhaseRecorder reads stage metrics; the engine's
-default sessions keep the UI off). Keep other Spark JVMs idle — wall
-times here carry the same noise caveat as bench.py.
+Runs in its own session with the Spark event log on. Each phase is a
+job group (plans/stage_metrics.PhaseRecorder); after the session stops,
+the benchmark's event-log parser (perfbench/eventlog.py) totals each
+group's jobs, tasks, task CPU, shuffle read/write, spill and fetch wait,
+and the tool joins them with the phase's wall time. Keep other Spark JVMs
+idle — wall times here carry the same noise caveat as bench.py.
 
 Cold/warm discipline (round-9 verdict ask #3): the whole composition runs
 TWICE in one process — pass 1 ("cold") pays the first-touch page-cache
@@ -39,9 +41,11 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench import eventlog  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 SPEC_YAML = """
@@ -65,36 +69,53 @@ def _bucket(col):
     )
 
 
+def _markdown(phases: list[dict]) -> str:
+    """The SCALE.md measured-bytes table for one pass."""
+    lines = [
+        "| phase | wall s | jobs | tasks | task CPU s | shuffle read MB "
+        "| shuffle write MB | spill MB |",
+        "|---|---|---|---|---|---|---|---|",
+    ]
+    for p in phases:
+        lines.append(
+            f"| {p['phase']} | {p['wall_s']:.1f} | {p['jobs']:.0f} "
+            f"| {p['tasks']:.0f} | {p['task_cpu_s']:.1f} "
+            f"| {p['shuffle_read_mb']:,.1f} | {p['shuffle_write_mb']:,.1f} "
+            f"| {p['spill_mb']:,.1f} |"
+        )
+    return "\n".join(lines)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
     workdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/orion_build_metrics"
 
     from orion_spark.plans import tpch_graph as G
     from orion_spark.plans.pipeline import build_graph, parse_graph_spec
-    from orion_spark.plans.stage_metrics import PhaseRecorder, report_markdown
+    from orion_spark.plans.stage_metrics import PhaseRecorder
     from orion_spark.session import get_spark
     from orion_spark.sources.kgx import write_bundle
 
+    evdir = tempfile.mkdtemp(prefix="spark-events-")
     spark = get_spark(
         app_name="orion-build-stage-metrics",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4057"},
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": evdir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     if os.path.exists(workdir):
         shutil.rmtree(workdir)
     spec = parse_graph_spec(SPEC_YAML)[0]
-    byte_keys = (
-        "input_bytes",
-        "output_bytes",
-        "shuffle_read_bytes",
-        "shuffle_write_bytes",
-    )
-    runs: dict[str, list[dict]] = {}
+    recorders: dict[str, PhaseRecorder] = {}
     out = None
     for label in ("cold", "warm"):
         rundir = os.path.join(workdir, label)
-        rec = PhaseRecorder(spark)
+        rec = recorders[label] = PhaseRecorder(spark, f"build_metrics.{label}")
         bundles = {
             "src_a": os.path.join(rundir, "src_a"),
             "src_b": os.path.join(rundir, "src_b"),
@@ -118,22 +139,35 @@ def main() -> int:
             spark, spec, bundles, os.path.join(rundir, "storage"),
             recorder=rec,
         )
-        runs[label] = rec.report()
-        print(f"-- {label} --")
-        print(report_markdown(runs[label]))
+    spark.stop()
 
-    # caching moves walls, never bytes: the two passes must account the
-    # same shuffle/output volume phase-for-phase (input_bytes excluded —
-    # the REST surface under-reports DSv2 parquet scans nondeterministically
-    # when splits coalesce differently; shuffle/output are the honest pair)
+    (log,) = eventlog.log_files(evdir)
+    groups = eventlog.parse(log)
+    shutil.rmtree(evdir)
+    no_jobs = dict.fromkeys(eventlog.FIELDS, 0.0) | {"task_max_over_median": 1.0}
+    runs: dict[str, list[dict]] = {}
+    for label, rec in recorders.items():
+        runs[label] = [
+            {"phase": name, "wall_s": round(wall, 3),
+             **groups.get(rec.group(name), no_jobs)}
+            for name, wall in rec.walls.items()
+        ]
+        print(f"-- {label} --")
+        print(_markdown(runs[label]))
+
+    # caching moves walls, never shuffle volume: the two passes must
+    # account the same shuffle bytes phase-for-phase
+    def nbytes(p, k):
+        return round(p[k] * eventlog.MB)
+
     byte_drift = [
-        (c["phase"], k, c[k], w[k])
+        (c["phase"], k, nbytes(c, k), nbytes(w, k))
         for c, w in zip(runs["cold"], runs["warm"])
-        for k in ("shuffle_read_bytes", "shuffle_write_bytes", "output_bytes")
-        if c[k] != w[k]
+        for k in ("shuffle_read_mb", "shuffle_write_mb")
+        if nbytes(c, k) != nbytes(w, k)
     ]
     totals = {
-        label: {k: sum(p[k] for p in phases) for k in byte_keys}
+        label: {f: sum(p[f] for p in phases) for f in eventlog.FIELDS}
         for label, phases in runs.items()
     }
     print(
@@ -150,7 +184,6 @@ def main() -> int:
             }
         )
     )
-    spark.stop()
     return 0
 
 

@@ -1,22 +1,28 @@
 #!/usr/bin/env python
-"""Per-job/stage wall-clock breakdown for one registered query (guide §1:
-measure first, empirically). The Spark UI is disabled in this sandbox, so
-this runs the query with the event log enabled and parses the JSON log into
-the same facts the Stages tab would show: one line per job with wall time,
-and per-stage task-time / shuffle-bytes summaries for the expensive jobs.
+"""Build / plan / exec breakdown for one registered query (guide §1:
+measure first, empirically). Each measured run is three phases, as the
+benchmark's graph workload times a query: the builder (its eager jobs),
+forcing the physical plan, and a `noop` write. Each phase is a Spark job
+group (plans/stage_metrics.PhaseRecorder); the session writes the event
+log, and after it stops the benchmark's parser (perfbench/eventlog.py)
+totals each phase's jobs, tasks, task CPU, shuffle, spill, fetch wait and
+max/median task time. No Spark UI needed.
 
 Usage: python tools/job_profile.py <query> [sf_dir] [--runs N]
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench import eventlog  # noqa: E402
+
+PHASES = ("build", "plan", "exec")
 
 
 def main() -> None:
@@ -29,6 +35,7 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
 
     evdir = tempfile.mkdtemp(prefix="spark-events-")
+    from orion_spark.plans.stage_metrics import PhaseRecorder
     from orion_spark.session import autoscale_shuffle, get_spark
 
     spark = get_spark(
@@ -49,93 +56,34 @@ def main() -> None:
     # warmup at sf0.001 so JIT/codegen cache is hot (bench methodology)
     warm = "/root/testdata/sf0.001"
     if os.path.isdir(warm) and warm != sf_dir:
-        try:
-            fn(spark, warm).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        fn(spark, warm).write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
 
-    walls = []
+    measured = []
     for i in range(runs):
-        spark.sparkContext.setJobDescription(f"measured:{name}:run{i}")
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(time.time() - t0)
-        spark.sparkContext.setJobDescription(None)
-    app_id = spark.sparkContext.applicationId
+        rec = PhaseRecorder(spark, f"profile.{name}.run{i}")
+        with rec.phase("build"):
+            df = fn(spark, sf_dir)
+        with rec.phase("plan"):
+            df._jdf.queryExecution().executedPlan()
+        with rec.phase("exec"):
+            df.write.format("noop").mode("overwrite").save()
+        measured.append((rec, sum(rec.jobs(p) for p in PHASES)))
     spark.stop()
 
-    log_path = os.path.join(evdir, app_id)
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    with open(log_path) as fh:
-        for line in fh:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    ),
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                # merge, don't replace: TaskEnd events for this stage have
-                # already accumulated task_ms/shuffle counters into the dict
-                st = stages.setdefault(si["Stage ID"], {})
-                st["name"] = si["Stage Name"].split("\n")[0]
-                st["tasks"] = si["Number of Tasks"]
-                st["wall"] = (
-                    si.get("Completion Time", 0) - si.get("Submission Time", 0)
-                ) / 1000.0
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, {})
-                m = ev.get("Task Metrics") or {}
-                st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                srm = m.get("Shuffle Read Metrics") or {}
-                swm = m.get("Shuffle Write Metrics") or {}
-                st["sh_read"] = st.get("sh_read", 0) + srm.get(
-                    "Remote Bytes Read", 0
-                ) + srm.get("Local Bytes Read", 0)
-                st["sh_write"] = st.get("sh_write", 0) + swm.get(
-                    "Shuffle Bytes Written", 0
-                )
-                st["fetch_wait"] = st.get("fetch_wait", 0) + srm.get(
-                    "Fetch Wait Time", 0
-                )
-
-    for i, w in enumerate(walls):
-        print(f"run {i}: wall {w:.2f}s")
-    measured = {
-        jid: j
-        for jid, j in jobs.items()
-        if j.get("desc", "").startswith("measured:") and "end" in j
-    }
-    total = sum(j["end"] - j["start"] for j in measured.values()) / 1000.0
-    print(f"\n{len(measured)} measured jobs, job-wall total {total:.2f}s")
-    for jid in sorted(measured):
-        j = measured[jid]
-        wall = (j["end"] - j["start"]) / 1000.0
-        sts = [s for s in j["stages"] if s in stages and "wall" in stages[s]]
-        print(f"\njob {jid}  wall {wall:6.2f}s  ({j['desc'].split(':')[-1]})")
-        for s in sorted(sts):
-            st = stages[s]
-            if not st.get("tasks"):
-                continue
-            print(
-                f"   stage {s:4d} {st.get('tasks', 0):5d} tasks"
-                f" wall {st.get('wall', 0):6.2f}s task-time {st.get('task_ms', 0)/1000.0:7.1f}s"
-                f" shR {st.get('sh_read', 0)/1e6:8.1f}MB shW {st.get('sh_write', 0)/1e6:8.1f}MB"
-                f" fetchWait {st.get('fetch_wait', 0)/1000.0:5.1f}s  {st.get('name','')[:60]}"
-            )
+    (log,) = eventlog.log_files(evdir)
+    groups = eventlog.parse(log)
+    shutil.rmtree(evdir)
+    no_jobs = dict.fromkeys(eventlog.FIELDS, 0.0) | {"task_max_over_median": 1.0}
+    cols = ("wall_s",) + tuple(no_jobs)
+    widths = [max(len(c), 12) for c in cols]
+    print("run phase " + " ".join(f"{c:>{w}}" for c, w in zip(cols, widths)))
+    for i, (rec, tracked) in enumerate(measured):
+        for p in PHASES:
+            row = dict(groups.get(rec.group(p), no_jobs), wall_s=rec.walls[p])
+            print(f"{i:3d} {p:5s} " + " ".join(
+                f"{row[c]:{w}.3f}" for c, w in zip(cols, widths)))
+        print(f"run {i}: {tracked} jobs by the status tracker")
 
 
 if __name__ == "__main__":
