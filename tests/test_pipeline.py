@@ -766,6 +766,9 @@ def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
             assert phases[name]["jobs"] > 0, phases[name]
             assert phases[name]["tasks"] > 0, phases[name]
             assert phases[name]["shuffle_write_mb"] > 0, phases[name]
+    # both passes read shuffle data back (the merge exchanges), and
     # caching moves walls, never shuffle volume: at sf0.001 the two
     # passes must account identical shuffle bytes
+    for key in ("totals_cold", "totals_warm"):
+        assert payload[key]["shuffle_read_mb"] > 0, payload[key]
     assert payload["byte_drift"] == []

@@ -92,19 +92,15 @@ def main() -> int:
 
     from orion_spark.plans import tpch_graph as G
     from orion_spark.plans.pipeline import build_graph, parse_graph_spec
-    from orion_spark.plans.stage_metrics import PhaseRecorder
+    from orion_spark.plans.stage_metrics import (
+        PhaseRecorder, event_log_conf, read_event_log,
+    )
     from orion_spark.session import get_spark
     from orion_spark.sources.kgx import write_bundle
 
     evdir = tempfile.mkdtemp(prefix="spark-events-")
     spark = get_spark(
-        app_name="orion-build-stage-metrics",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": evdir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
+        app_name="orion-build-stage-metrics", extra_conf=event_log_conf(evdir)
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -141,17 +137,10 @@ def main() -> int:
         )
     spark.stop()
 
-    (log,) = eventlog.log_files(evdir)
-    groups = eventlog.parse(log)
-    shutil.rmtree(evdir)
-    no_jobs = dict.fromkeys(eventlog.FIELDS, 0.0) | {"task_max_over_median": 1.0}
+    groups = read_event_log(evdir)
     runs: dict[str, list[dict]] = {}
     for label, rec in recorders.items():
-        runs[label] = [
-            {"phase": name, "wall_s": round(wall, 3),
-             **groups.get(rec.group(name), no_jobs)}
-            for name, wall in rec.walls.items()
-        ]
+        runs[label] = rec.rows(groups)
         print(f"-- {label} --")
         print(_markdown(runs[label]))
 

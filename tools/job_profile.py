@@ -14,7 +14,6 @@ Usage: python tools/job_profile.py <query> [sf_dir] [--runs N]
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import tempfile
 
@@ -35,18 +34,12 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
 
     evdir = tempfile.mkdtemp(prefix="spark-events-")
-    from orion_spark.plans.stage_metrics import PhaseRecorder
+    from orion_spark.plans.stage_metrics import (
+        PhaseRecorder, event_log_conf, read_event_log,
+    )
     from orion_spark.session import autoscale_shuffle, get_spark
 
-    spark = get_spark(
-        app_name=f"profile-{name}",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": evdir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = get_spark(app_name=f"profile-{name}", extra_conf=event_log_conf(evdir))
     spark.sparkContext.setLogLevel("ERROR")
     autoscale_shuffle(spark, sf_dir)
 
@@ -71,17 +64,13 @@ def main() -> None:
         measured.append((rec, sum(rec.jobs(p) for p in PHASES)))
     spark.stop()
 
-    (log,) = eventlog.log_files(evdir)
-    groups = eventlog.parse(log)
-    shutil.rmtree(evdir)
-    no_jobs = dict.fromkeys(eventlog.FIELDS, 0.0) | {"task_max_over_median": 1.0}
-    cols = ("wall_s",) + tuple(no_jobs)
+    groups = read_event_log(evdir)
+    cols = ("wall_s", *eventlog.FIELDS, "task_max_over_median")
     widths = [max(len(c), 12) for c in cols]
     print("run phase " + " ".join(f"{c:>{w}}" for c, w in zip(cols, widths)))
     for i, (rec, tracked) in enumerate(measured):
-        for p in PHASES:
-            row = dict(groups.get(rec.group(p), no_jobs), wall_s=rec.walls[p])
-            print(f"{i:3d} {p:5s} " + " ".join(
+        for row in rec.rows(groups):
+            print(f"{i:3d} {row['phase']:5s} " + " ".join(
                 f"{row[c]:{w}.3f}" for c, w in zip(cols, widths)))
         print(f"run {i}: {tracked} jobs by the status tracker")
 
