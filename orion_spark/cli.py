@@ -23,6 +23,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 
 def _spark(*input_paths: str):
     """CLI session, shuffle-partitioned for the command's ACTUAL inputs.
@@ -97,7 +99,7 @@ def cmd_redundant_kg(args) -> int:
 
     spark = _spark(args.bundle, args.closure)
     nodes, edges = read_bundle(spark, args.bundle)
-    closure = spark.read.parquet(args.closure)
+    closure = read_parquet(spark, args.closure)
     expanded = redundant_edges(edges, closure)
     write_bundle(nodes, expanded, args.out)
     print(json.dumps({"out": args.out}))
@@ -283,7 +285,7 @@ def cmd_upsert(args) -> int:
     from orion_spark.sinks import qc_incremental as QCI
 
     spark = _spark(args.delta, args.bundle)
-    delta = spark.read.parquet(args.delta)
+    delta = read_parquet(spark, args.delta)
     upsert = (
         INC.upsert_sharded_edges
         if args.kind == "edges"
@@ -321,22 +323,22 @@ def cmd_ivf_index(args) -> int:
     spark = _spark(args.vectors, args.index)
     if args.action == "build":
         S.build_ivf_index(
-            spark, spark.read.parquet(args.vectors), args.index,
+            spark, read_parquet(spark, args.vectors), args.index,
             n_clusters=args.n_clusters,
         )
         print(json.dumps({"index": args.index, "action": "build",
                           "n_clusters": args.n_clusters}))
     elif args.action == "add":
-        S.upsert_ivf_index(spark, spark.read.parquet(args.vectors), args.index)
+        S.upsert_ivf_index(spark, read_parquet(spark, args.vectors), args.index)
         print(json.dumps({"index": args.index, "action": "add"}))
     else:
         out = S.search_ivf_index(
-            spark, spark.read.parquet(args.vectors), args.index,
+            spark, read_parquet(spark, args.vectors), args.index,
             k=args.k, n_probe=args.n_probe,
         )
         out.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"index": args.index, "action": "search",
-                          "out": args.out, "rows": spark.read.parquet(args.out).count()}))
+                          "out": args.out, "rows": read_parquet(spark, args.out).count()}))
     return 0
 
 
@@ -393,16 +395,16 @@ def cmd_split(args) -> int:
     from orion_spark.llm.dedup import dedup_clusters, leakage_free_split, minhash_lsh_pairs
 
     spark = _spark(args.docs, *([args.clusters] if args.clusters else []))
-    docs = spark.read.parquet(args.docs)
+    docs = read_parquet(spark, args.docs)
     clusters = None
     if args.clusters:
-        clusters = spark.read.parquet(args.clusters)
+        clusters = read_parquet(spark, args.clusters)
         if args.save_clusters:
             # both flags: re-persist the REUSED labels at the new path
             # (previously silently ignored --save-clusters — a user
             # rotating cluster snapshots expects the copy to exist)
             clusters.write.mode("overwrite").parquet(args.save_clusters)
-            clusters = spark.read.parquet(args.save_clusters)
+            clusters = read_parquet(spark, args.save_clusters)
     elif args.save_clusters:
         clusters = dedup_clusters(
             minhash_lsh_pairs(
@@ -411,7 +413,7 @@ def cmd_split(args) -> int:
             )
         )
         clusters.write.mode("overwrite").parquet(args.save_clusters)
-        clusters = spark.read.parquet(args.save_clusters)
+        clusters = read_parquet(spark, args.save_clusters)
     out = leakage_free_split(
         docs, clusters=clusters, threshold=args.threshold,
         salt=args.salt, id_col=args.id_col, text_col=args.text_col,
@@ -419,7 +421,7 @@ def cmd_split(args) -> int:
     out.write.mode("overwrite").partitionBy("split").parquet(args.out)
     counts = {
         r["split"]: r["n"]
-        for r in spark.read.parquet(args.out)
+        for r in read_parquet(spark, args.out)
         .groupBy("split").agg(F.count("*").alias("n")).collect()
     }
     print(json.dumps({
@@ -443,7 +445,7 @@ def cmd_semdedup(args) -> int:
     from orion_spark.llm.dedup import semdedup_prune
 
     spark = _spark(args.embeddings)
-    emb = spark.read.parquet(args.embeddings)
+    emb = read_parquet(spark, args.embeddings)
     labels = semdedup_prune(
         emb, n_clusters=args.n_clusters, threshold=args.threshold,
         id_col=args.id_col, vec_col=args.vec_col,
@@ -456,7 +458,7 @@ def cmd_semdedup(args) -> int:
         out.write.mode("overwrite").parquet(args.out)
     else:
         labels.write.mode("overwrite").parquet(args.out)
-    back = spark.read.parquet(args.out)
+    back = read_parquet(spark, args.out)
     n_in = emb.count()
     n_kept = back.count() if args.keep_only else (
         back.where(F.col("kept") == 1).count()
@@ -478,7 +480,7 @@ def cmd_url_dedup(args) -> int:
     from orion_spark.llm.urls import url_dedup
 
     spark = _spark(args.docs)
-    docs = spark.read.parquet(args.docs)
+    docs = read_parquet(spark, args.docs)
     labels = url_dedup(docs, url_col=args.url_col, id_col=args.id_col)
     if args.keep_only:
         kept = labels.where(F.col("kept") == 1).select("doc_id")
@@ -488,7 +490,7 @@ def cmd_url_dedup(args) -> int:
         out.write.mode("overwrite").parquet(args.out)
     else:
         labels.write.mode("overwrite").parquet(args.out)
-    back = spark.read.parquet(args.out)
+    back = read_parquet(spark, args.out)
     n_in = docs.count()
     n_kept = back.count() if args.keep_only else (
         back.where(F.col("kept") == 1).count()
@@ -522,7 +524,7 @@ def cmd_bloom_dedup(args) -> int:
             print("bloom-dedup build requires --history", file=sys.stderr)
             return 2
         spark = _spark(args.history)
-        history = spark.read.parquet(args.history)
+        history = read_parquet(spark, args.history)
         bm = B.bloom_build(history, key_col=args.key_col,
                            m_bits=args.m_bits, k=args.k)
         B.save_bloom(bm, args.bloom, m_bits=args.m_bits, k=args.k)
@@ -539,7 +541,7 @@ def cmd_bloom_dedup(args) -> int:
         return 2
     spark = _spark(args.batch, args.bloom)
     bm, m_bits, k = B.load_bloom(spark, args.bloom)
-    raw = spark.read.parquet(args.batch)
+    raw = read_parquet(spark, args.batch)
     n_raw = raw.count()
     batch = raw.dropDuplicates([args.key_col])
     survivors = (
@@ -548,14 +550,14 @@ def cmd_bloom_dedup(args) -> int:
         .drop("bloom_hit")
     )
     survivors.write.mode("overwrite").parquet(args.out)
-    kept = spark.read.parquet(args.out).count()
+    kept = read_parquet(spark, args.out).count()
     n_batch = batch.count()
     dropped = n_batch - kept
     intra_batch_dropped = n_raw - n_batch
     updated = False
     if args.update and kept:
         delta = B.bloom_build(
-            spark.read.parquet(args.out), key_col=args.key_col,
+            read_parquet(spark, args.out), key_col=args.key_col,
             m_bits=m_bits, k=k,
         )
         merged = B.bloom_merge(bm, delta).localCheckpoint(eager=True)
@@ -585,7 +587,7 @@ def cmd_near_dup_history(args) -> int:
             print("near-dup-history build requires --history", file=sys.stderr)
             return 2
         spark = _spark(args.history)
-        history = spark.read.parquet(args.history)
+        history = read_parquet(spark, args.history)
         store = NH.band_store_build(
             history, text_col=args.text_col, id_col=args.id_col,
             k=args.shingle_k, num_hashes=args.num_hashes,
@@ -594,7 +596,7 @@ def cmd_near_dup_history(args) -> int:
         NH.save_band_store(store, args.store, k=args.shingle_k,
                            num_hashes=args.num_hashes,
                            rows_per_band=args.rows_per_band)
-        n_keys = spark.read.parquet(args.store).count()
+        n_keys = read_parquet(spark, args.store).count()
         print(json.dumps({
             "store": args.store, "action": "build", "n_band_keys": n_keys,
             "shingle_k": args.shingle_k, "num_hashes": args.num_hashes,
@@ -603,9 +605,9 @@ def cmd_near_dup_history(args) -> int:
         return 0
     if args.action == "compact":
         spark = _spark(args.store)
-        before = spark.read.parquet(args.store).count()
+        before = read_parquet(spark, args.store).count()
         NH.compact_band_store(spark, args.store)
-        after = spark.read.parquet(args.store).count()
+        after = read_parquet(spark, args.store).count()
         print(json.dumps({
             "store": args.store, "action": "compact",
             "keys_before": before, "keys_after": after,
@@ -631,7 +633,7 @@ def cmd_near_dup_history(args) -> int:
             "is intended.",
             stacklevel=2,
         )
-    batch = spark.read.parquet(args.batch)
+    batch = read_parquet(spark, args.batch)
     n_in = batch.count()
     survivors = (
         NH.band_store_probe(
@@ -642,12 +644,12 @@ def cmd_near_dup_history(args) -> int:
         .drop("near_dup_hit")
     )
     survivors.write.mode("overwrite").parquet(args.out)
-    kept = spark.read.parquet(args.out).count()
+    kept = read_parquet(spark, args.out).count()
     updated = False
     if args.update and kept:
         delta = (
             NH.minhash_band_keys(
-                spark.read.parquet(args.out), text_col=args.text_col,
+                read_parquet(spark, args.out), text_col=args.text_col,
                 id_col=args.id_col, k=k, num_hashes=nh, rows_per_band=rpb,
             )
             .select("band", "bv")
@@ -693,7 +695,7 @@ def cmd_curate_stream(args) -> int:
         min_quality=args.min_quality,
         langs=tuple(args.langs.split(",")),
     )
-    n = spark.read.parquet(args.out).count() if os.path.exists(args.out) else 0
+    n = read_parquet(spark, args.out).count() if os.path.exists(args.out) else 0
     print(json.dumps({"out": args.out, "curated_rows": n}))
     return 0
 

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from orion_spark.llm.dedup import MINHASH_P, _hash_params
+from orion_spark.sources.kgx import read_parquet
 
 _WORD = 32  # bits per stored word
 
@@ -249,4 +250,4 @@ def load_bloom(spark, path: str) -> tuple[DataFrame, int, int]:
             f"bloom at {path} uses {meta['word_bits']}-bit words; "
             f"this build uses {_WORD}"
         )
-    return spark.read.parquet(path), meta["m_bits"], meta["k"]
+    return read_parquet(spark, path), meta["m_bits"], meta["k"]

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 __all__ = [
     "dsir_log_weights",
     "dsir_log_weights_oracle_sql",
@@ -331,7 +333,7 @@ def score_with_dsir_model(
     partition-local per-doc bucket counts. On the corpus the model was
     fit on, output equals the in-memory path exactly (pytest-pinned);
     num_buckets is implied by the dim's row count."""
-    ratio_dim = spark.read.parquet(model_path)
+    ratio_dim = read_parquet(spark, model_path)
     b = ratio_dim.count()
     docb = (
         _features(docs, text_col, id_col, pre_partition=True)

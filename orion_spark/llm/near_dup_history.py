@@ -41,6 +41,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 _META = "_band_store_meta.json"
 
 
@@ -172,7 +174,7 @@ def load_band_store(
     with open(os.path.join(path, _META)) as fh:
         meta = json.load(fh)
     return (
-        spark.read.parquet(path),
+        read_parquet(spark, path),
         meta["k"],
         meta["num_hashes"],
         meta.get("rows_per_band", 1),

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two double arrays (deterministic
@@ -597,7 +599,7 @@ def upsert_ivf_index(
     has drifted enough that frozen lists skew."""
     import os
 
-    cent = spark.read.parquet(os.path.join(path, IVF_CENTROIDS))
+    cent = read_parquet(spark, os.path.join(path, IVF_CENTROIDS))
     (
         _assign_to_centroids(delta, cent, id_col, vec_col)
         .write.mode("append")
@@ -624,7 +626,7 @@ def search_ivf_index(
 
     from pyspark.sql import Window
 
-    cent = F.broadcast(spark.read.parquet(os.path.join(path, IVF_CENTROIDS)))
+    cent = F.broadcast(read_parquet(spark, os.path.join(path, IVF_CENTROIDS)))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_qv"),
@@ -643,7 +645,7 @@ def search_ivf_index(
     # the probed-list union is bounded by |Q| x n_probe (and by n_clusters)
     # — a manifest-sized collect that buys file-level partition pruning
     probed_lists = [r["_list"] for r in probes.select("_list").distinct().collect()]
-    assigned = spark.read.parquet(os.path.join(path, IVF_ASSIGNMENTS)).where(
+    assigned = read_parquet(spark, os.path.join(path, IVF_ASSIGNMENTS)).where(
         F.col("_list").isin(probed_lists)
     )
     pairs = F.broadcast(probes).join(assigned, "_list").where(

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 # deliberately tiny, deterministic marker sets (the container has no langid
 # model; an n-gram marker heuristic is the classic fallback)
 LANG_MARKERS = {
@@ -811,7 +813,7 @@ def save_lm_model(
     uni = ttok.groupBy("w").agg(F.count("*").alias("cu"))
     uni.write.mode("overwrite").parquet(os.path.join(path, "uni"))
     spark = train.sparkSession
-    uni_back = spark.read.parquet(os.path.join(path, "uni"))
+    uni_back = read_parquet(spark, os.path.join(path, "uni"))
     uni_back.agg(
         F.sum("cu").alias("n_total"), F.count("*").alias("v_size")
     ).write.mode("overwrite").parquet(os.path.join(path, "consts"))
@@ -842,9 +844,9 @@ def score_with_lm_model(
 
     from pyspark.sql import Window
 
-    uni = spark.read.parquet(os.path.join(path, "uni"))
-    bi = spark.read.parquet(os.path.join(path, "bi"))
-    consts = spark.read.parquet(os.path.join(path, "consts"))
+    uni = read_parquet(spark, os.path.join(path, "uni"))
+    bi = read_parquet(spark, os.path.join(path, "bi"))
+    consts = read_parquet(spark, os.path.join(path, "consts"))
 
     w_seq = Window.partitionBy("_did").orderBy("pos")
     stok = _lm_tokens(score, text_col, id_col).withColumn(

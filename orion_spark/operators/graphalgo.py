@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -459,20 +459,22 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
     # sym-vs-labels join reuses this partitioning and only the (small)
     # labels side moves — the big edge table is shuffled once, not once
     # per round
-    # materialize the caller's edge derivation ONCE: the symmetrize-and-
-    # self-loop union below references it FOUR times (2x per undirected
-    # branch), and Spark does not share common subtrees across union
-    # branches — for the KGX graph each reference re-ran the whole
-    # all_edges derivation including its lineitem dropDuplicates exchange
-    # (round 11, measured: ~4 s of the 10 s query was derivation re-runs)
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    # checkpoint the caller's edges once: it cuts their derivation (for
+    # the KGX graph, all_edges and its lineitem dropDuplicates exchange)
+    # out of sym's lineage, and the same job counts them for the layout
+    # below
+    n_edges = Observation()
+    edges = (
+        edges.select("src", "dst")
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     # layout the cached join table at one partition per core growing with
     # rows (sym ≤ 3|E|: both directions + one self-loop per node) — the
     # input-bytes shuffle autoscale over-partitions this compact cached
     # relation and every round then pays its partition count in
-    # near-empty task launches (see _cached_join_parts); the count is a
-    # near-free scan of the just-checkpointed edges
-    n_parts = _cached_join_parts(edges, 3 * edges.count())
+    # near-empty task launches (see _cached_join_parts)
+    n_parts = _cached_join_parts(edges, 3 * n_edges.get["n"])
     # Self-loops fold the "least(own label, neighbor min)" step INTO the
     # neighbor aggregate: with (v, v) present for every node, one
     # join+min per round replaces the old join+agg THEN left-join+least —

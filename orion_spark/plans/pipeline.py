@@ -233,14 +233,15 @@ def build_graph(
     `recorder` (plans/stage_metrics.PhaseRecorder) runs the build's
     actions as named phases, each under its own job group, so the status
     tracker or the event log can attribute their jobs, tasks and shuffle
-    bytes (see tools/build_stage_metrics.py). The bundle reads stay under
-    the caller's job group, and without a recorder the build sets none.
-    The phases:
+    bytes (see tools/build_stage_metrics.py). Without a recorder the build
+    sets no job group. The phases:
+    - read_sources / read_bundle: the source bundles, and the written
+      bundle for the sidecars; each parquet schema comes from a footer
+      (`read_parquet`), so a parquet build's reads start no job;
     - write_nodes / write_edges: the merge lineage executes here, and the
       writes observe the merged node and edge counts;
     - metadata_sidecars: the node census, edge census and spo-type census
-      over the written bundle, which is read back with the written
-      frames' schemas (no inference job);
+      over the written bundle;
     - merge_report: one job counting both raw source sides.
     """
     phase = recorder.phase if recorder else lambda _: nullcontext()
@@ -257,8 +258,10 @@ def build_graph(
 
     primary_nodes, primary_edges = [], []
     subset_sources, verbatim = [], []
-    for src in spec.sources:
-        nodes, edges = read_bundle(spark, source_bundles[src.source_id])
+    with phase("read_sources"):
+        frames = [read_bundle(spark, source_bundles[src.source_id])
+                  for src in spec.sources]
+    for src, (nodes, edges) in zip(spec.sources, frames):
         if src.merge_strategy == "default":
             primary_nodes.append(nodes)
             primary_edges.append(edges)
@@ -310,10 +313,8 @@ def build_graph(
         merged_nodes, merged_edges, out_dir, fmt=spec.output_format,
         recorder=recorder, collect_counts=True,
     )
-    nodes_back, edges_back = read_bundle(
-        spark, out_dir, fmt=spec.output_format,
-        schemas=(merged_nodes.schema, merged_edges.schema),
-    )
+    with phase("read_bundle"):
+        nodes_back, edges_back = read_bundle(spark, out_dir, fmt=spec.output_format)
     with phase("metadata_sidecars"):
         write_metadata_sidecars(
             spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir

@@ -29,6 +29,7 @@ from orion_spark.operators import derive as D
 from orion_spark.operators import merge as M
 from orion_spark.operators import normalize as N
 from orion_spark.plans import tpch_graph as G
+from orion_spark.plans.tpch_graph import read_table as _t
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -54,10 +55,6 @@ def query(name: str, oracle: str | None = None):
         return wrapped
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
 def _fixture_dir() -> str:
@@ -11021,9 +11018,9 @@ def skew_walk_skipgrams_q(spark, sf_dir):
     oracle replays the (bucket, dst) neighbor order and the md5 pick
     bit-for-bit."""
     from orion_spark.operators.graphalgo import random_walks, walk_skipgrams
-    from orion_spark.plans.skewgraph import skew_edges, skew_n_nodes
+    from orion_spark.plans.skewgraph import skew_edges, skew_n
 
-    n = skew_n_nodes(spark, sf_dir)
+    n = skew_n(spark, sf_dir)
     pairs = skew_edges(spark, sf_dir).localCheckpoint(eager=True)
     # single-explode symmetrization (round 12): one scan of the
     # checkpointed pairs instead of one per union branch; identical rows

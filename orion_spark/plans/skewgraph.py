@@ -32,16 +32,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import parquet_num_rows
+
 N_HUBS = 16
 SPOKE_P1 = 1_000_003
 SPOKE_P2 = 7_919
 _SPOKE_CHUNK = 8_192  # per-row explode bound: hub 0 at sf10 is ~5M spokes
 
 
-def skew_n_nodes(spark: SparkSession, sf_dir: str) -> int:
-    """Base-node count: lineitem_rows // 6 (1k/10k/100k at the driver's
-    three sf points; parquet count is metadata-cheap)."""
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet").count() // 6
+def skew_n(spark: SparkSession, sf_dir: str) -> int:
+    """Base size of both skew fixtures (this graph's base nodes and
+    skewtext's docs): lineitem_rows // 6, i.e. 1k/10k/100k at the
+    driver's three sf points. The row count is summed from the lineitem
+    footers, with no Spark job."""
+    return parquet_num_rows(spark, f"{sf_dir}/lineitem.parquet") // 6
 
 
 def skew_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +54,7 @@ def skew_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     are unique per hub because gcd(7919, N) = 1 and d_j <= N/2; hub ids
     sit above every base id) — no dedup shuffle needed, and the DuckDB
     side replays the identical arithmetic."""
-    return skew_edges_for_n(spark, skew_n_nodes(spark, sf_dir))
+    return skew_edges_for_n(spark, skew_n(spark, sf_dir))
 
 
 def skew_edges_for_n(spark: SparkSession, n: int) -> DataFrame:
@@ -114,7 +118,7 @@ def skew_hub_property_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     - publications: ['PMID:<(k * 31) % 50>'] — 50 distinct values folded
       to a sorted-distinct list.
     _source_ordinal = k (unique per key => deterministic merge)."""
-    n = skew_n_nodes(spark, sf_dir)
+    n = skew_n(spark, sf_dir)
     spokes = _hub_spokes(spark, n)
     return spokes.select(
         F.concat(F.lit("H:"), F.col("j").cast("string")).alias("id"),

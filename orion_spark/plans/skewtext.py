@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.plans.skewgraph import skew_n
+
 BOILER = "subscribe to our newsletter for daily updates and offers"
 N_WARM = 16
 UNIQ_P1 = 7_919
@@ -44,15 +46,9 @@ UNIQ_P2 = 104_729
 UNIQ_MOD = 9_973
 
 
-def skew_n_docs(spark: SparkSession, sf_dir: str) -> int:
-    """Doc count: lineitem_rows // 6 — same sizing rule as the skew graph
-    fixture (parquet count is metadata-cheap)."""
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet").count() // 6
-
-
 def skew_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, url, text) fixture frame, sized from the sf_dir."""
-    return skew_docs_for_n(spark, skew_n_docs(spark, sf_dir))
+    return skew_docs_for_n(spark, skew_n(spark, sf_dir))
 
 
 def skew_docs_for_n(spark: SparkSession, n: int) -> DataFrame:

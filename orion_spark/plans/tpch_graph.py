@@ -27,9 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
 
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One TPC-H table of an sf_dir: the registry's single table read."""
+    return read_parquet(spark, f"{sf_dir}/{table}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -39,14 +42,14 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def part_nodes_two_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _read(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         F.concat(F.lit("PART:"), F.col("p_partkey")).alias("id"),
         F.col("p_name").alias("name"),
         F.array(F.lit("biolink:ChemicalEntity")).alias("category"),
         F.array(F.lit("CATALOG")).alias("publications"),
         F.lit(0).alias("_source_ordinal"),
     )
-    li = _read(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.concat(F.lit("PART:"), F.col("l_partkey")).alias("id"),
         F.lit(None).cast("string").alias("name"),
         F.array(F.lit("biolink:ChemicalEntity"), F.lit("biolink:NamedThing")).alias(
@@ -75,34 +78,34 @@ PART_NODES_TWO_SOURCES_SQL = """
 
 def nodes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unified node table (already-merged shape, distinct ids)."""
-    c = _read(spark, sf_dir, "customer").select(
+    c = read_table(spark, sf_dir, "customer").select(
         F.concat(F.lit("CUST:"), F.col("c_custkey")).alias("id"),
         F.col("c_name").alias("name"),
         F.array(F.lit("biolink:Case")).alias("category"),
     )
-    s = _read(spark, sf_dir, "supplier").select(
+    s = read_table(spark, sf_dir, "supplier").select(
         F.concat(F.lit("SUPP:"), F.col("s_suppkey")).alias("id"),
         F.col("s_name").alias("name"),
         F.array(F.lit("biolink:Agent")).alias("category"),
     )
-    p = _read(spark, sf_dir, "part").select(
+    p = read_table(spark, sf_dir, "part").select(
         F.concat(F.lit("PART:"), F.col("p_partkey")).alias("id"),
         F.col("p_name").alias("name"),
         F.array(F.lit("biolink:ChemicalEntity")).alias("category"),
     )
-    n = _read(spark, sf_dir, "nation").select(
+    n = read_table(spark, sf_dir, "nation").select(
         F.concat(F.lit("NATION:"), F.col("n_nationkey")).alias("id"),
         F.col("n_name").alias("name"),
         F.array(F.lit("biolink:GeographicLocation")).alias("category"),
     )
-    r = _read(spark, sf_dir, "region").select(
+    r = read_table(spark, sf_dir, "region").select(
         F.concat(F.lit("REGION:"), F.col("r_regionkey")).alias("id"),
         F.col("r_name").alias("name"),
         F.array(F.lit("biolink:GeographicLocation"), F.lit("biolink:NamedThing")).alias(
             "category"
         ),
     )
-    o = _read(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         F.concat(F.lit("ORDER:"), F.col("o_orderkey")).alias("id"),
         F.lit(None).cast("string").alias("name"),
         F.array(F.lit("biolink:Activity")).alias("category"),
@@ -139,7 +142,7 @@ NODES_SQL = """
 def lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER->PART edges; one row per lineitem line, duplicates per
     (order, part, qualifiers) group."""
-    return _read(spark, sf_dir, "lineitem").select(
+    return read_table(spark, sf_dir, "lineitem").select(
         F.concat(F.lit("ORDER:"), F.col("l_orderkey")).alias("subject"),
         F.lit("biolink:contains").alias("predicate"),
         F.concat(F.lit("PART:"), F.col("l_partkey")).alias("object"),
@@ -177,7 +180,7 @@ LINEITEM_EDGES_SQL = """
 
 def all_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full heterogeneous edge table (core columns only)."""
-    o = _read(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         F.concat(F.lit("ORDER:"), F.col("o_orderkey")).alias("subject"),
         F.lit("biolink:placed_by").alias("predicate"),
         F.concat(F.lit("CUST:"), F.col("o_custkey")).alias("object"),
@@ -191,7 +194,7 @@ def all_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~20-char strings plus two constant columns, and the per-row hash
     # work in the partial dedup is integer hashing.
     li = (
-        _read(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .dropDuplicates()
         .select(
@@ -201,19 +204,19 @@ def all_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("infores:tpch-lineitem").alias("primary_knowledge_source"),
         )
     )
-    c = _read(spark, sf_dir, "customer").select(
+    c = read_table(spark, sf_dir, "customer").select(
         F.concat(F.lit("CUST:"), F.col("c_custkey")).alias("subject"),
         F.lit("biolink:located_in").alias("predicate"),
         F.concat(F.lit("NATION:"), F.col("c_nationkey")).alias("object"),
         F.lit("infores:tpch-customer").alias("primary_knowledge_source"),
     )
-    s = _read(spark, sf_dir, "supplier").select(
+    s = read_table(spark, sf_dir, "supplier").select(
         F.concat(F.lit("SUPP:"), F.col("s_suppkey")).alias("subject"),
         F.lit("biolink:located_in").alias("predicate"),
         F.concat(F.lit("NATION:"), F.col("s_nationkey")).alias("object"),
         F.lit("infores:tpch-supplier").alias("primary_knowledge_source"),
     )
-    n = _read(spark, sf_dir, "nation").select(
+    n = read_table(spark, sf_dir, "nation").select(
         F.concat(F.lit("NATION:"), F.col("n_nationkey")).alias("subject"),
         F.lit("biolink:part_of").alias("predicate"),
         F.concat(F.lit("REGION:"), F.col("n_regionkey")).alias("object"),
@@ -256,7 +259,7 @@ ALL_EDGES_SQL = """
 # ---------------------------------------------------------------------------
 
 def norm_map_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _read(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     base = F.concat(
         F.lit("NORM:CUST:"), F.col("c_nationkey"), F.lit(":"), F.col("c_custkey")
     )

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orion_spark.sinks.incremental import SHARD_COL
+from orion_spark.sources.kgx import read_parquet
 
 PARTIALS_DIR = ".qc_partials"
 
@@ -171,7 +172,7 @@ def qc_totals(spark: SparkSession, bundle_path: str) -> DataFrame:
     """Fold the partials into bundle-wide QC totals: (metric, key, n).
     The input is O(n_shards x distinct keys) — kilobytes at any bundle
     size; this never touches bundle data."""
-    partials = spark.read.parquet(os.path.join(bundle_path, PARTIALS_DIR))
+    partials = read_parquet(spark, os.path.join(bundle_path, PARTIALS_DIR))
     return partials.groupBy("metric", "key").agg(F.sum("n").alias("n"))
 
 
@@ -279,9 +280,7 @@ def knowledge_source_hll_totals(
     of shard sketches is the full-corpus sketch, so this equals a direct
     full-scan HLL exactly; it approximates the exact distinct count
     within the sketch's error bound."""
-    partials = spark.read.parquet(
-        os.path.join(bundle_path, HLL_PARTIALS_DIR)
-    )
+    partials = read_parquet(spark, os.path.join(bundle_path, HLL_PARTIALS_DIR))
     return (
         partials.groupBy("aggregator_sources", "primary_knowledge_source")
         .agg(

@@ -19,7 +19,9 @@ KGX-compatibility boundary.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,23 +114,184 @@ def write_bundle(
     return None
 
 
+# ---------------------------------------------------------------------------
+# Parquet read boundary: the schema comes from one footer read on the driver
+# ---------------------------------------------------------------------------
+
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName):
+    names starting with `_` or `.` are skipped unless they hold `=` (a
+    partition directory) or start like a parquet summary file."""
+    hidden = ((name.startswith("_") and "=" not in name)
+              or name.startswith(".") or name.endswith("._COPYING_"))
+    return not hidden or name.startswith(_SUMMARIES)
+
+
+def _parquet_files(path: str) -> list[str] | None:
+    """The files Spark lists under a local parquet path, sorted by path as
+    its schema inference sorts them. None for anything that is not a plain
+    local path (a URI, a glob) or does not exist: Spark handles those."""
+    scheme = re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path)
+    if scheme or re.search(r"[*?\[{\\]", path):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        files += [os.path.join(root, n) for n in names if _listed(n)]
+    return sorted(files)
+
+
+def _footer_file(files: list[str]) -> str | None:
+    """The one file Spark's schema inference reads without mergeSchema
+    (ParquetUtils.inferSchema): `_common_metadata`, else `_metadata`,
+    else the first data file."""
+    for summary in _SUMMARIES:
+        for f in files:
+            if os.path.basename(f) == summary:
+                return f
+    data = [f for f in files if os.path.basename(f) not in _SUMMARIES]
+    return data[0] if data else None
+
+
+def _spark_leaf(col, ntz: bool, binary_as_string: bool) -> T.DataType | None:
+    """The Spark type ParquetToSparkSchemaConverter gives one parquet leaf
+    column, or None where this map does not cover it exactly (INT96,
+    unsigned ints, nanosecond timestamps, TIME, FLOAT16, UUID, ...)."""
+    lt = json.loads(col.logical_type.to_json())
+    kind, phys = lt["Type"], col.physical_type
+    if kind == "Decimal":
+        # the most digits Spark reads from each physical type
+        max_digits = {"INT32": 9, "INT64": 18}.get(phys, 38)
+        if phys != "BOOLEAN" and 1 <= lt["precision"] <= max_digits:
+            return T.DecimalType(lt["precision"], lt["scale"])
+        return None
+    if kind == "Int" and lt["isSigned"]:
+        return {("INT32", 8): T.ByteType(), ("INT32", 16): T.ShortType(),
+                ("INT32", 32): T.IntegerType(),
+                ("INT64", 64): T.LongType()}.get((phys, lt["bitWidth"]))
+    if kind == "Timestamp" and phys == "INT64" and lt["timeUnit"] in (
+            "milliseconds", "microseconds"):
+        naive = not lt["isAdjustedToUTC"] and ntz
+        return T.TimestampNTZType() if naive else T.TimestampType()
+    if kind == "Date" and phys == "INT32":
+        return T.DateType()
+    if kind == "String" and phys == "BYTE_ARRAY":
+        return T.StringType()
+    if kind != "None":
+        return None
+    return {"BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(),
+            "INT64": T.LongType(), "FLOAT": T.FloatType(),
+            "DOUBLE": T.DoubleType(), "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+            "BYTE_ARRAY": T.StringType() if binary_as_string else T.BinaryType(),
+            }.get(phys)
+
+
+def _leaves(dt: T.DataType, path: str = ""):
+    """(parquet column path, Spark leaf type) of each leaf of `dt`, in
+    column order, for the standard list (`list.element`) and map
+    (`key_value.key/value`) layouts."""
+    if isinstance(dt, T.StructType):
+        for f in dt.fields:
+            yield from _leaves(f.dataType, f"{path}{f.name}.")
+    elif isinstance(dt, T.ArrayType):
+        yield from _leaves(dt.elementType, f"{path}list.element.")
+    elif isinstance(dt, T.MapType):
+        yield from _leaves(dt.keyType, f"{path}key_value.key.")
+        yield from _leaves(dt.valueType, f"{path}key_value.value.")
+    else:
+        yield path[:-1], dt
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema `spark.read.parquet(path)` would infer, read from one
+    footer on the driver; None whenever it cannot be had exactly.
+
+    A Spark-written footer carries Spark's own schema (the row-metadata
+    JSON its inference reads). Any other footer maps through
+    `from_arrow_schema`, kept only if every leaf column matches the type
+    Spark's converter gives it (`_spark_leaf`) at the same column path.
+    A data column that is also a partition directory key falls back too:
+    Spark types it from the path and keeps its data position."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = _parquet_files(path)
+    footer = _footer_file(files) if files else None
+    if footer is None:
+        return None
+    try:
+        meta = pq.read_metadata(footer)
+        if _ROW_METADATA in (meta.metadata or {}):
+            schema = T.StructType.fromJson(json.loads(meta.metadata[_ROW_METADATA]))
+        else:
+            conf = spark.conf.get
+            ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+            as_str = conf("spark.sql.parquet.binaryAsString") == "true"
+            pschema = meta.schema
+            schema = from_arrow_schema(pschema.to_arrow_schema(), ntz)
+            want = [(c.path, _spark_leaf(c, ntz, as_str))
+                    for c in map(pschema.column, range(len(pschema)))]
+            if list(_leaves(schema)) != want:
+                return None
+    except Exception:
+        return None
+    part_keys = {part.split("=", 1)[0].lower()
+                 for f in files
+                 for part in os.path.relpath(os.path.dirname(f), path).split(os.sep)
+                 if "=" in part}
+    if part_keys & {n.lower() for n in schema.names}:
+        return None
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without its schema-inference job.
+
+    Spark infers a parquet schema by reading one footer in a one-task job
+    (even for a single file). This reads the same footer on the driver
+    and passes the schema it yields; partition columns are still typed
+    from the directory names by Spark. When no footer can be read or
+    mapped exactly (a missing path, an empty directory, a URI, INT96 or
+    unsigned columns) no schema is passed, so Spark infers, or raises,
+    as it always has."""
+    return spark.read.load(path, "parquet", _footer_schema(spark, path))
+
+
+def parquet_num_rows(spark: SparkSession, path: str) -> int:
+    """`read_parquet(spark, path).count()` from the data files' footers,
+    with no Spark job; a path that cannot be listed locally is counted by
+    Spark."""
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    if files:
+        try:
+            return sum(pq.read_metadata(f).num_rows for f in files
+                       if os.path.basename(f) not in _SUMMARIES)
+        except Exception:
+            pass
+    return read_parquet(spark, path).count()
+
+
 def read_bundle(
     spark: SparkSession, path: str, fmt: str = "parquet",
-    schemas: tuple[T.StructType, T.StructType] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Read a bundle's (nodes, edges).
-
-    `schemas` are the (node, edge) schemas of the frames the bundle was
-    just written from. Parquet keeps a frame's schema as written, so a
-    parquet read given them skips the footer schema-inference job each
-    side otherwise runs. JSON lines do not round-trip a schema (the
-    writer prunes empties, the reader widens numbers and drops all-null
-    columns), so a jsonl read always infers."""
+    """Read a bundle's (nodes, edges). Parquet sides read their schema
+    from a footer (`read_parquet`); JSON lines do not round-trip a schema
+    (the writer prunes empties, the reader widens numbers and drops
+    all-null columns), so a jsonl read always infers."""
     if fmt == "parquet":
-        node_schema, edge_schema = schemas or (None, None)
         return (
-            spark.read.load(os.path.join(path, "nodes"), "parquet", node_schema),
-            spark.read.load(os.path.join(path, "edges"), "parquet", edge_schema),
+            read_parquet(spark, os.path.join(path, "nodes")),
+            read_parquet(spark, os.path.join(path, "edges")),
         )
     return (
         read_kgx_nodes(spark, os.path.join(path, "nodes")),
@@ -179,7 +342,7 @@ def compact_table(
     if total == 0:
         return 0
     n_files = max(1, -(-total // target_file_bytes))  # ceil div
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     out = df.repartition(n_files)
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 DOCS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
@@ -257,7 +259,7 @@ def curated_dedup_sink(
                 )
             from orion_spark.llm.urls import domain_blocklist_filter
 
-            bl = spark.read.parquet(domain_blocklist_path)
+            bl = read_parquet(spark, domain_blocklist_path)
             b = _mark(
                 "blocklist_gate", domain_blocklist_filter(b, bl)
             )
@@ -342,7 +344,7 @@ def curated_dedup_sink(
         # append→fold crash window (strict_exact)
         standing_exact = bloom_history_path is not None and update_bloom_history
         if os.path.exists(out_path) and (strict_exact or not standing_exact):
-            seen = spark.read.parquet(out_path).select("content_key").distinct()
+            seen = read_parquet(spark, out_path).select("content_key").distinct()
             b = b.join(seen, "content_key", "left_anti")
         keep = b.groupBy("content_key").agg(F.min("doc_id").alias("doc_id"))
         out = b.join(keep, ["content_key", "doc_id"], "left_semi")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -93,13 +95,13 @@ def merge_upsert_sink(bundle_path: str, checkpoint: str):
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
-            existing = spark.read.parquet(bundle_path)
+            existing = read_parquet(spark, bundle_path)
             combined = existing.unionByName(batch_df, allowMissingColumns=True)
         except Exception:
             combined = batch_df
         merged = merge_edges(combined.drop("ts"))
         merged.write.mode("overwrite").parquet(bundle_path + "_tmp")
-        spark.read.parquet(bundle_path + "_tmp").write.mode("overwrite").parquet(
+        read_parquet(spark, bundle_path + "_tmp").write.mode("overwrite").parquet(
             bundle_path
         )
 

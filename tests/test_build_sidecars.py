@@ -85,7 +85,8 @@ def built(spark, tmp_path_factory):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = {p: rec.jobs(p) for p in ("metadata_sidecars", "merge_report")}
+    jobs = {p: rec.jobs(p) for p in ("read_sources", "read_bundle",
+                                     "metadata_sidecars", "merge_report")}
     jobs["outside phases"] = len(sc.statusTracker().getJobIdsForGroup(rec.tag))
     return out, frames, jobs
 
@@ -163,11 +164,12 @@ def test_post_write_metadata_job_budget(built):
     """The merge report is one job (the merged counts ride the bundle
     write); the sidecars are the node census, the edge census, the
     spo-type census and, with an aggregator column, the per-source
-    breakdown; reading the bundle back runs no schema-inference job."""
+    breakdown; no read of a source or of the bundle runs a schema-inference
+    job (each schema comes from a footer)."""
     _, _, jobs = built
     assert jobs["merge_report"] <= 1, jobs
     # node and edge census 2 + 2, spo-type census 3, breakdown 5
     assert jobs["metadata_sidecars"] <= 12, jobs
-    # four source reads, two parquet schema-inference jobs each
-    assert jobs["outside phases"] <= 8, jobs
+    assert jobs["read_sources"] == jobs["read_bundle"] == 0, jobs
+    assert jobs["outside phases"] == 0, jobs
 

@@ -728,7 +728,8 @@ def test_phase_recorder_restores_the_callers_job_group(spark):
 def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
     """End-to-end measured build (tools/build_stage_metrics.py) at
     sf0.001 in its own session with the event log on: every build phase
-    is recorded in both passes, and the merge-bearing write phases run
+    is recorded in both passes, the read phases run no job (each parquet
+    schema comes from a footer), and the merge-bearing write phases run
     jobs and tasks and write shuffle bytes (the A3 groupBy-agg
     exchange). Subprocess on purpose — the event log is fixed at context
     creation, so the shared session can't host this."""
@@ -756,11 +757,15 @@ def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
         phases = {p["phase"]: p for p in payload[key]}
         assert set(phases) == {
             "source_prep",
+            "read_sources",
             "write_nodes",
             "write_edges",
+            "read_bundle",
             "metadata_sidecars",
             "merge_report",
         }
+        for name in ("read_sources", "read_bundle"):
+            assert phases[name]["jobs"] == 0, phases[name]
         # the node/edge writes execute the merge lineage: real exchanges
         for name in ("write_nodes", "write_edges"):
             assert phases[name]["jobs"] > 0, phases[name]

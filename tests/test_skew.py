@@ -138,10 +138,10 @@ def test_skew_graph_fixture_shape(spark):
     the degree spread the sweep-gate skew queries rely on."""
     from pyspark.sql import functions as F
 
-    from orion_spark.plans.skewgraph import N_HUBS, skew_edges, skew_n_nodes
+    from orion_spark.plans.skewgraph import N_HUBS, skew_edges, skew_n
 
     sf = "/root/testdata/sf0.001"
-    n = skew_n_nodes(spark, sf)
+    n = skew_n(spark, sf)
     edges = skew_edges(spark, sf).localCheckpoint(eager=True)
     total = edges.count()
     assert edges.distinct().count() == total  # construction guarantees
