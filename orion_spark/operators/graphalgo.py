@@ -4,14 +4,22 @@ the whole-graph iterative family a large-scale graph pipeline needs,
 reusing the same nodes/edges data model).
 
 Scale design: each iteration is one broadcast-or-shuffle join plus one
-aggregate, and lineage is truncated per round with localCheckpoint —
-without that, iteration k re-executes all k-1 predecessors (the classic
-iterative-Spark trap, same treatment as llm/dedup.py:dedup_clusters).
+aggregate. Lineage follows one of two policies:
+
+- eager per round (`_rounds`: k-core, k-truss, label propagation, BFS):
+  every round's result is materialized with `localCheckpoint(eager=True)`
+  before the next round reads it;
+- lazy (`pagerank`, `random_walks`): the rounds stay one plan, which the
+  final action (or, for the walks, one checkpoint of the step union over
+  lazily persisted steps) runs in a single pass.
+
+SCALE.md and OPTIMIZATION_r11.md record the measurements behind each.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -34,13 +42,52 @@ def _cached_join_parts(df: DataFrame, approx_rows: int,
     return max(par, math.ceil(approx_rows / rows_per_part))
 
 
+def undirected(df: DataFrame, a: str, b: str, u: str, v: str) -> DataFrame:
+    """Both directions of every (a, b) row as (u, v): (a, b) and (b, a).
+
+    One explode over one scan of `df`; a two-branch union would scan it
+    twice, because Spark does not share a subtree between union branches.
+    Duplicate rows, self-loops and null endpoints pass through as the
+    union would emit them."""
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(u), F.col(b).alias(v)),
+                F.struct(F.col(b).alias(u), F.col(a).alias(v)),
+            )
+        ).alias("_e")
+    ).select(f"_e.{u}", f"_e.{v}")
+
+
+def node_degrees(pairs: DataFrame) -> DataFrame:
+    """(node, deg): how many (a, b) rows of `pairs` each node ends,
+    counting both endpoints of every row."""
+    return (
+        pairs.select(F.explode(F.array("a", "b")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _rounds(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], n: int
+) -> DataFrame:
+    """`step` applied `n` times, each round materialized before the next.
+
+    The eager per-round truncation is load-bearing: a round reads the
+    previous round's result more than once (k-core's edges feed the degree
+    aggregate and both semi-joins), so an untruncated plan grows
+    multiplicatively with the round count, and the 3-round single-plan
+    label propagation runs out of memory at sf0.1 (measured).
+    localCheckpoint, not persist: the blocks go when the frame is dropped
+    and nothing stays registered in the cache manager."""
+    for _ in range(n):
+        state = step(state).localCheckpoint(eager=True)
+    return state
+
+
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_interval: int = 5,
+    edges: DataFrame, iterations: int = 3, damping: float = 0.85
 ) -> DataFrame:
     """Fixed-iteration PageRank (simplified: dangling mass is not
     redistributed, matching the plain SQL formulation so the DuckDB oracle
@@ -49,11 +96,13 @@ def pagerank(
         pr_0(v)   = 1/N
         pr_k+1(v) = (1-d)/N + d * sum_{(u,v) in E} pr_k(u) / outdeg(u)
 
-    Returns (id, pr) for every node, and an empty frame for an empty
-    graph. Deterministic up to float summation order; callers round for
-    cross-engine comparison.
+    `edges` needs src/dst columns. Returns (id, pr) for every node, and an
+    empty frame for an empty graph. Deterministic up to float summation
+    order; callers round for cross-engine comparison. The rounds stay one
+    lazy plan (see the module docstring), so the plan grows with
+    `iterations`: this is the few-round form.
     """
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+    e = edges.select(F.col("src").alias("_src"), F.col("dst").alias("_dst"))
     nodes = (
         e.select(F.col("_src").alias("id"))
         .unionByName(e.select(F.col("_dst").alias("id")))
@@ -69,7 +118,7 @@ def pagerank(
 
     pr = nodes.withColumn("pr", F.lit(1.0 / n))
     base = F.lit((1.0 - damping) / n)
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = graph.join(pr, graph["_src"] == pr["id"]).select(
             F.col("_dst").alias("id"), (F.col("pr") / F.col("_outdeg")).alias("_c")
         )
@@ -78,12 +127,6 @@ def pagerank(
             "id",
             (base + F.lit(damping) * F.coalesce(F.col("_s"), F.lit(0.0))).alias("pr"),
         )
-        # checkpoint periodically, not per round: a short fixed-iteration run
-        # with one terminal action executes the whole DAG in a single pass,
-        # and eager per-round materialization would only add overhead. Deep
-        # loops still need truncation or the plan grows without bound.
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            pr = pr.localCheckpoint(eager=True)
     return pr
 
 
@@ -155,24 +198,11 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
     # orientation twice plus the node/edge summary. Materialize both with
     # localCheckpoint (GC-releasable once the frame is dropped, unlike a
     # never-unpersisted cache pinned in the cache manager for the whole
-    # session) so the multi-referenced subtrees compute once.
-    # Round-11 blind alley, kept for the record: a checkpoint-then-
-    # re-spread of pairs (the narrow AQE-coalesced layout starves the
-    # orientation/intersect stages — 5 tasks holding 5.6 s of CPU at
-    # sf0.1) measured WORSE on the same boot (triangle family
-    # 4.09/2.91/2.89 s control vs 5.71/4.30/3.85 s spread): the second
-    # materialization, its sort-before-repartition exchange, and the
-    # extra task waves across the many small downstream stages cost more
-    # than the one starved stage saves. AQE's byte-coalescing is the
-    # better trade here.
+    # session) so the multi-referenced subtrees compute once. Re-spreading
+    # pairs after the checkpoint measured worse (OPTIMIZATION_r11.md,
+    # "Blind alley ... checkpoint-then-re-spread").
     pairs = pairs.localCheckpoint(eager=True)
-    deg = (
-        pairs.select(F.col("a").alias("node"))
-        .unionAll(pairs.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    deg = node_degrees(pairs).localCheckpoint(eager=True)
     # one aggregate gives both summary scalars: sum(deg) == 2|E| exactly
     stats = deg.agg(
         F.count("*").alias("n_nodes"),
@@ -288,19 +318,21 @@ def triangle_count_sampled(
     """
     if not 0 < keep <= denom:
         raise ValueError(f"keep must be in (0, {denom}], got {keep}")
-    pairs = pairs.localCheckpoint(eager=True)
-    total = pairs.agg(F.count("*").alias("n_edges_total"))
-    sampled = pairs.where(_edge_sample_bucket(salt) % denom < keep)
+    # the total is observed below the sampling filter, so triangle_count's
+    # own checkpoint of the sample counts every input edge on the way
+    total = Observation()
+    sampled = pairs.observe(total, F.count(F.lit(1)).alias("n")).where(
+        _edge_sample_bucket(salt) % denom < keep
+    )
     base = triangle_count(sampled)
     scale = (denom / keep) ** 3
-    return total.crossJoin(
-        base.select(
-            F.col("n_edges").alias("n_edges_sampled"),
-            F.col("n_triangles").alias("n_triangles_sampled"),
-            F.round(F.col("n_triangles") * F.lit(scale))
-            .cast("bigint")
-            .alias("est_triangles"),
-        )
+    return base.select(
+        F.lit(total.get["n"]).cast("bigint").alias("n_edges_total"),
+        F.col("n_edges").alias("n_edges_sampled"),
+        F.col("n_triangles").alias("n_triangles_sampled"),
+        F.round(F.col("n_triangles") * F.lit(scale))
+        .cast("bigint")
+        .alias("est_triangles"),
     )
 
 
@@ -390,32 +422,19 @@ def kcore_prune(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
 
     Scale design: one round = one degree aggregate plus two left-semi
     joins, all keyed on node ids — no row ever carries more than (a, b).
-    The edge set shrinks monotonically, so per-round localCheckpoint both
-    truncates the multiplicative lineage (edges feed the degree aggregate
-    AND both semi-joins next round) and re-snapshots the smaller set.
-    Extension surface: the reference computes degree-style aggregates only
-    (orion/answercoalesce_build.py:100-165).
+    The edge set shrinks monotonically and each round is materialized
+    (`_rounds`). Extension surface: the reference computes degree-style
+    aggregates only (orion/answercoalesce_build.py:100-165).
     """
-    e = pairs.select("a", "b").localCheckpoint(eager=True)
-    for _ in range(rounds):
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = node_degrees(e).where(F.col("deg") >= k).select("node")
+        return e.join(keep, e["a"] == keep["node"], "left_semi").join(
+            keep, F.col("b") == keep["node"], "left_semi"
         )
-        keep = deg.where(F.col("deg") >= k).select("node")
-        e = (
-            e.join(keep, e["a"] == keep["node"], "left_semi")
-            .join(keep, F.col("b") == keep["node"], "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
+
+    e = _rounds(pairs.select("a", "b").localCheckpoint(eager=True), peel, rounds)
+    return node_degrees(e).withColumnRenamed("deg", "degree")
 
 
 def kcore_oracle_sql(pairs_cte: str, k: int = 2, rounds: int = 3) -> str:
@@ -451,14 +470,8 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
     round count is the bounded-cost variant (k rounds = k shuffles).
 
     `edges` needs src/dst columns; the graph is treated as undirected.
-    Returns (id, label) after `iterations` rounds. Per-round
-    localCheckpoint truncates lineage (same treatment as pagerank above).
+    Returns (id, label) after `iterations` rounds (`_rounds`).
     """
-    # the symmetrized edge list is referenced every round: persist it
-    # already hash-partitioned on the join key, so each round's
-    # sym-vs-labels join reuses this partitioning and only the (small)
-    # labels side moves — the big edge table is shuffled once, not once
-    # per round
     # checkpoint the caller's edges once: it cuts their derivation (for
     # the KGX graph, all_edges and its lineitem dropDuplicates exchange)
     # out of sym's lineage, and the same job counts them for the layout
@@ -469,38 +482,14 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
         .observe(n_edges, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    # layout the cached join table at one partition per core growing with
-    # rows (sym ≤ 3|E|: both directions + one self-loop per node) — the
-    # input-bytes shuffle autoscale over-partitions this compact cached
-    # relation and every round then pays its partition count in
-    # near-empty task launches (see _cached_join_parts)
+    # sym ≤ 3|E| rows: both directions + one self-loop per node
     n_parts = _cached_join_parts(edges, 3 * n_edges.get["n"])
-    # Self-loops fold the "least(own label, neighbor min)" step INTO the
-    # neighbor aggregate: with (v, v) present for every node, one
-    # join+min per round replaces the old join+agg THEN left-join+least —
-    # one |V|-sized shuffle join fewer per round. At sf0.1 the wall is
-    # unchanged (per-round checkpoint fixed costs dominate on a 20k-node
-    # graph); the saved exchange is the term that grows with |V| at
-    # cluster scale. min over (neighbors ∪ {self}) is identical to
-    # least(own, neighbor-min), so results and the oracle's chained-CTE
-    # formulation are unchanged.
-    # Round 11 (guide §2.4): ONE exchange builds sym where three ran
-    # before. Self-loops come straight from the edge list (every (a, b)
-    # contributes (a, a); duplicates are collapsed by the same dedup that
-    # uniquifies the symmetrized edges), so the separate nodes-distinct
-    # exchange is gone; and dropDuplicates AFTER repartition("b") runs
-    # WITHOUT its own exchange because HashPartitioning(b) satisfies the
-    # dedup aggregate's ClusteredDistribution([a, b]) — rows with equal
-    # (a, b) are already co-located. Post-dedup content is identical
-    # (distinct symmetrized edges + one self-loop per node) and stays
-    # hash-partitioned on the join key for every round.
-    # Round 12 (guide §1.2, profiled): the 4-branch union scanned the
-    # cached edge table FOUR times (100 map tasks, 30.4 s of task time
-    # at sf0.1 — Spark does not share common subtrees across union
-    # branches even when cached); a single explode of the 4 per-edge
-    # structs emits the identical rows in ONE scan. Same rows into the
-    # same repartition+dedup, so sym's content and partitioning are
-    # unchanged.
+    # The self-loops fold "least(own label, neighbor min)" into the
+    # neighbor min and give the initial labels. One explode emits all four
+    # rows per edge from one scan (not `undirected`: the self-loops must
+    # come from the same scan), and the dedup after repartition("b") needs
+    # no exchange of its own. History: OPTIMIZATION_r11.md,
+    # "graph_label_propagation".
     sym = (
         edges.select(
             F.explode(
@@ -519,33 +508,22 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
         # the hashpartitioning(b) metadata so each round's join shuffles
         # only the small labels side; a localCheckpoint's LogicalRDD drops
         # outputPartitioning (measured: the big side re-exchanges every
-        # round). The per-round eager checkpoints below are actions, so by
-        # the time we return, labels is materialized and sym can be
-        # explicitly unpersisted — no session-lifetime storage pin.
+        # round). The eager rounds are actions, so sym is unpersisted
+        # before returning — no session-lifetime storage pin.
         .persist()
     )
-    # Label init rides the self-loops: sym is distinct and carries exactly
-    # one (v, v) row per node (every node appears as `a` in `undirected`
-    # because both directions are unioned), so a narrow FILTER of the
-    # cached sym replaces the old nodes-distinct exchange + aggregate
-    # (round 11, guide §2.4: a `distinct` on data that is already unique
-    # is an accidental exchange). Row content is identical.
+    # sym is distinct with exactly one (v, v) row per node, so a narrow
+    # filter gives the initial labels without a distinct exchange
     labels = sym.where(F.col("a") == F.col("b")).select(
         F.col("a").alias("id"), F.col("a").alias("label")
     )
-    for i in range(iterations):
-        labels = (
-            sym.join(labels, sym["b"] == labels["id"])
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("label").alias("label"))
-            # per-round truncation is LOAD-BEARING, as in pagerank: the
-            # un-truncated plan grows multiplicatively and the 3-round
-            # single-DAG variant OOMs at sf0.1 (measured). Eager
-            # materialization caps both plan size and task memory.
-            .localCheckpoint(eager=True)
-        )
-    # every join against sym already ran (the eager checkpoints above are
-    # actions); release its blocks instead of pinning them for the session
+    labels = _rounds(
+        labels,
+        lambda lab: sym.join(lab, sym["b"] == lab["id"])
+        .groupBy(F.col("a").alias("id"))
+        .agg(F.min("label").alias("label")),
+        iterations,
+    )
     sym.unpersist()
     return labels
 
@@ -586,32 +564,27 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> Data
     are min-combined per round, so revisiting a node through a longer
     path never raises its distance. The symmetrized edge list is
     persisted pre-partitioned on the join key (shuffled once, reused
-    every round); per-round localCheckpoint truncates lineage exactly as
-    in label_propagation_min above.
+    every round); the rounds are eager (`_rounds`).
     """
     sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionAll(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+        undirected(edges, "src", "dst", "a", "b")
         .distinct()
         .repartition("b")
         # persist + unpersist-after-loop, same reasoning as
         # label_propagation_min: cached partitioning metadata keeps the big
-        # side shuffle-once, and the per-round eager checkpoints are the
-        # actions that make the final unpersist safe
+        # side shuffle-once, and the eager rounds are the actions that
+        # make the final unpersist safe
         .persist()
     )
-    dist = seeds.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
-    for _ in range(max_hops):
-        expanded = (
-            sym.join(dist, sym["b"] == dist["id"])
-            .select(F.col("a").alias("id"), (F.col("dist") + 1).alias("dist"))
+
+    def hop(dist: DataFrame) -> DataFrame:
+        expanded = sym.join(dist, sym["b"] == dist["id"]).select(
+            F.col("a").alias("id"), (F.col("dist") + 1).alias("dist")
         )
-        dist = (
-            dist.unionAll(expanded)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        return dist.unionAll(expanded).groupBy("id").agg(F.min("dist").alias("dist"))
+
+    dist0 = seeds.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
+    dist = _rounds(dist0, hop, max_hops)
     sym.unpersist()
     return dist
 
@@ -653,16 +626,13 @@ def ktruss_prune(pairs: DataFrame, k: int = 3, rounds: int = 2) -> DataFrame:
     Scale design: the support join is the standard symmetrized
     common-neighbor equi-join (the same shape as triangle counting —
     shuffle on the shared-neighbor key, then one aggregate per unordered
-    pair); the edge set shrinks monotonically and re-snapshots per round
-    via localCheckpoint, truncating the multiplicative lineage. Completes
-    the cohesive-subgraph family next to kcore_prune.
-    Extension surface: the reference computes degree-style aggregates
-    only (orion/answercoalesce_build.py:100-165)."""
+    pair); the edge set shrinks monotonically and each round is
+    materialized (`_rounds`). Completes the cohesive-subgraph family next
+    to kcore_prune. Extension surface: the reference computes
+    degree-style aggregates only (orion/answercoalesce_build.py:100-165)."""
 
     def support(e: DataFrame) -> DataFrame:
-        sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-            e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
+        sym = undirected(e, "a", "b", "src", "dst")
         s1 = sym.select(F.col("src").alias("u"), F.col("dst").alias("w"))
         s2 = sym.select(F.col("src").alias("v"), F.col("dst").alias("w2"))
         # common neighbor w of the unordered pair (u, v), u < v
@@ -684,14 +654,11 @@ def ktruss_prune(pairs: DataFrame, k: int = 3, rounds: int = 2) -> DataFrame:
             )
         )
 
-    e = pairs.select("a", "b").localCheckpoint(eager=True)
-    for _ in range(rounds):
-        e = (
-            support(e)
-            .where(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
+    e = _rounds(
+        pairs.select("a", "b").localCheckpoint(eager=True),
+        lambda e: support(e).where(F.col("support") >= k - 2).select("a", "b"),
+        rounds,
+    )
     return support(e)
 
 
@@ -926,17 +893,10 @@ def random_walks(
     out = frontier.select(
         "walk_id", F.lit(0).alias("step"), F.col("_cur").alias("node")
     )
-    # Round 11 (guide §1.2 remove passes): each step's frontier is
-    # consumed exactly twice — by the next step's joins and by the output
-    # union — so a LAZY persist per step with ONE eager materialization of
-    # the final union computes every step exactly once inside a single
-    # job. The previous per-step localCheckpoint(eager=True) ran
-    # walk_length separate jobs with a driver barrier + AQE replan each
-    # (measured: 12.1 s wall vs 8.3 s summed job wall — ~4 s of driver
-    # gaps across 31 jobs at sf0.1). Block-manager get-or-compute
-    # guarantees a cached step partition is computed once even when both
-    # consumers race to it. All persists are released after the final
-    # materialization below, so nothing pins the cache past the call.
+    # each step's frontier is read twice (next step, output union): a
+    # lazy persist per step and one checkpoint of the union compute every
+    # step once in a single job; all persists are released below.
+    # Measured against eager steps: OPTIMIZATION_r11.md, "graph_walk_skipgrams".
     step_caches = []
     for t in range(1, walk_length + 1):
         pick = F.pmod(
@@ -1127,9 +1087,7 @@ def adamic_adar(
     Excluded centers still count toward every node's TRUE degree: the
     1/ln(d) term of surviving centers is unchanged, so capped semantics
     are exact (and exactly oracle-able) on the capped wedge set."""
-    sym = pairs.select(F.col("a").alias("u"), F.col("b").alias("w")).unionAll(
-        pairs.select(F.col("b").alias("u"), F.col("a").alias("w"))
-    ).localCheckpoint(eager=True)
+    sym = undirected(pairs, "a", "b", "u", "w").localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("w").alias("_n")).agg(F.count("*").alias("d"))
     centers = deg if max_degree is None else deg.where(
         F.col("d") <= max_degree

@@ -31,6 +31,7 @@ from orion_spark.operators.extract import (
     hgvs_from_coords,
     predicate_remap,
 )
+from orion_spark.operators.merge import edge_endpoints
 from orion_spark.sources.readers import (
     curie_contract,
     read_ntriples,
@@ -268,9 +269,7 @@ def ubergraph_like(
         F.lit("infores:ubergraph").alias("primary_knowledge_source"),
     )
     nodes = (
-        subclass.select(F.col("subject").alias("id"))
-        .unionByName(subclass.select(F.col("object").alias("id")))
-        .distinct()
+        edge_endpoints(subclass)
         .join(labels, "id", "left")
         .select(
             "id", "name", F.array(F.lit("biolink:NamedThing")).alias("category")
@@ -1883,11 +1882,7 @@ def drugmechdb_like(
             "primary_knowledge_source", F.lit("infores:drugmechdb")
         )
     )
-    nodes = (
-        edges.select(F.col("subject").alias("id"))
-        .unionAll(edges.select(F.col("object").alias("id")))
-        .distinct()
-    )
+    nodes = edge_endpoints(edges)
     return nodes, edges
 
 
@@ -1965,12 +1960,7 @@ def tmkp_like(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         "|",
     )
 
-    nodes = (
-        raw.select(F.col("subject").alias("id"))
-        .unionAll(raw.select(F.col("object").alias("id")))
-        .where(F.col("id").isNotNull())
-        .distinct()
-    )
+    nodes = edge_endpoints(raw).where(F.col("id").isNotNull())
 
     empty = lambda c: F.coalesce(F.col(c), F.lit("")) == ""  # noqa: E731
     skip = empty("subject") & ~empty("object") & ~empty("predicate")
@@ -3148,11 +3138,7 @@ def monarchkg_like(
         ),
         *[F.col(c) for c in passthrough],
     )
-    nodes = (
-        base.select(F.col("subject").alias("id"))
-        .unionAll(base.select(F.col("object").alias("id")))
-        .distinct()
-    )
+    nodes = edge_endpoints(base)
     return nodes, edges
 
 
@@ -3288,11 +3274,7 @@ def camkp_like(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         F.lit("manual_agent").alias("agent_type"),
         F.col("_q.value").alias("anatomical_context_qualifier"),
     )
-    nodes = (
-        base.select(F.col("subject").alias("id"))
-        .unionAll(base.select(F.col("object").alias("id")))
-        .distinct()
-    )
+    nodes = edge_endpoints(base)
     return nodes, edges
 
 
@@ -4157,11 +4139,7 @@ def ehr_like(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         .where(~bad)
         .select(*cols)
     )
-    nodes = (
-        edges.select(F.col("subject").alias("id"))
-        .unionAll(edges.select(F.col("object").alias("id")))
-        .distinct()
-    )
+    nodes = edge_endpoints(edges)
     return nodes, edges
 
 
@@ -4490,11 +4468,7 @@ def cord19_like(
         F.lit("infores:cord19-scigraph").alias("primary_knowledge_source"),
     )
     edges = sb_edges.unionByName(sg_edges)
-    nodes = (
-        edges.select(F.col("subject").alias("id"))
-        .unionAll(edges.select(F.col("object").alias("id")))
-        .distinct()
-    )
+    nodes = edge_endpoints(edges)
     return nodes, edges
 
 

@@ -28,6 +28,31 @@ from orion_spark.operators import analyze as A
 from orion_spark.operators import derive as D
 from orion_spark.operators import merge as M
 from orion_spark.operators import normalize as N
+from orion_spark.operators.graphalgo import (
+    adamic_adar,
+    adamic_adar_oracle_sql,
+    bfs_distances,
+    bfs_oracle_sql,
+    cooccurrence_pairs,
+    kcore_oracle_sql,
+    kcore_prune,
+    ktruss_oracle_sql,
+    ktruss_prune,
+    label_propagation_min,
+    label_propagation_oracle_sql,
+    node_degrees,
+    pagerank,
+    pagerank_oracle_sql,
+    random_walks,
+    random_walks_oracle_sql,
+    triangle_count,
+    triangle_count_oracle_sql,
+    triangle_count_sampled,
+    triangle_count_sampled_oracle_sql,
+    undirected,
+    walk_skipgrams,
+    walk_skipgrams_oracle_sql,
+)
 from orion_spark.plans import tpch_graph as G
 from orion_spark.plans.tpch_graph import read_table as _t
 
@@ -1524,9 +1549,6 @@ def graph_top_degree_nodes_q(spark, sf_dir):
     return deg.orderBy(F.desc("degree"), F.asc("id")).limit(20)
 
 
-from orion_spark.operators.graphalgo import pagerank_oracle_sql  # noqa: E402
-
-
 @query(
     "graph_pagerank",
     pagerank_oracle_sql(G.ALL_EDGES_SQL, iterations=3),
@@ -1536,8 +1558,6 @@ def graph_pagerank_q(spark, sf_dir):
     the iterative-algorithm surface (per-round join + aggregate with
     lineage truncation). Oracle: the identical recurrence unrolled as
     chained DuckDB CTEs; values rounded to 9 digits (magnitudes ~1/N)."""
-    from orion_spark.operators.graphalgo import pagerank
-
     edges = G.all_edges(spark, sf_dir).select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     )
@@ -4261,15 +4281,16 @@ _TRI_PAIRS_SQL = """
         FROM op x JOIN op y ON x.o = y.o AND x.p < y.p)
 """
 
-from orion_spark.operators.graphalgo import (  # noqa: E402
-    cooccurrence_pairs,
-    kcore_oracle_sql,
-    kcore_prune,
-    triangle_count,
-    triangle_count_oracle_sql,
-    triangle_count_sampled,
-    triangle_count_sampled_oracle_sql,
-)
+
+def _part_pairs(spark, sf_dir, min_quantity: int | None = None) -> DataFrame:
+    """Distinct part pairs (a, b), a < b, of parts sharing an order, over
+    the lineitems with l_quantity >= `min_quantity` when it is given."""
+    li = _t(spark, sf_dir, "lineitem")
+    if min_quantity is not None:
+        li = li.where(F.col("l_quantity") >= min_quantity)
+    return (
+        cooccurrence_pairs(li, "l_orderkey", "l_partkey").select("a", "b").distinct()
+    )
 
 
 _WALK_EDGES_SQL = """
@@ -4284,155 +4305,70 @@ _WALK_STARTS_SQL = (
 )
 
 
-def _register_random_walks():
-    from orion_spark.operators.graphalgo import (
-        random_walks,
-        random_walks_oracle_sql,
+def _order_part_walks(spark, sf_dir) -> DataFrame:
+    """The deterministic walks both order-part walk queries read."""
+    li = _t(spark, sf_dir, "lineitem")
+    # dedup on the native int keys, then build the id strings from the
+    # surviving rows (the all_edges discipline): the concat is injective,
+    # so distinct-then-concat is row-identical to concat-then-distinct
+    # while the dedup exchange hashes ints, not two ~12-char strings
+    e0 = (
+        li.select("l_orderkey", "l_partkey")
+        .dropDuplicates()
+        .select(
+            F.concat(F.lit("O:"), F.col("l_orderkey").cast("string")).alias("a"),
+            F.concat(F.lit("P:"), F.col("l_partkey").cast("string")).alias("b"),
+        )
+    )
+    starts = (
+        li.where(F.col("l_orderkey") % 199 == 0)
+        .select(
+            F.concat(F.lit("O:"), F.col("l_orderkey").cast("string")).alias("src")
+        )
+        .distinct()
+    )
+    # the edges are distinct by construction: e0 is distinct and every
+    # "O:"->"P:" row differs from every "P:"->"O:" row by prefix, so the
+    # operator's dedup exchange is skipped
+    return random_walks(
+        undirected(e0, "a", "b", "src", "dst"),
+        walk_length=4, seed=42, starts=starts, assume_distinct=True,
     )
 
-    @query(
-        "graph_random_walks",
-        random_walks_oracle_sql(
-            _WALK_EDGES_SQL.strip(), walk_length=4, seed=42,
-            starts_sql=_WALK_STARTS_SQL,
-        ),
-    )
-    def graph_random_walks_q(spark, sf_dir):
-        """Deterministic random-walk corpus over the symmetrized
-        order-part bipartite graph — the DeepWalk/node2vec sampling pass
-        with the RNG replaced by a keyed md5 pick, so an inherently
-        randomized training-data generator is value-checked
-        cross-engine. The adjacency is built once as per-src neighbor
-        arrays sorted by (md5-bucket, dst), each row carrying its
-        out-degree, and persisted pre-partitioned on src; each of the 4
-        steps is one join of the walk frontier against it plus an
-        element_at pick (reference has no graph-ML surface; north-star
-        extension)."""
-        li = _t(spark, sf_dir, "lineitem")
-        # symmetrize via a single explode instead of a 2-branch union:
-        # Spark does not share common subtrees across union branches, so
-        # the union form ran e0's 600k-row string dedup TWICE (round 12,
-        # profiled: two full scan+shuffle+dedup passes inside the walk
-        # base materialization). Identical rows either way.
-        # dedup on the NATIVE int keys, then build the id strings from
-        # the surviving rows (the all_edges discipline, guide §2.3): the
-        # concat is injective, so distinct-then-concat is row-identical
-        # to concat-then-distinct while the dedup exchange carries 16
-        # bytes/row and hashes ints, not two ~12-char strings
-        e0 = (
-            li.select("l_orderkey", "l_partkey")
-            .dropDuplicates()
-            .select(
-                F.concat(
-                    F.lit("O:"), F.col("l_orderkey").cast("string")
-                ).alias("a"),
-                F.concat(
-                    F.lit("P:"), F.col("l_partkey").cast("string")
-                ).alias("b"),
-            )
-        )
-        edges = e0.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("_e")
-        ).select("_e.src", "_e.dst")
-        starts = (
-            li.where(F.col("l_orderkey") % 199 == 0)
-            .select(
-                F.concat(
-                    F.lit("O:"), F.col("l_orderkey").cast("string")
-                ).alias("src")
-            )
-            .distinct()
-        )
-        # distinct by construction (e0 distinct, direction-disjoint
-        # explode branches) — skip the operator's dedup exchange
-        return random_walks(
-            edges, walk_length=4, seed=42, starts=starts, assume_distinct=True
-        )
+
+_ORDER_PART_WALKS_SQL = random_walks_oracle_sql(
+    _WALK_EDGES_SQL.strip(), walk_length=4, seed=42, starts_sql=_WALK_STARTS_SQL
+)
 
 
-_register_random_walks()
+@query("graph_random_walks", _ORDER_PART_WALKS_SQL)
+def graph_random_walks_q(spark, sf_dir):
+    """Deterministic random-walk corpus over the symmetrized
+    order-part bipartite graph — the DeepWalk/node2vec sampling pass
+    with the RNG replaced by a keyed md5 pick, so an inherently
+    randomized training-data generator is value-checked
+    cross-engine. The adjacency is built once as per-src neighbor
+    arrays sorted by (md5-bucket, dst), each row carrying its
+    out-degree, and persisted pre-partitioned on src; each of the 4
+    steps is one join of the walk frontier against it plus an
+    element_at pick (reference has no graph-ML surface; north-star
+    extension)."""
+    return _order_part_walks(spark, sf_dir)
 
 
-def _register_walk_skipgrams():
-    from orion_spark.operators.graphalgo import (
-        random_walks,
-        random_walks_oracle_sql,
-        walk_skipgrams,
-        walk_skipgrams_oracle_sql,
-    )
-
-    walks_sql = random_walks_oracle_sql(
-        _WALK_EDGES_SQL.strip(), walk_length=4, seed=42,
-        starts_sql=_WALK_STARTS_SQL,
-    )
-
-    @query(
-        "graph_walk_skipgrams",
-        walk_skipgrams_oracle_sql(walks_sql, window=2),
-    )
-    def graph_walk_skipgrams_q(spark, sf_dir):
-        """Skip-gram (center, context, count) pairs within a 2-step
-        window over the deterministic walks — the full
-        walk->training-pairs chain of a DeepWalk pipeline, value-checked
-        end to end. One groupBy(walk_id) collect_list gathers each
-        walk's walk_length+1 (step, node) rows, the in-window pairs are
-        enumerated in-row by a transform/filter over that array (no
-        self-join), then one count aggregate."""
-        li = _t(spark, sf_dir, "lineitem")
-        # single-explode symmetrization (round 12): the 2-branch union
-        # evaluated e0's 600k-row string dedup once PER BRANCH — Spark
-        # does not share common subtrees across union branches. Rows are
-        # identical either way.
-        # dedup on the NATIVE int keys, then build the id strings from
-        # the surviving rows (the all_edges discipline, guide §2.3): the
-        # concat is injective, so distinct-then-concat is row-identical
-        # to concat-then-distinct while the dedup exchange carries 16
-        # bytes/row and hashes ints, not two ~12-char strings
-        e0 = (
-            li.select("l_orderkey", "l_partkey")
-            .dropDuplicates()
-            .select(
-                F.concat(
-                    F.lit("O:"), F.col("l_orderkey").cast("string")
-                ).alias("a"),
-                F.concat(
-                    F.lit("P:"), F.col("l_partkey").cast("string")
-                ).alias("b"),
-            )
-        )
-        edges = e0.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("_e")
-        ).select("_e.src", "_e.dst")
-        starts = (
-            li.where(F.col("l_orderkey") % 199 == 0)
-            .select(
-                F.concat(
-                    F.lit("O:"), F.col("l_orderkey").cast("string")
-                ).alias("src")
-            )
-            .distinct()
-        )
-        # edges is distinct by construction: e0 is distinct and the two
-        # explode branches are direction-disjoint (every "O:"->"P:" row is
-        # distinct from every "P:"->"O:" row by prefix), so the operator's
-        # internal dedup exchange is skipped (round 11, guide §2.4)
-        walks = random_walks(
-            edges, walk_length=4, seed=42, starts=starts, assume_distinct=True
-        )
-        return walk_skipgrams(walks, window=2)
-
-
-_register_walk_skipgrams()
+@query(
+    "graph_walk_skipgrams",
+    walk_skipgrams_oracle_sql(_ORDER_PART_WALKS_SQL, window=2),
+)
+def graph_walk_skipgrams_q(spark, sf_dir):
+    """Skip-gram (center, context, count) pairs within a 2-step
+    window over the deterministic walks — the full
+    walk->training-pairs chain of a DeepWalk pipeline, value-checked
+    end to end. One groupBy(walk_id) collect_list gathers each
+    walk's walk_length+1 (step, node) rows, the in-window pairs are
+    enumerated in-row by a transform/filter over that array (no
+    self-join), then one count aggregate."""
+    return walk_skipgrams(_order_part_walks(spark, sf_dir), window=2)
 
 
 @query("graph_triangle_count", triangle_count_oracle_sql(_TRI_PAIRS_SQL.strip()))
@@ -4444,12 +4380,7 @@ def graph_triangle_count_q(spark, sf_dir):
     explosion, which is what kills naive pair-joins on power-law graphs
     at 100 TB. Extension surface (reference computes only degree-style
     aggregates — orion/answercoalesce_build.py:100-165)."""
-    pairs = (
-        cooccurrence_pairs(_t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-    )
-    return triangle_count(pairs)
+    return triangle_count(_part_pairs(spark, sf_dir))
 
 
 @query(
@@ -4470,12 +4401,7 @@ def graph_triangle_count_sampled_q(spark, sf_dir):
     rows-only check; the error-bound contract vs the exact count is
     pinned in tests/test_graphalgo.py. At 100 TB the wedge join touches
     ~p^2 = 1% of the exact plan's pair volume."""
-    pairs = (
-        cooccurrence_pairs(_t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-    )
-    return triangle_count_sampled(pairs, keep=100, denom=1000)
+    return triangle_count_sampled(_part_pairs(spark, sf_dir), keep=100, denom=1000)
 
 
 @query(
@@ -4697,11 +4623,6 @@ def bundle_version_diff_q(spark, sf_dir):
         .agg(F.count("*").alias("n"))
     )
 
-
-from orion_spark.operators.graphalgo import (  # noqa: E402
-    label_propagation_min,
-    label_propagation_oracle_sql,
-)
 
 _LP_EDGES_SQL = f"""
     {G.ALL_EDGES_SQL.strip()},
@@ -5021,37 +4942,19 @@ def graph_kcore_q(spark, sf_dir):
     degree-aggregate + semi-join passes over a monotonically shrinking
     edge set (operators/graphalgo.py:kcore_prune); the oracle unrolls the
     identical rounds as chained CTEs."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    pairs = (
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-    )
-    return kcore_prune(pairs, k=2, rounds=3)
+    return kcore_prune(_part_pairs(spark, sf_dir, min_quantity=45), k=2, rounds=3)
 
 
-def _register_ktruss():
-    from orion_spark.operators.graphalgo import ktruss_oracle_sql, ktruss_prune
-
-    @query("graph_ktruss", ktruss_oracle_sql(_KCORE_PAIRS_SQL.strip(), k=3, rounds=2))
-    def graph_ktruss_q(spark, sf_dir):
-        """Bounded 3-truss peeling on the same sparsified co-occurrence
-        graph as graph_kcore: two rounds of per-edge support (common-
-        neighbor count, the triangle-join shape) with support >= 1 kept,
-        then the final support panel. Completes the cohesive-subgraph
-        family (k-core peels nodes by degree; k-truss peels edges by
-        triangle support). Oracle unrolls identical rounds as chained
-        CTEs."""
-        li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-        pairs = (
-            cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-            .select("a", "b")
-            .distinct()
-        )
-        return ktruss_prune(pairs, k=3, rounds=2)
-
-
-_register_ktruss()
+@query("graph_ktruss", ktruss_oracle_sql(_KCORE_PAIRS_SQL.strip(), k=3, rounds=2))
+def graph_ktruss_q(spark, sf_dir):
+    """Bounded 3-truss peeling on the same sparsified co-occurrence
+    graph as graph_kcore: two rounds of per-edge support (common-
+    neighbor count, the triangle-join shape) with support >= 1 kept,
+    then the final support panel. Completes the cohesive-subgraph
+    family (k-core peels nodes by degree; k-truss peels edges by
+    triangle support). Oracle unrolls identical rounds as chained
+    CTEs."""
+    return ktruss_prune(_part_pairs(spark, sf_dir, min_quantity=45), k=3, rounds=2)
 
 
 @query(
@@ -5335,18 +5238,10 @@ def graph_neighbor_jaccard_q(spark, sf_dir):
     fans out from shared neighbors — on power-law graphs the hub caps
     from kcore/triangle apply; here the quantity filter bounds degree.
     Degree table (|V| rows) broadcasts into the pair table."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    pairs = (
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-        # localCheckpoint for the same no-session-pin reason as above
-        .localCheckpoint(eager=True)
-    )
-    sym = pairs.select(F.col("a").alias("u"), F.col("b").alias("w")).unionAll(
-        pairs.select(F.col("b").alias("u"), F.col("a").alias("w"))
-    )
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
+    # localCheckpoint for the same no-session-pin reason as above
+    pairs = _part_pairs(spark, sf_dir, min_quantity=45).localCheckpoint(eager=True)
+    sym = undirected(pairs, "a", "b", "u", "w")
+    deg = node_degrees(pairs)
     e1 = sym.select(F.col("u").alias("ua"), "w")
     e2 = sym.select(F.col("u").alias("ub"), F.col("w").alias("w2"))
     common = (
@@ -5354,8 +5249,8 @@ def graph_neighbor_jaccard_q(spark, sf_dir):
         .groupBy(F.col("ua").alias("a"), F.col("ub").alias("b"))
         .agg(F.count("*").alias("c"))
     )
-    da = deg.select(F.col("u").alias("_ua"), F.col("d").alias("_da"))
-    db = deg.select(F.col("u").alias("_ub"), F.col("d").alias("_db"))
+    da = deg.select(F.col("node").alias("_ua"), F.col("deg").alias("_da"))
+    db = deg.select(F.col("node").alias("_ub"), F.col("deg").alias("_db"))
     union_size = F.col("_da") + F.col("_db") - F.col("c")
     return (
         common.join(F.broadcast(da), F.col("a") == F.col("_ua"))
@@ -5766,11 +5661,8 @@ def graph_connected_components_q(spark, sf_dir):
     near-dup clustering step (llm/dedup.py:dedup_clusters — one codepath
     for 'group transitive duplicates' and 'find graph components');
     oracle is the recursive-CTE transitive closure."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    pairs = (
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .distinct()
+    pairs = _part_pairs(spark, sf_dir, min_quantity=45).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )
     # sparse co-occurrence graphs are tree-like: the giant component's
     # diameter exceeds dedup-cluster defaults; the changed-row check still
@@ -6044,11 +5936,6 @@ def text_pii_panel_q(spark, sf_dir):
         F.sum(residual).cast("bigint").alias("residual_pii"),
     )
 
-
-from orion_spark.operators.graphalgo import (  # noqa: E402
-    bfs_distances,
-    bfs_oracle_sql,
-)
 
 _BFS_EDGES_SQL = f"""
     {G.ALL_EDGES_SQL.strip()},
@@ -10601,15 +10488,7 @@ def graph_adamic_adar_q(spark, sf_dir):
     scored sum(1/ln(deg(w))) with a sorted-fold float contract so the
     oracle hash-matches. Wedge join + broadcast degree dim + keyed
     anti-join against the existing edges."""
-    from orion_spark.operators.graphalgo import adamic_adar, cooccurrence_pairs
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    pairs = (
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    pairs = _part_pairs(spark, sf_dir, min_quantity=45).localCheckpoint(eager=True)
     return adamic_adar(pairs, min_common=2)
 
 
@@ -10623,15 +10502,7 @@ def graph_adamic_adar_capped_q(spark, sf_dir):
     wedge measured 12.8x wall at 10x data on the sf10 clone-densified
     graph. Exact semantics on the capped wedge set (true degrees kept
     in the 1/ln(d) term), so fully value-oracled."""
-    from orion_spark.operators.graphalgo import adamic_adar, cooccurrence_pairs
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    pairs = (
-        cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    pairs = _part_pairs(spark, sf_dir, min_quantity=45).localCheckpoint(eager=True)
     return adamic_adar(pairs, min_common=2, max_degree=8)
 
 
@@ -10661,7 +10532,6 @@ def text_winnowing_matches_q(spark, sf_dir):
 
 def _register_r7c_oracles() -> None:
     from orion_spark.llm import dedup as DD
-    from orion_spark.operators.graphalgo import adamic_adar_oracle_sql
 
     ORACLES["graph_adamic_adar"] = adamic_adar_oracle_sql(
         _COOC_PAIRS_CTE, min_common=2
@@ -10905,7 +10775,6 @@ def skew_adamic_adar_capped_q(spark, sf_dir):
     the round-8 hub fixture). Exact semantics on the capped wedge set
     (true degrees keep feeding the 1/ln d term), deterministic top-10k
     by (score desc, a, b), so fully value-oracled."""
-    from orion_spark.operators.graphalgo import adamic_adar
     from orion_spark.plans.skewgraph import skew_edges
 
     pairs = skew_edges(spark, sf_dir).localCheckpoint(eager=True)
@@ -10920,11 +10789,9 @@ def skew_triangle_doulion_q(spark, sf_dir):
     graph; the p=0.1 sample verifies in ~2 s at 1.8% observed error).
     Deterministic md5 edge sampling -> the estimate itself is exactly
     reproduced by the oracle, estimate included."""
-    from orion_spark.operators.graphalgo import triangle_count_sampled
     from orion_spark.plans.skewgraph import skew_edges
 
-    pairs = skew_edges(spark, sf_dir).localCheckpoint(eager=True)
-    return triangle_count_sampled(pairs, keep=100, denom=1000)
+    return triangle_count_sampled(skew_edges(spark, sf_dir), keep=100, denom=1000)
 
 
 @query(
@@ -10965,10 +10832,6 @@ def skew_merge_salted_q(spark, sf_dir):
 
 
 def _register_skew_oracles() -> None:
-    from orion_spark.operators.graphalgo import (
-        adamic_adar_oracle_sql,
-        triangle_count_sampled_oracle_sql,
-    )
     from orion_spark.plans.skewgraph import (
         skew_hub_rows_chain_sql,
         skew_pairs_chain_sql,
@@ -11017,21 +10880,11 @@ def skew_walk_skipgrams_q(spark, sf_dir):
     hubs, so walks both leave and pass through the hot node; full value
     oracle replays the (bucket, dst) neighbor order and the md5 pick
     bit-for-bit."""
-    from orion_spark.operators.graphalgo import random_walks, walk_skipgrams
     from orion_spark.plans.skewgraph import skew_edges, skew_n
 
     n = skew_n(spark, sf_dir)
     pairs = skew_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # single-explode symmetrization (round 12): one scan of the
-    # checkpointed pairs instead of one per union branch; identical rows
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = undirected(pairs, "a", "b", "src", "dst")
     starts = (
         spark.range(n + 16)
         .where((F.col("id") % 199 == 0) | (F.col("id") >= n))
@@ -11049,10 +10902,6 @@ def skew_walk_skipgrams_q(spark, sf_dir):
 
 
 def _register_skew_walk_oracle() -> None:
-    from orion_spark.operators.graphalgo import (
-        random_walks_oracle_sql,
-        walk_skipgrams_oracle_sql,
-    )
     from orion_spark.plans.skewgraph import skew_pairs_chain_sql
 
     edges_cte = (

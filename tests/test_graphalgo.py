@@ -1,9 +1,64 @@
 """Iterative graph-algorithm tests (operators/graphalgo.py)."""
 
+import ast
+import pathlib
+import uuid
+from collections import Counter
+
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from orion_spark.operators.graphalgo import pagerank
+
+GRAPHALGO = (
+    pathlib.Path(__file__).resolve().parent.parent
+    / "orion_spark" / "operators" / "graphalgo.py"
+)
+
+
+def _jobs(spark, fn):
+    """(fn's result, the number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"graphalgo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graphalgo")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _k4_pendant(spark):
+    """K4 on 1..4 plus the pendant edge (4, 5): 7 edges, 4 triangles."""
+    k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
+    return spark.createDataFrame(k4 + [(4, 5)], "a int, b int")
+
+
+def test_undirected_and_node_degrees_match_the_union_forms(spark):
+    """Both helpers emit what the two-branch union (and its groupBy)
+    emits, as multisets: duplicate rows stay duplicated, a self-loop
+    comes out twice, a null endpoint is kept."""
+    from orion_spark.operators.graphalgo import node_degrees, undirected
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 3), (3, 3), (4, None)], "a int, b int"
+    )
+    union = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    got = Counter(map(tuple, undirected(pairs, "a", "b", "u", "v").collect()))
+    assert got == Counter(map(tuple, union.collect()))
+    assert got[(3, 3)] == 2 and got[(None, 4)] == 1
+
+    want_deg = union.groupBy(F.col("u").alias("node")).agg(
+        F.count("*").alias("deg")
+    )
+    assert Counter(map(tuple, node_degrees(pairs).collect())) == Counter(
+        map(tuple, want_deg.collect())
+    )
+    assert node_degrees(pairs).columns == ["node", "deg"]
 
 
 def test_pagerank_two_node_cycle_is_uniform(spark):
@@ -43,9 +98,7 @@ def test_triangle_count_known_graph(spark):
     """K4 plus a pendant vertex: C(4,3)=4 triangles, 7 edges, 5 nodes."""
     from orion_spark.operators.graphalgo import triangle_count
 
-    k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
-    pairs = spark.createDataFrame(k4 + [(4, 5)], "a int, b int")
-    row = triangle_count(pairs).collect()[0]
+    row = triangle_count(_k4_pendant(spark)).collect()[0]
     assert (row.n_nodes, row.n_edges, row.n_triangles) == (5, 7, 4)
 
 
@@ -188,14 +241,17 @@ def test_no_cache_pinned_after_multi_branch_ops(spark):
     from orion_spark.llm.dedup import minhash_lsh_pairs, simhash_near_pairs
     from orion_spark.operators.graphalgo import (
         bfs_distances,
+        kcore_prune,
+        ktruss_prune,
         label_propagation_min,
         triangle_count,
     )
 
     spark.catalog.clearCache()
-    k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
-    pairs = spark.createDataFrame(k4 + [(4, 5)], "a int, b int")
+    pairs = _k4_pendant(spark)
     triangle_count(pairs).collect()
+    kcore_prune(pairs, k=2, rounds=2).collect()
+    ktruss_prune(pairs, k=3, rounds=2).collect()
 
     edges = spark.createDataFrame(
         [Row(src=s, dst=d) for s, d in [("a", "b"), ("b", "c"), ("x", "y")]]
@@ -323,15 +379,39 @@ def test_triangle_sampled_full_keep_is_exact(spark):
     survives, the scale factor is 1, est == exact."""
     from orion_spark.operators.graphalgo import triangle_count_sampled
 
-    k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
-    pairs = spark.createDataFrame(k4 + [(4, 5)], "a int, b int")
-    row = triangle_count_sampled(pairs, keep=1000, denom=1000).collect()[0]
+    row = triangle_count_sampled(_k4_pendant(spark), keep=1000, denom=1000).collect()[0]
     assert (
         row.n_edges_total,
         row.n_edges_sampled,
         row.n_triangles_sampled,
         row.est_triangles,
     ) == (7, 7, 4, 4)
+
+
+def test_triangle_sampled_costs_no_job_beyond_the_exact_count(spark):
+    """The sample is not materialized on its own and its edge total is
+    observed on triangle_count's first checkpoint, so the sampled count
+    runs no more jobs than the exact count of the same graph. Counted
+    with adaptive execution off, where each checkpoint or collect is
+    one job (its per-stage jobs vary by a few from run to run)."""
+    from orion_spark.operators.graphalgo import (
+        triangle_count,
+        triangle_count_sampled,
+    )
+
+    pairs = _k4_pendant(spark)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        (row,), n_sampled = _jobs(
+            spark,
+            lambda: triangle_count_sampled(pairs, keep=1000, denom=1000).collect(),
+        )
+        _, n_exact = _jobs(spark, lambda: triangle_count(pairs).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert row.n_edges_total == 7
+    assert n_sampled <= n_exact, (n_sampled, n_exact)
 
 
 def test_triangle_sampled_rejects_bad_keep(spark):
@@ -522,3 +602,53 @@ def test_adamic_adar_capped_matches_duckdb(spark):
         ).fetchall()
     )
     assert got == want and got
+
+
+def _loop_materializations(tree):
+    """(enclosing function, method) of each localCheckpoint / checkpoint /
+    persist / cache call inside the body of a for or while loop."""
+    found = []
+
+    def visit(node, func, in_loop):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name, False)
+                continue
+            if (in_loop and isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in (
+                        "localCheckpoint", "checkpoint", "persist", "cache")):
+                found.append((func, child.func.attr))
+            visit(child, func, in_loop or isinstance(child, (ast.For, ast.While)))
+
+    visit(tree, None, False)
+    return found
+
+
+def test_per_round_materialization_lives_in_the_round_driver():
+    """Eager per-round truncation is decided once, in `_rounds`; the one
+    other materialization inside a loop is random_walks' lazy per-step
+    persist (the module docstring names both policies)."""
+    allowed = {("_rounds", "localCheckpoint"), ("random_walks", "persist")}
+    found = _loop_materializations(ast.parse(GRAPHALGO.read_text()))
+    assert set(found) == allowed, found
+
+
+def test_loop_materialization_guard_sees_each_loop_form():
+    src = (
+        "def f(df, n):\n"
+        "    df = df.localCheckpoint(eager=True)\n"
+        "    for _ in range(n):\n"
+        "        df = df.join(df).localCheckpoint(eager=True)\n"
+        "    while n:\n"
+        "        if n > 1:\n"
+        "            df = df.persist()\n"
+        "        n -= 1\n"
+        "    for _ in range(n):\n"
+        "        def g(x):\n"
+        "            return x.cache()\n"
+        "    return df\n"
+    )
+    assert _loop_materializations(ast.parse(src)) == [
+        ("f", "localCheckpoint"), ("f", "persist"),
+    ]
