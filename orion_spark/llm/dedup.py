@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.operators.graphalgo import connected_components
+
 # universal-hash family h_i(x) = (a_i*x + b_i) mod P over x < 2^32.
 # P = 2^31-1 (Mersenne prime); a_i ~20-bit keeps a*x < 2^52 (no overflow
 # under ANSI mode). Constants derive from a fixed LCG so any engine (or the
@@ -206,90 +208,20 @@ def minhash_lsh_pairs(
     return verified
 
 
-def dedup_clusters(pairs: DataFrame, max_iterations: int = 15) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs: every document in a
     transitively-connected cluster maps to the cluster's minimum doc id
-    (the canonical keeper). Iterative min-label propagation with a
-    path-halving shortcut: each round takes the min over neighbors' labels
-    AND then jumps through the label indirection (label <- label[label]),
-    which cuts convergence from O(diameter) to O(log diameter) rounds —
-    the difference between ~30 and ~6 shuffle rounds on sparse tree-like
-    graphs (pointer-jumping, the standard distributed-CC accelerant).
+    (the canonical keeper), as `(doc_id, cluster_id)` — the CLI's
+    `--save-clusters` file format. The rounds are
+    `graphalgo.connected_components` (min-label propagation with path
+    halving, O(diameter) rounds, run to the fixed point).
 
     This is the step that turns pairwise near-dup output into an actionable
     keep/drop decision at corpus scale.
     """
-    # iterative algorithms MUST truncate lineage each round or every
-    # iteration re-executes the whole upstream pipeline (here: the LSH
-    # dedup); localCheckpoint materializes and cuts the plan.
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    return connected_components(pairs, "doc_a", "doc_b").select(
+        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )
-    from pyspark.sql import Observation
-
-    _sum0 = Observation()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .observe(_sum0, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    # convergence probe: labels are monotone non-increasing (only ever
-    # replaced by mins), so the label SUM is strictly decreasing until the
-    # fixpoint and constant exactly at it. Round 11: the sum rides the
-    # round's OWN checkpoint job as an Observation (observed metrics fire
-    # on the eager localCheckpoint action), so the probe costs zero extra
-    # jobs — the previous shape ran a separate narrow-aggregate collect
-    # per round, one full driver round-trip each (guide §1.2: remove
-    # passes; decimal(38,0) so 1e9 rows of 1e18-scale ids cannot overflow
-    # the running sum).
-    prev_sum = _sum0.get["s"]
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["node"], "inner")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels["node"] == neighbor_min["a"], "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-        # path halving: label <- label[label]. Labels are always node ids
-        # (start as own id, only ever replaced by mins of node ids), so the
-        # self-join hits a row for every label; coalesce is belt-and-braces.
-        hop = new_labels.select(
-            F.col("node").alias("_n2"), F.col("label").alias("_l2")
-        )
-        _sum_r = Observation()
-        new_labels = (
-            new_labels.join(hop, new_labels["label"] == hop["_n2"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_l2"), F.col("label"))
-                ).alias("label"),
-            )
-            .observe(
-                _sum_r, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = _sum_r.get["s"]
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def dedup_clusters_oracle_sql(pairs_sql: str) -> str:
@@ -848,28 +780,12 @@ def semdedup_k_sql(source_count_sql: str, budget: int = SEMDEDUP_CLUSTER_BUDGET)
     return f"GREATEST(16, ({source_count_sql}) // {budget})"
 
 
-def _cand_schema(cent_schema):
-    """(_list, _cv, _owner) schema for the routed-centroid dim (built
-    fresh — StructType.add mutates in place)."""
-    from pyspark.sql.types import StructField, StructType
-
-    return StructType(
-        list(cent_schema.fields)
-        + [StructField("_owner", cent_schema["_list"].dataType)]
-    )
-
-
-SEMDEDUP_K_BROADCAST_MAX = 65536
-
-
 def semdedup_prune(
     df: DataFrame,
     n_clusters: int | None = 16,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_iterations: int = 15,
-    k_broadcast_max: int = SEMDEDUP_K_BROADCAST_MAX,
 ) -> DataFrame:
     """SemDeDup over an embedding column: returns one row per input vector
     with ``(vec_id, list_id, centroid_cos, group_id, kept)`` where
@@ -904,11 +820,10 @@ def semdedup_prune(
     the ownership rule are pure deterministic argmax-with-min-id-ties on
     the 6-rounded cosine, replayed exactly by `semdedup_oracle_sql`; for
     m = k (tiny inputs) the scheme degenerates to flat assignment.
-    Above `k_broadcast_max` (default 65536) the k-row centroid dim is
-    never collected or broadcast: only the m = ceil(sqrt(k)) supers are
-    (k = 8e8 -> m ~ 28k rows), owner assignment runs distributed, and
-    vector-vs-candidate scoring becomes an AQE-splittable shuffle-hash
-    join on the owner key — hash-equal to the broadcast path by test.
+    Only the m supers are collected and broadcast (k = 8e8 -> m ~ 28k
+    rows); the k-row centroid table stays a DataFrame, owner assignment
+    runs distributed, and vector-vs-candidate scoring is an
+    AQE-splittable shuffle-hash join on the owner key.
     The remaining fixed-seed `orderBy(id).limit(k)` centroid SELECTION
     is the determinism contract, not a scale recommendation; swap the
     init (sampled k-means||) for production corpora where k itself
@@ -919,149 +834,74 @@ def semdedup_prune(
     `n_clusters=None` applies that contract automatically: k =
     semdedup_k(count) = max(16, n // 125), keeping pair scoring
     ~n·125/2 (linear) instead of n²/k (a fixed k measured 22× wall at
-    10× data — SCALE.md). Components reuse the path-halving
-    `dedup_clusters`; the keeper pass is one more groupBy on group_id.
+    10× data — SCALE.md). Components are `dedup_clusters`; the keeper
+    pass is one more groupBy on group_id.
     """
     import math
 
     from orion_spark.llm.similarity import cosine, dot, l2_norm
 
     spark = df.sparkSession
+    n_seed = None
     if n_clusters is None:
-        n_clusters = semdedup_k(df.count())
+        # the k ∝ n count also answers the seed-size guard below
+        n_seed = df.count()
+        n_clusters = semdedup_k(n_seed)
     m = math.isqrt(n_clusters - 1) + 1 if n_clusters > 1 else 1
-    cent_frame = (
-        df.select(
-            F.col(id_col).alias("_list"),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
+    by_id = df.select(
+        F.col(id_col).alias("_list"),
+        F.col(vec_col).cast("array<double>").alias("_cv"),
+    ).orderBy("_list")
+    cent_frame = by_id.limit(n_clusters)
+    if n_seed is None:
+        n_seed = cent_frame.count()
+    if n_seed < n_clusters:
+        raise ValueError(
+            f"semdedup_prune needs >= {n_clusters} vectors to seed the "
+            "centroid table"
         )
-        .orderBy("_list")
-        .limit(n_clusters)
+    sup_local = sorted(by_id.limit(m).collect(), key=lambda r: r["_list"])
+    # _sn: the super's L2 norm hoisted out of the n x m routing fan-out;
+    # the identical l2_norm expression keeps every rounded cosine bit-equal
+    sup = F.broadcast(
+        spark.createDataFrame(sup_local, cent_frame.schema).select(
+            F.col("_list").alias("_sl"),
+            F.col("_cv").alias("_sv"),
+            l2_norm(F.col("_cv")).alias("_sn"),
+        )
     )
-    if n_clusters <= k_broadcast_max:
-        # broadcastable regime: one TakeOrderedAndProject job; tiny by
-        # construction (n_clusters rows), so the routed-centroid dim is
-        # collected once and broadcast to every task
-        cent_local = sorted(cent_frame.collect(), key=lambda r: r["_list"])
-        if len(cent_local) < n_clusters:
-            raise ValueError(
-                f"semdedup_prune needs >= {n_clusters} vectors to seed the "
-                "centroid table"
-            )
-        sup_local = cent_local[:m]
-        sup_ids = {r["_list"] for r in sup_local}
-        # _sn: the super's L2 norm hoisted out of the n x m routing fan-out
-        # (guide §2.3 narrow-the-work: cosine = dot/(norm*norm) re-folds
-        # both norms per PAIR; precomputing the per-row norms with the
-        # IDENTICAL l2_norm expression leaves the division operands
-        # bit-equal, so every rounded cosine is unchanged)
-        sup = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_sl"),
-                F.col("_cv").alias("_sv"),
-                l2_norm(F.col("_cv")).alias("_sn"),
-            )
+    sup_flag = F.broadcast(
+        spark.createDataFrame(sup_local, cent_frame.schema).select(
+            F.col("_list").alias("_list_s")
         )
-        # centroid -> owner super: a k x m cross (tiny), evaluated with the
-        # SAME rounded-cosine expression as every other level so the oracle
-        # replays it; supers own themselves by rule
-        cent_df = spark.createDataFrame(cent_local, cent_frame.schema)
-        routed_rows = (
-            cent_df.crossJoin(sup)
-            .select(
-                "_list", "_cv", "_sl",
-                F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
-            )
-            .groupBy("_list")
-            .agg(
-                F.min_by(
-                    F.struct("_cv", "_sl"),
-                    F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
-                ).alias("_o")
-            )
-            .select(
-                "_list", F.col("_o._cv").alias("_cv"), F.col("_o._sl").alias("_owner")
-            )
-            .collect()
+    )
+    # centroid -> owner super: a distributed k x m broadcast cross +
+    # min_by, with the SAME rounded-cosine expression as every other level
+    # so the oracle replays it; supers own themselves by rule
+    cand = (
+        cent_frame.repartition(spark.sparkContext.defaultParallelism)
+        .crossJoin(sup)
+        .select(
+            "_list", "_cv", "_sl",
+            F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
         )
-        cand = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (
-                        r["_list"],
-                        r["_cv"],
-                        r["_list"] if r["_list"] in sup_ids else r["_owner"],
-                    )
-                    for r in routed_rows
-                ],
-                _cand_schema(cent_frame.schema),
-            ).withColumn("_cn", l2_norm(F.col("_cv")))
+        .groupBy("_list")
+        .agg(
+            F.min_by(
+                F.struct("_cv", "_sl"),
+                F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
+            ).alias("_o")
         )
-    else:
-        # distributed regime (k > k_broadcast_max): under the k ∝ n
-        # contract the centroid dim itself becomes the unbounded term
-        # (~8e8 rows at a 100 TB corpus — the paper holds cluster COUNT
-        # near 50k, but a collect/broadcast of k rows must not be the
-        # engine's ceiling). Only the m = ceil(sqrt(k)) SUPER-centroids
-        # are ever collected/broadcast (bounded by sqrt: k=8e8 -> m~28k);
-        # the k-row candidate table stays a DataFrame, owner assignment
-        # runs as a distributed broadcast-cross + min_by, and the
-        # vector-vs-candidate scoring joins on the owner key as an
-        # AQE-splittable shuffle-hash join instead of a broadcast.
-        # Identical arithmetic (6-rounded cosine, min-id ties, supers own
-        # themselves) — proven hash-equal to the broadcast path in
-        # test_llm_ops.py::test_semdedup_distributed_routing_path_equal.
-        sup_local = sorted(
-            df.select(
-                F.col(id_col).alias("_list"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            )
-            .orderBy("_list")
-            .limit(m)
-            .collect(),
-            key=lambda r: r["_list"],
+        .join(sup_flag, F.col("_list") == F.col("_list_s"), "left")
+        .select(
+            "_list",
+            F.col("_o._cv").alias("_cv"),
+            F.when(F.col("_list_s").isNotNull(), F.col("_list"))
+            .otherwise(F.col("_o._sl"))
+            .alias("_owner"),
         )
-        if cent_frame.count() < n_clusters:
-            raise ValueError(
-                f"semdedup_prune needs >= {n_clusters} vectors to seed the "
-                "centroid table"
-            )
-        sup = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_sl"),
-                F.col("_cv").alias("_sv"),
-                l2_norm(F.col("_cv")).alias("_sn"),
-            )
-        )
-        sup_flag = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_list_s")
-            )
-        )
-        cand = (
-            cent_frame.repartition(spark.sparkContext.defaultParallelism)
-            .crossJoin(sup)
-            .select(
-                "_list", "_cv", "_sl",
-                F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
-            )
-            .groupBy("_list")
-            .agg(
-                F.min_by(
-                    F.struct("_cv", "_sl"),
-                    F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
-                ).alias("_o")
-            )
-            .join(sup_flag, F.col("_list") == F.col("_list_s"), "left")
-            .select(
-                "_list",
-                F.col("_o._cv").alias("_cv"),
-                F.when(F.col("_list_s").isNotNull(), F.col("_list"))
-                .otherwise(F.col("_o._sl"))
-                .alias("_owner"),
-            )
-            .withColumn("_cn", l2_norm(F.col("_cv")))
-        )
+        .withColumn("_cn", l2_norm(F.col("_cv")))
+    )
     # the routing cross is the compute-bound stage (n x m cosines,
     # interpreted higher-order functions): spread it across the cluster
     # even when the input parquet arrives in one or two partitions —
@@ -1161,7 +1001,7 @@ def semdedup_prune(
         .where(F.col("_pc") >= threshold)
         .select("doc_a", "doc_b")
     )
-    comp = dedup_clusters(pairs, max_iterations=max_iterations)
+    comp = dedup_clusters(pairs)
     labeled = assigned.join(
         comp, assigned["vec_id"] == comp["doc_id"], "left"
     ).select(

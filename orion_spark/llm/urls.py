@@ -129,8 +129,8 @@ def url_dedup(
     window partition over the canonical key, which puts every occurrence
     of a viral URL in ONE task, the single construct AQE cannot split
     (measured: the window plan's hot task is the whole critical path
-    once the hot key exceeds a core's fair share — tools/
-    bench_dewindow_ab.py).
+    once the hot key exceeds a core's fair share — SCALE.md, the
+    de-windowing A/B).
 
     Null canonical forms (a null url canonicalizes to null) pass through
     as their own singleton groups via the same left-join miss path: null

@@ -33,6 +33,7 @@ from orion_spark.operators.graphalgo import (
     adamic_adar_oracle_sql,
     bfs_distances,
     bfs_oracle_sql,
+    connected_components,
     cooccurrence_pairs,
     kcore_oracle_sql,
     kcore_prune,
@@ -5640,10 +5641,7 @@ _CC_PAIRS_SQL = """
       ON x.o = y.o AND x.p < y.p
 """
 
-from orion_spark.llm.dedup import (  # noqa: E402
-    dedup_clusters,
-    dedup_clusters_oracle_sql_doubling,
-)
+from orion_spark.llm.dedup import dedup_clusters_oracle_sql_doubling  # noqa: E402
 
 
 @query(
@@ -5655,20 +5653,15 @@ from orion_spark.llm.dedup import (  # noqa: E402
 )
 def graph_connected_components_q(spark, sf_dir):
     """Weakly connected components to CONVERGENCE (unlike the
-    bounded-round graph_label_propagation): min-label propagation with a
-    per-round changed-row check, so the loop stops at the graph's actual
-    diameter instead of a fixed round count. Runs the same engine as the
-    near-dup clustering step (llm/dedup.py:dedup_clusters — one codepath
-    for 'group transitive duplicates' and 'find graph components');
-    oracle is the recursive-CTE transitive closure."""
-    pairs = _part_pairs(spark, sf_dir, min_quantity=45).select(
-        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
-    )
-    # sparse co-occurrence graphs are tree-like: the giant component's
-    # diameter exceeds dedup-cluster defaults; the changed-row check still
-    # exits at actual convergence, the cap is just a runaway guard
-    return dedup_clusters(pairs, max_iterations=60).select(
-        F.col("doc_id").alias("node"), F.col("cluster_id").alias("component")
+    bounded-round graph_label_propagation): min-label propagation with
+    path halving and a per-round label-sum check, so the loop stops at
+    the graph's fixed point instead of a fixed round count. The same
+    kernel as the near-dup clustering step
+    (graphalgo.connected_components, behind llm/dedup.dedup_clusters);
+    oracle is dedup_clusters_oracle_sql_doubling's unrolled rounds."""
+    pairs = _part_pairs(spark, sf_dir, min_quantity=45)
+    return connected_components(pairs, "a", "b").select(
+        F.col("id").alias("node"), F.col("label").alias("component")
     )
 
 

@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from orion_spark.operators.graphalgo import pagerank
 
-GRAPHALGO = (
-    pathlib.Path(__file__).resolve().parent.parent
-    / "orion_spark" / "operators" / "graphalgo.py"
-)
+ENGINE = pathlib.Path(__file__).resolve().parent.parent / "orion_spark"
 
 
 def _jobs(spark, fn):
@@ -626,12 +623,23 @@ def _loop_materializations(tree):
 
 
 def test_per_round_materialization_lives_in_the_round_driver():
-    """Eager per-round truncation is decided once, in `_rounds`; the one
-    other materialization inside a loop is random_walks' lazy per-step
-    persist (the module docstring names both policies)."""
-    allowed = {("_rounds", "localCheckpoint"), ("random_walks", "persist")}
-    found = _loop_materializations(ast.parse(GRAPHALGO.read_text()))
-    assert set(found) == allowed, found
+    """Across the whole engine, eager per-round truncation is decided in
+    `_rounds`. The other materializations inside a loop are listed here:
+    random_walks' lazy per-step persist (graphalgo's docstring names both
+    policies), the BPE merge loop and the ChEBI semi-naive closure (a
+    frontier plus a growing union: not one state replaced per round)."""
+    allowed = {
+        ("operators/graphalgo.py", "_rounds", "localCheckpoint"),
+        ("operators/graphalgo.py", "random_walks", "persist"),
+        ("llm/textstats.py", "_bpe_learn", "localCheckpoint"),
+        ("plans/parsers.py", "chebi_role_ancestors", "localCheckpoint"),
+    }
+    found = {
+        (path.relative_to(ENGINE).as_posix(), func, method)
+        for path in ENGINE.rglob("*.py")
+        for func, method in _loop_materializations(ast.parse(path.read_text()))
+    }
+    assert found == allowed, found
 
 
 def test_loop_materialization_guard_sees_each_loop_form():

@@ -1,7 +1,9 @@
 """LLM-pipeline operator tests: dedup, similarity, text stats."""
 
 import os
+import random
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -145,6 +147,46 @@ def test_dedup_clusters_transitive(spark):
     )
     out = {r.doc_id: r.cluster_id for r in DD.dedup_clusters(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
+
+
+def _shuffled_path(spark):
+    """A 100-node path whose ids are shuffled along it: path halving
+    needs 57 rounds to carry the min id end to end."""
+    ids = list(range(1, 101))
+    random.Random(1).shuffle(ids)
+    return spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_a bigint, doc_b bigint"
+    )
+
+
+def test_dedup_clusters_runs_to_the_fixed_point(spark):
+    """A long path ends in one cluster; a round budget that ran out
+    early would leave several labels behind."""
+    out = DD.dedup_clusters(_shuffled_path(spark)).collect()
+    assert len(out) == 100
+    assert {r.cluster_id for r in out} == {1}
+
+
+def test_dedup_clusters_round_cap_raises(spark, monkeypatch):
+    """Past the round cap the kernel raises instead of returning
+    unconverged labels."""
+    from orion_spark.operators import graphalgo
+
+    monkeypatch.setattr(graphalgo, "CC_MAX_ROUNDS", 3)
+    with pytest.raises(graphalgo.NotConverged):
+        DD.dedup_clusters(_shuffled_path(spark))
+
+
+def test_dedup_clusters_rejects_null_endpoints(spark):
+    """A null endpoint is no document id: a named error, not a (NULL, ?)
+    row whose label the two DuckDB oracles disagree on."""
+    from orion_spark.operators.graphalgo import NullEndpointError
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 2), (5, 7)], "doc_a bigint, doc_b bigint"
+    )
+    with pytest.raises(NullEndpointError, match="null endpoints"):
+        DD.dedup_clusters(pairs)
 
 
 def test_bpe_ish_token_count(spark):
@@ -303,15 +345,15 @@ def test_semdedup_prune_group_invariants_on_fixture(spark):
             assert members[0].kept == 1
 
 
-def test_semdedup_distributed_routing_path_equal(spark):
-    """k_broadcast_max crossover: with the knob forced below k, the
-    k-row candidate dim stays a DataFrame and vector scoring joins on
-    the owner key (shuffle-hash) instead of a driver collect +
-    broadcast. Identical arithmetic — the full (vec_id, list_id,
-    centroid_cos, group_id, kept) output must match the broadcast path
-    row-for-row on the real fixture, including the injected exact-copy
-    tie-breaks the registered query exercises."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+def test_semdedup_prune_matches_oracle_on_injected_copies(spark):
+    """The full (vec_id, list_id, centroid_cos, group_id, kept) output
+    equals `semdedup_oracle_sql` on the real fixture with injected
+    scaled copies (exact-copy cosine ties, like the registered query's),
+    at k = 16: 4 supers, so vectors score through the owner-key join."""
+    import duckdb
+
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     copies = emb.where(F.col("vec_id") < 10).select(
@@ -319,20 +361,25 @@ def test_semdedup_distributed_routing_path_equal(spark):
         F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
     )
     src = emb.unionByName(copies)
-
-    def rows(k_broadcast_max):
-        out = DD.semdedup_prune(
-            src, n_clusters=16, threshold=0.4, k_broadcast_max=k_broadcast_max
-        )
-        return sorted(
-            (r.vec_id, r.list_id, r.centroid_cos, r.group_id, r.kept)
-            for r in out.collect()
-        )
-
-    broadcast_path = rows(DD.SEMDEDUP_K_BROADCAST_MAX)
-    distributed_path = rows(0)
-    assert broadcast_path == distributed_path
-    assert len(broadcast_path) == src.count()
+    got = sorted(
+        tuple(r)
+        for r in DD.semdedup_prune(src, n_clusters=16, threshold=0.4)
+        .select("vec_id", "list_id", "centroid_cos", "group_id", "kept")
+        .collect()
+    )
+    source_sql = f"""
+        SELECT vec_id, embedding::DOUBLE[] AS ev FROM '{path}'
+        UNION ALL
+        SELECT vec_id + 100000 AS vec_id,
+               list_transform(embedding::DOUBLE[], x -> x * 2) AS ev
+        FROM '{path}' WHERE vec_id < 10"""
+    want = sorted(
+        duckdb.sql(
+            DD.semdedup_oracle_sql(16, threshold=0.4, source_sql=source_sql)
+        ).fetchall()
+    )
+    assert got == want
+    assert len(got) == src.count()
 
 
 def test_ngram_contamination_known_overlap(spark):
