@@ -9,6 +9,8 @@ Usage:
     python -m orion_spark.cli meta-kg --bundle merged/ --out meta.json
     python -m orion_spark.cli redundant-kg --bundle merged/ --closure closure.parquet --out red/
     python -m orion_spark.cli neo4j-csv --bundle merged/ --out csvs/
+    python -m orion_spark.cli neo4j-dump --bundle merged/ --out dump/
+    python -m orion_spark.cli memgraph-dump --bundle merged/ --out memgraph/
     python -m orion_spark.cli ac-files --bundle merged/ --out ac/
     python -m orion_spark.cli qc --bundle merged/ --out qc.json
 """
@@ -107,13 +109,12 @@ def cmd_redundant_kg(args) -> int:
 
 
 def cmd_neo4j_csv(args) -> int:
-    from orion_spark.sinks.graph_csv import write_memgraph_csv, write_neo4j_csv
+    from orion_spark.sinks.graph_csv import write_neo4j_csv
     from orion_spark.sources.kgx import read_bundle
 
     spark = _spark(args.bundle)
     nodes, edges = read_bundle(spark, args.bundle)
-    writer = write_memgraph_csv if args.memgraph else write_neo4j_csv
-    manifest = writer(nodes, edges, args.out)
+    manifest = write_neo4j_csv(nodes, edges, args.out)
     print(json.dumps({"out": args.out, "nodes_header": manifest["nodes_header"]}))
     return 0
 
@@ -734,7 +735,6 @@ def main(argv: list[str] | None = None) -> int:
     nc = sub.add_parser("neo4j-csv")
     nc.add_argument("--bundle", required=True)
     nc.add_argument("--out", required=True)
-    nc.add_argument("--memgraph", action="store_true")
     nc.set_defaults(fn=cmd_neo4j_csv)
 
     ac = sub.add_parser("ac-files")

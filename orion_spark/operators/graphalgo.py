@@ -795,7 +795,6 @@ def random_walks(
     walk_length: int = 4,
     seed: int = 42,
     starts: DataFrame | None = None,
-    rank_buckets: int = WALK_RANK_BUCKETS,
     hub_degree_threshold: int = WALK_HUB_DEGREE_THRESHOLD,
     assume_distinct: bool = False,
 ) -> DataFrame:
@@ -826,9 +825,9 @@ def random_walks(
       all on this path.
     - srcs above the threshold (true power-law hubs — the skewgraph
       fixture's hub 0 owns N/2 spokes) split into one row per md5
-      bucket (≤ `rank_buckets` rows per hub, each array bounded at the
+      bucket (≤ `WALK_RANK_BUCKETS` rows per hub, each array bounded at the
       bucket size), re-based to the global 0..outdeg-1 index by a
-      cumulative bucket-size offset window (≤ rank_buckets rows per
+      cumulative bucket-size offset window (≤ WALK_RANK_BUCKETS rows per
       src, bounded by construction).
 
     The gate itself is a partial-aggregatable degree count and a
@@ -861,7 +860,7 @@ def random_walks(
         F.conv(
             F.substring(F.md5(F.col("dst").cast("string")), 1, 15), 16, 10
         ).cast("bigint"),
-        F.lit(rank_buckets),
+        F.lit(WALK_RANK_BUCKETS),
     )
     # base feeds the degree gate plus the adjacency branch(es) — persist
     # it so the edge scan + distinct shuffle runs once, not once per
@@ -939,7 +938,7 @@ def random_walks(
         # hub path: one row per (src, md5 bucket), each array bounded at
         # the bucket size; the cumulative bucket-size offsets re-base
         # positions to the global rank. Both window frames share one
-        # (partitionBy src, orderBy _bkt) spec — ≤ rank_buckets rows per
+        # (partitionBy src, orderBy _bkt) spec — ≤ WALK_RANK_BUCKETS rows per
         # partition by construction — so one sort computes offset AND
         # out-degree total.
         # collect (_bkt, dst) structs like the whole-src path: a struct is
@@ -1049,7 +1048,7 @@ def random_walks(
 
 def random_walks_oracle_sql(
     edges_cte: str, walk_length: int = 4, seed: int = 42,
-    starts_sql: str | None = None, rank_buckets: int = WALK_RANK_BUCKETS,
+    starts_sql: str | None = None,
 ) -> str:
     """DuckDB ground truth: identical ranked adjacency (the two-level
     (md5-bucket, dst) neighbor order, expressed flat — the oracle does
@@ -1064,7 +1063,7 @@ def random_walks_oracle_sql(
                ROW_NUMBER() OVER (
                    PARTITION BY src
                    ORDER BY ('0x' || substr(md5(dst::VARCHAR), 1, 15))::BIGINT
-                            % {rank_buckets},
+                            % {WALK_RANK_BUCKETS},
                             dst) - 1 AS idx
         FROM (SELECT DISTINCT src, dst FROM edges)),
     deg AS (SELECT src, COUNT(*) AS outdeg FROM adj GROUP BY src),

@@ -24,10 +24,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from orion_spark.sinks.external import run_tool
 
 # orion/supplementation.py:25-52 (SO effect term -> biolink/SO predicate)
 SNPEFF_SO_PREDICATES = {
@@ -105,10 +106,11 @@ def run_annotator(
     workdir: str | None = None,
 ) -> None:
     """The subprocess hook (supplementation.py:136-154 run_snpeff): runs
-    `command + [concatenated VCF]` with stdout redirected to the annotated
-    file, raising with the captured stderr on a nonzero exit. The real
-    deployment passes ['java', '-Xmx12g', '-jar', 'snpEff.jar', '-noStats',
-    '-ud', '100000', 'GRCh38.99']; tests pass a fake binary."""
+    `command + [concatenated VCF]` through sinks/external.run_tool with
+    stdout streamed into the annotated file, raising with the captured
+    stderr on a nonzero exit. The real deployment passes ['java',
+    '-Xmx12g', '-jar', 'snpEff.jar', '-noStats', '-ud', '100000',
+    'GRCh38.99']; tests pass a fake binary."""
     # the sink writes a directory (header + part files); the annotator
     # wants one file — concatenate driver-side, header first
     single = annotated_vcf_path + ".input.vcf"
@@ -124,13 +126,8 @@ def run_annotator(
                 # would sit in driver memory
                 shutil.copyfileobj(fh, out)
     with open(annotated_vcf_path, "w") as out:
-        result = subprocess.run(
-            command + [single], cwd=workdir, stdout=out, stderr=subprocess.PIPE
-        )
-    if result.returncode != 0:
-        raise SupplementationFailedError(
-            f"SNPEFF subprocess error (ExitCode {result.returncode}): "
-            f"{result.stderr.decode('UTF-8')}"
+        run_tool(
+            command + [single], SupplementationFailedError, cwd=workdir, stdout=out
         )
 
 

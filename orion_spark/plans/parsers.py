@@ -22,6 +22,8 @@ Reference-shaped families (one per structural source shape):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +34,7 @@ from orion_spark.operators.extract import (
     predicate_remap,
 )
 from orion_spark.operators.merge import edge_endpoints
+from orion_spark.sources.fetch import FetchError, extract_archive, stage_file
 from orion_spark.sources.readers import (
     curie_contract,
     read_ntriples,
@@ -1141,29 +1144,6 @@ def gtex_like(
 _MITAB_NOT_PROVIDED = "not_provided"
 
 
-def extract_zip_member(zip_path: str, member: str, dest_dir: str) -> str:
-    """S9-style archive staging: stream one member out of a zip (no
-    whole-file slurp) and return the extracted path. Idempotent per
-    (zip mtime) via a done-marker."""
-    import os
-    import shutil
-    import zipfile
-
-    os.makedirs(dest_dir, exist_ok=True)
-    out = os.path.join(dest_dir, os.path.basename(member))
-    marker = out + ".extracted"
-    stamp = str(os.path.getmtime(zip_path))
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return out
-    with zipfile.ZipFile(zip_path) as zf:
-        with zf.open(member) as src, open(out + ".tmp", "wb") as dst:
-            shutil.copyfileobj(src, dst)
-    os.replace(out + ".tmp", out)
-    with open(marker, "w") as fh:
-        fh.write(stamp)
-    return out
-
-
 def _mitab_element(col: Column, target: str) -> Column:
     """First '|'-separated element starting with `target`
     (find_target_val's scan, loadIA.py:445-452) — NULL if absent."""
@@ -1221,8 +1201,8 @@ def intact_like(
     dedup aggregates; no driver-side sort of the whole dataset."""
     import tempfile
 
-    txt = extract_zip_member(
-        zip_path, member, workdir or tempfile.mkdtemp(prefix="intact_")
+    (txt,) = extract_archive(
+        zip_path, workdir or tempfile.mkdtemp(prefix="intact_"), [member]
     )
     df = spark.read.options(sep="\t", header=False).csv(txt)
     c = df.columns  # DataCols enum positions (loadIA.py:19-62)
@@ -3028,29 +3008,6 @@ _MONARCH_PROTECTED = [
 ]
 
 
-def extract_tar_member(tar_path: str, member: str, dest_dir: str) -> str:
-    """S9-style archive staging for tar(.gz): stream one member out
-    (loadMonarchKG.py:93-95's extractfile, but to disk so the scan
-    parallelizes) and return the path. Idempotent per tar mtime."""
-    import os
-    import shutil
-    import tarfile
-
-    os.makedirs(dest_dir, exist_ok=True)
-    out = os.path.join(dest_dir, os.path.basename(member))
-    marker = out + ".extracted"
-    stamp = str(os.path.getmtime(tar_path))
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return out
-    with tarfile.open(tar_path) as tf:
-        with tf.extractfile(member) as src, open(out + ".tmp", "wb") as dst:
-            shutil.copyfileobj(src, dst)
-    os.replace(out + ".tmp", out)
-    with open(marker, "w") as fh:
-        fh.write(stamp)
-    return out
-
-
 def monarchkg_like(
     spark: SparkSession,
     tar_path: str,
@@ -3067,8 +3024,8 @@ def monarchkg_like(
     non-protected truthy attributes pass through except 'qualifiers'."""
     import tempfile
 
-    staged = extract_tar_member(
-        tar_path, member, staging_dir or tempfile.mkdtemp(prefix="monarch_")
+    (staged,) = extract_archive(
+        tar_path, staging_dir or tempfile.mkdtemp(prefix="monarch_"), [member]
     )
     raw = spark.read.json(staged)
 
@@ -3400,25 +3357,17 @@ CLINGEN_DOSAGE_SKIP_ROWS = 5
 def _strip_leading_rows(path: str, n: int, dest_dir: str) -> str:
     """Stage a copy of `path` without its first n metadata lines (the
     reference's blind next() loop, loadClinGenDosageSensitivity.py:80-83)
-    so the header lands on row 1 for the CSV reader. Streamed, idempotent
-    per source mtime."""
-    import os
+    so the header lands on row 1 for the CSV reader. A file with fewer
+    than n lines raises FetchError instead of staging an empty copy."""
+    def write(out):
+        with open(path, encoding="utf-8") as src:
+            for _ in range(n):
+                if not src.readline():
+                    raise FetchError(f"{path} has fewer than {n} leading rows")
+            for line in src:
+                out.write(line.encode("utf-8"))
 
-    os.makedirs(dest_dir, exist_ok=True)
-    out = os.path.join(dest_dir, os.path.basename(path))
-    marker = out + ".stripped"
-    stamp = str(os.path.getmtime(path))
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return out
-    with open(path, "rt") as src, open(out + ".tmp", "wt") as dst:
-        for _ in range(n):
-            next(src)
-        for chunk in src:
-            dst.write(chunk)
-    os.replace(out + ".tmp", out)
-    with open(marker, "w") as fh:
-        fh.write(stamp)
-    return out
+    return stage_file(path, os.path.join(dest_dir, os.path.basename(path)), write)
 
 
 def _clingen_dosage_edges(
@@ -3540,25 +3489,14 @@ def _gtp_strip_comments(path: str, dest_dir: str) -> str:
     """GtoPdb files open with '"#'-prefixed comment lines ahead of the
     header; the reference filters them before DictReader
     (loadGtoPdb.py:154,225). Quoted data rows can legally start with '"',
-    so this can't be a CSV comment char — stage a stripped copy instead
-    (streamed, idempotent per mtime)."""
-    import os
+    so this can't be a CSV comment char — stage a stripped copy instead."""
+    def write(out):
+        with open(path, encoding="utf-8") as src:
+            for line in src:
+                if not line.startswith('"#'):
+                    out.write(line.encode("utf-8"))
 
-    os.makedirs(dest_dir, exist_ok=True)
-    out = os.path.join(dest_dir, os.path.basename(path))
-    marker = out + ".stripped"
-    stamp = str(os.path.getmtime(path))
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return out
-    with open(path, "rt", encoding="utf-8") as src, \
-            open(out + ".tmp", "wt", encoding="utf-8") as dst:
-        for line in src:
-            if not line.startswith('"#'):
-                dst.write(line)
-    os.replace(out + ".tmp", out)
-    with open(marker, "w") as fh:
-        fh.write(stamp)
-    return out
+    return stage_file(path, os.path.join(dest_dir, os.path.basename(path)), write)
 
 
 def _gtp_read(spark: SparkSession, path: str) -> DataFrame:
@@ -4800,8 +4738,8 @@ def ohd_like(
     statistical_association/data_pipeline KL-AT."""
     import tempfile
 
-    staged = extract_zip_member(
-        zip_path, member, staging_dir or tempfile.mkdtemp(prefix="ohd_")
+    (staged,) = extract_archive(
+        zip_path, staging_dir or tempfile.mkdtemp(prefix="ohd_"), [member]
     )
     raw = read_tabular(spark, staged, sep=",", infer_schema=False)
     edges = raw.select(

@@ -10864,7 +10864,7 @@ def skew_walk_skipgrams_q(spark, sf_dir):
     sf0.1). Srcs above the hub-degree gate hold one neighbor array per
     (src, md5-bucket-of-dst), each bounded at the bucket size and
     re-based to the global rank by a cumulative bucket-size offset
-    window over at most rank_buckets rows per src; every other src holds
+    window over at most WALK_RANK_BUCKETS rows per src; every other src holds
     its whole sorted neighbor array in one row. Both paths realize the
     same (bucket, dst) order. The hub path's rows are partitioned on src,
     so one task still handles a hub's whole edge set; this query

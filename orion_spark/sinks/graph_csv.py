@@ -1,4 +1,4 @@
-"""Neo4j / Memgraph admin-import CSV sinks (SURVEY §2.1 K3/K4).
+"""Neo4j admin-import CSV sink (SURVEY §2.1 K3).
 
 Reference behavior (orion/kgx_file_converter.py:151-181, 308-376):
 - typed header line: `id:ID`, `name:string`, `category:LABEL`,
@@ -6,8 +6,10 @@ Reference behavior (orion/kgx_file_converter.py:151-181, 308-376):
 - array values joined by the unit separator chr(31) ("array_delimiter")
 - booleans written as true/false, dicts as JSON strings
 - newline/tab/CR flattened out of every string (orion/utils.py:20-29)
-- Memgraph (K4): edges additionally partitioned into one CSV per predicate
-  (orion/kgx_file_converter.py:26-148) + manifest.
+
+The Memgraph files (K4: one CSV per predicate, a manifest and node-label
+indexes, orion/kgx_file_converter.py:26-148) are written by
+sinks/memgraph_dump.create_memgraph_dump, which reuses ``_render``.
 
 Spark shape: a pure projection to string columns + `write.csv`. The typed
 header is computed from the DataFrame schema (the reference infers it with
@@ -137,37 +139,3 @@ def write_neo4j_csv(
         json.dump(manifest, fh, indent=2)
     return manifest
 
-
-def write_memgraph_csv(
-    nodes: DataFrame, edges: DataFrame, out_dir: str, sep: str = "\t"
-) -> dict:
-    """K4: like K3 but edges are hive-partitioned by predicate — one
-    directory per relationship type (orion/kgx_file_converter.py:26-148) —
-    plus the index-cypher manifest. partitionBy gives the per-predicate
-    split without a second pass."""
-    os.makedirs(out_dir, exist_ok=True)
-    node_header = neo4j_node_header(nodes)
-    edge_header = [h for h in neo4j_edge_header(edges) if h != "predicate:TYPE"]
-    with open(os.path.join(out_dir, "nodes-header.csv"), "w") as fh:
-        fh.write(sep.join(node_header) + "\n")
-    with open(os.path.join(out_dir, "edges-header.csv"), "w") as fh:
-        fh.write(sep.join(edge_header) + "\n")
-    _render(nodes).write.mode("overwrite").option("sep", sep).csv(
-        os.path.join(out_dir, "nodes")
-    )
-    rendered = _render(edges)
-    rendered.write.mode("overwrite").partitionBy("predicate").option("sep", sep).csv(
-        os.path.join(out_dir, "edges")
-    )
-    predicates = [r[0] for r in edges.select("predicate").distinct().collect()]
-    manifest = {
-        "nodes_header": node_header,
-        "edges_header": edge_header,
-        "predicates": sorted(predicates),
-        "index_cypher": [
-            "CREATE INDEX ON :`{}`(id);".format(p) for p in sorted(predicates)
-        ],
-    }
-    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2)
-    return manifest

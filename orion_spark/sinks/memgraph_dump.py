@@ -10,27 +10,33 @@ The reference emits three artifact kinds per graph release:
   manifest to issue one LOAD CSV per relationship type)
 
 and each artifact is skipped when it already exists (memgraph_tools.py:
-29-42's per-file existence gates). Here the per-predicate split is the
-distributed sink's partitionBy — one Spark pass, no per-row Python —
-and only the final concat of part files is driver-side (streamed).
+29-42's per-file existence gates). This is the engine's one Memgraph
+writer (SURVEY K4). Here the per-predicate split is the distributed
+sink's partitionBy — one Spark pass, no per-row Python — and only the
+final concat of part files is driver-side (sinks/external.concat_parts,
+streamed).
 
 ``load_memgraph_dump`` is the subprocess half the reference leaves to its
 deployment: the dump files pushed through an injectable mgconsole-style
 binary (indexes first, then one LOAD CSV per manifest entry), with the
-same exit-code gating + fake-binary testability as the neo4j chain
-(sinks/neo4j_dump.py).
+same exit-code gating (sinks/external.run_tool) + fake-binary testability
+as the neo4j chain (sinks/neo4j_dump.py).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import subprocess
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NAMED_THING = "biolink:NamedThing"
+from orion_spark.sinks.external import (
+    NAMED_THING,
+    concat_parts,
+    node_labels,
+    run_tool,
+)
 
 
 class MemgraphDumpError(RuntimeError):
@@ -41,28 +47,12 @@ def _sub_name(graph_id: str, release_version: str) -> str:
     return f"{graph_id}_{release_version}" if release_version else graph_id
 
 
-def _concat_parts(part_dir: str, header: str, out: str, sep: str) -> None:
-    """Streamed header + part-file concat (multi-GB parts never sit in
-    driver memory)."""
-    with open(out, "wb") as fh:
-        fh.write((header + "\n").encode())
-        for part in sorted(os.listdir(part_dir)):
-            if part.startswith("part-") and not part.endswith(".crc"):
-                with open(os.path.join(part_dir, part), "rb") as p:
-                    shutil.copyfileobj(p, fh)
-
-
 def memgraph_index_cypher(nodes: DataFrame) -> list[str]:
     """add_indexes_to_memgraph_cypher parity (kgx_file_converter.py:56-88):
     a name index on the root label, then an id index per distinct node
-    label, sorted. The label set is a tiny distinct over exploded
-    categories — no driver-side jsonl walk."""
-    labels = sorted(
-        r[0]
-        for r in nodes.select(F.explode("category").alias("l")).distinct().collect()
-    )
+    label, sorted (no driver-side jsonl walk)."""
     stmts = [f"CREATE INDEX ON :`{NAMED_THING}`(name);"]
-    stmts += [f"CREATE INDEX ON :`{label}`(id);" for label in labels]
+    stmts += [f"CREATE INDEX ON :`{label}`(id);" for label in node_labels(nodes)]
     return stmts
 
 
@@ -102,7 +92,7 @@ def create_memgraph_dump(
         _render(nodes).write.mode("overwrite").option("sep", sep).option(
             "emptyValue", ""
         ).csv(staging)
-        _concat_parts(staging, sep.join(nodes.columns), nodes_csv, sep)
+        concat_parts(staging, sep.join(nodes.columns), nodes_csv)
         shutil.rmtree(staging)
 
     if not os.path.exists(idx_cypher):
@@ -121,15 +111,12 @@ def create_memgraph_dump(
         rendered.write.mode("overwrite").partitionBy("_rel").option(
             "sep", sep
         ).option("emptyValue", "").csv(staging)
-        edge_cols = [c for c in edges.columns]
         for d in sorted(os.listdir(staging)):
             if not d.startswith("_rel="):
                 continue
             rel_type = d.split("=", 1)[1]
             out = f"{edge_base}_{rel_type}.csv"
-            _concat_parts(
-                os.path.join(staging, d), sep.join(edge_cols), out, sep
-            )
+            concat_parts(os.path.join(staging, d), sep.join(edges.columns), out)
             edge_csvs.append({"file": os.path.basename(out), "rel_type": rel_type})
         shutil.rmtree(staging)
         with open(edge_manifest, "w") as fh:
@@ -154,20 +141,6 @@ def create_memgraph_dump(
     }
 
 
-def _run(command: list[str], log: list[str], stdin_text: str | None = None) -> None:
-    log.append(" ".join(command))
-    result = subprocess.run(
-        command,
-        input=stdin_text.encode() if stdin_text is not None else None,
-        capture_output=True,
-    )
-    if result.returncode != 0:
-        raise MemgraphDumpError(
-            f"{command[0]} failed (ExitCode {result.returncode}): "
-            f"{result.stderr.decode('UTF-8').strip()}"
-        )
-
-
 def load_memgraph_dump(
     dump_manifest: dict,
     mgconsole: list[str] | None = None,
@@ -181,12 +154,11 @@ def load_memgraph_dump(
     log: list[str] = []
 
     with open(dump_manifest["indexes_cypher"], encoding="utf-8") as fh:
-        _run(mgconsole, log, stdin_text=fh.read())
+        run_tool(mgconsole, MemgraphDumpError, log, stdin_text=fh.read())
 
     nodes_csv = dump_manifest["nodes_csv"]
-    _run(
-        mgconsole,
-        log,
+    run_tool(
+        mgconsole, MemgraphDumpError, log,
         stdin_text=(
             f'LOAD CSV FROM "{nodes_csv}" WITH HEADER DELIMITER "\\t" AS row\n'
             "CREATE (n) SET n += row;\n"
@@ -195,9 +167,8 @@ def load_memgraph_dump(
     base_dir = os.path.dirname(dump_manifest["edge_manifest"])
     for entry in dump_manifest["edge_csvs"]:
         path = os.path.join(base_dir, entry["file"])
-        _run(
-            mgconsole,
-            log,
+        run_tool(
+            mgconsole, MemgraphDumpError, log,
             stdin_text=(
                 f'LOAD CSV FROM "{path}" WITH HEADER DELIMITER "\\t" AS row\n'
                 "MATCH (a {id: row.subject}), (b {id: row.object})\n"

@@ -4,11 +4,12 @@ create_neo4j_dump + 68-213 Neo4jTools command chain).
 The reference ships a graph as a neo4j-admin dump: KGX -> typed CSVs ->
 `neo4j-admin database import full` -> start -> index -> stop ->
 `neo4j-admin database dump`. The CSV conversion here is the distributed
-sink (sinks/graph_csv.write_neo4j_csv); everything after is inherently a
-single-box subprocess chain, so the executables are INJECTABLE — production
-passes the real neo4j-admin/neo4j/cypher-shell, tests pass fake binaries —
-and every step aborts the chain on a nonzero exit, mirroring the
-reference's exit-code gating.
+sink (sinks/graph_csv.write_neo4j_csv); its staging directory is deleted
+once concatenated, so a finished run leaves the dump and
+``indexes.cypher``. Everything after is a single-box subprocess chain, so
+the executables are INJECTABLE (production passes the real tools, tests
+fake binaries) and every step runs through sinks/external.run_tool, which
+aborts the chain on a nonzero exit (the reference's exit-code gating).
 
 One deliberate deviation: the reference creates indexes through the bolt
 driver (neo4j_tools.py:181-213 add_db_indexes); without a bolt client the
@@ -20,43 +21,28 @@ from __future__ import annotations
 
 import os
 import shutil
-import subprocess
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from orion_spark.sinks.external import (
+    NAMED_THING,
+    concat_parts,
+    node_labels,
+    run_tool,
+)
 
 NEO4J_ADMIN_DUMP_FILENAME = "neo4j.dump"
-NAMED_THING = "biolink:NamedThing"
 
 
 class Neo4jDumpError(RuntimeError):
     pass
 
 
-def _run(command: list[str], log: list[str], cwd: str | None = None) -> None:
-    """neo4j_tools.py:50-66 __run_command: capture output, raise with
-    stderr on failure (the reference returns the exit code and each caller
-    gates on it; raising collapses the same control flow)."""
-    log.append(" ".join(command))
-    result = subprocess.run(command, cwd=cwd, capture_output=True)
-    if result.returncode != 0:
-        raise Neo4jDumpError(
-            f"{command[0]} failed (ExitCode {result.returncode}): "
-            f"{result.stderr.decode('UTF-8').strip()}"
-        )
-
-
 def index_cypher_statements(nodes: DataFrame) -> list[str]:
     """add_db_indexes parity (neo4j_tools.py:181-213): a name index on the
-    root label plus a unique-id constraint per label in the data. The
-    label set comes from a tiny distinct over exploded categories instead
-    of CALL db.labels() — same result, computed before the DB exists."""
-    labels = sorted(
-        r[0]
-        for r in nodes.select(F.explode("category").alias("l")).distinct().collect()
-    )
+    root label plus a unique-id constraint per label in the data."""
     stmts = [f"CREATE INDEX node_name_index FOR (n:`{NAMED_THING}`) ON (n.name)"]
-    for label in labels:
+    for label in node_labels(nodes):
         safe = label.replace(":", "_")
         stmts.append(
             f"CREATE CONSTRAINT node_id_{safe} FOR (n:`{label}`) "
@@ -64,18 +50,6 @@ def index_cypher_statements(nodes: DataFrame) -> list[str]:
         )
     stmts.append("CALL db.awaitIndexes()")
     return stmts
-
-
-def _concat_csv(csv_dir: str, header_name: str, data_prefix: str, out: str) -> None:
-    # streamed (copyfileobj), not slurped — part files can be multi-GB
-    with open(out, "wb") as fh:
-        with open(os.path.join(csv_dir, header_name), "rb") as h:
-            shutil.copyfileobj(h, fh)
-        data_dir = os.path.join(csv_dir, data_prefix)
-        for part in sorted(os.listdir(data_dir)):
-            if part.startswith("part-") and not part.endswith(".crc"):
-                with open(os.path.join(data_dir, part), "rb") as p:
-                    shutil.copyfileobj(p, fh)
 
 
 def create_neo4j_dump(
@@ -107,17 +81,19 @@ def create_neo4j_dump(
 
     os.makedirs(output_directory, exist_ok=True)
     csv_dir = os.path.join(output_directory, "csv_staging")
-    write_neo4j_csv(nodes, edges, csv_dir)
+    manifest = write_neo4j_csv(nodes, edges, csv_dir)
     nodes_csv = os.path.join(output_directory, "nodes.temp_csv")
     edges_csv = os.path.join(output_directory, "edges.temp_csv")
-    _concat_csv(csv_dir, "nodes-header.csv", "nodes", nodes_csv)
-    _concat_csv(csv_dir, "edges-header.csv", "edges", edges_csv)
+    for kind, out in (("nodes", nodes_csv), ("edges", edges_csv)):
+        header = manifest["sep"].join(manifest[f"{kind}_header"])
+        concat_parts(os.path.join(csv_dir, kind), header, out)
+    shutil.rmtree(csv_dir)
 
-    _run(
+    run_tool(
         neo4j_admin + ["dbms", "set-initial-password", initial_password],
-        log,
+        Neo4jDumpError, log,
     )
-    _run(
+    run_tool(
         neo4j_admin
         + [
             "database", "import", "full",
@@ -127,21 +103,21 @@ def create_neo4j_dump(
             "--array-delimiter=U+001F",
             "--overwrite-destination=true",
         ],
-        log,
+        Neo4jDumpError, log,
         cwd=output_directory,
     )
-    _run(neo4j + ["start", "--verbose"], log)
+    run_tool(neo4j + ["start", "--verbose"], Neo4jDumpError, log)
     try:
         cypher_path = os.path.join(output_directory, "indexes.cypher")
         with open(cypher_path, "w") as fh:
             fh.write(";\n".join(index_cypher_statements(nodes)) + ";\n")
-        _run(cypher_shell + ["-f", cypher_path], log)
+        run_tool(cypher_shell + ["-f", cypher_path], Neo4jDumpError, log)
     finally:
-        _run(neo4j + ["stop"], log)
-    _run(
+        run_tool(neo4j + ["stop"], Neo4jDumpError, log)
+    run_tool(
         neo4j_admin
         + ["database", "dump", "neo4j", f"--to-path={output_directory}"],
-        log,
+        Neo4jDumpError, log,
     )
     produced = os.path.join(output_directory, NEO4J_ADMIN_DUMP_FILENAME)
     if produced != graph_dump_path:

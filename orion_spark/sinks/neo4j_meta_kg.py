@@ -26,12 +26,11 @@ Deviations from the reference, by design:
 from __future__ import annotations
 
 import os
-import subprocess
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NAMED_THING = "biolink:NamedThing"
+from orion_spark.sinks.external import NAMED_THING, run_tool
 
 SCHEMA_QUERY = (
     "MATCH (a)-[x]->(b) UNWIND labels(a) AS sl UNWIND labels(b) AS tl "
@@ -62,16 +61,9 @@ def run_cypher(
     path = os.path.join(work_dir, f"{name}.cypher")
     with open(path, "w") as fh:
         fh.write(query + ";\n")
-    result = subprocess.run(
-        cypher_shell + ["--format", "plain", "-f", path],
-        capture_output=True,
-    )
-    if result.returncode != 0:
-        raise MetaKGVerifyError(
-            f"{cypher_shell[0]} failed (ExitCode {result.returncode}): "
-            f"{result.stderr.decode('UTF-8').strip()}"
-        )
-    lines = result.stdout.decode("UTF-8").splitlines()
+    lines = run_tool(
+        cypher_shell + ["--format", "plain", "-f", path], MetaKGVerifyError
+    ).splitlines()
     return [ln.strip().strip('"') for ln in lines[1:] if ln.strip()]
 
 

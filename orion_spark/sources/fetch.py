@@ -14,6 +14,9 @@ Design notes (Spark-first, not a translation):
 - Downloads are ATOMIC (``.part`` + ``os.replace``) and IDEMPOTENT (an
   existing non-empty target short-circuits), so a crashed fetch never
   leaves a half-file where the content-addressed pipeline would trust it.
+- Derived files (archive members, a parser's cleaned copy of a source)
+  are staged by ONE function, ``stage_file``: atomic the same way, and
+  staged again whenever the source's mtime changes.
 - ``split_text_member`` exists because gzip is not a splittable codec: a
   50 GB ``.gz`` source is ONE Spark input partition. Splitting at fetch
   time re-enables scan parallelism for such sources; splittable formats
@@ -25,6 +28,7 @@ Design notes (Spark-first, not a translation):
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
 import shutil
@@ -220,50 +224,73 @@ def _safe_join(out_dir: str, member: str) -> str:
     return dest
 
 
+def stage_file(source: str, dest: str, write) -> str:
+    """Stage a file derived from ``source`` at ``dest``: ``write(fh)`` fills
+    ``dest.tmp`` (binary) and an atomic ``os.replace`` publishes it. A
+    hidden marker next to ``dest`` records ``source``'s mtime; the write
+    is skipped while it matches, so a re-landed source, or a ``dest`` a
+    crash cut short (no marker), is staged again. Returns ``dest``."""
+    folder, name = os.path.split(dest)
+    marker = os.path.join(folder, f".{name}.staged")
+    stamp = str(os.path.getmtime(source))
+    if os.path.exists(dest) and os.path.exists(marker):
+        with open(marker) as fh:
+            if fh.read() == stamp:
+                return dest
+    os.makedirs(folder, exist_ok=True)
+    tmp = dest + ".tmp"
+    try:
+        with open(tmp, "wb") as fh:
+            write(fh)
+        os.replace(tmp, dest)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    with open(marker, "w") as fh:
+        fh.write(stamp)
+    return dest
+
+
+def _copy_member(open_member, info):
+    def write(fh):
+        with open_member(info) as src:
+            shutil.copyfileobj(src, fh, _BLOCK)
+    return write
+
+
 def extract_archive(
     archive_path: str, out_dir: str, members: list[str] | None = None
 ) -> list[str]:
     """Stage archive contents into ``out_dir``: .zip, .tar[.gz|.bz2], and
     single-member .gz (the staging half of orion/utils.py:305-353 that
-    parsers otherwise each reimplement). Returns the extracted paths,
-    skipping members that already exist non-empty."""
-    os.makedirs(out_dir, exist_ok=True)
-    out: list[str] = []
+    parsers otherwise each reimplement). Returns the staged paths; each
+    member goes through :func:`stage_file`, and a requested member the
+    archive lacks raises FetchError."""
     lower = archive_path.lower()
-    if lower.endswith(".zip"):
-        with zipfile.ZipFile(archive_path) as zf:
-            names = members or [i.filename for i in zf.infolist() if not i.is_dir()]
-            for name in names:
-                dest = _safe_join(out_dir, name)
-                if not (os.path.exists(dest) and os.path.getsize(dest) > 0):
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    with zf.open(name) as src, open(dest, "wb") as fh:
-                        shutil.copyfileobj(src, fh, _BLOCK)
-                out.append(dest)
-    elif lower.endswith((".tar", ".tar.gz", ".tgz", ".tar.bz2")):
-        with tarfile.open(archive_path) as tf:
-            infos = [
-                i
-                for i in tf.getmembers()
-                if i.isfile() and (members is None or i.name in members)
-            ]
-            for info in infos:
-                dest = _safe_join(out_dir, info.name)
-                if not (os.path.exists(dest) and os.path.getsize(dest) > 0):
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    with tf.extractfile(info) as src, open(dest, "wb") as fh:
-                        shutil.copyfileobj(src, fh, _BLOCK)
-                out.append(dest)
-    elif lower.endswith(".gz"):
-        name = members[0] if members else os.path.basename(archive_path)[:-3]
-        dest = _safe_join(out_dir, name)
-        if not (os.path.exists(dest) and os.path.getsize(dest) > 0):
-            with gzip.open(archive_path, "rb") as src, open(dest, "wb") as fh:
-                shutil.copyfileobj(src, fh, _BLOCK)
-        out.append(dest)
-    else:
-        raise FetchError(f"unsupported archive format: {archive_path}")
-    return out
+    with contextlib.ExitStack() as stack:
+        if lower.endswith(".zip"):
+            zf = stack.enter_context(zipfile.ZipFile(archive_path))
+            infos = {i.filename: i for i in zf.infolist() if not i.is_dir()}
+            open_member = zf.open
+        elif lower.endswith((".tar", ".tar.gz", ".tgz", ".tar.bz2")):
+            tf = stack.enter_context(tarfile.open(archive_path))
+            infos = {i.name: i for i in tf.getmembers() if i.isfile()}
+            open_member = tf.extractfile
+        elif lower.endswith(".gz"):
+            name = members[0] if members else os.path.basename(archive_path)[:-3]
+            infos, open_member = {name: archive_path}, gzip.open
+        else:
+            raise FetchError(f"unsupported archive format: {archive_path}")
+        missing = sorted(set(members or ()) - set(infos))
+        if missing:
+            raise FetchError(f"{archive_path} has no member(s) {missing}")
+        return [
+            stage_file(
+                archive_path, _safe_join(out_dir, name),
+                _copy_member(open_member, infos[name]),
+            )
+            for name in members or infos
+        ]
 
 
 def split_text_member(

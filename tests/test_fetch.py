@@ -4,10 +4,12 @@ fetch -> parse -> normalize -> merge ingest. Hermetic: drives HTTP against
 an in-process http.server and file:// URLs — no network.
 """
 
+import ast
 import gzip
 import io
 import json
 import os
+import pathlib
 import tarfile
 import threading
 import zipfile
@@ -130,6 +132,147 @@ def test_extract_archive_refuses_traversal(tmp_path):
         zf.writestr("../../escape.txt", "bad")
     with pytest.raises(FX.FetchError, match="escapes"):
         FX.extract_archive(str(zp), str(tmp_path / "out"))
+
+
+def test_extract_archive_restages_a_member_cut_short(tmp_path):
+    """A member a crash left short (no marker) is staged again, not kept
+    because it is non-empty."""
+    zp = tmp_path / "a.zip"
+    body = "x" * 1800
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("m.tsv", body)
+    out = tmp_path / "staged"
+    out.mkdir()
+    (out / "m.tsv").write_text(body[:8])
+    (got,) = FX.extract_archive(str(zp), str(out))
+    assert os.path.getsize(got) == 1800
+    assert not os.path.exists(got + ".tmp")
+
+
+def test_extract_archive_restages_a_relanded_archive(tmp_path):
+    """A rerun keeps a staged member while the archive is unchanged and
+    stages it again once a newer archive lands."""
+    tp = tmp_path / "b.tar.gz"
+    out = str(tmp_path / "staged")
+
+    def land(data, stamp):
+        with tarfile.open(tp, "w:gz") as tf:
+            info = tarfile.TarInfo("f.txt")
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+        os.utime(tp, (stamp, stamp))
+
+    land(b"old\n", 1_700_000_000)
+    (got,) = FX.extract_archive(str(tp), out, ["f.txt"])
+    mtime = os.path.getmtime(got)
+    assert FX.extract_archive(str(tp), out, ["f.txt"]) == [got]
+    assert os.path.getmtime(got) == mtime
+    land(b"new\n", 1_700_000_100)
+    FX.extract_archive(str(tp), out, ["f.txt"])
+    assert open(got).read() == "new\n"
+
+
+def test_extract_archive_missing_member_raises(tmp_path):
+    zp = tmp_path / "a.zip"
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("have.txt", "x\n")
+    tp = tmp_path / "b.tar"
+    with tarfile.open(tp, "w") as tf:
+        info = tarfile.TarInfo("have.txt")
+        info.size = 2
+        tf.addfile(info, io.BytesIO(b"x\n"))
+    for archive in (zp, tp):
+        with pytest.raises(FX.FetchError, match="no member.*absent.txt"):
+            FX.extract_archive(str(archive), str(tmp_path / "out"), ["absent.txt"])
+
+
+def test_strip_leading_rows_short_file_raises(tmp_path):
+    """A file shorter than the metadata block it should lose is an input
+    error, not an empty staged copy."""
+    from orion_spark.plans.parsers import _strip_leading_rows
+
+    src = tmp_path / "dosage.tsv"
+    src.write_text("meta 1\nmeta 2\n")
+    with pytest.raises(FX.FetchError, match="fewer than 5"):
+        _strip_leading_rows(str(src), 5, str(tmp_path / "stage"))
+    assert not os.path.exists(tmp_path / "stage" / "dosage.tsv")
+    src.write_text("meta 1\nmeta 2\nh1\th2\n1\t2\n")
+    staged = _strip_leading_rows(str(src), 2, str(tmp_path / "stage"))
+    assert open(staged).read() == "h1\th2\n1\t2\n"
+
+
+ENGINE = pathlib.Path(FX.__file__).resolve().parent.parent
+
+
+def _file_layer_calls(tree):
+    """(enclosing function, what) of each subprocess import or call and
+    each zipfile/tarfile import-from or open (with its mode)."""
+    found = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Import):
+                found.extend((func, f"import {a.name}") for a in child.names
+                             if a.name == "subprocess")
+            elif (isinstance(child, ast.ImportFrom)
+                  and child.module in ("subprocess", "zipfile", "tarfile")):
+                found.append((func, f"from {child.module} import"))
+            elif (isinstance(child, ast.Call)
+                  and isinstance(child.func, ast.Attribute)
+                  and isinstance(child.func.value, ast.Name)):
+                callee = f"{child.func.value.id}.{child.func.attr}"
+                if child.func.value.id == "subprocess":
+                    found.append((func, callee))
+                elif callee in ("zipfile.ZipFile", "tarfile.open"):
+                    mode = [k.value for k in child.keywords if k.arg == "mode"]
+                    mode = (mode or child.args[1:2] or [ast.Constant("r")])[0]
+                    found.append((func, f"{callee}:{ast.literal_eval(mode)}"))
+            visit(child, func)
+
+    visit(tree, None)
+    return found
+
+
+def test_file_layer_calls_live_in_one_module_each():
+    """Subprocesses run only through sinks/external.run_tool, and archives
+    are read only by sources/fetch.extract_archive. The fixture writers in
+    plans/queries.py open archives for writing."""
+    allowed = {
+        ("sinks/external.py", None, "import subprocess"),
+        ("sinks/external.py", "run_tool", "subprocess.run"),
+        ("sources/fetch.py", "extract_archive", "zipfile.ZipFile:r"),
+        ("sources/fetch.py", "extract_archive", "tarfile.open:r"),
+        ("plans/queries.py", "_intact_fixture", "zipfile.ZipFile:w"),
+        ("plans/queries.py", "_monarch_fixture", "tarfile.open:w:gz"),
+        ("plans/queries.py", "ohd_like_edges_q", "zipfile.ZipFile:w"),
+    }
+    found = {
+        (path.relative_to(ENGINE).as_posix(), func, what)
+        for path in ENGINE.rglob("*.py")
+        for func, what in _file_layer_calls(ast.parse(path.read_text()))
+    }
+    assert found == allowed, found ^ allowed
+
+
+def test_file_layer_guard_sees_each_form():
+    src = (
+        "import subprocess\n"
+        "from tarfile import open as topen\n"
+        "def f(p):\n"
+        "    subprocess.check_output(['x'])\n"
+        "    zipfile.ZipFile(p)\n"
+        "    tarfile.open(p, mode='w')\n"
+        "    def g():\n"
+        "        return zipfile.ZipFile(p, 'a')\n"
+    )
+    assert _file_layer_calls(ast.parse(src)) == [
+        (None, "import subprocess"), (None, "from tarfile import"),
+        ("f", "subprocess.check_output"), ("f", "zipfile.ZipFile:r"),
+        ("f", "tarfile.open:w"), ("g", "zipfile.ZipFile:a"),
+    ]
 
 
 def test_split_text_member(tmp_path):

@@ -96,22 +96,6 @@ def test_neo4j_csv_sink(spark, tmp_path):
     assert "true" in fields
 
 
-def test_memgraph_partitioned_by_predicate(spark, tmp_path):
-    out = str(tmp_path / "memgraph")
-    edges = _edges(spark).unionByName(
-        spark.createDataFrame(
-            [Row(subject="HGNC:2", predicate="biolink:affects", object="HGNC:1",
-                 primary_knowledge_source="infores:y",
-                 publications=None, p_value=None)],
-            schema=_edges(spark).schema,
-        )
-    )
-    manifest = GC.write_memgraph_csv(_nodes(spark), edges, out)
-    assert manifest["predicates"] == ["biolink:affects", "biolink:related_to"]
-    parts = glob.glob(os.path.join(out, "edges", "predicate=*"))
-    assert len(parts) == 2
-
-
 def test_metadata_sidecars(spark, tmp_path):
     out = str(tmp_path / "meta")
     MD.write_metadata_sidecars("g1", "v1", _nodes(spark), _edges(spark), out)
@@ -327,8 +311,9 @@ def test_neo4j_dump_orchestration_with_fake_binaries(spark, tmp_path):
     verbs = [s.split()[0] for s in steps]
     assert verbs == ["dbms", "database", "start", "-f", "stop", "database"]
     assert "--delimiter=TAB" in steps[1] and "--array-delimiter=U+001F" in steps[1]
-    # the temp CSVs were cleaned up, the concatenated import inputs gone
-    assert not os.path.exists(os.path.join(out_dir, "nodes.temp_csv"))
+    # the staging CSVs and the concatenated import inputs are gone: the
+    # directory holds only the chain's artifacts
+    assert sorted(os.listdir(out_dir)) == ["indexes.cypher", "neo4j.dump"]
     # index cypher derived from the data's labels
     cypher = open(os.path.join(out_dir, "indexes.cypher")).read()
     assert "REQUIRE n.id IS UNIQUE" in cypher
@@ -435,6 +420,28 @@ def test_memgraph_dump_files_and_load_orchestration(spark, tmp_path):
 
     with _pytest.raises(MD.MemgraphDumpError, match="ExitCode 3.*refused"):
         MD.load_memgraph_dump(manifest, mgconsole=[str(bad)])
+
+
+def test_memgraph_dump_rerun_after_a_crash_mid_concat(spark, tmp_path, monkeypatch):
+    """The per-artifact existence gates trust only complete files: a crash
+    while the node csv is concatenated leaves no node csv, so the rerun
+    writes it whole."""
+    import shutil
+
+    import pytest as _pytest
+
+    from orion_spark.sinks import memgraph_dump as MD
+
+    def disk_full(*args, **kwargs):
+        raise OSError("disk full")
+
+    out = str(tmp_path / "mg")
+    monkeypatch.setattr(shutil, "copyfileobj", disk_full)
+    with _pytest.raises(OSError, match="disk full"):
+        MD.create_memgraph_dump(_nodes(spark), _edges(spark), out)
+    monkeypatch.undo()
+    manifest = MD.create_memgraph_dump(_nodes(spark), _edges(spark), out)
+    assert len(open(manifest["nodes_csv"]).read().splitlines()) == 3
 
 
 def test_neo4j_meta_kg_verification(spark, tmp_path):

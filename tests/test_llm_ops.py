@@ -149,13 +149,18 @@ def test_dedup_clusters_transitive(spark):
     assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
 
-def _shuffled_path(spark):
-    """A 100-node path whose ids are shuffled along it: path halving
-    needs 57 rounds to carry the min id end to end."""
+def _shuffled_path_pairs():
+    """The (doc_a, doc_b) edges of a 100-node path whose ids are shuffled
+    along it: path halving needs 57 rounds to carry the min id end to
+    end."""
     ids = list(range(1, 101))
     random.Random(1).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+def _shuffled_path(spark):
     return spark.createDataFrame(
-        list(zip(ids, ids[1:])), "doc_a bigint, doc_b bigint"
+        _shuffled_path_pairs(), "doc_a bigint, doc_b bigint"
     )
 
 
@@ -1028,6 +1033,32 @@ def test_doubling_oracle_equals_recursive_oracle():
     # the 61-node path needs > 6 plain-propagation rounds but converges
     # under doubling; spot-check its component min
     assert (159, 100) in new and (9, 8) in new
+
+
+def test_doubling_oracle_converges_or_raises():
+    """The unrolled oracle checks one extra round: on the shuffled-id
+    path, a round budget too small for the diameter fails loudly instead
+    of returning several components, and an ample one matches the
+    recursive oracle's single component."""
+    import duckdb
+
+    from orion_spark.llm.dedup import (
+        dedup_clusters_oracle_sql,
+        dedup_clusters_oracle_sql_doubling,
+    )
+
+    pairs = " UNION ALL ".join(
+        f"SELECT {a} AS doc_a, {b} AS doc_b" for a, b in _shuffled_path_pairs()
+    )
+    con = duckdb.connect()
+    with pytest.raises(duckdb.Error, match="not converged in 24 rounds"):
+        con.execute(dedup_clusters_oracle_sql_doubling(pairs)).fetchall()
+    want = sorted(con.execute(dedup_clusters_oracle_sql(pairs)).fetchall())
+    got = sorted(
+        con.execute(dedup_clusters_oracle_sql_doubling(pairs, rounds=80))
+        .fetchall()
+    )
+    assert got == want and {c for _, c in got} == {1}
 
 
 def test_dsir_weights_rank_target_like_docs_higher(spark):
