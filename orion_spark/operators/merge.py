@@ -407,7 +407,7 @@ def merge_nodes(df: DataFrame, ordinal_col: str = SOURCE_ORDINAL) -> DataFrame:
     return merge_properties_agg(df, [NODE_ID], ordinal_col)
 
 
-def _edge_group_cols(
+def edge_group_cols(
     df: DataFrame, edge_merging_attributes: list[str] | None
 ) -> list[str]:
     """The natural grouping columns the merge key is a pure function of."""
@@ -446,7 +446,7 @@ def merge_edges(
     assigned the merge key, with the original ids recorded separately via
     :func:`pre_merge_id_mapping`.
     """
-    group_cols = _edge_group_cols(df, edge_merging_attributes)
+    group_cols = edge_group_cols(df, edge_merging_attributes)
     preserve = not overwrite_edge_ids and assign_id and "id" in df.columns
     merged = merge_properties_agg(
         df, group_cols, ordinal_col, count_col="_merge_count" if preserve else None
@@ -476,7 +476,7 @@ def pre_merge_id_mapping(
     None, merging.py:309-311,375-380) and a merged group whose every
     original id was missing emits no record (`if pre_merge_ids`,
     merging.py:464)."""
-    group_cols = _edge_group_cols(df, edge_merging_attributes)
+    group_cols = edge_group_cols(df, edge_merging_attributes)
     orig = F.col(original_id_col)
     grouped = (
         df.groupBy(*group_cols)
@@ -577,23 +577,25 @@ def connected_edge_subset(
     secondary nodes newly referenced by those kept edges
     (orion/kgx_file_merger.py:127-162).
 
-    Spark shape: two left-semi joins unioned (subject-hit OR object-hit); the
-    primary id set is usually small enough to broadcast — Catalyst decides,
-    AQE corrects at runtime.
+    Spark shape: semi- and anti-joins against the id and endpoint
+    columns as they are, with no `distinct` (a semi-join keeps each
+    probe row once however often its key repeats). The kept edges are
+    the subject hits plus the object hits among the subject misses: two
+    disjoint sets, so no edge is kept twice and none needs deduplicating,
+    and an edge with a null subject is kept when its object hits. The id
+    set is usually small enough to broadcast — Catalyst decides, AQE
+    corrects at runtime. Every secondary row keeps its columns (a source
+    ordinal included).
     """
-    ids = primary_nodes.select(F.col(NODE_ID).alias("_pid")).distinct()
-    hit_s = secondary_edges.join(
-        ids, secondary_edges[SUBJECT] == ids["_pid"], "left_semi"
-    )
-    hit_o = secondary_edges.join(
-        ids, secondary_edges[OBJECT] == ids["_pid"], "left_semi"
-    )
-    kept_edges = hit_s.unionByName(hit_o).dropDuplicates()
-    endpoints = (
-        kept_edges.select(F.col(SUBJECT).alias("_eid"))
-        .unionByName(kept_edges.select(F.col(OBJECT).alias("_eid")))
-        .distinct()
-    )
+    ids = primary_nodes.select(F.col(NODE_ID).alias("_pid"))
+
+    def on(edges: DataFrame, end: str, how: str) -> DataFrame:
+        return edges.join(ids, edges[end] == ids["_pid"], how)
+
+    kept_edges = on(secondary_edges, SUBJECT, "left_semi").unionByName(
+        on(on(secondary_edges, SUBJECT, "left_anti"), OBJECT, "left_semi"))
+    endpoints = kept_edges.select(F.col(SUBJECT).alias("_eid")).unionByName(
+        kept_edges.select(F.col(OBJECT).alias("_eid")))
     kept_nodes = secondary_nodes.join(
         endpoints, secondary_nodes[NODE_ID] == endpoints["_eid"], "left_semi"
     )

@@ -34,7 +34,12 @@ from orion_spark.operators.extract import (
     predicate_remap,
 )
 from orion_spark.operators.merge import edge_endpoints
-from orion_spark.sources.fetch import FetchError, extract_archive, stage_file
+from orion_spark.sources.fetch import (
+    FetchError,
+    default_staging_dir,
+    extract_archive,
+    stage_file,
+)
 from orion_spark.sources.readers import (
     curie_contract,
     read_ntriples,
@@ -1199,10 +1204,8 @@ def intact_like(
     loop (loadIA.py:203-211 never flushes at EOF) — a bug we do not
     reproduce. Scale: one scan, one groupBy shuffle on the group key, node
     dedup aggregates; no driver-side sort of the whole dataset."""
-    import tempfile
-
     (txt,) = extract_archive(
-        zip_path, workdir or tempfile.mkdtemp(prefix="intact_"), [member]
+        zip_path, workdir or default_staging_dir(zip_path), [member]
     )
     df = spark.read.options(sep="\t", header=False).csv(txt)
     c = df.columns  # DataCols enum positions (loadIA.py:19-62)
@@ -3022,10 +3025,8 @@ def monarchkg_like(
     (no filtering). Both remap knowledge sources
     (loadMonarchKG.py:36-40,102-113) and default KL/AT to not_provided;
     non-protected truthy attributes pass through except 'qualifiers'."""
-    import tempfile
-
     (staged,) = extract_archive(
-        tar_path, staging_dir or tempfile.mkdtemp(prefix="monarch_"), [member]
+        tar_path, staging_dir or default_staging_dir(tar_path), [member]
     )
     raw = spark.read.json(staged)
 
@@ -3429,15 +3430,14 @@ def clingen_dosage_like(
     """Returns (gene_edges, region_edges) — HI and TS unioned per file.
     Gene subjects are NCBIGene-prefixed Gene IDs; region subjects are
     ISCA ids with '-'->':' (loadClinGenDosageSensitivity.py:133-146)."""
-    import tempfile
-
-    stage = staging_dir or tempfile.mkdtemp(prefix="clingen_")
     gene_cols = {
         "gene_id": "Gene ID",
     }
 
     def load(path: str) -> DataFrame:
-        staged = _strip_leading_rows(path, CLINGEN_DOSAGE_SKIP_ROWS, stage)
+        staged = _strip_leading_rows(
+            path, CLINGEN_DOSAGE_SKIP_ROWS,
+            staging_dir or default_staging_dir(path))
         df = read_tabular(spark, staged, infer_schema=False, comment="\0")
         renames = {
             "#ISCA ID": "isca_id", "Gene ID": "gene_id",
@@ -3502,9 +3502,7 @@ def _gtp_strip_comments(path: str, dest_dir: str) -> str:
 def _gtp_read(spark: SparkSession, path: str) -> DataFrame:
     """Read a comment-stripped GtoPdb TSV; spaced header names normalize
     to snake_case."""
-    import tempfile
-
-    staged = _gtp_strip_comments(path, tempfile.mkdtemp(prefix="gtp_"))
+    staged = _gtp_strip_comments(path, default_staging_dir(path))
     df = (
         spark.read.option("sep", "\t").option("header", True).csv(staged)
     )
@@ -4428,10 +4426,8 @@ def clingen_validity_like(
     (loadClinGenGeneDiseaseValidity.py:113-157): classification +
     report props, mode-of-inheritance normalized through the HPO lookup
     (unmapped -> nulls)."""
-    import tempfile
-
     staged = _strip_leading_rows(
-        path, 6, staging_dir or tempfile.mkdtemp(prefix="clingen_v_")
+        path, 6, staging_dir or default_staging_dir(path)
     )
     raw = read_tabular(spark, staged, sep=",")
     moi_name = predicate_remap(
@@ -4736,10 +4732,8 @@ def ohd_like(
     """Zip-member staging + typed passthrough (loadOHD.py:68-103): float
     p/log-odds, JSON CI list, int sample size, per-row primary source,
     statistical_association/data_pipeline KL-AT."""
-    import tempfile
-
     (staged,) = extract_archive(
-        zip_path, staging_dir or tempfile.mkdtemp(prefix="ohd_"), [member]
+        zip_path, staging_dir or default_staging_dir(zip_path), [member]
     )
     raw = read_tabular(spark, staged, sep=",", infer_schema=False)
     edges = raw.select(

@@ -29,14 +29,17 @@ from dataclasses import dataclass, field
 import yaml
 from pyspark.sql import SparkSession
 
+from orion_spark.model import NODE_ID
 from orion_spark.operators.merge import (
+    SOURCE_ORDINAL,
     connected_edge_subset,
+    edge_group_cols,
     merge_edges,
     merge_nodes,
     union_all,
 )
 from orion_spark.sinks.metadata import write_metadata_sidecars
-from orion_spark.sources.kgx import read_bundle, write_bundle
+from orion_spark.sources.kgx import read_bundle, stamp_file_order, write_bundle
 
 STAGES = ("fetch", "parse", "normalize", "supplement", "qc")
 STATUS = ("not_started", "in_progress", "stable", "broken", "failed")
@@ -211,6 +214,23 @@ class SourceMetadata:
 # Graph build (step 4-5 of §3.1): merge strategies + artifacts
 # ---------------------------------------------------------------------------
 
+def _edge_layout(
+    columns: list[str], primary: list[str], group: list[str]
+) -> list[str]:
+    """Column order of the merged edges. The merge lists the group
+    columns, then every other column in first-seen order over the
+    primary sources and then the subset sources, and appends an `id` it
+    assigns. An `id` no primary source carries moves to the end of the
+    primary sources' columns, ahead of those only subset sources bring."""
+    if "id" not in columns or "id" in primary:
+        return columns
+    rest = [c for c in columns if c != "id"]
+    at = len(group)
+    while at < len(rest) and rest[at] in primary:
+        at += 1
+    return rest[:at] + ["id"] + rest[at:]
+
+
 def build_graph(
     spark: SparkSession,
     spec: GraphSpec,
@@ -227,8 +247,13 @@ def build_graph(
 
     Merge strategy semantics (orion/kgx_file_merger.py:37-100):
     - `default` sources merge fully (A3 groupBy-agg)
-    - `connected_edge_subset` keeps only rows touching the primary set (J4)
+    - `connected_edge_subset` keeps only rows touching the ids of the
+      primary sources and of the subset sources before it (J4)
     - `dont_merge` appends verbatim after the merge
+    The primary rows and every subset source's kept rows fold in ONE
+    aggregate per side; the fold is an associative arg-min over
+    (truthiness, file-order ordinal), so it equals merging the primaries
+    first and each subset source's rows after them.
 
     `recorder` (plans/stage_metrics.PhaseRecorder) runs the build's
     actions as named phases, each under its own job group, so the status
@@ -256,56 +281,55 @@ def build_graph(
 
     autoscale_shuffle(spark, *source_bundles.values())
 
-    primary_nodes, primary_edges = [], []
-    subset_sources, verbatim = [], []
     with phase("read_sources"):
         frames = [read_bundle(spark, source_bundles[src.source_id])
                   for src in spec.sources]
-    for src, (nodes, edges) in zip(spec.sources, frames):
-        if src.merge_strategy == "default":
-            primary_nodes.append(nodes)
-            primary_edges.append(edges)
-        elif src.merge_strategy == "connected_edge_subset":
-            subset_sources.append((nodes, edges))
-        elif src.merge_strategy == "dont_merge":
-            verbatim.append((nodes, edges))
-        else:
+    tiers = {"default": [], "connected_edge_subset": [], "dont_merge": []}
+    for src, frame in zip(spec.sources, frames):
+        if src.merge_strategy not in tiers:
             raise ValueError(f"unknown merge strategy {src.merge_strategy}")
+        tiers[src.merge_strategy].append((source_bundles[src.source_id], frame))
+    primary, subset, verbatim = tiers.values()
 
-    # source ordinal = spec order: "first wins" is file order in the
-    # reference (SURVEY §7.4.1) — stamped per source before the union
-    from pyspark.sql import functions as F
+    # "First wins" is file order in the reference (SURVEY §7.4.1): each
+    # row's ordinal is its place in (primary sources in spec order, then
+    # subset sources in spec order; file by path; row in file), so the
+    # one aggregate per side below breaks every tie the same way under
+    # any partitioning.
+    next_ordinal = {"nodes": 0, "edges": 0}
 
-    def stamp(dfs):
-        return [
-            df.withColumn("_source_ordinal", F.lit(i)) for i, df in enumerate(dfs)
-        ]
+    def stamp(bundle, side, df):
+        df, next_ordinal[side] = stamp_file_order(
+            spark, df, os.path.join(bundle, side), SOURCE_ORDINAL,
+            next_ordinal[side])
+        return df
 
-    merged_nodes = merge_nodes(union_all(stamp(primary_nodes)))
+    nodes_in = [stamp(b, "nodes", n) for b, (n, _) in primary]
+    edges_in = [stamp(b, "edges", e) for b, (_, e) in primary]
+    # each subset source connects to the ids of every frame before it
+    for bundle, (sec_nodes, sec_edges) in subset:
+        keep_nodes, keep_edges = connected_edge_subset(
+            union_all([n.select(NODE_ID) for n in nodes_in]),
+            stamp(bundle, "nodes", sec_nodes), stamp(bundle, "edges", sec_edges))
+        nodes_in.append(keep_nodes)
+        edges_in.append(keep_edges)
+
+    merged_nodes = merge_nodes(union_all(nodes_in))
+    all_edges = union_all(edges_in)
     merged_edges = merge_edges(
-        union_all(stamp(primary_edges)),
+        all_edges,
         edge_merging_attributes=spec.edge_merging_attributes or None,
         assign_id=spec.add_edge_id,
         edge_id_type=spec.edge_id_type,
         overwrite_edge_ids=spec.overwrite_edge_ids,
     )
+    if spec.add_edge_id and subset:
+        merged_edges = merged_edges.select(_edge_layout(
+            merged_edges.columns,
+            union_all(edges_in[:len(primary)]).columns,
+            edge_group_cols(all_edges, spec.edge_merging_attributes)))
 
-    for sec_nodes, sec_edges in subset_sources:
-        keep_nodes, keep_edges = connected_edge_subset(
-            merged_nodes, sec_nodes, sec_edges
-        )
-        merged_nodes = merge_nodes(
-            union_all(stamp([merged_nodes, keep_nodes]))
-        )
-        merged_edges = merge_edges(
-            union_all(stamp([merged_edges, keep_edges])),
-            edge_merging_attributes=spec.edge_merging_attributes or None,
-            assign_id=spec.add_edge_id,
-            edge_id_type=spec.edge_id_type,
-            overwrite_edge_ids=spec.overwrite_edge_ids,
-        )
-
-    for v_nodes, v_edges in verbatim:
+    for _, (v_nodes, v_edges) in verbatim:
         merged_nodes = union_all([merged_nodes, v_nodes]).dropDuplicates(["id"])
         merged_edges = union_all([merged_edges, v_edges])
 
@@ -325,16 +349,8 @@ def build_graph(
     from orion_spark.operators.metrics import merge_report
     from orion_spark.sinks.metadata import write_merge_sidecar
 
-    raw_nodes = union_all(
-        primary_nodes
-        + [n for n, _ in subset_sources]
-        + [n for n, _ in verbatim]
-    )
-    raw_edges = union_all(
-        primary_edges
-        + [e for _, e in subset_sources]
-        + [e for _, e in verbatim]
-    )
+    raw_nodes = union_all([n for n, _ in frames])
+    raw_edges = union_all([e for _, e in frames])
     with phase("merge_report"):
         write_merge_sidecar(
             merge_report(raw_nodes, raw_edges, *merged_counts), out_dir

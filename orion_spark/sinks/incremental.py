@@ -63,6 +63,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orion_spark.sources.kgx import read_parquet
+
 SHARD_COL = "_shard"
 LOCK_NAME = "_upsert.lock"
 JOURNAL_NAME = "_upsert_journal.json"
@@ -91,16 +93,25 @@ def write_sharded_bundle(
 
 
 def read_sharded_bundle(spark: SparkSession, path: str) -> DataFrame:
-    """Read the bundle with footer-merged schema: after an upsert whose
-    delta added columns, touched shards are wider than untouched ones,
-    and Spark's default single-file schema pick would surface or drop
-    the new columns depending on file listing order. mergeSchema makes
-    the union schema deterministic (new columns null on old shards) for
-    the cost of a distributed footer-read job — O(files) metadata, no
-    data scan."""
-    return (
-        spark.read.option("mergeSchema", "true").parquet(path).drop(SHARD_COL)
-    )
+    """Read the bundle with its footers' merged schema: after an upsert
+    whose delta added columns, touched shards are wider than untouched
+    ones, and Spark's default single-file schema pick would surface or
+    drop the new columns depending on file listing order. The merged
+    schema is the union (new columns null on old shards), folded on the
+    driver as Spark's `mergeSchema` folds it (`read_parquet`), so the
+    read starts no job; its cost is one footer read per file."""
+    return read_parquet(spark, path, merge_schema=True).drop(SHARD_COL)
+
+
+def read_shards(spark: SparkSession, path: str, shards: list[int]) -> DataFrame:
+    """The rows of `shards` only, `SHARD_COL` included, read with the
+    merged schema of those shards' footers: a rewrite of those shards
+    needs no column another shard alone carries, so the footer work is
+    O(touched files), not O(bundle)."""
+    return read_parquet(
+        spark, path, merge_schema=True,
+        partitions=[f"{SHARD_COL}={s}" for s in shards],
+    ).where(F.col(SHARD_COL).isin(list(shards)))
 
 
 class _UpsertLock:
@@ -248,12 +259,10 @@ def upsert_sharded_bundle(
         touched = sorted(
             r[SHARD_COL] for r in delta.select(SHARD_COL).distinct().collect()
         )
-        # mergeSchema: an earlier upsert may have widened some shards —
+        # merged schema: an earlier upsert may have widened some shards —
         # the arbitrary single-file schema pick would otherwise silently
         # drop those columns from this merge (see read_sharded_bundle)
-        existing = spark.read.option("mergeSchema", "true").parquet(path).where(
-            F.col(SHARD_COL).isin(touched)
-        )
+        existing = read_shards(spark, path, touched)
         combined = existing.withColumn(
             ordinal_col, F.lit(0).cast("long")
         ).unionByName(delta, allowMissingColumns=True)
@@ -353,10 +362,8 @@ def compact_sharded_bundle(
         if not frag:
             return []
         frag.sort()
-        df = spark.read.option("mergeSchema", "true").parquet(path).where(
-            F.col(SHARD_COL).isin(frag)
-        )
-        merged = df.repartition(len(frag), F.col(SHARD_COL))
+        merged = read_shards(spark, path, frag).repartition(
+            len(frag), F.col(SHARD_COL))
 
         txid = f"{os.getpid()}-{time.time_ns()}"
         staging = os.path.join(path, STAGING_DIR, txid)

@@ -81,51 +81,57 @@ def create_neo4j_dump(
 
     os.makedirs(output_directory, exist_ok=True)
     csv_dir = os.path.join(output_directory, "csv_staging")
-    manifest = write_neo4j_csv(nodes, edges, csv_dir)
     nodes_csv = os.path.join(output_directory, "nodes.temp_csv")
     edges_csv = os.path.join(output_directory, "edges.temp_csv")
-    for kind, out in (("nodes", nodes_csv), ("edges", edges_csv)):
-        header = manifest["sep"].join(manifest[f"{kind}_header"])
-        concat_parts(os.path.join(csv_dir, kind), header, out)
-    shutil.rmtree(csv_dir)
-
-    run_tool(
-        neo4j_admin + ["dbms", "set-initial-password", initial_password],
-        Neo4jDumpError, log,
-    )
-    run_tool(
-        neo4j_admin
-        + [
-            "database", "import", "full",
-            f"--nodes={os.path.basename(nodes_csv)}",
-            f"--relationships={os.path.basename(edges_csv)}",
-            "--delimiter=TAB",
-            "--array-delimiter=U+001F",
-            "--overwrite-destination=true",
-        ],
-        Neo4jDumpError, log,
-        cwd=output_directory,
-    )
-    run_tool(neo4j + ["start", "--verbose"], Neo4jDumpError, log)
+    # the staged CSVs are a full copy of the graph: removed however the
+    # chain ends
     try:
-        cypher_path = os.path.join(output_directory, "indexes.cypher")
-        with open(cypher_path, "w") as fh:
-            fh.write(";\n".join(index_cypher_statements(nodes)) + ";\n")
-        run_tool(cypher_shell + ["-f", cypher_path], Neo4jDumpError, log)
+        manifest = write_neo4j_csv(nodes, edges, csv_dir)
+        for kind, out in (("nodes", nodes_csv), ("edges", edges_csv)):
+            header = manifest["sep"].join(manifest[f"{kind}_header"])
+            concat_parts(os.path.join(csv_dir, kind), header, out)
+        shutil.rmtree(csv_dir)
+
+        run_tool(
+            neo4j_admin + ["dbms", "set-initial-password", initial_password],
+            Neo4jDumpError, log,
+        )
+        run_tool(
+            neo4j_admin
+            + [
+                "database", "import", "full",
+                f"--nodes={os.path.basename(nodes_csv)}",
+                f"--relationships={os.path.basename(edges_csv)}",
+                "--delimiter=TAB",
+                "--array-delimiter=U+001F",
+                "--overwrite-destination=true",
+            ],
+            Neo4jDumpError, log,
+            cwd=output_directory,
+        )
+        run_tool(neo4j + ["start", "--verbose"], Neo4jDumpError, log)
+        try:
+            cypher_path = os.path.join(output_directory, "indexes.cypher")
+            with open(cypher_path, "w") as fh:
+                fh.write(";\n".join(index_cypher_statements(nodes)) + ";\n")
+            run_tool(cypher_shell + ["-f", cypher_path], Neo4jDumpError, log)
+        finally:
+            run_tool(neo4j + ["stop"], Neo4jDumpError, log)
+        run_tool(
+            neo4j_admin
+            + ["database", "dump", "neo4j", f"--to-path={output_directory}"],
+            Neo4jDumpError, log,
+        )
+        produced = os.path.join(output_directory, NEO4J_ADMIN_DUMP_FILENAME)
+        if produced != graph_dump_path:
+            if not os.path.exists(produced):
+                raise Neo4jDumpError(
+                    f"dump reported success but {produced} was not found"
+                )
+            os.replace(produced, graph_dump_path)
     finally:
-        run_tool(neo4j + ["stop"], Neo4jDumpError, log)
-    run_tool(
-        neo4j_admin
-        + ["database", "dump", "neo4j", f"--to-path={output_directory}"],
-        Neo4jDumpError, log,
-    )
-    produced = os.path.join(output_directory, NEO4J_ADMIN_DUMP_FILENAME)
-    if produced != graph_dump_path:
-        if not os.path.exists(produced):
-            raise Neo4jDumpError(
-                f"dump reported success but {produced} was not found"
-            )
-        os.replace(produced, graph_dump_path)
-    os.remove(nodes_csv)
-    os.remove(edges_csv)
+        shutil.rmtree(csv_dir, ignore_errors=True)
+        for path in (nodes_csv, edges_csv):
+            if os.path.exists(path):
+                os.remove(path)
     return True, log

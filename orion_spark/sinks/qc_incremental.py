@@ -50,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orion_spark.sinks.incremental import SHARD_COL
+from orion_spark.sinks.incremental import SHARD_COL, read_shards
 from orion_spark.sources.kgx import read_parquet
 
 PARTIALS_DIR = ".qc_partials"
@@ -120,17 +120,11 @@ def node_qc_partials(nodes: DataFrame) -> DataFrame:
 _PARTIAL_FNS = {"edges": edge_qc_partials, "nodes": node_qc_partials}
 
 
-def _bundle_with_shard(spark: SparkSession, bundle_path: str) -> DataFrame:
-    # mergeSchema for the same reason as read_sharded_bundle: upserts may
-    # have widened touched shards
-    return spark.read.option("mergeSchema", "true").parquet(bundle_path)
-
-
 def write_qc_partials(
     spark: SparkSession, bundle_path: str, kind: str
 ) -> str:
     """Full partials (re)build: one grouped scan of the bundle."""
-    df = _bundle_with_shard(spark, bundle_path)
+    df = read_parquet(spark, bundle_path, merge_schema=True)
     out = os.path.join(bundle_path, PARTIALS_DIR)
     (
         _PARTIAL_FNS[kind](df)
@@ -151,9 +145,7 @@ def refresh_qc_partials(
     out = os.path.join(bundle_path, PARTIALS_DIR)
     if not os.path.isdir(out):
         return write_qc_partials(spark, bundle_path, kind)
-    df = _bundle_with_shard(spark, bundle_path).where(
-        F.col(SHARD_COL).isin(list(touched))
-    )
+    df = read_shards(spark, bundle_path, touched)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -240,7 +232,7 @@ def write_hll_partials(
 ) -> str:
     out = os.path.join(bundle_path, HLL_PARTIALS_DIR)
     (
-        edge_hll_partials(_bundle_with_shard(spark, bundle_path), lg_k)
+        edge_hll_partials(read_parquet(spark, bundle_path, merge_schema=True), lg_k)
         .write.mode("overwrite")
         .partitionBy(SHARD_COL)
         .parquet(out)
@@ -255,9 +247,7 @@ def refresh_hll_partials(
     out = os.path.join(bundle_path, HLL_PARTIALS_DIR)
     if not os.path.isdir(out):
         return write_hll_partials(spark, bundle_path, lg_k)
-    df = _bundle_with_shard(spark, bundle_path).where(
-        F.col(SHARD_COL).isin(list(touched))
-    )
+    df = read_shards(spark, bundle_path, touched)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

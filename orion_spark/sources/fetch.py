@@ -16,7 +16,9 @@ Design notes (Spark-first, not a translation):
   leaves a half-file where the content-addressed pipeline would trust it.
 - Derived files (archive members, a parser's cleaned copy of a source)
   are staged by ONE function, ``stage_file``: atomic the same way, and
-  staged again whenever the source's mtime changes.
+  staged again whenever the source's mtime changes. A parser given no
+  staging directory uses ``default_staging_dir(source)``, the same directory on
+  every call, so an unchanged source is staged once.
 - ``split_text_member`` exists because gzip is not a splittable codec: a
   50 GB ``.gz`` source is ONE Spark input partition. Splitting at fetch
   time re-enables scan parallelism for such sources; splittable formats
@@ -30,9 +32,12 @@ from __future__ import annotations
 
 import contextlib
 import gzip
+import hashlib
 import os
 import shutil
 import tarfile
+import tempfile
+import threading
 import zipfile
 from datetime import datetime, timezone
 from email.utils import parsedate_to_datetime
@@ -224,9 +229,23 @@ def _safe_join(out_dir: str, member: str) -> str:
     return dest
 
 
+def default_staging_dir(source: str) -> str:
+    """The directory that files derived from ``source`` are staged into
+    when the caller names none: one per source path (a digest of its
+    absolute path) under the temp directory. A rerun on the same source
+    finds its staged copies and their markers there, so ``stage_file``
+    skips the copy."""
+    source = os.path.abspath(source)
+    digest = hashlib.sha1(source.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), "orion_staging",
+                        f"{os.path.basename(source)}-{digest}")
+
+
 def stage_file(source: str, dest: str, write) -> str:
     """Stage a file derived from ``source`` at ``dest``: ``write(fh)`` fills
-    ``dest.tmp`` (binary) and an atomic ``os.replace`` publishes it. A
+    a temp file next to ``dest`` that only this writer (process and
+    thread) uses, and an atomic ``os.replace`` publishes it, so two
+    writers staging the same source never interleave their bytes. A
     hidden marker next to ``dest`` records ``source``'s mtime; the write
     is skipped while it matches, so a re-landed source, or a ``dest`` a
     crash cut short (no marker), is staged again. Returns ``dest``."""
@@ -238,7 +257,7 @@ def stage_file(source: str, dest: str, write) -> str:
             if fh.read() == stamp:
                 return dest
     os.makedirs(folder, exist_ok=True)
-    tmp = dest + ".tmp"
+    tmp = f"{dest}.{os.getpid()}.{threading.get_ident()}.tmp"
     try:
         with open(tmp, "wb") as fh:
             write(fh)

@@ -19,6 +19,7 @@ KGX-compatibility boundary.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -210,39 +211,113 @@ def _leaves(dt: T.DataType, path: str = ""):
         yield path[:-1], dt
 
 
-def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The schema `spark.read.parquet(path)` would infer, read from one
-    footer on the driver; None whenever it cannot be had exactly.
+def _file_schema(spark: SparkSession, footer: str) -> T.StructType | None:
+    """The schema Spark reads from one parquet footer, read on the driver;
+    None whenever it cannot be had exactly.
 
     A Spark-written footer carries Spark's own schema (the row-metadata
     JSON its inference reads). Any other footer maps through
     `from_arrow_schema`, kept only if every leaf column matches the type
-    Spark's converter gives it (`_spark_leaf`) at the same column path.
-    A data column that is also a partition directory key falls back too:
-    Spark types it from the path and keeps its data position."""
+    Spark's converter gives it (`_spark_leaf`) at the same column path."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    files = _parquet_files(path)
-    footer = _footer_file(files) if files else None
-    if footer is None:
-        return None
     try:
         meta = pq.read_metadata(footer)
         if _ROW_METADATA in (meta.metadata or {}):
-            schema = T.StructType.fromJson(json.loads(meta.metadata[_ROW_METADATA]))
-        else:
-            conf = spark.conf.get
-            ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
-            as_str = conf("spark.sql.parquet.binaryAsString") == "true"
-            pschema = meta.schema
-            schema = from_arrow_schema(pschema.to_arrow_schema(), ntz)
-            want = [(c.path, _spark_leaf(c, ntz, as_str))
-                    for c in map(pschema.column, range(len(pschema)))]
-            if list(_leaves(schema)) != want:
-                return None
+            return T.StructType.fromJson(json.loads(meta.metadata[_ROW_METADATA]))
+        conf = spark.conf.get
+        ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+        as_str = conf("spark.sql.parquet.binaryAsString") == "true"
+        pschema = meta.schema
+        schema = from_arrow_schema(pschema.to_arrow_schema(), ntz)
+        want = [(c.path, _spark_leaf(c, ntz, as_str))
+                for c in map(pschema.column, range(len(pschema)))]
     except Exception:
         return None
+    return schema if list(_leaves(schema)) == want else None
+
+
+def _merge_types(left: T.DataType, right: T.DataType) -> T.DataType | None:
+    """Spark's `StructType.merge` of two types: struct fields merge by
+    name in the left's order, with the right's new fields appended in
+    its order; arrays and maps merge their element types; nullability is
+    or-ed. None on anything Spark would widen, reject or resolve by its
+    case-sensitivity setting: two different leaf types (decimals
+    included), or field names equal only when case is ignored."""
+    if isinstance(left, T.StructType) and isinstance(right, T.StructType):
+        lnames = {f.name.lower(): f for f in left.fields}
+        rnames = {f.name.lower(): f for f in right.fields}
+        if len(lnames) < len(left.fields) or len(rnames) < len(right.fields):
+            return None
+        fields = []
+        for key, lf in lnames.items():
+            rf = rnames.get(key)
+            if rf is None:
+                fields.append(lf)
+                continue
+            dt = _merge_types(lf.dataType, rf.dataType)
+            if dt is None or lf.name != rf.name:
+                return None
+            fields.append(T.StructField(lf.name, dt, lf.nullable or rf.nullable,
+                                        lf.metadata))
+        return T.StructType(
+            fields + [f for key, f in rnames.items() if key not in lnames])
+    if isinstance(left, T.ArrayType) and isinstance(right, T.ArrayType):
+        el = _merge_types(left.elementType, right.elementType)
+        if el is None:
+            return None
+        return T.ArrayType(el, left.containsNull or right.containsNull)
+    if isinstance(left, T.MapType) and isinstance(right, T.MapType):
+        k = _merge_types(left.keyType, right.keyType)
+        v = _merge_types(left.valueType, right.valueType)
+        if k is None or v is None:
+            return None
+        return T.MapType(k, v, left.valueContainsNull or right.valueContainsNull)
+    return left if left == right else None
+
+
+def _footer_schema(
+    spark: SparkSession, path: str, merge: bool = False,
+    partitions: list[str] | None = None,
+) -> T.StructType | None:
+    """The schema `spark.read.parquet(path)` would infer, read from
+    footers on the driver; None whenever it cannot be had exactly.
+
+    Without `merge` that is one footer (`_footer_file`). With it, it is
+    Spark's `mergeSchema` fold: every data file's schema in path order,
+    then the summary files', folded with `StructType.merge`
+    (`_merge_types`). `partitions` (top-level partition directory names,
+    such as `_shard=3`) narrows the fold to the data files under them,
+    for a read that keeps only their rows; when none of them holds a
+    file, every data file is folded. A data column that is also a
+    partition directory key falls back too: Spark types it from the
+    path and keeps its data position."""
+    files = _parquet_files(path)
+    if not files:
+        return None
+    if not merge:
+        footers = [_footer_file(files)]
+    elif spark.conf.get("spark.sql.parquet.respectSummaryFiles") == "true":
+        return None
+    else:
+        data = [f for f in files if os.path.basename(f) not in _SUMMARIES]
+        if partitions is not None:
+            wanted = set(partitions)
+            data = [f for f in data if os.path.relpath(f, path).split(os.sep)[0]
+                    in wanted] or data
+        footers = data + [f for s in ("_metadata", "_common_metadata")
+                          for f in files if os.path.basename(f) == s]
+    if footers == [None]:
+        return None
+    schema = None
+    for footer in footers:
+        one = _file_schema(spark, footer)
+        if one is None:
+            return None
+        schema = one if schema is None else _merge_types(schema, one)
+        if schema is None:
+            return None
     part_keys = {part.split("=", 1)[0].lower()
                  for f in files
                  for part in os.path.relpath(os.path.dirname(f), path).split(os.sep)
@@ -252,17 +327,75 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     return schema
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, merge_schema: bool = False,
+    partitions: list[str] | None = None,
+) -> DataFrame:
     """`spark.read.parquet(path)` without its schema-inference job.
 
     Spark infers a parquet schema by reading one footer in a one-task job
-    (even for a single file). This reads the same footer on the driver
-    and passes the schema it yields; partition columns are still typed
-    from the directory names by Spark. When no footer can be read or
-    mapped exactly (a missing path, an empty directory, a URI, INT96 or
-    unsigned columns) no schema is passed, so Spark infers, or raises,
-    as it always has."""
-    return spark.read.load(path, "parquet", _footer_schema(spark, path))
+    (even for a single file), or, with `mergeSchema`, every footer in a
+    distributed job. This reads the same footers on the driver and passes
+    the schema they yield (`_footer_schema`); partition columns are still
+    typed from the directory names by Spark. `merge_schema=True` is the
+    `mergeSchema` read: a table whose files were written with different
+    columns (a sharded bundle after an upsert that widened some shards)
+    reads as the union schema. `partitions` narrows that merge to the
+    footers of the named top-level partition directories, for a caller
+    that keeps only their rows.
+
+    When no footer can be read or mapped exactly (a missing path, an
+    empty directory, a URI, INT96 or unsigned columns, a type conflict
+    between files) no schema is passed, so Spark infers, or raises, as
+    it always has."""
+    schema = _footer_schema(spark, path, merge_schema, partitions)
+    reader = spark.read
+    if merge_schema and schema is None:
+        reader = reader.option("mergeSchema", "true")
+    return reader.load(path, "parquet", schema)
+
+
+def stamp_file_order(
+    spark: SparkSession, df: DataFrame, path: str, col: str, start: int,
+) -> tuple[DataFrame, int]:
+    """Stamp the parquet read `df` of `path` with `col`, a long giving
+    each row's place in file order: `start`, plus the rows of the files
+    listed before its own (sorted by path, as Spark lists them), plus
+    its `_metadata.row_index`. The per-file offsets come from the
+    footers on the driver, so stamping starts no job. Returns the frame
+    and the first ordinal after its rows.
+
+    Where the files cannot be listed or their footers read locally (or
+    `df` has a data column named `_metadata`), every row gets `start`
+    and the next ordinal is `start + 1`: rows of that one path tie."""
+    import pyarrow.parquet as pq
+
+    files = [f for f in _parquet_files(path) or []
+             if os.path.basename(f) not in _SUMMARIES]
+    try:
+        counts = [pq.read_metadata(f).num_rows for f in files]
+    except Exception:
+        files = []
+    if not files or "_metadata" in df.columns:
+        return df.withColumn(col, F.lit(start).cast("long")), start + 1
+    offsets = list(itertools.accumulate([start] + counts[:-1]))
+    if len(files) == 1:
+        first = F.lit(start).cast("long")
+    else:
+        # `_metadata.file_path` is the URL-encoded path Hadoop lists
+        jvm = spark._jvm
+
+        def uri(f):
+            return jvm.org.apache.hadoop.fs.Path(
+                jvm.java.io.File(os.path.abspath(f)).toURI()).toUri().toString()
+
+        table = F.create_map(*[F.lit(v) for f, o in zip(files, offsets)
+                               for v in (uri(f), o)])
+        file_path = F.col("_metadata.file_path")
+        first = F.coalesce(table[file_path], F.raise_error(
+            F.concat(F.lit("no row offset for "), file_path)))
+    return (df.withColumn(col, first + F.col("_metadata.row_index")),
+            offsets[-1] + counts[-1])
 
 
 def parquet_num_rows(spark: SparkSession, path: str) -> int:

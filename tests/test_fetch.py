@@ -146,7 +146,7 @@ def test_extract_archive_restages_a_member_cut_short(tmp_path):
     (out / "m.tsv").write_text(body[:8])
     (got,) = FX.extract_archive(str(zp), str(out))
     assert os.path.getsize(got) == 1800
-    assert not os.path.exists(got + ".tmp")
+    assert sorted(os.listdir(out)) == [".m.tsv.staged", "m.tsv"]
 
 
 def test_extract_archive_restages_a_relanded_archive(tmp_path):

@@ -577,3 +577,37 @@ def test_hll_partials_fold_equals_full_sketch(spark, tmp_path):
     assert set(got2) == set(exact2)
     for k, (n, approx) in got2.items():
         assert (n, approx) == exact2[k], (k, got2[k], exact2[k])
+
+
+def test_read_sharded_bundle_merges_widened_footers_on_the_driver(spark, tmp_path):
+    """After an upsert whose delta carries new columns (top-level and a
+    nested struct field), the touched shards are wider than the rest:
+    the bundle reads with the same names and types as Spark's
+    mergeSchema read of it, and the read starts no Spark job."""
+    import uuid
+
+    path = str(tmp_path / "bundle")
+    INC.write_sharded_bundle(
+        merge_edges(_edges(spark, _base_rows()[:40]).withColumn(
+            "attrs", F.struct(F.lit(1).alias("a")))),
+        path, ["subject"], n_shards=8)
+    delta = _edges(spark, _base_rows()[:2]).select(
+        "*", F.lit("x").alias("extra"),
+        F.struct(F.lit(2).alias("a"), F.lit("b").alias("b")).alias("attrs"))
+    touched = INC.upsert_sharded_edges(spark, delta, path, n_shards=8)
+    assert 1 <= len(touched) < 8
+
+    sc = spark.sparkContext
+    group = f"sharded-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read")
+    try:
+        got = INC.read_sharded_bundle(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    want = spark.read.option("mergeSchema", "true").parquet(path).drop(
+        INC.SHARD_COL)
+    assert got.dtypes == want.dtypes
+    assert "extra" in got.columns and "b" in got.schema["attrs"].dataType.names
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))

@@ -338,6 +338,29 @@ def test_neo4j_dump_orchestration_with_fake_binaries(spark, tmp_path):
         )
 
 
+def test_neo4j_dump_failure_removes_staged_csvs(spark, tmp_path):
+    """A tool-chain step that fails leaves no copy of the graph behind:
+    the staging CSVs and the concatenated import inputs are removed
+    before the error propagates."""
+    import stat
+    import sys
+
+    import pytest as _pytest
+
+    from orion_spark.sinks import neo4j_dump as ND
+
+    admin = tmp_path / "failing_admin.py"
+    admin.write_text(f"#!{sys.executable}\nimport sys\nsys.exit(2)\n")
+    admin.chmod(admin.stat().st_mode | stat.S_IEXEC)
+    out_dir = tmp_path / "dump_out"
+    with _pytest.raises(ND.Neo4jDumpError, match="ExitCode 2"):
+        ND.create_neo4j_dump(
+            _nodes(spark), _edges(spark), str(out_dir),
+            neo4j_admin=[str(admin)], neo4j=["true"], cypher_shell=["true"],
+        )
+    assert os.listdir(out_dir) == []
+
+
 def test_memgraph_dump_files_and_load_orchestration(spark, tmp_path):
     """memgraph_tools.py:9-48 parity: node csv + index cypher + one edge
     csv per predicate with a manifest, idempotent per artifact; then the

@@ -108,6 +108,28 @@ def test_connected_edge_subset(spark):
     assert sorted(r.id for r in nodes.collect()) == ["A", "C"]
 
 
+def test_connected_edge_subset_keeps_each_edge_once(spark):
+    """An edge hitting the primary set at both ends is kept once (no
+    dedup pass needed), an edge with a null subject is kept when its
+    object hits, duplicate primary ids match once, and every secondary
+    column (an ordinal included) rides through."""
+    primary = spark.createDataFrame([Row(id="A"), Row(id="B"), Row(id="A")])
+    sec_nodes = spark.createDataFrame(
+        [Row(id="A", _source_ordinal=0), Row(id="C", _source_ordinal=1)]
+    )
+    sec_edges = spark.createDataFrame(
+        [("A", "p", "B", 0), (None, "p", "A", 1), (None, "p", "C", 2),
+         ("C", "p", None, 3)],
+        "subject string, predicate string, object string, _source_ordinal long",
+    )
+    nodes, edges = M.connected_edge_subset(primary, sec_nodes, sec_edges)
+    assert sorted(edges.collect(), key=lambda r: r._source_ordinal) == [
+        Row(subject="A", predicate="p", object="B", _source_ordinal=0),
+        Row(subject=None, predicate="p", object="A", _source_ordinal=1),
+    ]
+    assert [r.id for r in nodes.collect()] == ["A"]
+
+
 def test_prune_unconnected_nodes(spark):
     nodes = spark.createDataFrame([Row(id="A"), Row(id="B"), Row(id="Z")])
     edges = spark.createDataFrame([Row(subject="A", predicate="p", object="B")])

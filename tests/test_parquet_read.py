@@ -173,16 +173,6 @@ def test_unreadable_paths_raise_as_spark_does(spark, tmp_path):
         assert type(ours.value) is type(spark_err.value)
 
 
-# Reads that keep Spark's inference: the sharded-bundle readers merge
-# every file's schema (mergeSchema), which one footer cannot stand for.
-MERGE_SCHEMA_READS = {
-    ("sinks/incremental.py", "read_sharded_bundle"),
-    ("sinks/incremental.py", "upsert_sharded_bundle"),
-    ("sinks/incremental.py", "compact_sharded_bundle"),
-    ("sinks/qc_incremental.py", "_bundle_with_shard"),
-}
-
-
 def _batch_parquet_reads(tree):
     """(enclosing function, line) of each `<x>.read...parquet(...)` or
     `<x>.read...load(..., "parquet")` call; streaming reads excluded."""
@@ -218,21 +208,40 @@ def _batch_parquet_reads(tree):
     return found
 
 
+def _merge_schema_options(tree):
+    """(enclosing function, line) of each call that passes a `mergeSchema`
+    option: `.option("mergeSchema", ...)`, `.options(mergeSchema=...)`,
+    or a conf key such as `spark.sql.parquet.mergeSchema`."""
+    found = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, ast.FunctionDef) else func
+            if isinstance(child, ast.Call) and (
+                    any(isinstance(a, ast.Constant) and isinstance(a.value, str)
+                        and a.value.endswith("mergeSchema") for a in child.args)
+                    or any(k.arg == "mergeSchema" for k in child.keywords)):
+                found.append((func, child.lineno))
+            visit(child, inner)
+
+    visit(tree, None)
+    return found
+
+
 def test_every_plain_parquet_read_goes_through_read_parquet():
-    allowed_seen = set()
+    """`read_parquet` is the engine's one batch parquet read and the one
+    place that may ask Spark to merge schemas: every `mergeSchema` read
+    folds its footers on the driver (`read_parquet(merge_schema=True)`)
+    and falls back to Spark's merge only there."""
     stray = []
     for path in sorted(ENGINE.rglob("*.py")):
         rel = path.relative_to(ENGINE).as_posix()
-        for func, line in _batch_parquet_reads(ast.parse(path.read_text())):
-            if (rel, func) == ("sources/kgx.py", "read_parquet"):
-                continue
-            if (rel, func) in MERGE_SCHEMA_READS:
-                allowed_seen.add((rel, func))
-                continue
-            stray.append(f"{rel}:{line} ({func})")
+        tree = ast.parse(path.read_text())
+        for func, line in set(_batch_parquet_reads(tree)
+                              + _merge_schema_options(tree)):
+            if (rel, func) != ("sources/kgx.py", "read_parquet"):
+                stray.append(f"{rel}:{line} ({func})")
     assert stray == [], "parquet reads outside read_parquet: " + ", ".join(stray)
-    # the allow-list names only reads that still exist
-    assert allowed_seen == MERGE_SCHEMA_READS
 
 
 def test_read_guard_sees_each_read_form():
@@ -246,3 +255,62 @@ def test_read_guard_sees_each_read_form():
         "    g = spark.read.json('p')\n"
     )
     assert [line for _, line in _batch_parquet_reads(ast.parse(src))] == [2, 3, 4, 5]
+
+
+def test_merge_schema_guard_sees_each_option_form():
+    src = (
+        "def f(spark, df):\n"
+        "    'mergeSchema in a docstring is no option'\n"
+        "    a = spark.read.option('mergeSchema', 'true')\n"
+        "    b = spark.read.options(mergeSchema=True)\n"
+        "    spark.conf.set('spark.sql.parquet.mergeSchema', 'true')\n"
+        "    c = df.option('mergeSchemaX', 'true')\n"
+    )
+    assert [line for _, line in _merge_schema_options(ast.parse(src))] == [3, 4, 5]
+
+
+def test_merged_footers_equal_spark_merge_schema(spark, tmp_path):
+    """`read_parquet(merge_schema=True)` folds every footer on the driver
+    as Spark's mergeSchema does: new top-level and nested fields land in
+    the same order with the same types, and the read starts no job.
+    `partitions` narrows the fold to the named partition directories."""
+    root = tmp_path / "widened"
+    base = spark.range(6).select(
+        F.col("id"), (F.col("id") % 3).alias("k"),
+        F.struct(F.col("id").alias("a")).alias("s"))
+    base.write.partitionBy("k").parquet(str(root))
+    spark.range(2).select(
+        F.col("id"), F.lit(1).alias("k"), F.lit("x").alias("extra"),
+        F.struct(F.col("id").alias("a"), F.lit(1.5).alias("b")).alias("s"),
+        F.array(F.struct(F.lit(1).alias("c"))).alias("arr"),
+    ).write.mode("append").partitionBy("k").parquet(str(root))
+    path = str(root)
+    df, jobs = _jobs(spark, lambda: read_parquet(spark, path, merge_schema=True))
+    assert jobs == 0
+    want = spark.read.option("mergeSchema", "true").parquet(path)
+    assert df.schema == want.schema
+    assert sorted(map(str, df.collect())) == sorted(map(str, want.collect()))
+    narrow = _footer_schema(spark, path, merge=True, partitions=["k=0"])
+    assert narrow.simpleString() == spark.read.parquet(
+        os.path.join(path, "k=0")).schema.simpleString()
+
+
+def test_merge_conflicts_fall_back_to_spark(spark, tmp_path):
+    """Files whose columns disagree in type are merged by Spark itself
+    (which widens or rejects by its own rules), never by a guess."""
+    for name, other in (("long_vs_int", pa.int32()), ("long_vs_str", pa.string())):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.table({"v": pa.array([1], pa.int64())}),
+                       str(d / "part-0.parquet"))
+        pq.write_table(pa.table({"v": pa.array([2], pa.int64()).cast(other)}),
+                       str(d / "part-1.parquet"))
+        assert _footer_schema(spark, str(d), merge=True) is None
+        try:
+            want = spark.read.option("mergeSchema", "true").parquet(str(d))
+        except Exception as spark_err:
+            with pytest.raises(type(spark_err)):
+                read_parquet(spark, str(d), merge_schema=True)
+        else:
+            got = read_parquet(spark, str(d), merge_schema=True)
+            assert got.schema == want.schema

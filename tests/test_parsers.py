@@ -1,7 +1,9 @@
 """Golden-file parser tests (reference: tests/test_loaders.py pattern —
 small real-format fixtures, assert node/edge counts and spot contents)."""
 
+import glob
 import json
+import os
 
 from orion_spark.plans import parsers as PP
 
@@ -2057,3 +2059,27 @@ def test_molepro_like_parser(spark, tmp_path):
     e = {r.object: r for r in edges.collect()}
     assert e["NCBIGene:2"].publications == ["PMID:1", "PMID:2"]
     assert e["NCBIGene:3"].publications is None
+
+
+def test_gtp_read_stages_a_source_once(spark, tmp_path, monkeypatch):
+    """Without a staging directory, a parser stages each source into one
+    directory derived from the source's path: a second read of the same
+    file makes no new directory and leaves the staged copy as it is."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    src = tmp_path / "interactions.tsv"
+    src.write_text('"# GtoPdb Version: 2024.1"\nLigand ID\tType\n1\tInhibitor\n')
+
+    def staged():
+        return {p: os.stat(p).st_mtime_ns
+                for p in glob.glob(os.path.join(tempfile.tempdir, "**"),
+                                   recursive=True)}
+
+    first = PP._gtp_read(spark, str(src))
+    assert [r.ligand_id for r in first.collect()] == ["1"]
+    after_first = staged()
+    second = PP._gtp_read(spark, str(src))
+    assert [r.ligand_id for r in second.collect()] == ["1"]
+    assert staged() == after_first

@@ -24,6 +24,10 @@ graphs:
 """
 
 
+# jobs the node and edge writes of the three-source fixture may run
+WRITE_JOBS = 7
+
+
 def _mk_source(spark, path, node_rows, edge_rows):
     nodes = spark.createDataFrame(
         node_rows,
@@ -108,6 +112,88 @@ def test_build_graph_end_to_end(spark, tmp_path):
     # metadata sidecars written
     meta = json.load(open(os.path.join(out, "graph-metadata.json")))
     assert meta["node_count"] == 4 and meta["edge_count"] == 3
+
+
+def test_build_graph_write_phases_job_budget(spark, tmp_path):
+    """Status-tracker guard on the build's write phases: the merge of
+    every source tier runs as one aggregate per side, so writing the
+    nodes and the edges of the three-source fixture (two primaries, one
+    subset source) runs at most WRITE_JOBS jobs."""
+    from orion_spark.plans.stage_metrics import PhaseRecorder
+
+    spec = P.parse_graph_spec(SPEC_YAML)[0]
+    rec = PhaseRecorder(spark, f"write-budget-{os.getpid()}")
+    P.build_graph(spark, spec, _sources(spark, tmp_path),
+                  str(tmp_path / "storage"), recorder=rec)
+    jobs = {name: rec.jobs(name) for name in ("write_nodes", "write_edges")}
+    assert sum(jobs.values()) <= WRITE_JOBS, jobs
+
+
+def _two_file_source(tmp_path):
+    """One source whose nodes and edges each span two files. Key K has a
+    truthy value in both files; the later file is the larger one, so it
+    is read first when both files share one input partition. Key K2 has
+    two truthy values in one file, in row groups far apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "two_files"
+    filler = [f"F:{i}" for i in range(3000)]
+    sides = {
+        "nodes": [{"id": ["K"], "name": ["first"], "category": [["c"]]},
+                  {"id": ["K", "K2", *filler, "K2"],
+                   "name": ["second", "early", *filler, "late"],
+                   "category": [["c"]] * 3003}],
+        "edges": [{"subject": ["K"], "predicate": ["p"], "object": ["K2"],
+                   "primary_knowledge_source": ["s"], "name": ["first"]},
+                  {"subject": ["K", "K2", *filler, "K2"],
+                   "predicate": ["p"] * 3003,
+                   "object": ["K2", "K", *filler, "K"],
+                   "primary_knowledge_source": ["s"] * 3003,
+                   "name": ["second", "early", *filler, "late"]}],
+    }
+    for side, tables in sides.items():
+        (root / side).mkdir(parents=True)
+        for i, cols in enumerate(tables):
+            pq.write_table(pa.table(cols), str(root / side / f"part-{i}.parquet"),
+                           row_group_size=400)
+    return str(root)
+
+
+def test_build_graph_first_truthy_follows_file_order(spark, tmp_path):
+    """Within one source, "first" is file order: the file listed first
+    (by path), then the row's place in its file. A key whose truthy
+    values conflict across the source's two files, and one whose values
+    conflict inside one file, merge to the first at 1 and at 8 input
+    partitions."""
+    from orion_spark.sources.kgx import read_parquet
+
+    spec = P.parse_graph_spec(
+        "graphs:\n  - graph_id: file_order\n    sources:\n"
+        "      - source_id: two_files\n")[0]
+    src = _two_file_source(tmp_path)
+    big = os.path.getsize(os.path.join(src, "nodes", "part-1.parquet"))
+    # one partition: both files packed into one split list (the larger
+    # first); eight: the larger file cut into seven splits
+    layouts = {1: {"spark.sql.files.minPartitionNum": "1"},
+               8: {"spark.sql.files.maxPartitionBytes": str(-(-big // 7))}}
+    for parts, conf in layouts.items():
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            assert read_parquet(spark, os.path.join(src, "nodes")) \
+                .rdd.getNumPartitions() == parts
+            out = P.build_graph(spark, spec, {"two_files": src},
+                                str(tmp_path / f"storage{parts}"))
+            nodes, edges = read_bundle(spark, out)
+        finally:
+            for k, v in prev.items():
+                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+        names = {r.id: r.name for r in nodes.collect()}
+        assert (names["K"], names["K2"]) == ("first", "early"), parts
+        names = {r.subject: r.name for r in edges.collect()}
+        assert (names["K"], names["K2"]) == ("first", "early"), parts
 
 
 def test_rebuild_skip(spark, tmp_path):
