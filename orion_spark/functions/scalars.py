@@ -20,10 +20,6 @@ def curie_local_id(col: Column) -> Column:
     return F.substring_index(col, ":", -1)
 
 
-def make_curie(prefix: str, local: Column) -> Column:
-    return F.concat(F.lit(prefix + ":"), local.cast("string"))
-
-
 def snakify(col: Column) -> Column:
     """'Some Label-Name' -> 'some_label_name' (orion/utils.py:487-491)."""
     return F.lower(F.regexp_replace(F.trim(col), r"[\s\-]+", "_"))

@@ -17,7 +17,7 @@ properties; everything else can be folded into a MAP<STRING,STRING> column
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -121,6 +121,13 @@ RETRIEVAL_SOURCE_SCHEMA = T.ArrayType(
 def property_columns(df: DataFrame, core: list[str]) -> list[str]:
     """Columns of *df* beyond the fixed core — the open property tail."""
     return [c for c in df.columns if c not in core]
+
+
+def first_category(nodes: DataFrame) -> Column:
+    """A node's first category; null when the frame has no category."""
+    if NODE_CATEGORY in nodes.columns:
+        return F.col(NODE_CATEGORY).getItem(0)
+    return F.lit(None).cast("string")
 
 
 def ensure_node_core(df: DataFrame) -> DataFrame:

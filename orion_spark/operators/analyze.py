@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orion_spark.model import NODE_ID, OBJECT, PREDICATE, SUBJECT
+from orion_spark.model import NODE_ID, OBJECT, PREDICATE, SUBJECT, first_category
 
 
 # ---------------------------------------------------------------------------
@@ -40,50 +40,73 @@ def predicate_counts(edges: DataFrame) -> DataFrame:
     return edges.groupBy(PREDICATE).agg(F.count("*").alias("n"))
 
 
-def node_census(nodes: DataFrame) -> DataFrame:
-    """One node aggregate for the metadata sidecars: per CURIE prefix,
-    the node count and the set of first categories seen under it —
-    the prefix histogram, the node count (its sum) and the category
-    vocabulary `spo_type_counts` encodes with (the union of the sets).
+def _null(type_: str) -> Column:
+    return F.lit(None).cast(type_)
 
-    Keyed on the prefix alone, exactly like `curie_prefix_counts`, so
-    the histogram comes back in the same row order; the first category
-    rides along as a set-valued aggregate (partial-aggregatable, each
-    set bounded by the category vocabulary). Returns (prefix, n,
-    categories)."""
-    first_cat = (
-        F.col("category").getItem(0)
-        if "category" in nodes.columns
-        else F.lit(None).cast("string")
+
+def sidecar_census(
+    nodes: DataFrame, edges: DataFrame, spo_categories: list[str] | None = None
+) -> DataFrame:
+    """The metadata sidecars' whole-graph scans as ONE aggregate, so the
+    sidecars cost one Spark action. Each input row is tagged with its
+    `side` and key, the tagged rows union, and one vocabulary-sized
+    count (`n`) groups them by (side, key, subkey, aggregators, types,
+    scode, ocode):
+
+    - "node" rows, keyed (CURIE prefix, first category as subkey, the
+      category list as types): the prefix histogram, the node count,
+      the first-category vocabulary and the categories node-type
+      validation checks;
+    - "edge" rows, keyed (predicate, primary source as subkey — null
+      becomes ``missing_primary_knowledge_source``, the validation
+      default —, aggregator list): the predicate histogram, the edge
+      count and the knowledge-source set;
+    - with `spo_categories` (the sorted first-category vocabulary),
+      "spo" rows, keyed (predicate, subject code, object code): the
+      spo-type census of `spo_codes` — its broadcast node map is
+      planned from the vocabulary, so planning starts no job.
+
+    A plain count, partial-aggregated map-side, so the only shuffle is
+    the one aggregate's and it carries one row per key. Unused key
+    columns are null."""
+    n = nodes.select(
+        F.lit("node").alias("side"),
+        _curie_prefix().alias("key"),
+        first_category(nodes).alias("subkey"),
+        _null("array<string>").alias("aggregators"),
+        _null("int").alias("scode"),
+        _null("int").alias("ocode"),
+        (F.col("category") if "category" in nodes.columns
+         else _null("array<string>")).alias("types"),
     )
-    return nodes.groupBy(_curie_prefix().alias("prefix")).agg(
-        F.count("*").alias("n"), F.collect_set(first_cat).alias("categories")
+    e = edges.select(
+        F.lit("edge").alias("side"),
+        F.col(PREDICATE).alias("key"),
+        F.coalesce(F.col("primary_knowledge_source"),
+                   F.lit(MISSING_PRIMARY_KNOWLEDGE_SOURCE)).alias("subkey"),
+        (F.col("aggregator_knowledge_source")
+         if "aggregator_knowledge_source" in edges.columns
+         else _null("array<string>")).alias("aggregators"),
+        _null("int").alias("scode"),
+        _null("int").alias("ocode"),
+        _null("array<string>").alias("types"),
     )
-
-
-def edge_census(edges: DataFrame) -> DataFrame:
-    """One edge aggregate for the metadata sidecars: per predicate, the
-    edge count and the set of knowledge sources — primary (null becomes
-    ``missing_primary_knowledge_source``, the validation default) plus
-    every aggregator source when that column exists. Gives
-    `predicate_counts` (same key, same row order), the edge count and
-    the knowledge-source set validation checks, in one scan. Returns
-    (predicate, n, knowledge_sources)."""
-    sources = F.collect_set(
-        F.coalesce(
-            F.col("primary_knowledge_source"),
-            F.lit(MISSING_PRIMARY_KNOWLEDGE_SOURCE),
+    rows = n.unionByName(e)
+    if spo_categories is not None:
+        rows = rows.unionByName(
+            spo_codes(edges, nodes, spo_categories).select(
+                F.lit("spo").alias("side"),
+                F.col(PREDICATE).alias("key"),
+                _null("string").alias("subkey"),
+                _null("array<string>").alias("aggregators"),
+                F.col("_scode").alias("scode"),
+                F.col("_ocode").alias("ocode"),
+                _null("array<string>").alias("types"),
+            )
         )
-    )
-    if "aggregator_knowledge_source" in edges.columns:
-        # a set of the (few distinct) aggregator lists, flattened
-        sources = F.array_union(
-            sources,
-            F.flatten(F.collect_set("aggregator_knowledge_source")),
-        )
-    return edges.groupBy(PREDICATE).agg(
-        F.count("*").alias("n"), sources.alias("knowledge_sources")
-    )
+    return rows.groupBy(
+        "side", "key", "subkey", "aggregators", "types", "scode", "ocode"
+    ).agg(F.count("*").alias("n"))
 
 
 def publications_per_predicate(edges: DataFrame) -> DataFrame:
@@ -96,11 +119,61 @@ def publications_per_predicate(edges: DataFrame) -> DataFrame:
     )
 
 
+SPO_BROADCAST_MAX_NODES = 32_000_000
+
+
+def _code_maps(vocab: list) -> tuple[Column, Column]:
+    """Literal maps value -> code and code -> value of a vocabulary."""
+    if not vocab:
+        return (F.create_map().cast("map<string,int>"),
+                F.create_map().cast("map<int,string>"))
+    return (F.create_map(*[F.lit(x) for i, v in enumerate(vocab) for x in (v, i)]),
+            F.create_map(*[F.lit(x) for i, v in enumerate(vocab) for x in (i, v)]))
+
+
+def _join_endpoints(
+    edges: DataFrame, nodes: DataFrame, value: str, subject_as: str,
+    object_as: str,
+) -> DataFrame:
+    """Inner-join `edges` to the (`_cid`, `value`) node frame on both
+    endpoints, naming the subject's value `subject_as` and the object's
+    `object_as`. The renames come after each join, so both joins read
+    the same frame: one exchange (or broadcast) is built and the second
+    join reuses it (`ReusedExchange`)."""
+    j = (edges.join(nodes, edges[SUBJECT] == F.col("_cid"), "inner")
+         .withColumnRenamed(value, subject_as).drop("_cid"))
+    return (j.join(nodes, j[OBJECT] == F.col("_cid"), "inner")
+            .withColumnRenamed(value, object_as).drop("_cid"))
+
+
+def spo_codes(
+    edges: DataFrame, nodes: DataFrame, categories: list[str],
+    predicate: Column | None = None, broadcast: bool = True,
+) -> DataFrame:
+    """(_scode, predicate, _ocode) per edge whose endpoints are both
+    nodes: the endpoints' first categories as their index in the sorted
+    vocabulary `categories` (null for a category outside it or a node
+    without one). The node map is the compact (id, int code) frame,
+    broadcast unless `broadcast` is off; `predicate` replaces the
+    predicate column (the slim path's dictionary code)."""
+    code_of, _ = _code_maps(categories)
+    cat = nodes.select(
+        F.col(NODE_ID).alias("_cid"),
+        F.element_at(code_of, first_category(nodes)).alias("_ccode"),
+    )
+    if broadcast:
+        cat = F.broadcast(cat)
+    e = edges.select(SUBJECT, OBJECT,
+                     PREDICATE if predicate is None else predicate)
+    return _join_endpoints(e, cat, "_ccode", "_scode", "_ocode").drop(
+        SUBJECT, OBJECT)
+
+
 def spo_type_counts(
     edges: DataFrame,
     nodes: DataFrame,
     n_nodes: int | None = None,
-    broadcast_max_nodes: int = 32_000_000,
+    broadcast_max_nodes: int = SPO_BROADCAST_MAX_NODES,
     categories: list[str] | None = None,
 ) -> DataFrame:
     """J6 + A9: (subject-category, predicate, object-category) triple counts.
@@ -113,33 +186,26 @@ def spo_type_counts(
     relation is the only graph-sized dimension; KG node sets run 1e6-1e8
     while edge sets run 1e8-1e10, so when the node count is within
     `broadcast_max_nodes` the compact (id, int-code) map is BROADCAST to
-    both endpoint joins and the edge set never shuffles at all. Above the
-    cap, a slim sort-merge path ships only (subject, object, int codes) —
-    roughly half the bytes of joining raw category/predicate strings.
-    Exact either way. Callers that already hold the node count and the
-    first-category vocabulary (the sidecar writer gets both from its
-    census) pass them and skip the count and distinct-collect jobs;
-    null vocabulary entries are ignored.
+    both endpoint joins (`spo_codes`) and the edge set never shuffles at
+    all. Above the cap, a slim sort-merge path ships only (subject,
+    object, int codes) — roughly half the bytes of joining raw
+    category/predicate strings. Exact either way. Callers that already
+    hold the node count and the first-category vocabulary pass them and
+    skip the count and distinct-collect jobs; null vocabulary entries
+    are ignored. The metadata sidecars fold the broadcast path into
+    their one census aggregate (`sidecar_census`).
     """
-    first_cat = F.col("category").getItem(0)
     if categories is None:
-        categories = [r[0] for r in nodes.select(first_cat).distinct().collect()]
+        categories = [
+            r[0] for r in nodes.select(first_category(nodes)).distinct().collect()
+        ]
     cat_vocab = sorted(c for c in categories if c is not None)
-    code_of = F.create_map(
-        *[F.lit(x) for c, i in ((c, i) for i, c in enumerate(cat_vocab)) for x in (c, i)]
-    ) if cat_vocab else F.create_map().cast("map<string,int>")
-    name_of = F.create_map(
-        *[F.lit(x) for i, c in enumerate(cat_vocab) for x in (i, c)]
-    ) if cat_vocab else F.create_map().cast("map<int,string>")
-    cat = nodes.select(
-        F.col(NODE_ID).alias("_cid"),
-        F.element_at(code_of, first_cat).alias("_ccode"),
-    )
+    _, name_of = _code_maps(cat_vocab)
     if n_nodes is None:
         n_nodes = nodes.count()
     if n_nodes <= broadcast_max_nodes:
-        cat = F.broadcast(cat)
-        e = edges.select(SUBJECT, OBJECT, PREDICATE)
+        pkey, pname = PREDICATE, F.col(PREDICATE)
+        codes = spo_codes(edges, nodes, cat_vocab)
     else:
         # slim shuffle path: predicate dictionary-encoded too (vocab-sized
         # collect), so the two sort-merge joins ship int codes + id strings
@@ -147,37 +213,17 @@ def spo_type_counts(
             r[0] for r in edges.select(PREDICATE).distinct().collect()
             if r[0] is not None
         )
-        pcode_of = F.create_map(
-            *[F.lit(x) for i, p in enumerate(pred_vocab) for x in (p, i)]
-        ) if pred_vocab else F.create_map().cast("map<string,int>")
-        pname_of = F.create_map(
-            *[F.lit(x) for i, p in enumerate(pred_vocab) for x in (i, p)]
-        ) if pred_vocab else F.create_map().cast("map<int,string>")
-        e = edges.select(
-            SUBJECT, OBJECT, F.element_at(pcode_of, F.col(PREDICATE)).alias("_pcode")
+        pcode_of, pname_of = _code_maps(pred_vocab)
+        pkey, pname = "_pcode", F.element_at(pname_of, F.col("_pcode"))
+        codes = spo_codes(
+            edges, nodes, cat_vocab,
+            F.element_at(pcode_of, F.col(PREDICATE)).alias("_pcode"),
+            broadcast=False,
         )
-    s = cat.withColumnRenamed("_ccode", "_scode").withColumnRenamed("_cid", "_sid")
-    o = cat.withColumnRenamed("_ccode", "_ocode").withColumnRenamed("_cid", "_oid")
-    joined = (
-        e.join(s, e[SUBJECT] == F.col("_sid"), "inner")
-        .join(o, e[OBJECT] == F.col("_oid"), "inner")
-    )
-    if n_nodes <= broadcast_max_nodes:
-        grouped = joined.groupBy("_scode", PREDICATE, "_ocode").agg(
-            F.count("*").alias("n")
-        )
-        return grouped.select(
-            F.element_at(name_of, F.col("_scode")).alias("subject_category"),
-            PREDICATE,
-            F.element_at(name_of, F.col("_ocode")).alias("object_category"),
-            "n",
-        )
-    grouped = joined.groupBy("_scode", "_pcode", "_ocode").agg(
-        F.count("*").alias("n")
-    )
+    grouped = codes.groupBy("_scode", pkey, "_ocode").agg(F.count("*").alias("n"))
     return grouped.select(
         F.element_at(name_of, F.col("_scode")).alias("subject_category"),
-        F.element_at(pname_of, F.col("_pcode")).alias(PREDICATE),
+        pname.alias(PREDICATE),
         F.element_at(name_of, F.col("_ocode")).alias("object_category"),
         "n",
     )
@@ -305,21 +351,14 @@ def meta_kg_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     row_number window ordered by the edge key columns (the reference's
     file-order 'first' is not reproducible under parallelism).
 
-    The category map is materialized with localCheckpoint (eager): it
-    feeds TWO broadcast builds (subject side and object side), and each
-    build would otherwise re-scan the full node union. localCheckpoint
-    (not .persist()) so blocks release on GC instead of accumulating
-    across invocations in a long-lived session."""
+    Both endpoint joins read one (id, first category) frame and rename
+    after joining (`_join_endpoints`), so the category map is built once
+    and the second join reuses it; no eager checkpoint, so no job runs
+    before the plan does."""
     cat = nodes.select(
         F.col(NODE_ID).alias("_cid"), F.col("category").getItem(0).alias("_cat")
-    ).localCheckpoint(eager=True)
-    s = cat.withColumnRenamed("_cat", "subject_type").withColumnRenamed("_cid", "_sid")
-    o = cat.withColumnRenamed("_cat", "object_type").withColumnRenamed("_cid", "_oid")
-    typed = (
-        edges.join(s, edges[SUBJECT] == F.col("_sid"), "inner")
-        .join(o, edges[OBJECT] == F.col("_oid"), "inner")
-        .drop("_sid", "_oid")
     )
+    typed = _join_endpoints(edges, cat, "_cat", "subject_type", "object_type")
     # 'first example' = lexicographic min of (subject, object): a plain
     # min(struct) aggregate — partial-aggregatable, ONE shuffle. (A window +
     # row_number would shuffle twice and materialize ranks for every row.)

@@ -6,13 +6,13 @@ counts (orion/kgx_file_normalizer.py:204-221,355-364), per-prefix stats
 
 Each report is a handful of small aggregates collected into Python; the
 heavy inputs are only scanned, never collected. The
-merge report scans only the raw sources: the merged counts are observed
-on the bundle write that produces them.
+merge report scans nothing: its caller passes counts the parquet footers
+and the bundle write already hold.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -20,37 +20,23 @@ from orion_spark.model import NODE_ID, OBJECT, SUBJECT
 from orion_spark.operators.normalize import prefix_stats
 
 
-def merge_report(raw_nodes: DataFrame, raw_edges: DataFrame,
+def merge_report(source_nodes: int, source_edges: int,
                  merged_nodes: int, merged_edges: int) -> dict:
     """Counts before/after the merge stage (orion/kgx_file_merger.py:84-100
     tracks source/merged counts per source).
 
-    `merged_nodes`/`merged_edges` are the written bundle's counts (the
-    write's observed metrics, `write_bundle(collect_counts=True)`). Both
-    raw counts come from ONE Spark job: the two raw frames, projected to
-    a side flag, union into a no-op write whose observed metrics count
-    each side — no shuffle, so no second job for a final aggregate."""
-    obs = Observation()
-    (
-        raw_nodes.select(F.lit(True).alias("_node"))
-        .unionByName(raw_edges.select(F.lit(False).alias("_node")))
-        .observe(
-            obs,
-            F.count_if(F.col("_node")).alias("nodes"),
-            F.count_if(~F.col("_node")).alias("edges"),
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    rn, re_ = int(obs.get["nodes"]), int(obs.get["edges"])
+    The caller holds every count, so the report starts no Spark job:
+    `build_graph` reads the source counts from the parquet footers
+    (`sources/kgx.parquet_num_rows`) and the merged counts are the
+    written bundle's (the write's observed metrics,
+    `write_bundle(collect_counts=True)`)."""
     return {
-        "source_nodes": rn,
+        "source_nodes": source_nodes,
         "merged_nodes": merged_nodes,
-        "nodes_merged_away": rn - merged_nodes,
-        "source_edges": re_,
+        "nodes_merged_away": source_nodes - merged_nodes,
+        "source_edges": source_edges,
         "merged_edges": merged_edges,
-        "edges_merged_away": re_ - merged_edges,
+        "edges_merged_away": source_edges - merged_edges,
     }
 
 

@@ -39,7 +39,12 @@ from orion_spark.operators.merge import (
     union_all,
 )
 from orion_spark.sinks.metadata import write_metadata_sidecars
-from orion_spark.sources.kgx import read_bundle, stamp_file_order, write_bundle
+from orion_spark.sources.kgx import (
+    parquet_num_rows,
+    read_bundle,
+    stamp_file_order,
+    write_bundle,
+)
 
 STAGES = ("fetch", "parse", "normalize", "supplement", "qc")
 STATUS = ("not_started", "in_progress", "stable", "broken", "failed")
@@ -264,10 +269,14 @@ def build_graph(
       bundle for the sidecars; each parquet schema comes from a footer
       (`read_parquet`), so a parquet build's reads start no job;
     - write_nodes / write_edges: the merge lineage executes here, and the
-      writes observe the merged node and edge counts;
-    - metadata_sidecars: the node census, edge census and spo-type census
-      over the written bundle;
-    - merge_report: one job counting both raw source sides.
+      writes observe the merged node and edge counts and the category
+      vocabulary;
+    - metadata_sidecars: one census aggregate over the written bundle
+      (node, edge and spo-type rows; `sinks/metadata.graph_census`),
+      planned from the observed node count and vocabulary;
+    - merge_report: the source counts from the sources' parquet footers
+      (`parquet_num_rows`), so a parquet build runs no job here; a path
+      that cannot be listed locally is counted by Spark.
     """
     phase = recorder.phase if recorder else lambda _: nullcontext()
     out_dir = os.path.join(storage, "graphs", spec.graph_id, spec.build_version)
@@ -333,7 +342,7 @@ def build_graph(
         merged_nodes = union_all([merged_nodes, v_nodes]).dropDuplicates(["id"])
         merged_edges = union_all([merged_edges, v_edges])
 
-    merged_counts = write_bundle(
+    counts = write_bundle(
         merged_nodes, merged_edges, out_dir, fmt=spec.output_format,
         recorder=recorder, collect_counts=True,
     )
@@ -341,7 +350,8 @@ def build_graph(
         nodes_back, edges_back = read_bundle(spark, out_dir, fmt=spec.output_format)
     with phase("metadata_sidecars"):
         write_metadata_sidecars(
-            spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir
+            spec.graph_id, spec.build_version, nodes_back, edges_back, out_dir,
+            node_count=counts.nodes, categories=counts.categories,
         )
     # merge counters sidecar (kgx_file_merger.py:84-100): totals across
     # every source tier (primary + subset + verbatim) vs the final bundle,
@@ -349,11 +359,14 @@ def build_graph(
     from orion_spark.operators.metrics import merge_report
     from orion_spark.sinks.metadata import write_merge_sidecar
 
-    raw_nodes = union_all([n for n, _ in frames])
-    raw_edges = union_all([e for _, e in frames])
     with phase("merge_report"):
+        source_nodes, source_edges = (
+            sum(parquet_num_rows(spark, os.path.join(
+                source_bundles[src.source_id], side)) for src in spec.sources)
+            for side in ("nodes", "edges"))
         write_merge_sidecar(
-            merge_report(raw_nodes, raw_edges, *merged_counts), out_dir
+            merge_report(source_nodes, source_edges, counts.nodes, counts.edges),
+            out_dir,
         )
     with open(done_marker, "w") as fh:
         fh.write(spec.build_version)

@@ -6,7 +6,8 @@ while the session runs (`jobs(name)`) and the Spark event log attributes
 their stages and tasks after it stops: `read_event_log` totals the
 session's event log with the benchmark's parser (`perfbench/eventlog.py`)
 and `PhaseRecorder.rows` joins those totals with each phase's wall time.
-The recorder needs no Spark UI.
+`read_event_log` also totals what each group's queries broadcast
+(`broadcast_totals`). The recorder needs no Spark UI.
 
 On exit, normal or not, a phase puts back the caller's job group and
 description, so jobs started between phases stay attributed to whatever
@@ -15,8 +16,10 @@ group the caller set.
 
 from __future__ import annotations
 
+import json
 import shutil
 import time
+from collections import defaultdict
 from contextlib import contextmanager
 
 
@@ -30,14 +33,66 @@ def event_log_conf(log_dir: str) -> dict[str, str]:
     }
 
 
+BROADCAST_METRICS = {"data size": "broadcast_mb",
+                     "number of output rows": "broadcast_rows"}
+
+
+def broadcast_totals(path: str) -> dict[str | None, dict]:
+    """Job group -> what its SQL queries broadcast, from one event log:
+    the `data size` (bytes, under `broadcast_mb`, which `read_event_log`
+    scales to MB) and `number of output rows` (`broadcast_rows`) metrics of every BroadcastExchange in the plans
+    the log records (adaptive re-plans included), each metric counted
+    once per query, with the query attributed to the group of its jobs.
+    Spark's `data size` of a hashed relation is its memory estimate,
+    which counts whole allocated pages (64 MB at least for string keys);
+    the row count is the payload measure."""
+    group_of: dict[int, str | None] = {}
+    metric_of: dict[int, tuple[int, str]] = {}  # accumulator -> query, field
+    value: dict[int, int] = {}
+
+    def walk(execution: int, node: dict) -> None:
+        if node.get("nodeName") == "BroadcastExchange":
+            for m in node["metrics"]:
+                if m["name"] in BROADCAST_METRICS:
+                    metric_of[m["accumulatorId"]] = (
+                        execution, BROADCAST_METRICS[m["name"]])
+        for child in node.get("children", []):
+            walk(execution, child)
+
+    with open(path) as fh:
+        for line in fh:
+            ev = json.loads(line)
+            kind = ev.get("Event", "")
+            if kind == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                if "spark.sql.execution.id" in props:
+                    group_of.setdefault(int(props["spark.sql.execution.id"]),
+                                        props.get("spark.jobGroup.id"))
+            elif kind.endswith(("SQLExecutionStart", "SQLAdaptiveExecutionUpdate")):
+                walk(ev["executionId"], ev["sparkPlanInfo"])
+            elif kind.endswith("DriverAccumUpdates"):
+                value.update(ev["accumUpdates"])
+    out: dict[str | None, dict] = defaultdict(
+        lambda: dict.fromkeys(BROADCAST_METRICS.values(), 0))
+    for acc, (execution, field) in metric_of.items():
+        if execution in group_of:
+            out[group_of[execution]][field] += value.get(acc, 0)
+    return out
+
+
 def read_event_log(log_dir: str) -> dict[str | None, dict]:
-    """Job group -> totals of the one event log under `log_dir`, then
-    removes the directory. Call after the session has stopped. Needs the
-    repository root on `sys.path` (the parser lives in `perfbench/`)."""
+    """Job group -> totals of the one event log under `log_dir`, with
+    the `broadcast_totals` added, then removes the directory. Call after
+    the session has stopped. Needs the repository root on `sys.path`
+    (the parser lives in `perfbench/`)."""
     from perfbench import eventlog
 
     (log,) = eventlog.log_files(log_dir)
     groups = eventlog.parse(log)
+    broadcast = broadcast_totals(log)
+    for group, totals in groups.items():
+        totals.update(broadcast[group])
+        totals["broadcast_mb"] /= eventlog.MB
     shutil.rmtree(log_dir)
     return groups
 
@@ -77,7 +132,9 @@ class PhaseRecorder:
         started no job."""
         from perfbench import eventlog
 
-        no_jobs = dict.fromkeys(eventlog.FIELDS, 0.0) | {"task_max_over_median": 1.0}
+        no_jobs = dict.fromkeys(
+            eventlog.FIELDS + tuple(BROADCAST_METRICS.values()), 0.0) | {
+            "task_max_over_median": 1.0}
         return [
             {"phase": name, "wall_s": round(wall, 3),
              **groups.get(self.group(name), no_jobs)}

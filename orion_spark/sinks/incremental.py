@@ -10,8 +10,8 @@ layout plus a staged per-partition swap:
   pure function of the merge group key (edges: subject; nodes: id), so
   every row of a merge group lives in exactly one shard directory;
 - an upsert computes the delta's touched shard set (bounded by
-  n_shards — a manifest-sized collect), reads ONLY those partitions
-  (partition pruning on `_shard`), re-runs the A3 property-merge
+  n_shards — a manifest-sized set observed on one scan), reads ONLY
+  those partitions (partition pruning on `_shard`), re-runs the A3 property-merge
   aggregate (operators/merge.py) over existing+delta for those shards,
   and swaps ONLY those partition directories into place.
 
@@ -60,7 +60,7 @@ import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from orion_spark.sources.kgx import read_parquet
@@ -112,6 +112,21 @@ def read_shards(spark: SparkSession, path: str, shards: list[int]) -> DataFrame:
         spark, path, merge_schema=True,
         partitions=[f"{SHARD_COL}={s}" for s in shards],
     ).where(F.col(SHARD_COL).isin(list(shards)))
+
+
+def touched_shards(delta: DataFrame) -> list[int]:
+    """The sorted `SHARD_COL` values of `delta`: a set observed on a no-op
+    scan of it, so one job and no shuffle (bounded by n_shards — a
+    manifest-sized result). An empty delta gives []."""
+    obs = Observation()
+    (
+        delta.select(SHARD_COL)
+        .observe(obs, F.collect_set(SHARD_COL).alias("shards"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return sorted(obs.get["shards"])
 
 
 class _UpsertLock:
@@ -242,7 +257,8 @@ def upsert_sharded_bundle(
     upsert is EXACTLY equivalent to a from-scratch merge of
     bundle-sources-then-delta, which the registry query
     incremental_upsert_merged_edges hash-checks against the
-    kgx_merge_edges oracle. Returns the touched shard ids.
+    kgx_merge_edges oracle. Returns the touched shard ids (`touched_shards`);
+    an empty delta touches none and rewrites nothing.
 
     Crash-safe and single-writer: see the commit protocol in the module
     docstring. Raises ConcurrentUpsertError if another upsert holds the
@@ -256,9 +272,9 @@ def upsert_sharded_bundle(
     delta = delta.withColumn(SHARD_COL, shard_of(key_cols, n_shards))
 
     with _UpsertLock(path):
-        touched = sorted(
-            r[SHARD_COL] for r in delta.select(SHARD_COL).distinct().collect()
-        )
+        touched = touched_shards(delta)
+        if not touched:
+            return []
         # merged schema: an earlier upsert may have widened some shards —
         # the arbitrary single-file schema pick would otherwise silently
         # drop those columns from this merge (see read_sharded_bundle)

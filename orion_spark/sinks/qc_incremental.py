@@ -141,10 +141,13 @@ def refresh_qc_partials(
     """Recompute partials for ONLY the touched shards (partition-pruned
     bundle read) and dynamically overwrite only those partials
     partitions — O(touched shards), not O(bundle). Call with the shard
-    list `upsert_sharded_bundle` returned."""
+    list `upsert_sharded_bundle` returned; an empty list refreshes
+    nothing."""
     out = os.path.join(bundle_path, PARTIALS_DIR)
     if not os.path.isdir(out):
         return write_qc_partials(spark, bundle_path, kind)
+    if not touched:
+        return out
     df = read_shards(spark, bundle_path, touched)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -1,10 +1,11 @@
 """S9: driver-side fetch layer — download sources to the landing zone.
 
 Parity surface: the reference's retrieval helpers
-(orion/utils.py:47-303) — FTP and HTTP pulls with skip-if-present
-semantics, mtime-derived source-version strings (orion/utils.py:86-121
-``get_ftp_file_date`` and :184-195 ``get_http_file_modified_date``),
-gz/tar/zip staging, and line-splitting of non-splittable archive members.
+(orion/utils.py:47-303) — HTTP pulls with skip-if-present semantics,
+mtime-derived source-version strings (orion/utils.py:184-195
+``get_http_file_modified_date``), gz/tar/zip staging, and line-splitting
+of non-splittable archive members. The reference's FTP pulls
+(orion/utils.py:86-181) have no caller here and are not carried.
 
 Design notes (Spark-first, not a translation):
 
@@ -41,7 +42,6 @@ import threading
 import zipfile
 from datetime import datetime, timezone
 from email.utils import parsedate_to_datetime
-from ftplib import FTP
 from urllib import request
 from urllib.parse import urlparse
 
@@ -82,27 +82,6 @@ def http_modified_version(url: str, exclude_day: bool = False) -> str:
         return _version_string(dt, exclude_day)
     except Exception as exc:
         raise FetchError(f"modified-date probe failed for {url}: {exc}") from exc
-
-
-def ftp_modified_version(
-    host: str, ftp_dir: str, ftp_file: str, exclude_day: bool = False
-) -> str:
-    """Source version from the FTP MDTM timestamp (orion/utils.py:86-121)."""
-    try:
-        with FTP(host, timeout=60) as ftp:
-            ftp.login()
-            ftp.cwd(ftp_dir)
-            code, _, stamp = ftp.voidcmd(f"MDTM {ftp_file}").partition(" ")
-            if code != "213":
-                raise FetchError(f"MDTM response code {code}")
-            dt = datetime.strptime(stamp.strip()[:14], "%Y%m%d%H%M%S")
-        return _version_string(dt, exclude_day)
-    except FetchError:
-        raise
-    except Exception as exc:
-        raise FetchError(
-            f"modified-date probe failed for ftp://{host}{ftp_dir}/{ftp_file}: {exc}"
-        ) from exc
 
 
 def fetch_http(
@@ -194,30 +173,6 @@ def fetch_http_session_gate(
             raise
         raise FetchError(f"gated download failed for {url}: {exc}") from exc
     return target, n
-
-
-def fetch_ftp(
-    host: str, ftp_dir: str, ftp_files: list[str], data_dir: str
-) -> int:
-    """Pull files from an FTP directory, skipping non-empty existing ones
-    (orion/utils.py:123-181). Returns the number of files now present."""
-    os.makedirs(data_dir, exist_ok=True)
-    done = 0
-    try:
-        with FTP(host, timeout=300) as ftp:
-            ftp.login()
-            ftp.cwd(ftp_dir)
-            for name in ftp_files:
-                target = os.path.join(data_dir, name)
-                if not (os.path.exists(target) and os.path.getsize(target) > 0):
-                    part = target + ".part"
-                    with open(part, "wb") as out:
-                        ftp.retrbinary(f"RETR {name}", out.write)
-                    os.replace(part, target)
-                done += 1
-    except Exception as exc:
-        raise FetchError(f"ftp pull failed for {host}{ftp_dir}: {exc}") from exc
-    return done
 
 
 def _safe_join(out_dir: str, member: str) -> str:

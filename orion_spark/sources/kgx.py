@@ -24,12 +24,13 @@ import json
 import os
 import re
 from contextlib import nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from orion_spark.model import ensure_edge_core, ensure_node_core
+from orion_spark.model import ensure_edge_core, ensure_node_core, first_category
 
 
 def read_kgx_nodes(spark: SparkSession, path: str) -> DataFrame:
@@ -68,13 +69,21 @@ def write_kgx(df: DataFrame, path: str, gzip: bool = False) -> None:
 # Bundle = the engine's unit of persistence (orion/kgx_bundle.py:16-20)
 # ---------------------------------------------------------------------------
 
+class BundleCounts(NamedTuple):
+    """What `write_bundle(collect_counts=True)` observes on its writes."""
+
+    nodes: int
+    edges: int
+    categories: list  # distinct first node categories, sorted, no null
+
+
 def write_bundle(
     nodes: DataFrame, edges: DataFrame, path: str, fmt: str = "parquet",
     gzip: bool = False,
     edge_partition_by: list[str] | None = None,
     recorder=None,
     collect_counts: bool = False,
-) -> tuple[int, int] | None:
+) -> BundleCounts | None:
     """Persist a bundle. `edge_partition_by` (e.g. ["predicate"]) writes
     hive-partitioned edges — at 100 TB this is what makes per-predicate
     derived jobs (closure expansion, Memgraph export, meta-KG) partition-
@@ -87,15 +96,19 @@ def write_bundle(
     the writes run under whatever job group the caller set.
 
     `collect_counts=True` rides `observe()` metrics on the write actions
-    and returns (node_count, edge_count) — the sidecar writer's counts for
-    free, instead of two whole-bundle re-scan jobs afterwards."""
+    and returns their `BundleCounts`: the node and edge counts and the
+    first-category vocabulary, which the sidecar census needs before it
+    is planned — for free, instead of whole-bundle re-scan jobs
+    afterwards."""
     phase = recorder.phase if recorder else lambda _: nullcontext()
     obs_nodes = obs_edges = None
     if collect_counts:
         from pyspark.sql import Observation
 
         obs_nodes, obs_edges = Observation(), Observation()
-        nodes = nodes.observe(obs_nodes, F.count(F.lit(1)).alias("n"))
+        nodes = nodes.observe(
+            obs_nodes, F.count(F.lit(1)).alias("n"),
+            F.collect_set(first_category(nodes)).alias("categories"))
         edges = edges.observe(obs_edges, F.count(F.lit(1)).alias("n"))
     if fmt == "parquet":
         with phase("write_nodes"):
@@ -111,7 +124,9 @@ def write_bundle(
         with phase("write_edges"):
             write_kgx(edges, os.path.join(path, "edges"), gzip=gzip)
     if collect_counts:
-        return int(obs_nodes.get["n"]), int(obs_edges.get["n"])
+        node_obs = obs_nodes.get
+        return BundleCounts(int(node_obs["n"]), int(obs_edges.get["n"]),
+                            sorted(node_obs["categories"]))
     return None
 
 

@@ -1,4 +1,4 @@
-"""Batched external-service map providers (SURVEY §2.6 N1-N4).
+"""Batched external-service map providers (SURVEY §2.6 N1-N3).
 
 The reference POSTs curie batches to NodeNorm / predicate batches to
 EdgeNorm inside its single process (orion/normalization.py:134-317,
@@ -151,29 +151,3 @@ def build_predicate_norm_map(
                 yield pd.DataFrame(rows)
 
     return distinct_preds.mapInPandas(lookup, schema=PREDICATE_NORM_SCHEMA)
-
-
-def name_resolution_map(
-    names: DataFrame,
-    transport: Transport,
-    batch_size: int = 1000,
-    name_col: str = "name",
-) -> DataFrame:
-    """N4: NameRes string->curie lookups (orion/normalization.py:551-600)."""
-    distinct_names = names.select(F.col(name_col).alias("query_name")).distinct()
-    call = retrying(transport)
-
-    def lookup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = pdf["query_name"].tolist()
-            for i in range(0, len(keys), batch_size):
-                chunk = keys[i : i + batch_size]
-                results = call(chunk)
-                yield pd.DataFrame(
-                    [
-                        {"query_name": k, "curie": (results.get(k) or {}).get("curie")}
-                        for k in chunk
-                    ]
-                )
-
-    return distinct_names.mapInPandas(lookup, schema="query_name string, curie string")

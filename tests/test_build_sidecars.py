@@ -58,29 +58,38 @@ SOURCES = {
 }
 
 
-@pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    """The build's output dir, its source frames and its per-phase job
-    counts."""
-    root = tmp_path_factory.mktemp("sidecars")
+def _spec():
+    return P.GraphSpec(
+        graph_id="sidecars",
+        sources=[P.GraphSource(source_id=sid, merge_strategy=strategy)
+                 for sid, (strategy, _, _) in SOURCES.items()],
+    )
+
+
+def _write_sources(spark, root):
+    """The source bundles under `root`: their paths and frames."""
     paths, frames = {}, {}
     for sid, (_, node_rows, edge_rows) in SOURCES.items():
         paths[sid] = str(root / sid)
         frames[sid] = (spark.createDataFrame(node_rows, NODE_SCHEMA),
                        spark.createDataFrame(edge_rows, EDGE_SCHEMA))
         write_bundle(*frames[sid], paths[sid])
-    spec = P.GraphSpec(
-        graph_id="sidecars",
-        sources=[P.GraphSource(source_id=sid, merge_strategy=strategy)
-                 for sid, (strategy, _, _) in SOURCES.items()],
-    )
+    return paths, frames
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    """The build's output dir, its source frames and its per-phase job
+    counts."""
+    root = tmp_path_factory.mktemp("sidecars")
+    paths, frames = _write_sources(spark, root)
     sc = spark.sparkContext
     rec = PhaseRecorder(spark, f"sidecar-build-{id(root)}")
     # the recorder puts this group back after each phase, so it collects
     # the jobs the build starts outside its phases
     sc.setJobGroup(rec.tag, "build")
     try:
-        out = P.build_graph(spark, spec, paths, str(root / "storage"),
+        out = P.build_graph(spark, _spec(), paths, str(root / "storage"),
                             recorder=rec)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -161,15 +170,59 @@ def test_qc_results_match_independent_aggregates(spark, built):
 
 
 def test_post_write_metadata_job_budget(built):
-    """The merge report is one job (the merged counts ride the bundle
-    write); the sidecars are the node census, the edge census, the
-    spo-type census and, with an aggregator column, the per-source
-    breakdown; no read of a source or of the bundle runs a schema-inference
-    job (each schema comes from a footer)."""
+    """The merge report runs no job (the source counts come from the
+    parquet footers, the merged counts ride the bundle write); the
+    sidecars are one census aggregate — node, edge and spo-type rows,
+    planned from the vocabulary the write observed — plus, with an
+    aggregator column, the per-source breakdown; no read of a source or
+    of the bundle runs a schema-inference job (each schema comes from a
+    footer)."""
     _, _, jobs = built
-    assert jobs["merge_report"] <= 1, jobs
-    # node and edge census 2 + 2, spo-type census 3, breakdown 5
-    assert jobs["metadata_sidecars"] <= 12, jobs
+    assert jobs["merge_report"] == 0, jobs
+    # census 3 (node-map broadcast, aggregate map stage, result),
+    # breakdown 5
+    assert jobs["metadata_sidecars"] <= 8, jobs
     assert jobs["read_sources"] == jobs["read_bundle"] == 0, jobs
     assert jobs["outside phases"] == 0, jobs
 
+
+def test_validate_graph_is_one_census_action(spark, built, tmp_path):
+    """Validating a parquet bundle without an aggregator column (which
+    adds the per-source breakdown) is the census aggregate alone: its
+    map stage and its result, with no job for schemas or node types."""
+    from orion_spark.sinks.metadata import validate_graph
+
+    out, _, _ = built
+    nodes, edges = read_bundle(spark, out)
+    write_bundle(nodes, edges.drop("aggregator_knowledge_source"),
+                 str(tmp_path / "bundle"))
+    nodes, edges = read_bundle(spark, str(tmp_path / "bundle"))
+    sc = spark.sparkContext
+    sc.setJobGroup("validate-graph", "validate")
+    try:
+        report = validate_graph(nodes, edges, valid_node_types={"biolink:Gene"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("validate-graph")) <= 2
+    assert report["warnings"]["invalid_node_types"] == [
+        "biolink:Disease", "biolink:Drug", "biolink:NamedThing"]
+
+
+@pytest.mark.parametrize("sidecar", ["graph-metadata.json", "qc-results.json"])
+def test_sidecars_do_not_depend_on_partition_count(
+        spark, tmp_path_factory, monkeypatch, sidecar):
+    """The sidecars list their histograms sorted by key, so the same build
+    writes the same bytes under 1 and under 8 shuffle partitions."""
+    root = tmp_path_factory.mktemp("partition-count")
+    paths, _ = _write_sources(spark, root)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    files = []
+    try:
+        for n in ("1", "8"):
+            monkeypatch.setenv("ORION_SPARK_SHUFFLE_PARTITIONS", n)
+            out = P.build_graph(spark, _spec(), paths, str(root / f"storage{n}"))
+            with open(os.path.join(out, sidecar), "rb") as fh:
+                files.append(fh.read())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert files[0] == files[1]

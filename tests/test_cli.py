@@ -38,6 +38,36 @@ def test_cli_qc_and_meta_kg(spark, tmp_path):
     assert mk["edges"][0]["subject_type"] == "biolink:Gene"
 
 
+def test_cli_qc_flags_an_invalid_node_type_in_one_census(spark, tmp_path):
+    """`qc --valid-node-types` reports the out-of-model category from the
+    census aggregate: two jobs, as validation without the type check."""
+    bundle = str(tmp_path / "bundle")
+    nodes = spark.createDataFrame(
+        [Row(id="A:1", name="a", category=["biolink:Gene"]),
+         Row(id="B:2", name="b", category=["biolink:MadeUpThing",
+                                           "biolink:Gene"])]
+    )
+    edges = spark.createDataFrame(
+        [Row(subject="A:1", predicate="biolink:related_to", object="B:2",
+             primary_knowledge_source="infores:x")]
+    )
+    write_bundle(nodes, edges, bundle)
+    types = str(tmp_path / "types.txt")
+    with open(types, "w") as fh:
+        fh.write("biolink:Gene\nbiolink:Disease\n")
+    qc_out = str(tmp_path / "qc.json")
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-qc-types", "qc")
+    try:
+        assert cli.main(["qc", "--bundle", bundle, "--out", qc_out,
+                         "--valid-node-types", types]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    qc = json.load(open(qc_out))
+    assert qc["warnings"] == {"invalid_node_types": ["biolink:MadeUpThing"]}
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-qc-types")) == 2
+
+
 def test_cli_merge_jsonl_inputs(spark, tmp_path):
     nodes_a = spark.createDataFrame(
         [Row(id="A:1", name="a", category=["biolink:Gene"], publications=["PMID:1"])]

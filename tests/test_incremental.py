@@ -611,3 +611,45 @@ def test_read_sharded_bundle_merges_widened_footers_on_the_driver(spark, tmp_pat
     assert got.dtypes == want.dtypes
     assert "extra" in got.columns and "b" in got.schema["attrs"].dataType.names
     assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+
+
+def _tree(path):
+    """Every file under `path` (relative path -> bytes)."""
+    out = {}
+    for dp, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(dp, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def test_touched_shards_is_one_job_and_an_empty_delta_changes_nothing(
+        spark, tmp_path):
+    """The touched shard set is observed on one no-op scan of the delta
+    (one job, where distinct + collect took two); an empty delta touches
+    no shard, and the upsert and the QC refresh leave the shards and
+    their partials as they were."""
+    from orion_spark.sinks import qc_incremental as QCI
+
+    path = str(tmp_path / "bundle")
+    INC.write_sharded_bundle(merge_edges(_edges(spark, _base_rows())), path,
+                             ["subject"], n_shards=16)
+    QCI.write_qc_partials(spark, path, "edges")
+    delta = _edges(spark, _base_rows()[:5]).withColumn(
+        INC.SHARD_COL, INC.shard_of(["subject"], 16))
+    want = sorted({r[INC.SHARD_COL] for r in delta.collect()})
+
+    sc = spark.sparkContext
+    sc.setJobGroup("touched-shards", "touched shards")
+    try:
+        assert INC.touched_shards(delta) == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("touched-shards")) == 1
+
+    before = _tree(path)
+    empty = _edges(spark, [])
+    assert INC.upsert_sharded_edges(spark, empty, path, n_shards=16) == []
+    QCI.refresh_qc_partials(spark, path, [], "edges")
+    assert _tree(path) == before

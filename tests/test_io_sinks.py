@@ -65,14 +65,15 @@ def test_bundle_roundtrip_parquet(spark, tmp_path):
 
 def test_write_bundle_observed_counts(spark, tmp_path):
     """collect_counts rides observe() on the write actions — the sidecar
-    writer's counts without whole-bundle re-scan jobs (both formats)."""
+    writer's counts and first-category vocabulary without whole-bundle
+    re-scan jobs (both formats)."""
     assert K.write_bundle(
         _nodes(spark), _edges(spark), str(tmp_path / "b1"), collect_counts=True
-    ) == (2, 1)
+    ) == (2, 1, ["biolink:Gene"])
     assert K.write_bundle(
         _nodes(spark), _edges(spark), str(tmp_path / "b2"), fmt="jsonl",
         collect_counts=True,
-    ) == (2, 1)
+    ) == (2, 1, ["biolink:Gene"])
     assert K.write_bundle(_nodes(spark), _edges(spark), str(tmp_path / "b3")) is None
 
 
@@ -217,7 +218,8 @@ def test_merge_and_normalization_sidecars(spark, tmp_path):
     merged_e = raw_e.dropDuplicates()
     out = str(tmp_path / "sidecars")
     MD.write_merge_sidecar(
-        MX.merge_report(raw, raw_e, merged.count(), merged_e.count()), out
+        MX.merge_report(raw.count(), raw_e.count(), merged.count(),
+                        merged_e.count()), out
     )
     rep = json.load(open(os.path.join(out, "merge-metadata.json")))
     assert rep["source_nodes"] == 3 and rep["merged_nodes"] == 2

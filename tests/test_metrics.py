@@ -20,7 +20,7 @@ def test_merge_report(spark):
              primary_knowledge_source="i", _source_ordinal=1)]
     )
     rep = MX.merge_report(
-        raw_nodes, raw_edges,
+        raw_nodes.count(), raw_edges.count(),
         merge_nodes(raw_nodes).count(), merge_edges(raw_edges).count(),
     )
     assert rep["source_nodes"] == 3 and rep["merged_nodes"] == 2
@@ -272,3 +272,66 @@ def test_spo_type_counts_broadcast_and_slim_paths_agree(spark):
     # joins must both be BroadcastHashJoin (BroadcastExchange is not a shuffle)
     assert plan.count("BroadcastHashJoin") == 2
     assert plan.count("Exchange hashpartitioning") <= 1  # agg only, no join shuffles
+
+
+def _final_plan(df) -> str:
+    """The executed (adaptive, final) physical plan of `df` after it ran."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_meta_kg_edges_builds_one_category_map(spark, tmp_path):
+    """Both endpoint joins read one (id, first category) frame: the plan
+    builds it once and reuses it (one ReusedExchange), and nothing is
+    checkpointed, so no job runs before the plan does."""
+    from orion_spark.operators.analyze import meta_kg_edges
+    from orion_spark.sources.kgx import read_bundle, write_bundle
+
+    nodes = spark.createDataFrame(
+        [Row(id=f"N:{i}", category=[["biolink:Gene", "biolink:Disease"][i % 2]])
+         for i in range(20)])
+    edges = spark.createDataFrame(
+        [Row(subject=f"N:{i % 20}", predicate="biolink:affects",
+             object=f"N:{(i * 7 + 3) % 20}", primary_knowledge_source="infores:x")
+         for i in range(60)])
+    write_bundle(nodes, edges, str(tmp_path / "b"))
+    nodes, edges = read_bundle(spark, str(tmp_path / "b"))
+    sc = spark.sparkContext
+    sc.setJobGroup("meta-kg-plan", "meta-kg plan")
+    try:
+        out = meta_kg_edges(edges, nodes)
+        built = len(sc.statusTracker().getJobIdsForGroup("meta-kg-plan"))
+        plan = _final_plan(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert built == 0
+    assert plan.count("ReusedExchange") == 1, plan
+    assert "ExistingRDD" not in plan, plan
+    assert sum(r.n_edges for r in out.collect()) == 60
+
+
+def test_sidecar_census_plan_broadcasts_one_node_map(spark):
+    """The census with its spo rows: two broadcast endpoint joins over one
+    (id, code) map, and the single aggregate's exchange the only shuffle."""
+    from orion_spark.operators.analyze import sidecar_census
+
+    nodes = spark.createDataFrame(
+        [Row(id=f"N:{i}", category=[["biolink:Gene", "biolink:Disease", None][i % 3]])
+         for i in range(9)])
+    edges = spark.createDataFrame(
+        [Row(subject=f"N:{i % 9}", predicate="biolink:affects",
+             object=f"N:{(i * 3 + 1) % 9}", primary_knowledge_source=None)
+         for i in range(40)],
+        "subject string, predicate string, object string, "
+        "primary_knowledge_source string")
+    df = sidecar_census(nodes, edges, ["biolink:Disease", "biolink:Gene"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    final = _final_plan(df)
+    assert final.count("ReusedExchange") == 1, final
+    rows = df.collect()
+    assert sum(r.n for r in rows if r.side == "spo") == 40
+    assert sum(r.n for r in rows if r.side == "node") == 9

@@ -852,6 +852,9 @@ def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
         }
         for name in ("read_sources", "read_bundle"):
             assert phases[name]["jobs"] == 0, phases[name]
+        # the census broadcasts its (id, category code) node map once
+        assert phases["metadata_sidecars"]["broadcast_rows"] > 0, phases
+        assert phases["merge_report"]["jobs"] == 0, phases["merge_report"]
         # the node/edge writes execute the merge lineage: real exchanges
         for name in ("write_nodes", "write_edges"):
             assert phases[name]["jobs"] > 0, phases[name]

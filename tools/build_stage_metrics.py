@@ -17,7 +17,8 @@ Runs in its own session with the Spark event log on. Each phase is a
 job group (plans/stage_metrics.PhaseRecorder); after the session stops,
 the benchmark's event-log parser (perfbench/eventlog.py) totals each
 group's jobs, tasks, task CPU, shuffle read/write, spill and fetch wait,
-and the tool joins them with the phase's wall time. Keep other Spark JVMs
+`stage_metrics.broadcast_totals` adds what its queries broadcast, and
+the tool joins them with the phase's wall time. Keep other Spark JVMs
 idle — wall times here carry the same noise caveat as bench.py.
 
 Cold/warm discipline (round-9 verdict ask #3): the whole composition runs
@@ -73,15 +74,16 @@ def _markdown(phases: list[dict]) -> str:
     """The SCALE.md measured-bytes table for one pass."""
     lines = [
         "| phase | wall s | jobs | tasks | task CPU s | shuffle read MB "
-        "| shuffle write MB | spill MB |",
-        "|---|---|---|---|---|---|---|---|",
+        "| shuffle write MB | spill MB | broadcast rows | broadcast MB |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for p in phases:
         lines.append(
             f"| {p['phase']} | {p['wall_s']:.1f} | {p['jobs']:.0f} "
             f"| {p['tasks']:.0f} | {p['task_cpu_s']:.1f} "
             f"| {p['shuffle_read_mb']:,.1f} | {p['shuffle_write_mb']:,.1f} "
-            f"| {p['spill_mb']:,.1f} |"
+            f"| {p['spill_mb']:,.1f} | {p['broadcast_rows']:,.0f} "
+            f"| {p['broadcast_mb']:,.2f} |"
         )
     return "\n".join(lines)
 
@@ -93,7 +95,7 @@ def main() -> int:
     from orion_spark.plans import tpch_graph as G
     from orion_spark.plans.pipeline import build_graph, parse_graph_spec
     from orion_spark.plans.stage_metrics import (
-        PhaseRecorder, event_log_conf, read_event_log,
+        BROADCAST_METRICS, PhaseRecorder, event_log_conf, read_event_log,
     )
     from orion_spark.session import get_spark
     from orion_spark.sources.kgx import write_bundle
@@ -156,7 +158,8 @@ def main() -> int:
         if nbytes(c, k) != nbytes(w, k)
     ]
     totals = {
-        label: {f: sum(p[f] for p in phases) for f in eventlog.FIELDS}
+        label: {f: sum(p[f] for p in phases)
+                for f in eventlog.FIELDS + tuple(BROADCAST_METRICS.values())}
         for label, phases in runs.items()
     }
     print(
