@@ -23,12 +23,11 @@ Spark. Both are kept: this module is drop-in parity, the range join is the
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orion_spark.sinks.external import run_tool
+from orion_spark.sinks.external import concat_parts, run_tool
 
 # orion/supplementation.py:25-52 (SO effect term -> biolink/SO predicate)
 SNPEFF_SO_PREDICATES = {
@@ -111,20 +110,14 @@ def run_annotator(
     stderr on a nonzero exit. The real deployment passes ['java',
     '-Xmx12g', '-jar', 'snpEff.jar', '-noStats', '-ud', '100000',
     'GRCh38.99']; tests pass a fake binary."""
-    # the sink writes a directory (header + part files); the annotator
-    # wants one file — concatenate driver-side, header first
+    from orion_spark.sources.readers import VCF_HEADER
+
+    # the sink writes a directory (header file + part files); the
+    # annotator wants one file — concatenate driver-side, header first
+    with open(os.path.join(vcf_dir, VCF_HEADER)) as fh:
+        header = fh.read().rstrip("\n")
     single = annotated_vcf_path + ".input.vcf"
-    parts = sorted(
-        os.path.join(vcf_dir, f)
-        for f in os.listdir(vcf_dir)
-        if f.endswith(".vcf") or f.startswith("part-")
-    )
-    with open(single, "wb") as out:
-        for p in parts:
-            with open(p, "rb") as fh:
-                # stream, don't slurp: a multi-GB VCF part read whole
-                # would sit in driver memory
-                shutil.copyfileobj(fh, out)
+    concat_parts(vcf_dir, header, single)
     with open(annotated_vcf_path, "w") as out:
         run_tool(
             command + [single], SupplementationFailedError, cwd=workdir, stdout=out

@@ -18,6 +18,10 @@ Determinism rules used throughout (so hashes match bit-for-bit):
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -88,33 +92,73 @@ def _fixture_dir() -> str:
     directory rather than the shared system tempdir. On a multi-user host
     a predictable /tmp path could be pre-created by another user and
     silently trusted as fixture input; a path under the repo is owned by
-    whoever checked it out. Cache-invalidation discipline (round-3
-    advice): any edit to a fixture generator MUST bump its `_vN` name
-    suffix — the existence check below is the only staleness guard."""
-    import os
-
+    whoever checked it out. Cache-invalidation discipline: any edit to a
+    fixture's `render` MUST bump its `_vN` name suffix — `_fixture`
+    restages a file only when it is missing or the nation table changed,
+    so that suffix is the only guard against stale content."""
     root = os.path.join(os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))), ".fixtures")
     os.makedirs(root, exist_ok=True)
     return root
 
 
-def _promote_fixture(tmp: str, dest: str) -> None:
-    """Atomically promote a fully-written fixture staging path to its
-    final location. A failed rename is only benign when a concurrent
-    generator won the race and the complete destination already exists;
-    any other failure (cross-device link, permissions) must surface
-    instead of letting the caller return paths to files that don't exist
-    (round-3 advice)."""
-    import os
-    import shutil
+def _nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:
+    """The sorted nation keys: the one driver-side collect that fixture
+    renders and in-memory sources are built from."""
+    return sorted(
+        r.n_nationkey
+        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
+    )
 
-    try:
-        os.rename(tmp, dest)
-    except OSError:
-        if not os.path.exists(dest):
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
+
+def _fixture(spark: SparkSession, sf_dir: str, name: str, render,
+             members: list[str] | None = None) -> str | list[str]:
+    """Stage the deterministic parser fixture `name` (`<stem><ext>`) for
+    `sf_dir` and return its path: `<stem><slug><ext>` under
+    `_fixture_dir()`, the slug being `sf_dir` made path-safe, so each
+    dataset has its own copy and parsers still see the extension. With
+    `members` the fixture is the directory `<stem><slug>` and the paths of
+    its members are returned in order.
+
+    `render(ks)` gets the sorted nation keys and returns the file's `str`
+    or `bytes`, or one such value per member. Each file goes through
+    `fetch.stage_file` with the nation table as its source: a temp file
+    per writer, an atomic `os.replace`, and a restage when the nation
+    table is re-landed. The key collect and `render` run only when a file
+    has to be staged, so a cached fixture starts no Spark job."""
+    from orion_spark.sources.fetch import stage_file
+
+    stem, dot, ext = name.partition(".")
+    slug = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
+    path = os.path.join(_fixture_dir(), f"{stem}{slug}{dot}{ext}")
+    rendered = []
+
+    def writer(i):
+        def write(fh):
+            if not rendered:
+                rendered.append(render(_nation_keys(spark, sf_dir)))
+            out = rendered[0] if members is None else rendered[0][i]
+            fh.write(out.encode() if isinstance(out, str) else out)
+        return write
+
+    source = os.path.join(sf_dir, "nation.parquet")
+    if members is None:
+        return stage_file(source, path, writer(None))
+    return [stage_file(source, os.path.join(path, m), writer(i))
+            for i, m in enumerate(members)]
+
+
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """A per-process directory `<name><slug>_<pid>` under `_fixture_dir()`
+    for a query that mutates what it writes (a model, an index, an
+    upserted bundle), so concurrent runs never share one. The call that
+    creates it registers its removal at interpreter exit."""
+    slug = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
+    path = os.path.join(_fixture_dir(), f"{name}{slug}_{os.getpid()}")
+    if not os.path.isdir(path):
+        os.makedirs(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _dec(col, p=12, s=2):
@@ -1939,47 +1983,42 @@ def _uniref_fixture(spark: SparkSession, sf_dir: str) -> str:
     member taxon id is a closed-form function of (regionkey, nationkey), so
     a SQL oracle can recompute the parse exactly. Nations in the same
     region share member taxa (key % 3), exercising the node-merge
-    aggregate on real id collisions."""
-    import os
-    import re as _re
-    import tempfile
+    aggregate on real id collisions. Its entries need each nation's name
+    and region, so its render collects those rather than using `ks`."""
 
-    rows = sorted(
-        _t(spark, sf_dir, "nation")
-        .select("n_nationkey", "n_name", "n_regionkey")
-        .collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
+    def render(ks):
+        rows = sorted(
+            _t(spark, sf_dir, "nation")
+            .select("n_nationkey", "n_name", "n_regionkey")
+            .collect()
+        )
+        ents = []
+        for k, name, r in rows:
+            taxon = r * 100 + k % 3
+            taxon2 = taxon + 7
+            ents.append(
+                f'  <entry id="UniRef50_N{k}">\n'
+                f"    <name>Cluster: {name}</name>\n"
+                f'    <property type="common taxon ID" value="{r}"/>\n'
+                f"    <representativeMember>\n"
+                f'      <dbReference type="UniProtKB ID" id="MEM_{taxon}">\n'
+                f'        <property type="NCBI taxonomy" value="{taxon}"/>\n'
+                f"      </dbReference>\n"
+                f"    </representativeMember>\n"
+                f"    <member>\n"
+                f'      <dbReference type="UniProtKB ID" id="MEM_{taxon2}">\n'
+                f'        <property type="NCBI taxonomy" value="{taxon2}"/>\n'
+                f"      </dbReference>\n"
+                f"    </member>\n"
+                f"  </entry>\n"
+            )
+        return "<UniRef>\n" + "".join(ents) + "</UniRef>\n"
+
     # v2: entries carry a plain <member> besides the representative (the
     # reference iterates both, loadUniRef.py:332-340) with a disjoint
     # closed-form taxon (+7 clears the k%3 range) so the oracle separates
     # the two member families exactly
-    path = os.path.join(_fixture_dir(), f"uniref_fixture_v2{slug}.xml")
-    ents = []
-    for k, name, r in rows:
-        taxon = r * 100 + k % 3
-        taxon2 = taxon + 7
-        ents.append(
-            f'  <entry id="UniRef50_N{k}">\n'
-            f"    <name>Cluster: {name}</name>\n"
-            f'    <property type="common taxon ID" value="{r}"/>\n'
-            f"    <representativeMember>\n"
-            f'      <dbReference type="UniProtKB ID" id="MEM_{taxon}">\n'
-            f'        <property type="NCBI taxonomy" value="{taxon}"/>\n'
-            f"      </dbReference>\n"
-            f"    </representativeMember>\n"
-            f"    <member>\n"
-            f'      <dbReference type="UniProtKB ID" id="MEM_{taxon2}">\n'
-            f'        <property type="NCBI taxonomy" value="{taxon2}"/>\n'
-            f"      </dbReference>\n"
-            f"    </member>\n"
-            f"  </entry>\n"
-        )
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("<UniRef>\n" + "".join(ents) + "</UniRef>\n")
-    os.replace(tmp, path)  # atomic — concurrent query runs never see a torn file
-    return path
+    return _fixture(spark, sf_dir, "uniref_fixture_v2.xml", render)
 
 
 @query(
@@ -3180,16 +3219,10 @@ def _register_ngram_lm() -> None:
         text_ngram_lm_perplexity (assigned below) — the driver's hash
         check is the persisted==in-memory proof, the same pattern as
         incremental_upsert_merged_edges."""
-        import os
-        import re as _re
-
         from orion_spark.llm.textstats import save_lm_model, score_with_lm_model
 
         docs = _t(spark, sf_dir, "documents")
-        slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-        path = os.path.join(
-            _fixture_dir(), f"lm_model_v1{slug}_{os.getpid()}"
-        )
+        path = _scratch_dir("lm_model_v1", sf_dir)
         save_lm_model(docs.where(F.col("lang") == "en"), path)
         scored = score_with_lm_model(spark, docs, path, k=0.5)
         return scored.select(
@@ -3280,16 +3313,10 @@ def _register_ann_ivf_index() -> None:
         The assignments are partitioned by list id: probing 4 of 64
         lists reads only the probed partitions' FILES (file-level
         pruning), the at-rest payoff a 100 TB vector corpus needs."""
-        import os
-        import re as _re
-
         from orion_spark.llm import similarity as S
 
         emb = _t(spark, sf_dir, "embeddings")
-        slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-        path = os.path.join(
-            _fixture_dir(), f"ivf_index_v1{slug}_{os.getpid()}"
-        )
+        path = _scratch_dir("ivf_index_v1", sf_dir)
         S.build_ivf_index(
             spark, emb.where(F.col("vec_id") < 250), path, n_clusters=64
         )
@@ -5969,22 +5996,9 @@ def _gtex_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     covers SNP / insert / delete / unsupported-structural; slope
     (k%3-1)*0.5 covers both predicate signs AND the slope==0 edge
     (reference: only strictly-positive slopes are 'increases',
-    loadGTEx.py:240-245)."""
+    loadGTEx.py:240-245). Returns the (eqtl, sqtl) directories."""
     import gzip
-    import os
-    import re as _re
-    import shutil as _shutil
-    import tempfile
-
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"gtex_fixture_v1{slug}")
-    marker = os.path.join(root, "_DONE")
-    if os.path.exists(marker):
-        return os.path.join(root, "eqtl"), os.path.join(root, "sqtl")
+    import io
 
     tissues = [
         ("Brain_Cortex", 0),
@@ -5992,6 +6006,10 @@ def _gtex_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ("Artery_Aorta", 2),
         ("Mystery_Tissue", 99),  # not in the anatomy lookup -> file skipped
     ]
+    members = [
+        f"eqtl/{tissue}.v8.signif_variant_gene_pairs.txt.gz"
+        for tissue, _ in tissues
+    ] + ["sqtl/Whole_Blood.v8.sqtl_signifpairs.txt.gz"]
     hdr = (
         "variant_id\tgene_id\ttss_distance\tma_samples\tma_count\tmaf\t"
         "pval_nominal\tslope\tslope_se\tpval_nominal_threshold\t"
@@ -6011,33 +6029,28 @@ def _gtex_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             f"\t0.01\t0.05\t0.001\t0.002\n"
         )
 
-    tmp = f"{root}.{os.getpid()}.tmp"
-    if os.path.exists(tmp):
-        _shutil.rmtree(tmp)
-    for sub in ("eqtl", "sqtl"):
-        os.makedirs(os.path.join(tmp, sub))
-    for tissue, t in tissues:
-        path = os.path.join(
-            tmp, "eqtl", f"{tissue}.v8.signif_variant_gene_pairs.txt.gz"
+    def sqtl_row(k: int) -> str:
+        variant = f"chr{k % 22 + 1}_{5000 + k}_TA_T_b38"
+        pheno = f"chr1:1:2:clu_{k}:ENSG9{k}.3"
+        return (
+            f"{variant}\t{pheno}\t0\t1\t1\t0.1\t{(k + 1) / 1000.0}\t-0.25"
+            f"\t0.01\t0.05\t0.001\t0.002\n"
         )
-        with gzip.open(path, "wt") as fh:
-            fh.write(hdr)
-            for k in ks:
-                fh.write(eqtl_row(k, t))
-    sq = os.path.join(tmp, "sqtl", "Whole_Blood.v8.sqtl_signifpairs.txt.gz")
-    with gzip.open(sq, "wt") as fh:
-        fh.write(hdr)
-        for k in ks:
-            variant = f"chr{k % 22 + 1}_{5000 + k}_TA_T_b38"
-            pheno = f"chr1:1:2:clu_{k}:ENSG9{k}.3"
-            fh.write(
-                f"{variant}\t{pheno}\t0\t1\t1\t0.1\t{(k + 1) / 1000.0}\t-0.25"
-                f"\t0.01\t0.05\t0.001\t0.002\n"
-            )
-    with open(os.path.join(tmp, "_DONE"), "w") as fh:
-        fh.write("v1")
-    _promote_fixture(tmp, root)
-    return os.path.join(root, "eqtl"), os.path.join(root, "sqtl")
+
+    def gz(member: str, text: str) -> bytes:
+        buf = io.BytesIO()
+        with gzip.GzipFile(os.path.basename(member), "wb", fileobj=buf) as fh:
+            fh.write(text.encode())
+            fh.flush()  # the sync block gzip.open(..., "wt") writes on close
+        return buf.getvalue()
+
+    def render(ks):
+        texts = [hdr + "".join(eqtl_row(k, t) for k in ks) for _, t in tissues]
+        texts.append(hdr + "".join(sqtl_row(k) for k in ks))
+        return [gz(m, text) for m, text in zip(members, texts)]
+
+    paths = _fixture(spark, sf_dir, "gtex_fixture_v1", render, members)
+    return os.path.dirname(paths[0]), os.path.dirname(paths[-1])
 
 
 from orion_spark.plans.parsers import HGVS_B38_ACCESSIONS as _GTEX_ACCESSIONS
@@ -6112,19 +6125,8 @@ def _intact_fixture(spark: SparkSession, sf_dir: str) -> str:
     raw uniprot ids (hyphen trim), publication id rotating through the
     pubmed/imex/doi priority chain, and a non-uniprot line every 5th
     nation that the row gate must drop."""
-    import os
-    import re as _re
-    import tempfile
+    import io
     import zipfile
-
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"intact_fixture_v1{slug}.zip")
-    if os.path.exists(path):
-        return path
 
     def row(id_a, id_b, alias_a, alias_b, detect, pub, tax_a, tax_b):
         cells = [""] * 42
@@ -6135,27 +6137,29 @@ def _intact_fixture(spark: SparkSession, sf_dir: str) -> str:
         cells[9], cells[10] = tax_a, tax_b
         return "\t".join(cells)
 
-    lines = ["#ID(s) interactor A\tID(s) interactor B" + "\t" * 40]
-    for k in ks:
-        pub = [f"pubmed:{100 + k}", f"imex:IM-{k}", f"doi:10.1000/j.x{k}"][k % 3]
-        common = (
-            f"uniprotkb:A{k}-1", f"uniprotkb:B{k}",
-            f"uniprotkb:alpha{k}(display)", f"uniprotkb:beta{k}",
-        )
-        for mi in ('psi-mi:"MI:0018"(two hybrid)', 'psi-mi:"MI:0006"(coip)'):
-            lines.append(
-                row(*common, mi, pub, f"taxid:{9000 + k}(org)", f"taxid:{8000 + k}")
+    def intact_zip(ks):
+        lines = ["#ID(s) interactor A\tID(s) interactor B" + "\t" * 40]
+        for k in ks:
+            pub = [f"pubmed:{100 + k}", f"imex:IM-{k}", f"doi:10.1000/j.x{k}"][k % 3]
+            common = (
+                f"uniprotkb:A{k}-1", f"uniprotkb:B{k}",
+                f"uniprotkb:alpha{k}(display)", f"uniprotkb:beta{k}",
             )
-        if k % 5 == 0:
-            lines.append(
-                row(f"chebi:{k}", f"uniprotkb:B{k}", "-", "-",
-                    'psi-mi:"MI:0018"(two hybrid)', pub, "taxid:1", "taxid:1")
-            )
-    tmp = path + f".{os.getpid()}.tmp"
-    with zipfile.ZipFile(tmp, "w") as zf:
-        zf.writestr("intact.txt", "\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+            for mi in ('psi-mi:"MI:0018"(two hybrid)', 'psi-mi:"MI:0006"(coip)'):
+                lines.append(
+                    row(*common, mi, pub, f"taxid:{9000 + k}(org)", f"taxid:{8000 + k}")
+                )
+            if k % 5 == 0:
+                lines.append(
+                    row(f"chebi:{k}", f"uniprotkb:B{k}", "-", "-",
+                        'psi-mi:"MI:0018"(two hybrid)', pub, "taxid:1", "taxid:1")
+                )
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            zf.writestr("intact.txt", "\n".join(lines) + "\n")
+        return buf.getvalue()
+
+    return _fixture(spark, sf_dir, "intact_fixture_v1.zip", intact_zip)
 
 
 @query(
@@ -6289,10 +6293,7 @@ def reactome_like_edges_q(spark, sf_dir):
 
     from orion_spark.plans.parsers import reactome_like
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
+    ks = _nation_keys(spark, sf_dir)
     node_rows, edge_rows = [], []
     for k in ks:
         node_rows += [
@@ -6356,76 +6357,65 @@ def _drugmechdb_fixture(spark: SparkSession, sf_dir: str):
     target_for), drug->Drug->Protein path (the idx+1 lookahead), and a
     drug->BiologicalProcess stub (no target_for). Every doc also carries
     one shared mechanism link so the path-id set aggregation spans docs.
-    Returns (json_path, node_mapping)."""
+    Returns (json_path, node_mapping); the mapping is staged as its own
+    file so a cached call needs no nation keys."""
     import json as _json
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    node_mapping = {f"MESH:DIS{k}": f"MONDO:{k}" for k in ks if k % 5 == 0}
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(
-        _fixture_dir(), f"drugmechdb_fixture_v1{slug}.json"
-    )
-    if os.path.exists(path):
-        return path, node_mapping
+    def render(ks):
+        docs = []
+        for k in ks:
+            drug_mesh = f"MESH:DRUG{k}"
+            common = {"source": "UniProt:PCOM", "target": "CHEBI:424242", "key": "binds"}
+            graph = {
+                "_id": f"DB{k}", "drug": f"drug{k}", "drug_mesh": drug_mesh,
+                "drugbank": f"DB:{k}", "disease": f"dis{k}",
+                "disease_mesh": f"MESH:DIS{k}",
+            }
+            if k % 3 == 0:
+                links = [
+                    common,
+                    {"source": drug_mesh, "key": "positively regulates",
+                     "target": f"UniProt:P{k}"},
+                    {"source": f"UniProt:P{k}", "key": "treats",
+                     "target": f"MESH:DIS{k}"},
+                ]
+                nodes = [
+                    {"id": f"UniProt:P{k}", "label": "Protein", "name": f"prot{k}"},
+                    {"id": drug_mesh, "label": "Drug", "name": f"drug{k}"},
+                ]
+            elif k % 3 == 1:
+                links = [
+                    common,
+                    {"source": drug_mesh, "key": "negatively regulates",
+                     "target": f"DB:C{k}"},
+                    {"source": f"DB:C{k}", "key": "decreases activity of",
+                     "target": f"UniProt:P{k}"},
+                    {"source": f"UniProt:P{k}", "key": "treats",
+                     "target": f"MESH:DIS{k}"},
+                ]
+                nodes = [
+                    {"id": f"DB:C{k}", "label": "Drug", "name": f"chem{k}"},
+                    {"id": f"UniProt:P{k}", "label": "Protein", "name": f"prot{k}"},
+                ]
+            else:
+                links = [
+                    common,
+                    {"source": drug_mesh, "key": "positively regulates",
+                     "target": f"taxonomy:T{k}"},
+                ]
+                nodes = [
+                    {"id": f"taxonomy:T{k}", "label": "BiologicalProcess",
+                     "name": f"proc{k}"},
+                ]
+            docs.append({"graph": graph, "nodes": nodes, "links": links})
+        return _json.dumps(docs)
 
-    docs = []
-    for k in ks:
-        drug_mesh = f"MESH:DRUG{k}"
-        common = {"source": "UniProt:PCOM", "target": "CHEBI:424242", "key": "binds"}
-        graph = {
-            "_id": f"DB{k}", "drug": f"drug{k}", "drug_mesh": drug_mesh,
-            "drugbank": f"DB:{k}", "disease": f"dis{k}",
-            "disease_mesh": f"MESH:DIS{k}",
-        }
-        if k % 3 == 0:
-            links = [
-                common,
-                {"source": drug_mesh, "key": "positively regulates",
-                 "target": f"UniProt:P{k}"},
-                {"source": f"UniProt:P{k}", "key": "treats",
-                 "target": f"MESH:DIS{k}"},
-            ]
-            nodes = [
-                {"id": f"UniProt:P{k}", "label": "Protein", "name": f"prot{k}"},
-                {"id": drug_mesh, "label": "Drug", "name": f"drug{k}"},
-            ]
-        elif k % 3 == 1:
-            links = [
-                common,
-                {"source": drug_mesh, "key": "negatively regulates",
-                 "target": f"DB:C{k}"},
-                {"source": f"DB:C{k}", "key": "decreases activity of",
-                 "target": f"UniProt:P{k}"},
-                {"source": f"UniProt:P{k}", "key": "treats",
-                 "target": f"MESH:DIS{k}"},
-            ]
-            nodes = [
-                {"id": f"DB:C{k}", "label": "Drug", "name": f"chem{k}"},
-                {"id": f"UniProt:P{k}", "label": "Protein", "name": f"prot{k}"},
-            ]
-        else:
-            links = [
-                common,
-                {"source": drug_mesh, "key": "positively regulates",
-                 "target": f"taxonomy:T{k}"},
-            ]
-            nodes = [
-                {"id": f"taxonomy:T{k}", "label": "BiologicalProcess",
-                 "name": f"proc{k}"},
-            ]
-        docs.append({"graph": graph, "nodes": nodes, "links": links})
+    def node_map(ks):
+        return _json.dumps({f"MESH:DIS{k}": f"MONDO:{k}" for k in ks if k % 5 == 0})
 
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(docs, fh)
-    os.replace(tmp, path)
-    return path, node_mapping
+    path = _fixture(spark, sf_dir, "drugmechdb_fixture_v1.json", render)
+    with open(_fixture(spark, sf_dir, "drugmechdb_node_map_v1.json", node_map)) as fh:
+        return path, _json.load(fh)
 
 
 @query(
@@ -6500,18 +6490,6 @@ def _tmkp_fixture(spark: SparkSession, sf_dir: str) -> str:
     without -> 'NA' — plus a decoy attribute the filter must drop), and
     every 7th nation an extra subject-less row the skip gate must drop."""
     import json as _json
-    import os
-    import re as _re
-    import tempfile
-
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"tmkp_fixture_v1{slug}.tsv")
-    if os.path.exists(path):
-        return path
 
     def attrs(k: int) -> str:
         return _json.dumps([
@@ -6536,37 +6514,36 @@ def _tmkp_fixture(spark: SparkSession, sf_dir: str) -> str:
              ]},
         ], separators=(",", ":"))
 
-    lines = []
-    for k in ks:
-        cells = [""] * 19
-        cells[0] = f"CHEBI:{k}"
-        cells[1] = (
-            "biolink:affects" if k % 2 == 0 else "biolink:interacts_with"
-        )
-        cells[2] = f"UniProtKB:Q{k}"
-        if k % 2 == 0:
-            cells[8] = "activity"
-        if k % 3 == 0:
-            cells[12] = f"UBERON:{k}"
-        cells[15] = str(0.5 + k / 100.0)
-        cells[16] = f"tmkp:a{k}|tmkp:b{k}"
-        cells[17] = f"PMID:{k}|PMC:{k}"
-        cells[18] = attrs(k)
-        lines.append("\t".join(cells))
-        if k % 7 == 0:
-            bad = [""] * 19
-            bad[1] = "biolink:affects"
-            bad[2] = f"MESH:BAD{k}"
-            bad[15] = "0.1"
-            bad[16] = "tmkp:x"
-            bad[17] = "PMID:1"
-            bad[18] = "[]"
-            lines.append("\t".join(bad))
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        lines = []
+        for k in ks:
+            cells = [""] * 19
+            cells[0] = f"CHEBI:{k}"
+            cells[1] = (
+                "biolink:affects" if k % 2 == 0 else "biolink:interacts_with"
+            )
+            cells[2] = f"UniProtKB:Q{k}"
+            if k % 2 == 0:
+                cells[8] = "activity"
+            if k % 3 == 0:
+                cells[12] = f"UBERON:{k}"
+            cells[15] = str(0.5 + k / 100.0)
+            cells[16] = f"tmkp:a{k}|tmkp:b{k}"
+            cells[17] = f"PMID:{k}|PMC:{k}"
+            cells[18] = attrs(k)
+            lines.append("\t".join(cells))
+            if k % 7 == 0:
+                bad = [""] * 19
+                bad[1] = "biolink:affects"
+                bad[2] = f"MESH:BAD{k}"
+                bad[15] = "0.1"
+                bad[16] = "tmkp:x"
+                bad[17] = "PMID:1"
+                bad[18] = "[]"
+                lines.append("\t".join(bad))
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "tmkp_fixture_v1.tsv", render)
 
 
 @query(
@@ -6608,7 +6585,7 @@ def tmkp_like_edges_q(spark, sf_dir):
     )
 
 
-def _chebi_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _chebi_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic ChEBI compounds/relation pair synthesized from the
     nation dim. Role hierarchy (is_a, type 5):
     root 50906 -> 24432 (ignored) -> 900001 -> 900002; root -> 900003;
@@ -6617,55 +6594,37 @@ def _chebi_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     0 -> 900002 (inherits 900001+900003 after ignore filtering),
     1 -> 900003, 2 -> 900009 (orphan: direct flag only), 3 -> none
     (node skipped)."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"chebi_fixture_v1{slug}")
-    compounds = os.path.join(root, "compounds.tsv")
-    relation = os.path.join(root, "relation.tsv")
-    if os.path.exists(compounds) and os.path.exists(relation):
-        return compounds, relation
+    def render(ks):
+        roles = [
+            (24432, "biological role"),
+            (900001, "anti-infective agent (drug)"),
+            (900002, "antibacterial agent"),
+            (900003, "pro-drug"),
+            (900009, "orphan role"),
+            (50906, "role"),
+        ]
+        comp_lines = ["chebi_accession\tascii_name"]
+        for rid, rname in roles:
+            comp_lines.append(f"CHEBI:{rid}\t{rname}")
+        for k in ks:
+            comp_lines.append(f"CHEBI:{100 + k}\tcompound {k}")
 
-    roles = [
-        (24432, "biological role"),
-        (900001, "anti-infective agent (drug)"),
-        (900002, "antibacterial agent"),
-        (900003, "pro-drug"),
-        (900009, "orphan role"),
-        (50906, "role"),
-    ]
-    comp_lines = ["chebi_accession\tascii_name"]
-    for rid, rname in roles:
-        comp_lines.append(f"CHEBI:{rid}\t{rname}")
-    for k in ks:
-        comp_lines.append(f"CHEBI:{100 + k}\tcompound {k}")
+        rel_lines = ["rel_id\ttype_id\tfinal_id\tinit_id"]
+        is_a = [
+            (24432, 50906), (900001, 24432), (900002, 900001),
+            (900003, 50906), (900002, 900003),
+        ]
+        for i, (child, parent) in enumerate(is_a):
+            rel_lines.append(f"{i}\t5\t{child}\t{parent}")
+        for k in ks:
+            role = {0: 900002, 1: 900003, 2: 900009}.get(k % 4)
+            if role is not None:
+                rel_lines.append(f"{1000 + k}\t4\t{100 + k}\t{role}")
+        return ["\n".join(x) + "\n" for x in (comp_lines, rel_lines)]
 
-    rel_lines = ["rel_id\ttype_id\tfinal_id\tinit_id"]
-    is_a = [
-        (24432, 50906), (900001, 24432), (900002, 900001),
-        (900003, 50906), (900002, 900003),
-    ]
-    for i, (child, parent) in enumerate(is_a):
-        rel_lines.append(f"{i}\t5\t{child}\t{parent}")
-    for k in ks:
-        role = {0: 900002, 1: 900003, 2: 900009}.get(k % 4)
-        if role is not None:
-            rel_lines.append(f"{1000 + k}\t4\t{100 + k}\t{role}")
-
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, "compounds.tsv"), "w") as fh:
-        fh.write("\n".join(comp_lines) + "\n")
-    with open(os.path.join(tmp, "relation.tsv"), "w") as fh:
-        fh.write("\n".join(rel_lines) + "\n")
-    _promote_fixture(tmp, root)
-    return compounds, relation
+    return _fixture(spark, sf_dir, "chebi_fixture_v1", render,
+                    ["compounds.tsv", "relation.tsv"])
 
 
 @query(
@@ -6700,27 +6659,12 @@ def chebi_like_role_flags_q(spark, sf_dir):
     return flags.select("id", "name", "role_property")
 
 
-def _signor_fixture(spark: SparkSession, sf_dir: str):
+def _signor_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic SIGNOR main TSV + CV side files from the nation dim.
     Shapes by k%4: PTM mechanism row (forced AA part override), CV-resolved
     phenotype subject with an anatomical context and a single-variant
     effect, two-variant 'form complex' effect, and the related_to
     fallback. Returns (main, phenotypes, stimuli) paths."""
-    import os
-    import re as _re
-    import tempfile
-
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"signor_fixture_v1{slug}")
-    main = os.path.join(root, "signor.tsv")
-    phen = os.path.join(root, "phen.csv")
-    stim = os.path.join(root, "stim.csv")
-    if os.path.exists(main):
-        return main, phen, stim
 
     def row(**kw):
         cells = [""] * 26
@@ -6732,45 +6676,40 @@ def _signor_fixture(spark: SparkSession, sf_dir: str):
             cells[idx[k]] = v
         return "\t".join(cells)
 
-    lines = ["\t".join(f"c{i}" for i in range(26))]
-    phen_lines = ["SIGNOR ID;NAME;DESCRIPTION"]
-    for k in ks:
-        v = k % 4
-        if v == 0:
-            lines.append(row(
-                stype="protein", sid=f"P{k}-PRO_0001", sdb="UNIPROT",
-                otype="protein", oid=f"Q{k}", odb="UNIPROT",
-                effect="phosphorylation", mechanism="m", aa=f"Ser{k}",
-                taxon="9606", pub=str(100 + k), desc=f"d{k}"))
-        elif v == 1:
-            phen_lines.append(
-                f'SIGNOR-PH{k};p{k};"proc GO:{1000 + k:07d} term"')
-            lines.append(row(
-                stype="phenotype", sid=f"SIGNOR-PH{k}", sdb="SIGNOR",
-                otype="smallmolecule", oid=f"CID:{k}", odb="PUBCHEM",
-                effect="up-regulates activity", taxon="-1",
-                cell=f"cell{k}", pub=str(100 + k), desc=f"d{k}"))
-        elif v == 2:
-            lines.append(row(
-                stype="protein", sid=f"A{k}", sdb="UNIPROT",
-                otype="protein", oid=f"B{k}", odb="UNIPROT",
-                effect="form complex", pub=str(100 + k), desc=f"d{k}"))
-        else:
-            lines.append(row(
-                stype="chemical", sid=f"D{k}", sdb="DRUGBANK",
-                otype="rna", oid=f"R{k}", odb="RNAcentral",
-                effect="unknown", pub=str(100 + k), desc=f"d{k}"))
+    def render(ks):
+        lines = ["\t".join(f"c{i}" for i in range(26))]
+        phen_lines = ["SIGNOR ID;NAME;DESCRIPTION"]
+        for k in ks:
+            v = k % 4
+            if v == 0:
+                lines.append(row(
+                    stype="protein", sid=f"P{k}-PRO_0001", sdb="UNIPROT",
+                    otype="protein", oid=f"Q{k}", odb="UNIPROT",
+                    effect="phosphorylation", mechanism="m", aa=f"Ser{k}",
+                    taxon="9606", pub=str(100 + k), desc=f"d{k}"))
+            elif v == 1:
+                phen_lines.append(
+                    f'SIGNOR-PH{k};p{k};"proc GO:{1000 + k:07d} term"')
+                lines.append(row(
+                    stype="phenotype", sid=f"SIGNOR-PH{k}", sdb="SIGNOR",
+                    otype="smallmolecule", oid=f"CID:{k}", odb="PUBCHEM",
+                    effect="up-regulates activity", taxon="-1",
+                    cell=f"cell{k}", pub=str(100 + k), desc=f"d{k}"))
+            elif v == 2:
+                lines.append(row(
+                    stype="protein", sid=f"A{k}", sdb="UNIPROT",
+                    otype="protein", oid=f"B{k}", odb="UNIPROT",
+                    effect="form complex", pub=str(100 + k), desc=f"d{k}"))
+            else:
+                lines.append(row(
+                    stype="chemical", sid=f"D{k}", sdb="DRUGBANK",
+                    otype="rna", oid=f"R{k}", odb="RNAcentral",
+                    effect="unknown", pub=str(100 + k), desc=f"d{k}"))
+        return ["\n".join(x) + "\n" for x in (
+            lines, phen_lines, ["SIGNOR ID;NAME;DESCRIPTION"])]
 
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, "signor.tsv"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    with open(os.path.join(tmp, "phen.csv"), "w") as fh:
-        fh.write("\n".join(phen_lines) + "\n")
-    with open(os.path.join(tmp, "stim.csv"), "w") as fh:
-        fh.write("SIGNOR ID;NAME;DESCRIPTION\n")
-    _promote_fixture(tmp, root)
-    return main, phen, stim
+    return _fixture(spark, sf_dir, "signor_fixture_v1", render,
+                    ["signor.tsv", "phen.csv", "stim.csv"])
 
 
 @query(
@@ -6828,38 +6767,25 @@ def _panther_fixture(spark: SparkSession, sf_dir: str) -> str:
     dim: two nations share each family (subfamily grouping + fam-level
     dedupe), GeneID rows are skipped, MF/BP/CC semicolon lists with
     name#accession pairs, first-'>'-segment pathways."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"panther_fixture_v1{slug}.tsv")
-    if os.path.exists(path):
-        return path
+    def render(ks):
+        lines = []
+        for k in ks:
+            gene = (
+                f"HUMAN|GeneID={k}|UniProtKB=P{k}" if k % 5 == 0
+                else f"HUMAN|HGNC={k}|UniProtKB=P{k}"
+            )
+            mf = f"kinase activity#GO:0016301" if k % 2 == 0 else ""
+            bp = "proc a#GO:0008150;proc b#GO:0009987" if k % 3 == 0 else ""
+            cc = "nucleus#GO:0005634"
+            pw = "Apoptosis#P00006>component#P9" if k % 4 == 0 else ""
+            lines.append("\t".join([
+                gene, f"UniProtKB=P{k}", f"gene{k}", f"F{k // 2}:SF{k}",
+                f"family {k // 2}", f"subfamily {k}", mf, bp, cc, "kinase", pw,
+            ]))
+        return "\n".join(lines) + "\n"
 
-    lines = []
-    for k in ks:
-        gene = (
-            f"HUMAN|GeneID={k}|UniProtKB=P{k}" if k % 5 == 0
-            else f"HUMAN|HGNC={k}|UniProtKB=P{k}"
-        )
-        mf = f"kinase activity#GO:0016301" if k % 2 == 0 else ""
-        bp = "proc a#GO:0008150;proc b#GO:0009987" if k % 3 == 0 else ""
-        cc = "nucleus#GO:0005634"
-        pw = "Apoptosis#P00006>component#P9" if k % 4 == 0 else ""
-        lines.append("\t".join([
-            gene, f"UniProtKB=P{k}", f"gene{k}", f"F{k // 2}:SF{k}",
-            f"family {k // 2}", f"subfamily {k}", mf, bp, cc, "kinase", pw,
-        ]))
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    return _fixture(spark, sf_dir, "panther_fixture_v1.tsv", render)
 
 
 @query(
@@ -6912,55 +6838,38 @@ def panther_like_edges_q(spark, sf_dir):
     )
 
 
-def _ctkp_fixture(spark: SparkSession, sf_dir: str):
+def _ctkp_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic CTKP node/edge TSV pair from the nation dim: two
     supporting studies per edge (second with blank enrollment -> -1),
     predicate rotating treats / in_clinical_trials_for /
     mentioned_in_trials_for to exercise both provenance branches and the
     tested_intervention flag."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"ctkp_fixture_v1{slug}")
-    nodes_p = os.path.join(root, "nodes.tsv")
-    edges_p = os.path.join(root, "edges.tsv")
-    if os.path.exists(nodes_p):
-        return nodes_p, edges_p
+    def render(ks):
+        preds = ["biolink:treats", "biolink:in_clinical_trials_for",
+                 "biolink:mentioned_in_trials_for"]
+        n_lines = ["id\tname\tcategory"]
+        e_lines = ["\t".join(f"c{i}" for i in range(23))]
+        for k in ks:
+            n_lines.append(f"CHEBI:{k}\tchem{k}\tbiolink:SmallMolecule")
+            n_lines.append(f"MONDO:{k}\tdis{k}\tbiolink:Disease")
+            cells = [""] * 23
+            cells[0] = f"E{k}"
+            cells[1] = f"CHEBI:{k}"
+            cells[2] = preds[k % 3]
+            cells[3] = f"MONDO:{k}"
+            cells[7] = "knowledge_assertion"
+            cells[8] = "manual_agent"
+            cells[9] = f"NCT{k}a,NCT{k}b"
+            cells[10] = f"{k % 4},{k % 4 + 1}"
+            cells[14] = "recruiting,completed"
+            cells[16] = f"{10 * k},"
+            cells[17] = "actual,anticipated"
+            e_lines.append("\t".join(cells))
+        return ["\n".join(x) + "\n" for x in (n_lines, e_lines)]
 
-    preds = ["biolink:treats", "biolink:in_clinical_trials_for",
-             "biolink:mentioned_in_trials_for"]
-    n_lines = ["id\tname\tcategory"]
-    e_lines = ["\t".join(f"c{i}" for i in range(23))]
-    for k in ks:
-        n_lines.append(f"CHEBI:{k}\tchem{k}\tbiolink:SmallMolecule")
-        n_lines.append(f"MONDO:{k}\tdis{k}\tbiolink:Disease")
-        cells = [""] * 23
-        cells[0] = f"E{k}"
-        cells[1] = f"CHEBI:{k}"
-        cells[2] = preds[k % 3]
-        cells[3] = f"MONDO:{k}"
-        cells[7] = "knowledge_assertion"
-        cells[8] = "manual_agent"
-        cells[9] = f"NCT{k}a,NCT{k}b"
-        cells[10] = f"{k % 4},{k % 4 + 1}"
-        cells[14] = "recruiting,completed"
-        cells[16] = f"{10 * k},"
-        cells[17] = "actual,anticipated"
-        e_lines.append("\t".join(cells))
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, "nodes.tsv"), "w") as fh:
-        fh.write("\n".join(n_lines) + "\n")
-    with open(os.path.join(tmp, "edges.tsv"), "w") as fh:
-        fh.write("\n".join(e_lines) + "\n")
-    _promote_fixture(tmp, root)
-    return nodes_p, edges_p
+    return _fixture(spark, sf_dir, "ctkp_fixture_v1", render,
+                    ["nodes.tsv", "edges.tsv"])
 
 
 @query(
@@ -7032,48 +6941,36 @@ def _monarch_fixture(spark: SparkSession, sf_dir: str) -> str:
     k%4==0 — so the curated survivor set is computable closed-form."""
     import io
     import json as _json
-    import os
-    import re as _re
     import tarfile
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(
-        _fixture_dir(), f"monarch_fixture_v1{slug}.tar.gz"
-    )
-    if os.path.exists(path):
-        return path
+    def monarch_tarball(ks):
+        lines = []
+        for k in ks:
+            lines.append(_json.dumps({
+                "subject": ("ZP:" if k % 5 == 0 else "MONDO:") + str(k),
+                "predicate":
+                    "biolink:causes" if k % 2 == 0 else "biolink:related_to",
+                "object": f"HP:{k}",
+                "primary_knowledge_source": [
+                    "infores:alliancegenome", "infores:ctd", "infores:mgi"
+                ][k % 3],
+                "aggregator_knowledge_source": (
+                    ["infores:wb"] if k % 4 == 0 else ["infores:go-central"]
+                ),
+                "publications": [f"PMID:{k}"] if k % 2 == 0 else [],
+                "knowledge_level":
+                    "logical_entailment" if k % 6 == 0 else None,
+                "frequency_qualifier": f"HP:004{k:04d}",
+            }))
+        payload = "\n".join(lines).encode()
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w:gz") as tf:
+            info = tarfile.TarInfo("monarch-kg_edges.jsonl")
+            info.size = len(payload)
+            tf.addfile(info, io.BytesIO(payload))
+        return buf.getvalue()
 
-    lines = []
-    for k in ks:
-        lines.append(_json.dumps({
-            "subject": ("ZP:" if k % 5 == 0 else "MONDO:") + str(k),
-            "predicate":
-                "biolink:causes" if k % 2 == 0 else "biolink:related_to",
-            "object": f"HP:{k}",
-            "primary_knowledge_source": [
-                "infores:alliancegenome", "infores:ctd", "infores:mgi"
-            ][k % 3],
-            "aggregator_knowledge_source": (
-                ["infores:wb"] if k % 4 == 0 else ["infores:go-central"]
-            ),
-            "publications": [f"PMID:{k}"] if k % 2 == 0 else [],
-            "knowledge_level":
-                "logical_entailment" if k % 6 == 0 else None,
-            "frequency_qualifier": f"HP:004{k:04d}",
-        }))
-    payload = "\n".join(lines).encode()
-    tmp = path + f".{os.getpid()}.tmp"
-    with tarfile.open(tmp, "w:gz") as tf:
-        info = tarfile.TarInfo("monarch-kg_edges.jsonl")
-        info.size = len(payload)
-        tf.addfile(info, io.BytesIO(payload))
-    os.replace(tmp, path)
-    return path
+    return _fixture(spark, sf_dir, "monarch_fixture_v1.tar.gz", monarch_tarball)
 
 
 @query(
@@ -7100,17 +6997,9 @@ def monarchkg_like_edges_q(spark, sf_dir):
     edge JSONL, knowledge-source remap, predicate/source/prefix curation
     filter, KL default and attribute passthrough. Fixture synthesized
     deterministically from the nation dim."""
-    import re as _re
-    import tempfile
-
     from orion_spark.plans.parsers import monarchkg_like
 
-    path = _monarch_fixture(spark, sf_dir)
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    _, edges = monarchkg_like(
-        spark, path,
-        staging_dir=f"{_fixture_dir()}/monarch_stage_q{slug}",
-    )
+    _, edges = monarchkg_like(spark, _monarch_fixture(spark, sf_dir))
     return edges.select(
         "subject", "predicate", "object",
         F.col("primary_knowledge_source").alias("pks"),
@@ -7121,49 +7010,32 @@ def monarchkg_like_edges_q(spark, sf_dir):
     )
 
 
-def _cohd_fixture(spark: SparkSession, sf_dir: str):
+def _cohd_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic COHD JSONL pair from the nation dim: per-edge TRAPI
     sources arrays with a supporting_data_source entry on every third
     edge."""
     import json as _json
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"cohd_fixture_v1{slug}")
-    nodes_p = os.path.join(root, "nodes.jsonl")
-    edges_p = os.path.join(root, "edges.jsonl")
-    if os.path.exists(nodes_p):
-        return nodes_p, edges_p
+    def render(ks):
+        n_lines, e_lines = [], []
+        for k in ks:
+            n_lines.append(_json.dumps(
+                {"id": f"MONDO:{k}", "name": f"d{k}",
+                 "category": ["biolink:Disease"]}))
+            sources = [{"resource_role": "primary_knowledge_source",
+                        "resource_id": "infores:cohd"}]
+            if k % 3 == 0:
+                sources.append({"resource_role": "supporting_data_source",
+                                "resource_id": "infores:columbia-ehr"})
+            e_lines.append(_json.dumps({
+                "subject": f"MONDO:{k}", "predicate": "biolink:correlated_with",
+                "object": f"CHEBI:{k}", "chi_squared_p_value": (k + 1) / 1000.0,
+                "sources": sources,
+            }))
+        return ["\n".join(x) + "\n" for x in (n_lines, e_lines)]
 
-    n_lines, e_lines = [], []
-    for k in ks:
-        n_lines.append(_json.dumps(
-            {"id": f"MONDO:{k}", "name": f"d{k}",
-             "category": ["biolink:Disease"]}))
-        sources = [{"resource_role": "primary_knowledge_source",
-                    "resource_id": "infores:cohd"}]
-        if k % 3 == 0:
-            sources.append({"resource_role": "supporting_data_source",
-                            "resource_id": "infores:columbia-ehr"})
-        e_lines.append(_json.dumps({
-            "subject": f"MONDO:{k}", "predicate": "biolink:correlated_with",
-            "object": f"CHEBI:{k}", "chi_squared_p_value": (k + 1) / 1000.0,
-            "sources": sources,
-        }))
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, "nodes.jsonl"), "w") as fh:
-        fh.write("\n".join(n_lines) + "\n")
-    with open(os.path.join(tmp, "edges.jsonl"), "w") as fh:
-        fh.write("\n".join(e_lines) + "\n")
-    _promote_fixture(tmp, root)
-    return nodes_p, edges_p
+    return _fixture(spark, sf_dir, "cohd_fixture_v1", render,
+                    ["nodes.jsonl", "edges.jsonl"])
 
 
 @query(
@@ -7199,34 +7071,22 @@ def _camkp_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic CAM-KP triplet TSV from the nation dim: ragged rows
     (5 columns normally, 6 with &&-packed anatomical qualifiers every
     third nation), quoted subjects, MGI double prefixes every fourth."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"camkp_fixture_v1{slug}.tsv")
-    if os.path.exists(path):
-        return path
-    lines = []
-    for k in ks:
-        obj = f"MGI:MGI:{k}" if k % 4 == 0 else f"GO:{k}"
-        cells = [f'"UniProtKB:P{k}"', "biolink:affects", obj,
-                 f"http://model.org/{k}", "infores:go-cam"]
-        if k % 3 == 0:
-            cells.append(
-                f"(biolink:anatomical_context_qualifier=GO:{k}001)&&"
-                f"(biolink:anatomical_context_qualifier=CL:{k}002)"
-            )
-        lines.append("\t".join(cells))
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        lines = []
+        for k in ks:
+            obj = f"MGI:MGI:{k}" if k % 4 == 0 else f"GO:{k}"
+            cells = [f'"UniProtKB:P{k}"', "biolink:affects", obj,
+                     f"http://model.org/{k}", "infores:go-cam"]
+            if k % 3 == 0:
+                cells.append(
+                    f"(biolink:anatomical_context_qualifier=GO:{k}001)&&"
+                    f"(biolink:anatomical_context_qualifier=CL:{k}002)"
+                )
+            lines.append("\t".join(cells))
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "camkp_fixture_v1.tsv", render)
 
 
 @query(
@@ -7274,39 +7134,27 @@ def _bgee_fixture(spark: SparkSession, sf_dir: str) -> str:
     gate exercised: absent expression (k%5=0), FDR over threshold
     (k%7=3), score under threshold (k%7=5), NA required field (k%7=6),
     CL-intersection objects on even k, zero-FDR clamp on k%3=0."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"bgee_fixture_v1{slug}.tsv")
-    if os.path.exists(path):
-        return path
-    hdr = ("gene_id\tgene_name\tanatomical_entity_id\t"
-           "anatomical_entity_name\texpression\tcall_quality\tfdr\t"
-           "expression_score\texpression_rank")
-    lines = [hdr]
-    for k in ks:
-        expr = "absent" if k % 5 == 0 else "present"
-        fdr = "0.5" if k % 7 == 3 else ("0" if k % 3 == 0 else "0.00001")
-        score = "50" if k % 7 == 5 else str(90 + k % 10)
-        name = "NA" if k % 7 == 6 else f"gene{k}"
-        anat = (
-            f"CL:{k} ∩ UBERON:{k}" if k % 2 == 0 else f"UBERON:{k}"
-        )
-        lines.append(
-            f"ENSG{k:05d}\t{name}\t{anat}\tanat{k}\t{expr}\tgold\t{fdr}\t"
-            f"{score}\t{k}.5"
-        )
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        hdr = ("gene_id\tgene_name\tanatomical_entity_id\t"
+               "anatomical_entity_name\texpression\tcall_quality\tfdr\t"
+               "expression_score\texpression_rank")
+        lines = [hdr]
+        for k in ks:
+            expr = "absent" if k % 5 == 0 else "present"
+            fdr = "0.5" if k % 7 == 3 else ("0" if k % 3 == 0 else "0.00001")
+            score = "50" if k % 7 == 5 else str(90 + k % 10)
+            name = "NA" if k % 7 == 6 else f"gene{k}"
+            anat = (
+                f"CL:{k} ∩ UBERON:{k}" if k % 2 == 0 else f"UBERON:{k}"
+            )
+            lines.append(
+                f"ENSG{k:05d}\t{name}\t{anat}\tanat{k}\t{expr}\tgold\t{fdr}\t"
+                f"{score}\t{k}.5"
+            )
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "bgee_fixture_v1.tsv", render)
 
 
 @query(
@@ -7352,53 +7200,36 @@ def bgee_like_edges_q(spark, sf_dir):
     )
 
 
-def _clingen_fixture(spark: SparkSession, sf_dir: str):
+def _clingen_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic ClinGen dosage TSV pair from the nation dim: genes
     file with per-k HI/TS score shapes, regions file with ISCA ids."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"clingen_fixture_v1{slug}")
-    genes_p = os.path.join(root, "genes.tsv")
-    regions_p = os.path.join(root, "regions.tsv")
-    if os.path.exists(genes_p):
-        return genes_p, regions_p
+    def render(ks):
+        meta = "\n".join(f"#meta {i}" for i in range(5))
+        hdr = ("Gene Symbol\tGene ID\tHaploinsufficiency Score\t"
+               "Haploinsufficiency Description\tHaploinsufficiency Disease ID\t"
+               "Triplosensitivity Score\tTriplosensitivity Description\t"
+               "Triplosensitivity Disease ID")
+        g = [meta, hdr]
+        for k in ks:
+            hi_score = ["3", "0", "-1", "Not yet evaluated"][k % 4]
+            hi_dis = f"MONDO:{k}" if k % 3 != 0 else ""
+            ts_score = ["30", "40", "Not yet evaluated"][k % 3]
+            ts_dis = f"MONDO:9{k}"
+            g.append("\t".join([
+                f"G{k}", str(k), hi_score, f"hd{k}", hi_dis,
+                ts_score, f"td{k}", ts_dis,
+            ]))
+        r = [meta, hdr.replace("Gene Symbol\tGene ID", "#ISCA ID\tRegion Name")]
+        for k in ks:
+            r.append("\t".join([
+                f"ISCA-{k}", f"region{k}", "2", f"rd{k}", f"MONDO:5{k}",
+                "Not yet evaluated", "", "",
+            ]))
+        return ["\n".join(x) + "\n" for x in (g, r)]
 
-    meta = "\n".join(f"#meta {i}" for i in range(5))
-    hdr = ("Gene Symbol\tGene ID\tHaploinsufficiency Score\t"
-           "Haploinsufficiency Description\tHaploinsufficiency Disease ID\t"
-           "Triplosensitivity Score\tTriplosensitivity Description\t"
-           "Triplosensitivity Disease ID")
-    g = [meta, hdr]
-    for k in ks:
-        hi_score = ["3", "0", "-1", "Not yet evaluated"][k % 4]
-        hi_dis = f"MONDO:{k}" if k % 3 != 0 else ""
-        ts_score = ["30", "40", "Not yet evaluated"][k % 3]
-        ts_dis = f"MONDO:9{k}"
-        g.append("\t".join([
-            f"G{k}", str(k), hi_score, f"hd{k}", hi_dis,
-            ts_score, f"td{k}", ts_dis,
-        ]))
-    r = [meta, hdr.replace("Gene Symbol\tGene ID", "#ISCA ID\tRegion Name")]
-    for k in ks:
-        r.append("\t".join([
-            f"ISCA-{k}", f"region{k}", "2", f"rd{k}", f"MONDO:5{k}",
-            "Not yet evaluated", "", "",
-        ]))
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    with open(os.path.join(tmp, "genes.tsv"), "w") as fh:
-        fh.write("\n".join(g) + "\n")
-    with open(os.path.join(tmp, "regions.tsv"), "w") as fh:
-        fh.write("\n".join(r) + "\n")
-    _promote_fixture(tmp, root)
-    return genes_p, regions_p
+    return _fixture(spark, sf_dir, "clingen_fixture_v1", render,
+                    ["genes.tsv", "regions.tsv"])
 
 
 @query(
@@ -7482,36 +7313,24 @@ def _upheno_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic UPheno OBO from the nation dim: per k a generic
     UPHENO parent with one HP and one MP child (every third nation adds a
     second shared parent; every fifth nation's MP term is obsolete)."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"upheno_fixture_v1{slug}.obo")
-    if os.path.exists(path):
-        return path
-    out = ["format-version: 1.2", ""]
-    for k in ks:
-        out += [f"[Term]", f"id: UPHENO:{k}", f"name: generic {k}", ""]
-        extra = [f"is_a: UPHENO:{k}X ! x"] if k % 3 == 0 else []
-        if k % 3 == 0:
-            out += [f"[Term]", f"id: UPHENO:{k}X", f"name: generic {k}x", ""]
-        out += [f"[Term]", f"id: HP:{k}", f"name: human {k}",
-                f"is_a: UPHENO:{k} ! g", *extra, ""]
-        mp = [f"[Term]", f"id: MP:{k}", f"name: mouse {k}",
-              f"is_a: UPHENO:{k} ! g", *extra]
-        if k % 5 == 0:
-            mp.append("is_obsolete: true")
-        out += mp + [""]
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(out) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        out = ["format-version: 1.2", ""]
+        for k in ks:
+            out += [f"[Term]", f"id: UPHENO:{k}", f"name: generic {k}", ""]
+            extra = [f"is_a: UPHENO:{k}X ! x"] if k % 3 == 0 else []
+            if k % 3 == 0:
+                out += [f"[Term]", f"id: UPHENO:{k}X", f"name: generic {k}x", ""]
+            out += [f"[Term]", f"id: HP:{k}", f"name: human {k}",
+                    f"is_a: UPHENO:{k} ! g", *extra, ""]
+            mp = [f"[Term]", f"id: MP:{k}", f"name: mouse {k}",
+                  f"is_a: UPHENO:{k} ! g", *extra]
+            if k % 5 == 0:
+                mp.append("is_obsolete: true")
+            out += mp + [""]
+        return "\n".join(out) + "\n"
+
+    return _fixture(spark, sf_dir, "upheno_fixture_v1.obo", render)
 
 
 @query(
@@ -7542,50 +7361,33 @@ def upheno_like_edges_q(spark, sf_dir):
     )
 
 
-def _foodb_fixture(spark: SparkSession, sf_dir: str):
+def _foodb_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     """Deterministic FooDB CSV triple from the nation dim: per k one food
     (scientific name preferred, every fifth nation lacks a taxon and
     drops) with two content rows — an inchikey compound and a
     smiles-only compound (every third nation's second compound has no
     identifiers and drops)."""
-    import os
-    import re as _re
-    import tempfile
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"foodb_fixture_v1{slug}")
-    paths = {n: os.path.join(root, f"{n}.csv")
-             for n in ["Food", "Content", "Compound"]}
-    if os.path.exists(paths["Food"]):
-        return paths["Food"], paths["Content"], paths["Compound"]
+    def render(ks):
+        food = ["id,name,name_scientific,ncbi_taxonomy_id"]
+        content = ["food_id,source_id,orig_unit,orig_max"]
+        compound = ["id,name,moldb_inchikey,moldb_smiles"]
+        for k in ks:
+            taxon = "" if k % 5 == 0 else str(3000 + k)
+            food.append(f"{k},common{k},Scientificus {k},{taxon}")
+            content.append(f"{k},{100 + k},mg,{k}.5")
+            content.append(f"{k},{200 + k},,")
+            compound.append(
+                f"{100 + k},cmp{k},InChIKey=KEY{k},C{k}"
+            )
+            if k % 3 == 0:
+                compound.append(f"{200 + k},dead{k},,")
+            else:
+                compound.append(f"{200 + k},alt{k},,S{k}")
+        return ["\n".join(x) + "\n" for x in (food, content, compound)]
 
-    food = ["id,name,name_scientific,ncbi_taxonomy_id"]
-    content = ["food_id,source_id,orig_unit,orig_max"]
-    compound = ["id,name,moldb_inchikey,moldb_smiles"]
-    for k in ks:
-        taxon = "" if k % 5 == 0 else str(3000 + k)
-        food.append(f"{k},common{k},Scientificus {k},{taxon}")
-        content.append(f"{k},{100 + k},mg,{k}.5")
-        content.append(f"{k},{200 + k},,")
-        compound.append(
-            f"{100 + k},cmp{k},InChIKey=KEY{k},C{k}"
-        )
-        if k % 3 == 0:
-            compound.append(f"{200 + k},dead{k},,")
-        else:
-            compound.append(f"{200 + k},alt{k},,S{k}")
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    for name, lines in [("Food", food), ("Content", content),
-                        ("Compound", compound)]:
-        with open(os.path.join(tmp, f"{name}.csv"), "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-    _promote_fixture(tmp, root)
-    return paths["Food"], paths["Content"], paths["Compound"]
+    return _fixture(spark, sf_dir, "foodb_fixture_v1", render,
+                    ["Food.csv", "Content.csv", "Compound.csv"])
 
 
 @query(
@@ -7628,72 +7430,57 @@ def _sgd_fixture(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     values plus a passthrough; pmid '?'-gated every 4th), a pathway row
     every 2nd k, a phenotype row (space-bearing observable, pmid gate
     every 5th), and complex membership + complex GO rows every 3rd k."""
-    import os
-    import re as _re
-
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    root = os.path.join(_fixture_dir(), f"sgd_fixture_v1{slug}")
     names = ["genes", "gene2go", "gene2pathway", "gene2phenotype",
              "gene2complex", "complex2go"]
-    paths = {n: os.path.join(root, f"{n}.csv") for n in names}
-    if os.path.exists(os.path.join(root, "_DONE")):
-        return paths
 
-    gid = lambda k: f"SGD:S{k:06d}"  # noqa: E731
-    genes = ["primaryIdentifier,secondaryIdentifier,symbol,namesake,protein,"
-             "description,chrom,start,end,strand,organism,featureType,link"]
-    gene2go = [",".join(f"c{i}" for i in range(17))]
-    gene2pathway = [",".join(f"c{i}" for i in range(5))]
-    gene2phenotype = [",".join(f"c{i}" for i in range(20))]
-    gene2complex = [",".join(f"c{i}" for i in range(12))]
-    complex2go = [",".join(f"c{i}" for i in range(4))]
-    for k in ks:
-        sym = "?" if k % 7 == 0 else f"GENE{k}"
-        genes.append(
-            f"{gid(k)},Y{k}W,{sym},NS{k},P{k},desc {k},chrC{k % 5},"
-            f"{100 * k + 1},{100 * k + 90},{1 if k % 2 == 0 else -1},"
-            f"S. cerevisiae,ORF,http://ex/{k}"
-        )
-        qual = ["involved in", "is active in", "part of"][k % 3]
-        pmid = "?" if k % 4 == 0 else str(10000 + k)
-        row = [""] * 17
-        row[0] = gid(k); row[5] = f"GO:{7000 + k}"; row[6] = f"goname {k}"
-        row[8] = "IDA"; row[9] = qual; row[10] = f"evtext{k}"
-        row[12] = "manually curated"; row[15] = pmid
-        gene2go.append(",".join(row))
-        if k % 2 == 0:
-            gene2pathway.append(
-                f"{gid(k)},S. cerevisiae,PW:{k},pathway {k},plink{k}")
-        row = [""] * 20
-        row[0] = gid(k); row[5] = f"exp{k}"; row[6] = f"mut{k}"
-        row[7] = f"phname {k}"; row[8] = f"qual{k}"; row[9] = f"allele{k}"
-        row[10] = f"adesc{k}"; row[11] = f"bg{k}"; row[12] = f"chem{k}"
-        row[13] = f"cond{k}"; row[14] = f"details{k}"
-        row[15] = "?" if k % 5 == 0 else str(20000 + k)
-        row[18] = f"apo pheno {k}"; row[19] = f"phlink{k}"
-        gene2phenotype.append(",".join(row))
-        if k % 3 == 0:
-            row = [""] * 12
-            row[0] = f"cname{k}"; row[1] = f"fn{k}"; row[2] = f"sys{k}"
-            row[5] = f"role{k}"; row[6] = str(k); row[7] = "protein"
-            row[9] = f"cprops{k}"; row[10] = f"CPLX{k}"; row[11] = gid(k)
-            gene2complex.append(",".join(row))
-            complex2go.append(
-                f"CPLX{k},GO:{8000 + k},cname{k},biolink:enables")
-    tmp = root + f".{os.getpid()}.tmp"
-    os.makedirs(tmp, exist_ok=True)
-    for n, lines in zip(names, [genes, gene2go, gene2pathway,
-                                gene2phenotype, gene2complex, complex2go]):
-        with open(os.path.join(tmp, f"{n}.csv"), "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-    with open(os.path.join(tmp, "_DONE"), "w") as fh:
-        fh.write("v1")
-    _promote_fixture(tmp, root)
-    return paths
+    def render(ks):
+        gid = lambda k: f"SGD:S{k:06d}"  # noqa: E731
+        genes = ["primaryIdentifier,secondaryIdentifier,symbol,namesake,protein,"
+                 "description,chrom,start,end,strand,organism,featureType,link"]
+        gene2go = [",".join(f"c{i}" for i in range(17))]
+        gene2pathway = [",".join(f"c{i}" for i in range(5))]
+        gene2phenotype = [",".join(f"c{i}" for i in range(20))]
+        gene2complex = [",".join(f"c{i}" for i in range(12))]
+        complex2go = [",".join(f"c{i}" for i in range(4))]
+        for k in ks:
+            sym = "?" if k % 7 == 0 else f"GENE{k}"
+            genes.append(
+                f"{gid(k)},Y{k}W,{sym},NS{k},P{k},desc {k},chrC{k % 5},"
+                f"{100 * k + 1},{100 * k + 90},{1 if k % 2 == 0 else -1},"
+                f"S. cerevisiae,ORF,http://ex/{k}"
+            )
+            qual = ["involved in", "is active in", "part of"][k % 3]
+            pmid = "?" if k % 4 == 0 else str(10000 + k)
+            row = [""] * 17
+            row[0] = gid(k); row[5] = f"GO:{7000 + k}"; row[6] = f"goname {k}"
+            row[8] = "IDA"; row[9] = qual; row[10] = f"evtext{k}"
+            row[12] = "manually curated"; row[15] = pmid
+            gene2go.append(",".join(row))
+            if k % 2 == 0:
+                gene2pathway.append(
+                    f"{gid(k)},S. cerevisiae,PW:{k},pathway {k},plink{k}")
+            row = [""] * 20
+            row[0] = gid(k); row[5] = f"exp{k}"; row[6] = f"mut{k}"
+            row[7] = f"phname {k}"; row[8] = f"qual{k}"; row[9] = f"allele{k}"
+            row[10] = f"adesc{k}"; row[11] = f"bg{k}"; row[12] = f"chem{k}"
+            row[13] = f"cond{k}"; row[14] = f"details{k}"
+            row[15] = "?" if k % 5 == 0 else str(20000 + k)
+            row[18] = f"apo pheno {k}"; row[19] = f"phlink{k}"
+            gene2phenotype.append(",".join(row))
+            if k % 3 == 0:
+                row = [""] * 12
+                row[0] = f"cname{k}"; row[1] = f"fn{k}"; row[2] = f"sys{k}"
+                row[5] = f"role{k}"; row[6] = str(k); row[7] = "protein"
+                row[9] = f"cprops{k}"; row[10] = f"CPLX{k}"; row[11] = gid(k)
+                gene2complex.append(",".join(row))
+                complex2go.append(
+                    f"CPLX{k},GO:{8000 + k},cname{k},biolink:enables")
+        return ["\n".join(x) + "\n" for x in (
+            genes, gene2go, gene2pathway, gene2phenotype, gene2complex, complex2go)]
+
+    paths = _fixture(spark, sf_dir, "sgd_fixture_v1", render,
+                     [f"{n}.csv" for n in names])
+    return dict(zip(names, paths))
 
 
 _SGD_GID_SQL = "'SGD:S' || lpad(CAST(k AS VARCHAR), 6, '0')"
@@ -7754,32 +7541,21 @@ def _costanza_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic Costanza-2016 CSV from the nation dim: 22 positional
     columns; detection method cycles Negative/Positive/unmapped so every
     third row drops its fitness edge but keeps both has_part edges."""
-    import os
-    import re as _re
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"costanza_fixture_v2{slug}.csv")
-    if os.path.exists(path):
-        return path
-    lines = [",".join(f"c{i}" for i in range(22))]
-    for k in ks:
-        method = ["Negative Genetic", "Positive Genetic",
-                  "Dosage Rescue"][k % 3]
-        row = [""] * 22
-        row[0] = f"S{k:06d}A"; row[21] = f"S{k:06d}B"
-        row[8] = str(30000 + k); row[14] = method
-        row[17] = f"{k}.25"; row[18] = f"{k}.5"
-        row[19] = f"al{k}a"; row[20] = f"al{k}b"
-        lines.append(",".join(row))
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        lines = [",".join(f"c{i}" for i in range(22))]
+        for k in ks:
+            method = ["Negative Genetic", "Positive Genetic",
+                      "Dosage Rescue"][k % 3]
+            row = [""] * 22
+            row[0] = f"S{k:06d}A"; row[21] = f"S{k:06d}B"
+            row[8] = str(30000 + k); row[14] = method
+            row[17] = f"{k}.25"; row[18] = f"{k}.5"
+            row[19] = f"al{k}a"; row[20] = f"al{k}b"
+            lines.append(",".join(row))
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "costanza_fixture_v2.csv", render)
 
 
 @query(
@@ -7900,29 +7676,18 @@ def _gasch_fixture(spark: SparkSession, sf_dir: str) -> str:
     YORF matches the SGD fixture's secondary ids; every 6th k adds an
     orphan YORF that the inner join must drop. Timepoint values are
     exact quarters so means are bit-identical across engines."""
-    import os
-    import re as _re
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"gasch_fixture_v1{slug}.csv")
-    if os.path.exists(path):
-        return path
-    lines = ["YORF,NAME,GWEIGHT,m5,m10,m20,m30,m40,m50,m60,m90"]
-    val = lambda k, t: ((k * 3 + t * 5) % 11 - 5) * 0.25  # noqa: E731
-    for k in ks:
-        ts = ",".join(str(val(k, t)) for t in range(8))
-        lines.append(f"Y{k}W,name{k},1,{ts}")
-        if k % 6 == 0:
-            lines.append(f"YX{k}W,orphan{k},1,{ts}")
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        lines = ["YORF,NAME,GWEIGHT,m5,m10,m20,m30,m40,m50,m60,m90"]
+        val = lambda k, t: ((k * 3 + t * 5) % 11 - 5) * 0.25  # noqa: E731
+        for k in ks:
+            ts = ",".join(str(val(k, t)) for t in range(8))
+            lines.append(f"Y{k}W,name{k},1,{ts}")
+            if k % 6 == 0:
+                lines.append(f"YX{k}W,orphan{k},1,{ts}")
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "gasch_fixture_v1.csv", render)
 
 
 @query(
@@ -7961,38 +7726,26 @@ def _gse61888_fixture(spark: SparkSession, sf_dir: str) -> str:
     chromosome (roman conversion exercised), centers spread so some fall
     in the gap before the tail window and drop; PTM timepoint values are
     exact halves keyed by (k, ptm index, timepoint index)."""
-    import os
-    import re as _re
-
     from orion_spark.plans.parsers import YEAST_PTM_TIMEPOINTS
 
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"gse61888_fixture_v1{slug}.csv")
-    if os.path.exists(path):
-        return path
-    hdr = ["nuc_id", "chr", "center", "coverage_rpm", "gene", "acc",
-           "gene_pos"]
-    for p in _YEAST_Q_PTMS:
-        hdr += [f"{p}_{t}" for t in YEAST_PTM_TIMEPOINTS]
-    lines = [",".join(hdr)]
-    for k in ks:
-        vals = []
-        for pi in range(len(_YEAST_Q_PTMS)):
-            for ti in range(6):
-                vals.append(str(((k + pi * 2 + ti * 3) % 9 - 4) * 0.5))
-        lines.append(
-            f"N{k},{k % 5 + 1},{(37 * k * 17) % 1544},{k / 10},g,a,p,"
-            + ",".join(vals)
-        )
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, path)
-    return path
+    def render(ks):
+        hdr = ["nuc_id", "chr", "center", "coverage_rpm", "gene", "acc",
+               "gene_pos"]
+        for p in _YEAST_Q_PTMS:
+            hdr += [f"{p}_{t}" for t in YEAST_PTM_TIMEPOINTS]
+        lines = [",".join(hdr)]
+        for k in ks:
+            vals = []
+            for pi in range(len(_YEAST_Q_PTMS)):
+                for ti in range(6):
+                    vals.append(str(((k + pi * 2 + ti * 3) % 9 - 4) * 0.5))
+            lines.append(
+                f"N{k},{k % 5 + 1},{(37 * k * 17) % 1544},{k / 10},g,a,p,"
+                + ",".join(vals)
+            )
+        return "\n".join(lines) + "\n"
+
+    return _fixture(spark, sf_dir, "gse61888_fixture_v1.csv", render)
 
 
 @query(
@@ -8078,20 +7831,14 @@ def incremental_upsert_merged_edges_q(spark, sf_dir):
     the SAME DuckDB oracle as kgx_merge_edges (assigned below): the
     driver's hash match IS the equivalence proof, the same pattern as
     dedup_minhash_lsh_dedup_first."""
-    import os
-    import re as _re
-
     from orion_spark.sinks import incremental as INC
 
     edges = G.lineitem_edges(spark, sf_dir)
     base = edges.where(F.col("_source_ordinal") < 4000)
     delta = edges.where(F.col("_source_ordinal") >= 4000)
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
     # pid-scoped scratch: the bundle is MUTATED by the upsert, so unlike
     # the read-only fixtures it is rebuilt from scratch every invocation
-    path = os.path.join(
-        _fixture_dir(), f"upsert_bundle_v1{slug}_{os.getpid()}"
-    )
+    path = _scratch_dir("upsert_bundle_v1", sf_dir)
     INC.write_sharded_bundle(
         M.merge_edges(base), path, ["subject"], n_shards=16
     )
@@ -8146,19 +7893,13 @@ def incremental_qc_totals_q(spark, sf_dir):
     the from-scratch merge — which is exactly what the DuckDB oracle
     computes. At 100 TB this turns post-upsert QC from an O(bundle)
     scan into O(touched shards) + a kilobyte fold."""
-    import os
-    import re as _re
-
     from orion_spark.sinks import incremental as INC
     from orion_spark.sinks import qc_incremental as QCI
 
     edges = G.lineitem_edges(spark, sf_dir)
     base = edges.where(F.col("_source_ordinal") < 4000)
     delta = edges.where(F.col("_source_ordinal") >= 4000)
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(
-        _fixture_dir(), f"qc_upsert_bundle_v1{slug}_{os.getpid()}"
-    )
+    path = _scratch_dir("qc_upsert_bundle_v1", sf_dir)
     INC.write_sharded_bundle(
         M.merge_edges(base), path, ["subject"], n_shards=16
     )
@@ -8181,17 +7922,11 @@ def qc_knowledge_source_hll_q(spark, sf_dir):
     dense-mode exactness (test_hll_partials_fold_equals_full_sketch).
     At 100 TB the post-upsert refresh is O(touched shards) like the
     exact partials."""
-    import os
-    import re as _re
-
     from orion_spark.sinks import incremental as INC
     from orion_spark.sinks import qc_incremental as QCI
 
     edges = G.lineitem_edges(spark, sf_dir)
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(
-        _fixture_dir(), f"hll_qc_bundle_v1{slug}_{os.getpid()}"
-    )
+    path = _scratch_dir("hll_qc_bundle_v1", sf_dir)
     INC.write_sharded_bundle(
         M.merge_edges(edges), path, ["subject"], n_shards=16
     )
@@ -8601,30 +8336,6 @@ def documents_dsir_selection_q(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:
-    ks = sorted(
-        r.n_nationkey
-        for r in _t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    return ks
-
-
-def _write_fixture_file(name: str, sf_dir: str, text: str) -> str:
-    """Deterministic single-file fixture under .fixtures, atomic promote."""
-    import os
-    import re as _re
-
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"{name}{slug}")
-    if os.path.exists(path):
-        return path
-    tmp = path + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(text)
-    os.replace(tmp, path)
-    return path
-
-
 @query(
     "genome_alliance_like_edges",
     """
@@ -8642,11 +8353,13 @@ def genome_alliance_like_edges_q(spark, sf_dir):
     carry the underscore the parser must strip."""
     from orion_spark.plans.parsers import genome_alliance_like
 
-    ks = _nation_keys(spark, sf_dir)
-    lines = ["gene_1_id\tgene_1_label\tgene_2_id\tgene_2_label"]
-    for k in ks:
-        lines.append(f"ZFIN_:Z{k}\tzebra gene {k}\tWB_:W{k}\tworm gene {k}")
-    path = _write_fixture_file("genome_alliance_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        lines = ["gene_1_id\tgene_1_label\tgene_2_id\tgene_2_label"]
+        for k in ks:
+            lines.append(f"ZFIN_:Z{k}\tzebra gene {k}\tWB_:W{k}\tworm gene {k}")
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "genome_alliance_v1", render)
     _, _, edges = genome_alliance_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "primary_knowledge_source"
@@ -8677,14 +8390,20 @@ def cord19_like_edges_q(spark, sf_dir):
     through verbatim with no enrichment column."""
     from orion_spark.plans.parsers import cord19_like
 
-    ks = _nation_keys(spark, sf_dir)
-    sb = ["subject\tobject\teffective_pubs\tenrichment_p"]
-    sg = ["subject\tobject\tnum_publications"]
-    for k in ks:
-        sb.append(f"MESH_:D{k}\tCHEBI_:{k}\t{k + 0.5}\t{0.001 * k}")
-        sg.append(f"MONDO:{1000 + k}\tHP:{2000 + k}\t{k}")
-    sb_path = _write_fixture_file("cord19_scibite_v1", sf_dir, "\n".join(sb) + "\n")
-    sg_path = _write_fixture_file("cord19_scigraph_v1", sf_dir, "\n".join(sg) + "\n")
+    def scibite(ks):
+        sb = ["subject\tobject\teffective_pubs\tenrichment_p"]
+        for k in ks:
+            sb.append(f"MESH_:D{k}\tCHEBI_:{k}\t{k + 0.5}\t{0.001 * k}")
+        return "\n".join(sb) + "\n"
+
+    def scigraph(ks):
+        sg = ["subject\tobject\tnum_publications"]
+        for k in ks:
+            sg.append(f"MONDO:{1000 + k}\tHP:{2000 + k}\t{k}")
+        return "\n".join(sg) + "\n"
+
+    sb_path = _fixture(spark, sf_dir, "cord19_scibite_v1", scibite)
+    sg_path = _fixture(spark, sf_dir, "cord19_scigraph_v1", scigraph)
     _, edges = cord19_like(spark, sb_path, sg_path)
     return edges.select(
         "subject", "predicate", "object",
@@ -8726,24 +8445,22 @@ def clingen_validity_like_edges_q(spark, sf_dir):
     (loadClinGenGeneDiseaseValidity.py:113-157) — 6 leading metadata rows
     stripped, classification props carried, mode-of-inheritance
     normalized through the HPO lookup with unmapped codes nulling out."""
-    import tempfile
-
     from orion_spark.plans.parsers import clingen_validity_like
 
-    ks = _nation_keys(spark, sf_dir)
-    lines = ["CLINGEN GENE VALIDITY CURATIONS"] * 6
-    lines.append("gene_id,disease_id,moi,classification,classification_date,online_report")
-    mois = ["AD", "AR", "XL", "SD", "UNK"]
-    for k in ks:
-        cls = ["Definitive", "Moderate", "Limited"][k % 3]
-        lines.append(
-            f"HGNC:{k},MONDO:{7000 + k},{mois[k % 5]},{cls},"
-            f"2020-01-{k + 1:02d},https://search.clinicalgenome.org/kb/{k}"
-        )
-    path = _write_fixture_file("clingen_validity_v1", sf_dir, "\n".join(lines) + "\n")
-    _, _, edges = clingen_validity_like(
-        spark, path, staging_dir=tempfile.mkdtemp(prefix="clingen_v_q_")
-    )
+    def render(ks):
+        lines = ["CLINGEN GENE VALIDITY CURATIONS"] * 6
+        lines.append("gene_id,disease_id,moi,classification,classification_date,online_report")
+        mois = ["AD", "AR", "XL", "SD", "UNK"]
+        for k in ks:
+            cls = ["Definitive", "Moderate", "Limited"][k % 3]
+            lines.append(
+                f"HGNC:{k},MONDO:{7000 + k},{mois[k % 5]},{cls},"
+                f"2020-01-{k + 1:02d},https://search.clinicalgenome.org/kb/{k}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "clingen_validity_v1", render)
+    _, _, edges = clingen_validity_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
         "clingen_validity_classification", "clingen_classification_date",
@@ -8774,22 +8491,24 @@ def ehr_like_edges_q(spark, sf_dir):
     array; both must vanish)."""
     from orion_spark.plans.parsers import ehr_like
 
-    ks = _nation_keys(spark, sf_dir)
-    lines = [
-        "subject,predicate,object,subject_name,KG_type,auc_roc,"
-        "log_odds_ratio,log_odds_ratio_95_ci,positive_patient_count"
-    ]
-    for k in ks:
-        auc = "notanum" if k % 6 == 5 else f"{0.5 + 0.01 * k}"
-        ci = (
-            "badjson" if k % 4 == 0
-            else f"[{0.1 * k - 0.05}, {0.1 * k + 0.05}]"
-        )
-        lines.append(
-            f'SNOMEDCT:{k},biolink:correlated_with,RXCUI:{500 + k},'
-            f'name {k},ehr,{auc},{0.1 * k},"{ci}",{10 * k}'
-        )
-    path = _write_fixture_file("ehr_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        lines = [
+            "subject,predicate,object,subject_name,KG_type,auc_roc,"
+            "log_odds_ratio,log_odds_ratio_95_ci,positive_patient_count"
+        ]
+        for k in ks:
+            auc = "notanum" if k % 6 == 5 else f"{0.5 + 0.01 * k}"
+            ci = (
+                "badjson" if k % 4 == 0
+                else f"[{0.1 * k - 0.05}, {0.1 * k + 0.05}]"
+            )
+            lines.append(
+                f'SNOMEDCT:{k},biolink:correlated_with,RXCUI:{500 + k},'
+                f'name {k},ehr,{auc},{0.1 * k},"{ci}",{10 * k}'
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "ehr_v1", render)
     _, edges = ehr_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
@@ -8833,21 +8552,26 @@ def mgi_gene_phenotypes_like_edges_q(spark, sf_dir):
     rows with no MP id dropped, PMID-curied publications."""
     from orion_spark.plans.parsers import mgi_gene_phenotypes_like
 
-    ks = _nation_keys(spark, sf_dir)
-    marker = ["mgi_accession_id\tmarker_symbol\tmarker_type"]
-    for k in ks:
-        mtype = "Gene" if k % 2 == 0 else "BAC/YAC end"
-        marker.append(f"MGI:{k}\tSym{k}\t{mtype}")
-    geno = []
-    for k in ks:
-        mp = "" if k % 7 == 0 else f"MP:{3000 + k}"
-        pubs = "" if k % 5 == 0 else f"{100 + k}|{200 + k}"
-        geno.append(
-            f"Foo<{k}>\tAllele{k}\tMGI:A{k}\tB6.{k}\t{mp}\t{pubs}\t"
-            f"MGI:{k}|MGI:{k + 1}\tMGI:G{k}"
-        )
-    mpath = _write_fixture_file("mgi_marker_v1", sf_dir, "\n".join(marker) + "\n")
-    gpath = _write_fixture_file("mgi_geno_v1", sf_dir, "\n".join(geno) + "\n")
+    def markers(ks):
+        marker = ["mgi_accession_id\tmarker_symbol\tmarker_type"]
+        for k in ks:
+            mtype = "Gene" if k % 2 == 0 else "BAC/YAC end"
+            marker.append(f"MGI:{k}\tSym{k}\t{mtype}")
+        return "\n".join(marker) + "\n"
+
+    def genotypes(ks):
+        geno = []
+        for k in ks:
+            mp = "" if k % 7 == 0 else f"MP:{3000 + k}"
+            pubs = "" if k % 5 == 0 else f"{100 + k}|{200 + k}"
+            geno.append(
+                f"Foo<{k}>\tAllele{k}\tMGI:A{k}\tB6.{k}\t{mp}\t{pubs}\t"
+                f"MGI:{k}|MGI:{k + 1}\tMGI:G{k}"
+            )
+        return "\n".join(geno) + "\n"
+
+    mpath = _fixture(spark, sf_dir, "mgi_marker_v1", markers)
+    gpath = _fixture(spark, sf_dir, "mgi_geno_v1", genotypes)
     _, edges = mgi_gene_phenotypes_like(spark, gpath, mpath)
     return edges.select(
         "subject", "predicate", "object",
@@ -8890,20 +8614,22 @@ def kinace_like_edges_q(spark, sf_dir):
     'NA'/empty -> none and trailing-separator hygiene."""
     from orion_spark.plans.parsers import kinace_like
 
-    ks = _nation_keys(spark, sf_dir)
-    srcs = ["PhosphoSitePlus", "EPSD", "iPTMNet"]
-    lines = ["kinase,substrate,p_site,primary_source,publications"]
-    for k in ks:
-        if k % 5 == 0:
-            pubs = "NA"
-        elif k % 5 == 1:
-            pubs = ""
-        elif k % 5 == 2:
-            pubs = f"{100 + k};"
-        else:
-            pubs = f"{100 + k}; {200 + k}"
-        lines.append(f'K{k},S{k},Ser{k},{srcs[k % 3]},"{pubs}"')
-    path = _write_fixture_file("kinace_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        srcs = ["PhosphoSitePlus", "EPSD", "iPTMNet"]
+        lines = ["kinase,substrate,p_site,primary_source,publications"]
+        for k in ks:
+            if k % 5 == 0:
+                pubs = "NA"
+            elif k % 5 == 1:
+                pubs = ""
+            elif k % 5 == 2:
+                pubs = f"{100 + k};"
+            else:
+                pubs = f"{100 + k}; {200 + k}"
+            lines.append(f'K{k},S{k},Ser{k},{srcs[k % 3]},"{pubs}"')
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "kinace_v1", render)
     _, _, edges = kinace_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "qualified_predicate",
@@ -8951,30 +8677,32 @@ def cebs_like_edges_q(spark, sf_dir):
     space-stripped TR publication ids."""
     from orion_spark.plans.parsers import cebs_like
 
-    ks = _nation_keys(spark, sf_dir)
-    obo = "http://purl.obolibrary.org/obo"
-    header = (
-        "inchikey\tmorphology\tevidence_level\tpublication_number\t"
-        "tissue\tsex\tspecies_iri\tstrain"
-    )
-    lines = [header]
-    for k in ks:
-        ev = ["Clear Evidence", "Some Evidence", "Equivocal"][k % 3]
-        if k % 4 == 0:
-            morph = f"{obo}/MPATH_1; {obo}/MONDO_77{k}"
-        elif k % 4 == 1:
-            morph = f"MONDO:55{k}"
-        elif k % 4 == 2:
-            morph = f"{obo}/NCIT_9{k}"
-        else:
-            morph = f"{obo}/MPATH_{k}"
-        sex = "Male" if k % 2 == 0 else "Female"
-        lines.append(
-            f"AAA{k}KEY\t{morph}\t{ev}\tTR {500 + k}\t"
-            f"{obo}/UBERON_10{k}; secondary\t{sex}\t"
-            f"{obo}/NCBITaxon_10090\tB6C3F1/{k}"
+    def render(ks):
+        obo = "http://purl.obolibrary.org/obo"
+        header = (
+            "inchikey\tmorphology\tevidence_level\tpublication_number\t"
+            "tissue\tsex\tspecies_iri\tstrain"
         )
-    path = _write_fixture_file("cebs_v1", sf_dir, "\n".join(lines) + "\n")
+        lines = [header]
+        for k in ks:
+            ev = ["Clear Evidence", "Some Evidence", "Equivocal"][k % 3]
+            if k % 4 == 0:
+                morph = f"{obo}/MPATH_1; {obo}/MONDO_77{k}"
+            elif k % 4 == 1:
+                morph = f"MONDO:55{k}"
+            elif k % 4 == 2:
+                morph = f"{obo}/NCIT_9{k}"
+            else:
+                morph = f"{obo}/MPATH_{k}"
+            sex = "Male" if k % 2 == 0 else "Female"
+            lines.append(
+                f"AAA{k}KEY\t{morph}\t{ev}\tTR {500 + k}\t"
+                f"{obo}/UBERON_10{k}; secondary\t{sex}\t"
+                f"{obo}/NCBITaxon_10090\tB6C3F1/{k}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "cebs_v1", render)
     _, _, edges = cebs_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "knowledge_level", "agent_type",
@@ -9010,25 +8738,27 @@ def ctd_like_edges_q(spark, sf_dir):
     threshold, pipe-split PMID curies."""
     from orion_spark.plans.parsers import ctd_like
 
-    ks = _nation_keys(spark, sf_dir)
-    kinds = [
-        ("increases", "expression"), ("decreases", "expression"),
-        ("increases", "activity"), ("decreases", "activity"),
-        ("affects", "binding"), ("increases", "junk"),
-    ]
-    header = (
-        "chemical_id\tchemical_name\tgene_id\tgene_symbol\tdirection\t"
-        "interaction_type\tpubmed_ids\tevidence_count"
-    )
-    lines = [header]
-    for k in ks:
-        d, t = kinds[k % 6]
-        pubs = "" if k % 4 == 0 else f"{k}|{k + 1}"
-        ev = 1 if k % 5 == 0 else 2 + k
-        lines.append(
-            f"C{k}\tchem {k}\t{9000 + k}\tGENE{k}\t{d}\t{t}\t{pubs}\t{ev}"
+    def render(ks):
+        kinds = [
+            ("increases", "expression"), ("decreases", "expression"),
+            ("increases", "activity"), ("decreases", "activity"),
+            ("affects", "binding"), ("increases", "junk"),
+        ]
+        header = (
+            "chemical_id\tchemical_name\tgene_id\tgene_symbol\tdirection\t"
+            "interaction_type\tpubmed_ids\tevidence_count"
         )
-    path = _write_fixture_file("ctd_v1", sf_dir, "\n".join(lines) + "\n")
+        lines = [header]
+        for k in ks:
+            d, t = kinds[k % 6]
+            pubs = "" if k % 4 == 0 else f"{k}|{k + 1}"
+            ev = 1 if k % 5 == 0 else 2 + k
+            lines.append(
+                f"C{k}\tchem {k}\t{9000 + k}\tGENE{k}\t{d}\t{t}\t{pubs}\t{ev}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "ctd_v1", render)
     _, _, edges = ctd_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
@@ -9059,26 +8789,28 @@ def hetio_like_edges_q(spark, sf_dir):
 
     from orion_spark.plans.parsers import hetio_like
 
-    ks = _nation_keys(spark, sf_dir)
-    kinds = ["associates", "upregulates", "downregulates", "treats", "binds"]
-    doc = {
-        "nodes": [
-            {"kind": "Gene", "ident": f"G{k}", "name": f"gene {k}"}
-            for k in ks
-        ] + [
-            {"kind": "Disease", "ident": f"D{k}", "name": f"disease {k}"}
-            for k in ks
-        ],
-        "edges": [
-            {
-                "kind": kinds[k % 5],
-                "source_id": ["Gene", f"G{k}"],
-                "target_id": ["Disease", f"D{k}"],
-            }
-            for k in ks
-        ],
-    }
-    path = _write_fixture_file("hetio_v1", sf_dir, json.dumps(doc))
+    def render(ks):
+        kinds = ["associates", "upregulates", "downregulates", "treats", "binds"]
+        doc = {
+            "nodes": [
+                {"kind": "Gene", "ident": f"G{k}", "name": f"gene {k}"}
+                for k in ks
+            ] + [
+                {"kind": "Disease", "ident": f"D{k}", "name": f"disease {k}"}
+                for k in ks
+            ],
+            "edges": [
+                {
+                    "kind": kinds[k % 5],
+                    "source_id": ["Gene", f"G{k}"],
+                    "target_id": ["Disease", f"D{k}"],
+                }
+                for k in ks
+            ],
+        }
+        return json.dumps(doc)
+
+    path = _fixture(spark, sf_dir, "hetio_v1", render)
     _, edges = hetio_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "primary_knowledge_source"
@@ -9123,17 +8855,19 @@ def gwas_like_edges_q(spark, sf_dir):
     row filter (k%3==1 rows sit at 1e-7 and must vanish)."""
     from orion_spark.plans.parsers import gwas_like
 
-    ks = _nation_keys(spark, sf_dir)
-    refs = ["A", "AT", "A", "AT"]
-    alts = ["G", "A", "AT", "GC"]
-    lines = ["chrom\tpos\tref\talt\tp_value\ttrait_id\ttrait_name"]
-    for k in ks:
-        p = [1e-9, 1e-7, 1e-12][k % 3]
-        lines.append(
-            f"{1 + (k % 22)}\t{1000 + k}\t{refs[k % 4]}\t{alts[k % 4]}\t"
-            f"{p}\tEFO:{4000 + k}\ttrait {k}"
-        )
-    path = _write_fixture_file("gwas_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        refs = ["A", "AT", "A", "AT"]
+        alts = ["G", "A", "AT", "GC"]
+        lines = ["chrom\tpos\tref\talt\tp_value\ttrait_id\ttrait_name"]
+        for k in ks:
+            p = [1e-9, 1e-7, 1e-12][k % 3]
+            lines.append(
+                f"{1 + (k % 22)}\t{1000 + k}\t{refs[k % 4]}\t{alts[k % 4]}\t"
+                f"{p}\tEFO:{4000 + k}\ttrait {k}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "gwas_v1", render)
     _, _, edges = gwas_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "p_value", "neg_log_p",
@@ -9162,22 +8896,24 @@ def goa_like_edges_q(spark, sf_dir):
     NOT-negations dropped (k%6==5), PMID-only db_reference publications."""
     from orion_spark.plans.parsers import goa_like
 
-    ks = _nation_keys(spark, sf_dir)
-    quals = [
-        "enables", "involved_in", "located_in", "part_of",
-        "contributes_to", "NOT|enables",
-    ]
-    lines = ["!gaf-version: 2.2", "! generated fixture"]
-    for k in ks:
-        ref = f"PMID:{600 + k}" if k % 3 == 0 else f"GO_REF:{k:07d}"
-        ec = "IDA" if k % 2 == 0 else "IEA"
-        row = [
-            "UniProtKB", f"P{k}", f"SYM{k}", quals[k % 6],
-            f"GO:{k:07d}", ref, ec, "", "F", f"protein {k}", "", "protein",
-            "taxon:9606", "20240101", "UniProt", "", "",
+    def render(ks):
+        quals = [
+            "enables", "involved_in", "located_in", "part_of",
+            "contributes_to", "NOT|enables",
         ]
-        lines.append("\t".join(row))
-    path = _write_fixture_file("goa_v1", sf_dir, "\n".join(lines) + "\n")
+        lines = ["!gaf-version: 2.2", "! generated fixture"]
+        for k in ks:
+            ref = f"PMID:{600 + k}" if k % 3 == 0 else f"GO_REF:{k:07d}"
+            ec = "IDA" if k % 2 == 0 else "IEA"
+            row = [
+                "UniProtKB", f"P{k}", f"SYM{k}", quals[k % 6],
+                f"GO:{k:07d}", ref, ec, "", "F", f"protein {k}", "", "protein",
+                "taxon:9606", "20240101", "UniProt", "", "",
+            ]
+            lines.append("\t".join(row))
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "goa_v1", render)
     _, _, edges = goa_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
@@ -9205,11 +8941,13 @@ def string_db_like_edges_q(spark, sf_dir):
     combined-score >= 700 confidence threshold."""
     from orion_spark.plans.parsers import string_db_like
 
-    ks = _nation_keys(spark, sf_dir)
-    lines = ["protein1 protein2 combined_score"]
-    for k in ks:
-        lines.append(f"9606.ENSP000{k} 9606.ENSP999{k} {400 + 20 * k}")
-    path = _write_fixture_file("string_db_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        lines = ["protein1 protein2 combined_score"]
+        for k in ks:
+            lines.append(f"9606.ENSP000{k} 9606.ENSP999{k} {400 + 20 * k}")
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "string_db_v1", render)
     _, _, edges = string_db_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "combined_score",
@@ -9238,19 +8976,21 @@ def ubergraph_like_edges_q(spark, sf_dir):
     kept, label literals routed to nodes (and excluded here)."""
     from orion_spark.plans.parsers import ubergraph_like
 
-    ks = _nation_keys(spark, sf_dir)
-    obo = "http://purl.obolibrary.org/obo"
-    sub = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-    lab = "http://www.w3.org/2000/01/rdf-schema#label"
-    lines = []
-    for k in ks:
-        lines.append(f"<{obo}/GO_{100 + k}> <{sub}> <{obo}/GO_{100 + k // 2}> .")
-        lines.append(f'<{obo}/GO_{100 + k}> <{lab}> "go term {k}" .')
-        if k % 2 == 0:
-            lines.append(
-                f"<{obo}/CHEBI_{200 + k}> <{sub}> <{obo}/CHEBI_{200 + k // 2}> ."
-            )
-    path = _write_fixture_file("ubergraph_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        obo = "http://purl.obolibrary.org/obo"
+        sub = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
+        lab = "http://www.w3.org/2000/01/rdf-schema#label"
+        lines = []
+        for k in ks:
+            lines.append(f"<{obo}/GO_{100 + k}> <{sub}> <{obo}/GO_{100 + k // 2}> .")
+            lines.append(f'<{obo}/GO_{100 + k}> <{lab}> "go term {k}" .')
+            if k % 2 == 0:
+                lines.append(
+                    f"<{obo}/CHEBI_{200 + k}> <{sub}> <{obo}/CHEBI_{200 + k // 2}> ."
+                )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "ubergraph_v1", render)
     _, edges = ubergraph_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "primary_knowledge_source"
@@ -9286,30 +9026,32 @@ def hmdb_like_edges_q(spark, sf_dir):
     none), nested pubmed reference lists as PMID curies."""
     from orion_spark.plans.parsers import hmdb_like
 
-    ks = _nation_keys(spark, sf_dir)
-    ptypes = ["Enzyme", "Transport", "Unknown"]
-    recs = ["<hmdb>"]
-    for k in ks:
-        omim = (
-            f"<omim_id>{613000 + k}</omim_id>" if k % 2 == 0 else ""
-        )
-        recs.append(
-            f"<metabolite><accession>HMDB{9000 + k}</accession>"
-            f"<name>met {k}</name>"
-            f"<protein_associations><protein>"
-            f"<uniprot_id>P{k}</uniprot_id>"
-            f"<protein_type>{ptypes[k % 3]}</protein_type>"
-            f"<name>prot {k}</name>"
-            f"</protein></protein_associations>"
-            f"<diseases><disease>{omim}<name>dis {k}</name>"
-            f"<references>"
-            f"<reference><pubmed_id>{100 + k}</pubmed_id></reference>"
-            f"<reference><pubmed_id>{200 + k}</pubmed_id></reference>"
-            f"</references></disease></diseases>"
-            f"</metabolite>"
-        )
-    recs.append("</hmdb>")
-    path = _write_fixture_file("hmdb_v1", sf_dir, "\n".join(recs) + "\n")
+    def render(ks):
+        ptypes = ["Enzyme", "Transport", "Unknown"]
+        recs = ["<hmdb>"]
+        for k in ks:
+            omim = (
+                f"<omim_id>{613000 + k}</omim_id>" if k % 2 == 0 else ""
+            )
+            recs.append(
+                f"<metabolite><accession>HMDB{9000 + k}</accession>"
+                f"<name>met {k}</name>"
+                f"<protein_associations><protein>"
+                f"<uniprot_id>P{k}</uniprot_id>"
+                f"<protein_type>{ptypes[k % 3]}</protein_type>"
+                f"<name>prot {k}</name>"
+                f"</protein></protein_associations>"
+                f"<diseases><disease>{omim}<name>dis {k}</name>"
+                f"<references>"
+                f"<reference><pubmed_id>{100 + k}</pubmed_id></reference>"
+                f"<reference><pubmed_id>{200 + k}</pubmed_id></reference>"
+                f"</references></disease></diseases>"
+                f"</metabolite>"
+            )
+        recs.append("</hmdb>")
+        return "\n".join(recs) + "\n"
+
+    path = _fixture(spark, sf_dir, "hmdb_v1", render)
     _, edges = hmdb_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
@@ -9345,25 +9087,27 @@ def binding_like_edges_q(spark, sf_dir):
     that must both vanish."""
     from orion_spark.plans.parsers import binding_like
 
-    ks = _nation_keys(spark, sf_dir)
-    cols = ["ki_nm", "ic50_nm", "kd_nm", "ec50_nm"]
-    header = (
-        "pubchem_cid\tuniprot_chain\tki_nm\tic50_nm\tkd_nm\tec50_nm\t"
-        "pmid\tpubchem_aid\tpatent_number"
-    )
-    lines = [header]
+    def render(ks):
+        cols = ["ki_nm", "ic50_nm", "kd_nm", "ec50_nm"]
+        header = (
+            "pubchem_cid\tuniprot_chain\tki_nm\tic50_nm\tkd_nm\tec50_nm\t"
+            "pmid\tpubchem_aid\tpatent_number"
+        )
+        lines = [header]
 
-    def row(k, val, pmid, aid, patent):
-        vals = ["", "", "", ""]
-        vals[k % 4] = val
-        return f"{k}\tP{k}\t" + "\t".join(vals) + f"\t{pmid}\t{aid}\t{patent}"
+        def row(k, val, pmid, aid, patent):
+            vals = ["", "", "", ""]
+            vals[k % 4] = val
+            return f"{k}\tP{k}\t" + "\t".join(vals) + f"\t{pmid}\t{aid}\t{patent}"
 
-    for k in ks:
-        lines.append(row(k, f"{10 * k + 10}", f"{1000 + k}", f"A{k}", ""))
-        lines.append(row(k, f"<{30 * k + 30}", "", "", f"US{k}"))
-        lines.append(row(k, ">99999", "", "", ""))
-        lines.append(row(k, "0", "", "", ""))
-    path = _write_fixture_file("binding_v1", sf_dir, "\n".join(lines) + "\n")
+        for k in ks:
+            lines.append(row(k, f"{10 * k + 10}", f"{1000 + k}", f"A{k}", ""))
+            lines.append(row(k, f"<{30 * k + 30}", "", "", f"US{k}"))
+            lines.append(row(k, ">99999", "", "", ""))
+            lines.append(row(k, "0", "", "", ""))
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "binding_v1", render)
     _, edges = binding_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "affinity_parameter", "affinity",
@@ -9395,21 +9139,23 @@ def hgnc_like_edges_q(spark, sf_dir):
     edges, groupless rows (k%3==0) skipped, optional pipe-split PMIDs."""
     from orion_spark.plans.parsers import hgnc_like
 
-    ks = _nation_keys(spark, sf_dir)
-    header = (
-        "hgnc_id\tname\tlocus_group\tsymbol\tlocation\tgene_group_id\t"
-        "gene_group\tpubmed_id"
-    )
-    lines = [header]
-    for k in ks:
-        gid = "" if k % 3 == 0 else f"{k}|{k + 100}"
-        gname = "" if k % 3 == 0 else f"fam {k}|fam {k + 100}"
-        pm = f"{k}|{k + 1}" if k % 2 == 0 else ""
-        lines.append(
-            f"HGNC:{k}\tgene {k}\tprotein-coding gene\tSYM{k}\t1p{k}\t"
-            f"{gid}\t{gname}\t{pm}"
+    def render(ks):
+        header = (
+            "hgnc_id\tname\tlocus_group\tsymbol\tlocation\tgene_group_id\t"
+            "gene_group\tpubmed_id"
         )
-    path = _write_fixture_file("hgnc_v1", sf_dir, "\n".join(lines) + "\n")
+        lines = [header]
+        for k in ks:
+            gid = "" if k % 3 == 0 else f"{k}|{k + 100}"
+            gname = "" if k % 3 == 0 else f"fam {k}|fam {k + 100}"
+            pm = f"{k}|{k + 1}" if k % 2 == 0 else ""
+            lines.append(
+                f"HGNC:{k}\tgene {k}\tprotein-coding gene\tSYM{k}\t1p{k}\t"
+                f"{gid}\t{gname}\t{pm}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "hgnc_v1", render)
     _, edges = hgnc_like(spark, path)
     return edges.select(
         "subject", "predicate", "object",
@@ -9434,21 +9180,23 @@ def mondo_properties_like_flags_q(spark, sf_dir):
     '_'), direct-superclass flag propagation."""
     from orion_spark.plans.parsers import mondo_properties_like
 
-    ks = _nation_keys(spark, sf_dir)
-    P = "http://purl.obolibrary.org/obo"
-    NIC = "http://example.org/normalizedInformationContent"
-    LBL = "http://www.w3.org/2000/01/rdf-schema#label"
-    SCO = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-    G = "<http://g>"
-    lines = []
-    for k in ks:
-        ic = "50.0" if k % 2 == 0 else "90.0"
-        lines.append(f'<{P}/MONDO_{5000 + k}> <{NIC}> "{ic}" {G} .')
-        lines.append(
-            f'<{P}/MONDO_{5000 + k}> <{LBL}> "disease group, {k}-x" {G} .'
-        )
-        lines.append(f"<{P}/MONDO_{6000 + k}> <{SCO}> <{P}/MONDO_{5000 + k}> {G} .")
-    path = _write_fixture_file("mondo_props_v1", sf_dir, "\n".join(lines) + "\n")
+    def render(ks):
+        P = "http://purl.obolibrary.org/obo"
+        NIC = "http://example.org/normalizedInformationContent"
+        LBL = "http://www.w3.org/2000/01/rdf-schema#label"
+        SCO = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
+        G = "<http://g>"
+        lines = []
+        for k in ks:
+            ic = "50.0" if k % 2 == 0 else "90.0"
+            lines.append(f'<{P}/MONDO_{5000 + k}> <{NIC}> "{ic}" {G} .')
+            lines.append(
+                f'<{P}/MONDO_{5000 + k}> <{LBL}> "disease group, {k}-x" {G} .'
+            )
+            lines.append(f"<{P}/MONDO_{6000 + k}> <{SCO}> <{P}/MONDO_{5000 + k}> {G} .")
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "mondo_props_v1", render)
     _, flags = mondo_properties_like(spark, path, ic_cutoff=70.0)
     return flags.select("id", "property_name")
 
@@ -9477,23 +9225,25 @@ def clingen_variant_pathogenicity_like_edges_q(spark, sf_dir):
     retracted rows (k%7==6) dropped via the unconnected gate."""
     from orion_spark.plans.parsers import clingen_variant_pathogenicity_like
 
-    ks = _nation_keys(spark, sf_dir)
-    asserts = [
-        "Pathogenic", "Likely Pathogenic", "Benign", "Likely Benign",
-        "Uncertain Significance", "Conflicting",
-    ]
-    header = (
-        "allele_registry_id\tmondo_id\tassertion\tretracted\tvariation\t"
-        "hgnc_gene_symbol"
-    )
-    lines = [header]
-    for k in ks:
-        retracted = "true" if k % 7 == 6 else "false"
-        lines.append(
-            f"CA{k}\tMONDO:{8000 + k}\t{asserts[k % 6]}\t{retracted}\t"
-            f"var {k}\tSYM{k}"
+    def render(ks):
+        asserts = [
+            "Pathogenic", "Likely Pathogenic", "Benign", "Likely Benign",
+            "Uncertain Significance", "Conflicting",
+        ]
+        header = (
+            "allele_registry_id\tmondo_id\tassertion\tretracted\tvariation\t"
+            "hgnc_gene_symbol"
         )
-    path = _write_fixture_file("clingen_vp_v1", sf_dir, "\n".join(lines) + "\n")
+        lines = [header]
+        for k in ks:
+            retracted = "true" if k % 7 == 6 else "false"
+            lines.append(
+                f"CA{k}\tMONDO:{8000 + k}\t{asserts[k % 6]}\t{retracted}\t"
+                f"var {k}\tSYM{k}"
+            )
+        return "\n".join(lines) + "\n"
+
+    path = _fixture(spark, sf_dir, "clingen_vp_v1", render)
     _, _, edges = clingen_variant_pathogenicity_like(spark, path)
     return edges.select(
         "subject", "predicate", "object", "assertion", "direction",
@@ -9522,14 +9272,20 @@ def scent_like_edges_q(spark, sf_dir):
     descriptor ids SCENT:-prefixed with spaces underscored."""
     from orion_spark.plans.parsers import scent_like
 
-    ks = _nation_keys(spark, sf_dir)
-    human = ["drug_id,predicate,verbal_scent"]
-    weighted = ["drug_id,predicate,verbal_scent,distance"]
-    for k in ks:
-        human.append(f"CHEBI:{k},biolink:related_to,sweet smell {k}")
-        weighted.append(f"CHEBI:{k},biolink:related_to,musky note {k},{0.1 * k}")
-    hp = _write_fixture_file("scent_human_v1", sf_dir, "\n".join(human) + "\n")
-    wp = _write_fixture_file("scent_weighted_v1", sf_dir, "\n".join(weighted) + "\n")
+    def human(ks):
+        lines = ["drug_id,predicate,verbal_scent"]
+        for k in ks:
+            lines.append(f"CHEBI:{k},biolink:related_to,sweet smell {k}")
+        return "\n".join(lines) + "\n"
+
+    def weighted(ks):
+        lines = ["drug_id,predicate,verbal_scent,distance"]
+        for k in ks:
+            lines.append(f"CHEBI:{k},biolink:related_to,musky note {k},{0.1 * k}")
+        return "\n".join(lines) + "\n"
+
+    hp = _fixture(spark, sf_dir, "scent_human_v1", human)
+    wp = _fixture(spark, sf_dir, "scent_weighted_v1", weighted)
     _, edges = scent_like(spark, hp, wp)
     return edges.select(
         "subject", "predicate", "object",
@@ -9557,21 +9313,27 @@ def molepro_like_edges_q(spark, sf_dir):
     properties pipe-split, empty cells nulled, unknown columns dropped."""
     from orion_spark.plans.parsers import molepro_like
 
-    ks = _nation_keys(spark, sf_dir)
-    nodes_lines = ["id\tname"]
-    edges_lines = [
-        "subject\tpredicate\tobject\tbiolink:publications\t"
-        "primary_knowledge_source\tjunk_column"
-    ]
-    for k in ks:
-        nodes_lines.append(f"CHEBI:{k}\tchem {k}")
-        pubs = "" if k % 3 == 0 else f"{'PMID:' + str(k)}|PMID:{k + 1}"
-        pks = "infores:molepro" if k % 2 == 0 else ""
-        edges_lines.append(
-            f"CHEBI:{k}\tbiolink:affects\tNCBIGene:{k}\t{pubs}\t{pks}\tignored"
-        )
-    np_ = _write_fixture_file("molepro_nodes_v1", sf_dir, "\n".join(nodes_lines) + "\n")
-    ep = _write_fixture_file("molepro_edges_v1", sf_dir, "\n".join(edges_lines) + "\n")
+    def node_file(ks):
+        nodes_lines = ["id\tname"]
+        for k in ks:
+            nodes_lines.append(f"CHEBI:{k}\tchem {k}")
+        return "\n".join(nodes_lines) + "\n"
+
+    def edge_file(ks):
+        edges_lines = [
+            "subject\tpredicate\tobject\tbiolink:publications\t"
+            "primary_knowledge_source\tjunk_column"
+        ]
+        for k in ks:
+            pubs = "" if k % 3 == 0 else f"{'PMID:' + str(k)}|PMID:{k + 1}"
+            pks = "infores:molepro" if k % 2 == 0 else ""
+            edges_lines.append(
+                f"CHEBI:{k}\tbiolink:affects\tNCBIGene:{k}\t{pubs}\t{pks}\tignored"
+            )
+        return "\n".join(edges_lines) + "\n"
+
+    np_ = _fixture(spark, sf_dir, "molepro_nodes_v1", node_file)
+    ep = _fixture(spark, sf_dir, "molepro_edges_v1", edge_file)
     _, edges = molepro_like(
         spark, np_, ep,
         node_properties=["id", "name"],
@@ -9638,41 +9400,49 @@ def gtopdb_like_edges_q(spark, sf_dir):
     has_part fan-out (k%4==0)."""
     from orion_spark.plans.parsers import gtopdb_like
 
-    ks = _nation_keys(spark, sf_dir)
-    inter = [
-        '"# GtoPdb interactions export"',
-        "ligand_id\tligand\ttype\ttarget_species\ttarget_ensembl_gene_id\t"
-        "target_gene_symbol\tprimary_target\taffinity_units\t"
-        "affinity_median\tendogenous\tpubmed_id\tligand_species\t"
-        "ligand_gene_symbol",
-    ]
-    for k in ks:
-        typ = ["Agonist", "Antagonist", "None"][k % 3]
-        med = "" if k % 4 == 1 else f"{5 + 0.1 * k}"
-        pm = "" if k % 5 == 0 else f"{k}|{k + 1}"
-        lig_sp = "Human" if k % 6 == 0 else "Mouse"
-        lig_sym = f"gs{k}" if k % 6 == 0 else ""
-        inter.append(
-            f"{k}\tligand {k}\t{typ}\tHuman\tENSG{k}|ENSG{k}b\t"
-            f"S{k}|S{k}B\t{'true' if k % 2 == 0 else 'false'}\tpKi\t{med}\t"
-            f"false\t{pm}\t{lig_sp}\t{lig_sym}"
-        )
-    peps = [
-        '"# GtoPdb peptides export"',
-        "ligand_id\tname\tspecies\tsubunit_ids\tsubunit_names",
-    ]
-    for k in ks:
-        if k % 4 == 0:
-            peps.append(
-                f"{9000 + k}\tpeptide {k}\tHuman\t{k}|{k + 1}\t"
-                f"sub {k}|sub {k + 1}"
+    def interactions(ks):
+        inter = [
+            '"# GtoPdb interactions export"',
+            "ligand_id\tligand\ttype\ttarget_species\ttarget_ensembl_gene_id\t"
+            "target_gene_symbol\tprimary_target\taffinity_units\t"
+            "affinity_median\tendogenous\tpubmed_id\tligand_species\t"
+            "ligand_gene_symbol",
+        ]
+        for k in ks:
+            typ = ["Agonist", "Antagonist", "None"][k % 3]
+            med = "" if k % 4 == 1 else f"{5 + 0.1 * k}"
+            pm = "" if k % 5 == 0 else f"{k}|{k + 1}"
+            lig_sp = "Human" if k % 6 == 0 else "Mouse"
+            lig_sym = f"gs{k}" if k % 6 == 0 else ""
+            inter.append(
+                f"{k}\tligand {k}\t{typ}\tHuman\tENSG{k}|ENSG{k}b\t"
+                f"S{k}|S{k}B\t{'true' if k % 2 == 0 else 'false'}\tpKi\t{med}\t"
+                f"false\t{pm}\t{lig_sp}\t{lig_sym}"
             )
-    gmap = ['"# HGNC mapping"', "hgnc_symbol\thgnc_id"]
-    for k in ks:
-        gmap.append(f"GS{k}\t{7000 + k}")
-    ip = _write_fixture_file("gtopdb_inter_v1", sf_dir, "\n".join(inter) + "\n")
-    pp = _write_fixture_file("gtopdb_pep_v1", sf_dir, "\n".join(peps) + "\n")
-    gp = _write_fixture_file("gtopdb_gmap_v1", sf_dir, "\n".join(gmap) + "\n")
+        return "\n".join(inter) + "\n"
+
+    def peptides(ks):
+        peps = [
+            '"# GtoPdb peptides export"',
+            "ligand_id\tname\tspecies\tsubunit_ids\tsubunit_names",
+        ]
+        for k in ks:
+            if k % 4 == 0:
+                peps.append(
+                    f"{9000 + k}\tpeptide {k}\tHuman\t{k}|{k + 1}\t"
+                    f"sub {k}|sub {k + 1}"
+                )
+        return "\n".join(peps) + "\n"
+
+    def gene_map(ks):
+        gmap = ['"# HGNC mapping"', "hgnc_symbol\thgnc_id"]
+        for k in ks:
+            gmap.append(f"GS{k}\t{7000 + k}")
+        return "\n".join(gmap) + "\n"
+
+    ip = _fixture(spark, sf_dir, "gtopdb_inter_v1", interactions)
+    pp = _fixture(spark, sf_dir, "gtopdb_pep_v1", peptides)
+    gp = _fixture(spark, sf_dir, "gtopdb_gmap_v1", gene_map)
     _, edges = gtopdb_like(spark, ip, pp, gp)
     return edges.select(
         "subject", "predicate", "object",
@@ -9724,37 +9494,41 @@ def litcoin_like_edges_q(spark, sf_dir):
 
     from orion_spark.plans.parsers import litcoin_like
 
-    ks = _nation_keys(spark, sf_dir)
-    rels = ["ASSOCIATION", "POSITIVE_REGULATION", "UNMAPPED_REL",
-            "NEGATIVE_REGULATION"]
-    rows = []
-    for k in ks:
-        bag_s = (
-            "NA" if k % 5 == 4
-            else json.dumps({f"CHEBI:{k}": {"name": f"chem {k}",
-                                            "synonym_type": "exact"}})
-        )
-        bag_o = json.dumps(
-            {f"MONDO:{k}": {"name": f"dis {k}", "synonym_type": "narrow"}}
-        )
-        row = {
-            "abstract_id": str(k), "abstract_span": "0-10",
-            "assertion_id": f"as{k}", "assertion_span": "2-8",
-            "subject": f"ent sub {k}", "subject_type": "chem",
-            "subject_qualifier": None,
-            "object": None if k % 6 == 5 else f"ent obj {k}",
-            "object_type": "disease", "object_qualifier": None,
-            "relationship": rels[k % 4], "statement_qualifier": None,
-            "bagelized_subject": bag_s, "bagelized_object": bag_o,
-        }
-        rows.append(json.dumps(row))
-    jl = _write_fixture_file("litcoin_llm_v1", sf_dir, "\n".join(rows) + "\n")
-    abstracts = {
-        str(k): {"pmid": str(k), "title": f"t{k}", "abstract": f"a{k}",
-                 "journal_name": f"j{k}"}
-        for k in ks
-    }
-    ap = _write_fixture_file("litcoin_abs_v1", sf_dir, json.dumps(abstracts))
+    def llm_rows(ks):
+        rels = ["ASSOCIATION", "POSITIVE_REGULATION", "UNMAPPED_REL",
+                "NEGATIVE_REGULATION"]
+        rows = []
+        for k in ks:
+            bag_s = (
+                "NA" if k % 5 == 4
+                else json.dumps({f"CHEBI:{k}": {"name": f"chem {k}",
+                                                "synonym_type": "exact"}})
+            )
+            bag_o = json.dumps(
+                {f"MONDO:{k}": {"name": f"dis {k}", "synonym_type": "narrow"}}
+            )
+            row = {
+                "abstract_id": str(k), "abstract_span": "0-10",
+                "assertion_id": f"as{k}", "assertion_span": "2-8",
+                "subject": f"ent sub {k}", "subject_type": "chem",
+                "subject_qualifier": None,
+                "object": None if k % 6 == 5 else f"ent obj {k}",
+                "object_type": "disease", "object_qualifier": None,
+                "relationship": rels[k % 4], "statement_qualifier": None,
+                "bagelized_subject": bag_s, "bagelized_object": bag_o,
+            }
+            rows.append(json.dumps(row))
+        return "\n".join(rows) + "\n"
+
+    def abstracts(ks):
+        return json.dumps({
+            str(k): {"pmid": str(k), "title": f"t{k}", "abstract": f"a{k}",
+                     "journal_name": f"j{k}"}
+            for k in ks
+        })
+
+    jl = _fixture(spark, sf_dir, "litcoin_llm_v1", llm_rows)
+    ap = _fixture(spark, sf_dir, "litcoin_abs_v1", abstracts)
     pred_map = spark.createDataFrame(
         [
             ("ASSOCIATION", "biolink:associated_with", False),
@@ -9855,31 +9629,35 @@ def ccidb_like_edges_q(spark, sf_dir):
     gene maps, k%5==0)."""
     from orion_spark.plans.parsers import ccidb_like
 
+    def render(ks):
+        header = (
+            "source_gene\ttarget_gene\tsource_cell\tliterature_source_cell\t"
+            "target_cell\tliterature_target_cell\teffector\t"
+            "effectors_function\tphenotype\tmode_of_action\tpmid"
+        )
+        lines = [header]
+        for k in ks:
+            s_gene = f"XX{k}" if k % 11 == 10 else f"SG{k}"
+            if k % 5 == 0:
+                eff, eff_fn = f"EFA{k},EFB{k}", "activation"
+            elif k % 5 == 1:
+                eff, eff_fn = f"EFA{k}", "activation,inhibition"
+            else:
+                eff, eff_fn = "", ""
+            mo = (
+                "a,b,c" if k % 7 == 6
+                else ("increased" if k % 2 == 0 else "increased,decreased")
+            )
+            lines.append(
+                f"{s_gene}\tTG{k}\tsrccell {k}\tlit src {k}\t"
+                f"tgtcell {k}\tlit tgt {k}\t{eff}\t{eff_fn}\t"
+                f"proliferation, migration\t{mo}\t{7000 + k}"
+            )
+        return "\n".join(lines) + "\n"
+
+    dp = _fixture(spark, sf_dir, "ccidb_v1", render)
+    # the two mapping dims are in-memory frames built from the keys
     ks = _nation_keys(spark, sf_dir)
-    header = (
-        "source_gene\ttarget_gene\tsource_cell\tliterature_source_cell\t"
-        "target_cell\tliterature_target_cell\teffector\t"
-        "effectors_function\tphenotype\tmode_of_action\tpmid"
-    )
-    lines = [header]
-    for k in ks:
-        s_gene = f"XX{k}" if k % 11 == 10 else f"SG{k}"
-        if k % 5 == 0:
-            eff, eff_fn = f"EFA{k},EFB{k}", "activation"
-        elif k % 5 == 1:
-            eff, eff_fn = f"EFA{k}", "activation,inhibition"
-        else:
-            eff, eff_fn = "", ""
-        mo = (
-            "a,b,c" if k % 7 == 6
-            else ("increased" if k % 2 == 0 else "increased,decreased")
-        )
-        lines.append(
-            f"{s_gene}\tTG{k}\tsrccell {k}\tlit src {k}\t"
-            f"tgtcell {k}\tlit tgt {k}\t{eff}\t{eff_fn}\t"
-            f"proliferation, migration\t{mo}\t{7000 + k}"
-        )
-    dp = _write_fixture_file("ccidb_v1", sf_dir, "\n".join(lines) + "\n")
     gene_rows = []
     for k in ks:
         gene_rows += [
@@ -9944,31 +9722,24 @@ def cfde_like_edges_q(spark, sf_dir):
     relations passing through."""
     from orion_spark.plans.parsers import cfde_like
 
-    ks = _nation_keys(spark, sf_dir)
-    nodes_lines = [",label,type,pid,sid"]
-    for k in ks:
-        label = "" if k % 9 == 8 else f"n {k}"
-        pid = "" if k % 4 == 0 else (
-            f"PUBCHEM:{k}" if k % 3 == 0 else f"ID:{k}"
-        )
-        nodes_lines.append(
-            f"orig{k},{label},biolink:Gene,{pid},SEC:{k}"
-        )
-    edges_lines = ["source,target,relation"]
-    for k in ks:
-        rel = "assoc" if k % 2 == 0 else "unknown_rel"
-        edges_lines.append(f"orig{k},orig{k},{rel}")
-    import os as _os
+    def render(ks):
+        nodes_lines = [",label,type,pid,sid"]
+        for k in ks:
+            label = "" if k % 9 == 8 else f"n {k}"
+            pid = "" if k % 4 == 0 else (
+                f"PUBCHEM:{k}" if k % 3 == 0 else f"ID:{k}"
+            )
+            nodes_lines.append(
+                f"orig{k},{label},biolink:Gene,{pid},SEC:{k}"
+            )
+        edges_lines = ["source,target,relation"]
+        for k in ks:
+            rel = "assoc" if k % 2 == 0 else "unknown_rel"
+            edges_lines.append(f"orig{k},orig{k},{rel}")
+        return ["\n".join(x) + "\n" for x in (nodes_lines, edges_lines)]
 
-    ddir = _os.path.join(_fixture_dir(), "cfde_v1_dir")
-    _os.makedirs(ddir, exist_ok=True)
-    for name, lines in [("nodes.csv", nodes_lines), ("edges.csv", edges_lines)]:
-        fp = _os.path.join(ddir, name)
-        if not _os.path.exists(fp):
-            tmp = fp + f".{_os.getpid()}.tmp"
-            with open(tmp, "w") as fh:
-                fh.write("\n".join(lines) + "\n")
-            _os.replace(tmp, fp)
+    nodes_p, _ = _fixture(spark, sf_dir, "cfde_v1_dir", render,
+                          ["nodes.csv", "edges.csv"])
     config = {
         "name": "lincs_like",
         "provenance_id": "infores:lincs",
@@ -9980,7 +9751,7 @@ def cfde_like_edges_q(spark, sf_dir):
         ],
         "edge_file": "edges.csv",
     }
-    _, edges = cfde_like(spark, config, ddir)
+    _, edges = cfde_like(spark, config, os.path.dirname(nodes_p))
     return edges.select(
         "subject", "predicate", "object", "primary_knowledge_source",
         "knowledge_level", "agent_type",
@@ -10000,14 +9771,10 @@ def documents_dsir_persisted_q(spark, sf_dir):
     on the corpus the model was fit on the two are exactly equal
     (pytest-pinned), so a hash-match here verifies the persisted
     artifact round-trip end-to-end."""
-    import os
-    import re as _re
-
     from orion_spark.llm.dsir import save_dsir_model, score_with_dsir_model
 
     docs = _t(spark, sf_dir, "documents")
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    path = os.path.join(_fixture_dir(), f"dsir_model_v1{slug}_{os.getpid()}")
+    path = _scratch_dir("dsir_model_v1", sf_dir)
     save_dsir_model(
         docs.where(F.col("source") == "src0"),
         docs.where(F.col("source") != "src0"),
@@ -10046,35 +9813,29 @@ def ohd_like_edges_q(spark, sf_dir):
     props (float p/log-odds, JSON CI list, int sample size), per-row
     primary source passthrough."""
     import io
-    import os
-    import re as _re
     import zipfile
 
     from orion_spark.plans.parsers import ohd_like
 
-    ks = _nation_keys(spark, sf_dir)
-    lines = [
-        "subject_id,subject_name,predicate,object_id,object_name,score,"
-        "chi_squared_p_value,log_odds_ratio,log_odds_ratio_95_ci,"
-        "total_sample_size,primary_knowledge_source"
-    ]
-    for k in ks:
-        lines.append(
-            f'SNOMEDCT:{k},cond {k},biolink:associated_with,'
-            f'LOINC:{300 + k},lab {k},s{k},{0.01 * k},{0.2 * k - 1},'
-            f'"[{0.2 * k - 1.1}, {0.2 * k - 0.9}]",{100 + k},'
-            f'infores:openhealthdata-carolina'
-        )
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    zpath = os.path.join(_fixture_dir(), f"ohd_v1{slug}.zip")
-    if not os.path.exists(zpath):
+    def ohd_zip(ks):
+        lines = [
+            "subject_id,subject_name,predicate,object_id,object_name,score,"
+            "chi_squared_p_value,log_odds_ratio,log_odds_ratio_95_ci,"
+            "total_sample_size,primary_knowledge_source"
+        ]
+        for k in ks:
+            lines.append(
+                f'SNOMEDCT:{k},cond {k},biolink:associated_with,'
+                f'LOINC:{300 + k},lab {k},s{k},{0.01 * k},{0.2 * k - 1},'
+                f'"[{0.2 * k - 1.1}, {0.2 * k - 0.9}]",{100 + k},'
+                f'infores:openhealthdata-carolina'
+            )
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w") as zf:
             zf.writestr("edges.csv", "\n".join(lines) + "\n")
-        tmp = zpath + f".{os.getpid()}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(buf.getvalue())
-        os.replace(tmp, zpath)
+        return buf.getvalue()
+
+    zpath = _fixture(spark, sf_dir, "ohd_v1.zip", ohd_zip)
     _, edges = ohd_like(spark, zpath)
     return edges.select(
         "subject", "predicate", "object",

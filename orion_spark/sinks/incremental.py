@@ -210,6 +210,25 @@ def _commit_staged(path: str, txid: str, shards: list[int]) -> None:
     shutil.rmtree(os.path.join(path, STAGING_DIR), ignore_errors=True)
 
 
+def _stage_and_commit(path: str, rows: DataFrame, shards: list[int]) -> None:
+    """Steps 2-4 of the commit protocol for the `shards` that `rows`
+    replace: write `rows` partitioned by `SHARD_COL` into a fresh staging
+    txid, publish the journal naming the txid and `shards` (tmp + rename:
+    the commit point), then swap the staged shards in. One write, no
+    other Spark action."""
+    txid = f"{os.getpid()}-{time.time_ns()}"
+    staging = os.path.join(path, STAGING_DIR, txid)
+    rows.write.mode("overwrite").partitionBy(SHARD_COL).parquet(staging)
+
+    journal = os.path.join(path, JOURNAL_NAME)
+    tmp = journal + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"txid": txid, "shards": shards}, fh)
+    os.rename(tmp, journal)  # <- the commit point
+
+    _commit_staged(path, txid, shards)
+
+
 def recover_sharded_bundle(path: str) -> str:
     """Repair a bundle after a crashed upsert. Returns what was done:
     'clean' (nothing to do), 'rolled_back' (staging discarded — the
@@ -285,18 +304,7 @@ def upsert_sharded_bundle(
         merged = merge(combined).withColumn(
             SHARD_COL, shard_of(key_cols, n_shards)
         )
-
-        txid = f"{os.getpid()}-{time.time_ns()}"
-        staging = os.path.join(path, STAGING_DIR, txid)
-        merged.write.mode("overwrite").partitionBy(SHARD_COL).parquet(staging)
-
-        journal = os.path.join(path, JOURNAL_NAME)
-        tmp = journal + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"txid": txid, "shards": touched}, fh)
-        os.rename(tmp, journal)  # <- the commit point
-
-        _commit_staged(path, txid, touched)
+        _stage_and_commit(path, merged, touched)
     return touched
 
 
@@ -380,16 +388,5 @@ def compact_sharded_bundle(
         frag.sort()
         merged = read_shards(spark, path, frag).repartition(
             len(frag), F.col(SHARD_COL))
-
-        txid = f"{os.getpid()}-{time.time_ns()}"
-        staging = os.path.join(path, STAGING_DIR, txid)
-        merged.write.mode("overwrite").partitionBy(SHARD_COL).parquet(staging)
-
-        journal = os.path.join(path, JOURNAL_NAME)
-        tmp = journal + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"txid": txid, "shards": frag}, fh)
-        os.rename(tmp, journal)
-
-        _commit_staged(path, txid, frag)
+        _stage_and_commit(path, merged, frag)
     return frag

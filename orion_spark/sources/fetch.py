@@ -84,15 +84,14 @@ def http_modified_version(url: str, exclude_day: bool = False) -> str:
         raise FetchError(f"modified-date probe failed for {url}: {exc}") from exc
 
 
-def fetch_http(
-    url: str, data_dir: str, saved_file_name: str | None = None
-) -> tuple[str, int]:
-    """Stream a URL into the landing zone (orion/utils.py:197-257).
-
-    Idempotent: an existing non-empty target is kept (returns 0 bytes
-    transferred). Atomic: data lands in ``<target>.part`` and is renamed
-    only on success. Returns (path, bytes_transferred).
-    """
+def _land(url: str, data_dir: str, saved_file_name: str | None,
+          open_url, what: str) -> tuple[str, int]:
+    """The one landing write of both HTTP pulls: an existing non-empty
+    target is kept (0 bytes transferred); otherwise the response of
+    ``open_url()`` streams into ``<target>.part``, which ``os.replace``
+    publishes only on success and which is removed on any failure.
+    A FetchError raised by ``open_url`` passes through; any other error
+    becomes ``FetchError("<what> failed ...")``. Returns (path, bytes)."""
     name = saved_file_name or url.rstrip("/").rsplit("/", 1)[-1]
     os.makedirs(data_dir, exist_ok=True)
     target = os.path.join(data_dir, name)
@@ -101,8 +100,7 @@ def fetch_http(
     part = target + ".part"
     n = 0
     try:
-        req = request.Request(url, headers=_HEADERS)
-        with request.urlopen(req, timeout=300) as resp, open(part, "wb") as out:
+        with open_url() as resp, open(part, "wb") as out:
             while True:
                 buf = resp.read(_BLOCK)
                 if not buf:
@@ -113,8 +111,25 @@ def fetch_http(
     except Exception as exc:
         if os.path.exists(part):
             os.remove(part)
-        raise FetchError(f"download failed for {url}: {exc}") from exc
+        if isinstance(exc, FetchError):
+            raise
+        raise FetchError(f"{what} failed for {url}: {exc}") from exc
     return target, n
+
+
+def fetch_http(
+    url: str, data_dir: str, saved_file_name: str | None = None
+) -> tuple[str, int]:
+    """Stream a URL into the landing zone (orion/utils.py:197-257).
+
+    Idempotent: an existing non-empty target is kept (returns 0 bytes
+    transferred). Atomic: data lands in ``<target>.part`` and is renamed
+    only on success. Returns (path, bytes_transferred).
+    """
+    def open_url():
+        return request.urlopen(request.Request(url, headers=_HEADERS), timeout=300)
+
+    return _land(url, data_dir, saved_file_name, open_url, "download")
 
 
 def fetch_http_session_gate(
@@ -137,42 +152,24 @@ def fetch_http_session_gate(
     import http.cookiejar
     from urllib.parse import urlencode
 
-    name = saved_file_name or url.rstrip("/").rsplit("/", 1)[-1]
-    os.makedirs(data_dir, exist_ok=True)
-    target = os.path.join(data_dir, name)
-    if os.path.exists(target) and os.path.getsize(target) > 0:
-        return target, 0
-    jar = http.cookiejar.CookieJar()
-    opener = request.build_opener(request.HTTPCookieProcessor(jar))
+    opener = request.build_opener(
+        request.HTTPCookieProcessor(http.cookiejar.CookieJar()))
     gate = gate_url + ("?" + urlencode(gate_params) if gate_params else "")
-    part = target + ".part"
-    n = 0
-    try:
+
+    def open_url():
         with opener.open(request.Request(gate, headers=_HEADERS), timeout=60):
             pass  # the visit only exists to collect session cookies
-        with opener.open(
-            request.Request(url, headers=_HEADERS), timeout=300
-        ) as resp, open(part, "wb") as out:
-            ctype = resp.headers.get("Content-Type")
-            if expected_content_type and ctype != expected_content_type:
-                raise FetchError(
-                    f"unexpected content type {ctype!r} retrieving {url} "
-                    f"(expected {expected_content_type!r})"
-                )
-            while True:
-                buf = resp.read(_BLOCK)
-                if not buf:
-                    break
-                out.write(buf)
-                n += len(buf)
-        os.replace(part, target)
-    except Exception as exc:
-        if os.path.exists(part):
-            os.remove(part)
-        if isinstance(exc, FetchError):
-            raise
-        raise FetchError(f"gated download failed for {url}: {exc}") from exc
-    return target, n
+        resp = opener.open(request.Request(url, headers=_HEADERS), timeout=300)
+        ctype = resp.headers.get("Content-Type")
+        if expected_content_type and ctype != expected_content_type:
+            resp.close()
+            raise FetchError(
+                f"unexpected content type {ctype!r} retrieving {url} "
+                f"(expected {expected_content_type!r})"
+            )
+        return resp
+
+    return _land(url, data_dir, saved_file_name, open_url, "gated download")
 
 
 def _safe_join(out_dir: str, member: str) -> str:

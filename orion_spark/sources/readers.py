@@ -205,6 +205,8 @@ def read_xml_records(
 
 
 VCF_COLUMNS = ["chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"]
+# the file write_vcf puts the ## header in, next to the data part files
+VCF_HEADER = "00_header.vcf"
 
 
 def read_vcf(spark: SparkSession, path: str) -> DataFrame:
@@ -230,7 +232,7 @@ def write_vcf(df: DataFrame, path: str, assembly: str = "GRCh38") -> None:
     import os
 
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "00_header.vcf"), "w") as fh:
+    with open(os.path.join(path, VCF_HEADER), "w") as fh:
         fh.write("##fileformat=VCFv4.2\n")
         fh.write(f"##reference={assembly}\n")
         fh.write("#" + "\t".join(c.upper() for c in VCF_COLUMNS) + "\n")

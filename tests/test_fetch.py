@@ -238,16 +238,16 @@ def _file_layer_calls(tree):
 
 def test_file_layer_calls_live_in_one_module_each():
     """Subprocesses run only through sinks/external.run_tool, and archives
-    are read only by sources/fetch.extract_archive. The fixture writers in
-    plans/queries.py open archives for writing."""
+    are read only by sources/fetch.extract_archive. Three fixture renders
+    in plans/queries.py open archives for writing."""
     allowed = {
         ("sinks/external.py", None, "import subprocess"),
         ("sinks/external.py", "run_tool", "subprocess.run"),
         ("sources/fetch.py", "extract_archive", "zipfile.ZipFile:r"),
         ("sources/fetch.py", "extract_archive", "tarfile.open:r"),
-        ("plans/queries.py", "_intact_fixture", "zipfile.ZipFile:w"),
-        ("plans/queries.py", "_monarch_fixture", "tarfile.open:w:gz"),
-        ("plans/queries.py", "ohd_like_edges_q", "zipfile.ZipFile:w"),
+        ("plans/queries.py", "intact_zip", "zipfile.ZipFile:w"),
+        ("plans/queries.py", "monarch_tarball", "tarfile.open:w:gz"),
+        ("plans/queries.py", "ohd_zip", "zipfile.ZipFile:w"),
     }
     found = {
         (path.relative_to(ENGINE).as_posix(), func, what)
@@ -273,6 +273,129 @@ def test_file_layer_guard_sees_each_form():
         ("f", "subprocess.check_output"), ("f", "zipfile.ZipFile:r"),
         ("f", "tarfile.open:w"), ("g", "zipfile.ZipFile:a"),
     ]
+
+
+def _fixture_layout_calls(tree):
+    """(enclosing function, what) of each `_fixture_dir()` call, each
+    `os.replace`/`os.rename` call and each nation-key collect
+    (`.select("n_nationkey").collect()`)."""
+    found = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name)
+                continue
+            f = child.func if isinstance(child, ast.Call) else None
+            if isinstance(f, ast.Name) and f.id == "_fixture_dir":
+                found.append((func, "_fixture_dir()"))
+            elif (isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                  and f.value.id == "os" and f.attr in ("replace", "rename")):
+                found.append((func, f"os.{f.attr}"))
+            elif (isinstance(f, ast.Attribute) and f.attr == "collect"
+                  and isinstance(f.value, ast.Call)
+                  and isinstance(f.value.func, ast.Attribute)
+                  and f.value.func.attr == "select"
+                  and [ast.dump(a) for a in f.value.args]
+                  == [ast.dump(ast.Constant("n_nationkey"))]):
+                found.append((func, "nation-key collect"))
+            visit(child, func)
+
+    visit(tree, None)
+    return found
+
+
+def test_fixture_layout_lives_in_the_stager():
+    """In plans/queries.py only `_fixture` and `_scratch_dir` know where
+    fixtures live, only `_nation_keys` collects the nation keys, and no
+    fixture publishes a file by hand: `_fixture` stages every file
+    through fetch.stage_file."""
+    tree = ast.parse((ENGINE / "plans" / "queries.py").read_text())
+    assert sorted(_fixture_layout_calls(tree)) == [
+        ("_fixture", "_fixture_dir()"),
+        ("_nation_keys", "nation-key collect"),
+        ("_scratch_dir", "_fixture_dir()"),
+    ]
+
+
+def test_fixture_layout_guard_sees_each_form():
+    src = (
+        "def f(spark):\n"
+        "    _fixture_dir()\n"
+        "    os.rename(a, b)\n"
+        "    def g():\n"
+        "        os.replace(a, b)\n"
+        "        return t.select('n_nationkey').collect()\n"
+    )
+    assert _fixture_layout_calls(ast.parse(src)) == [
+        ("f", "_fixture_dir()"), ("f", "os.rename"),
+        ("g", "os.replace"), ("g", "nation-key collect"),
+    ]
+
+
+def test_fixture_stages_once_per_nation_table(spark, tmp_path, monkeypatch):
+    """`queries._fixture` renders from the sorted nation keys; a cached
+    call starts no Spark job; a re-landed nation table (new mtime)
+    restages the file; a directory fixture returns its members' paths."""
+    from orion_spark.plans import queries as Q
+
+    monkeypatch.setattr(Q, "_fixture_dir", lambda: str(tmp_path / "fx"))
+    sf = tmp_path / "sf"
+    nation = sf / "nation.parquet"
+    spark.createDataFrame([(3,), (1,), (2,)], "n_nationkey long").coalesce(
+        1).write.parquet(str(nation))
+    renders = []
+
+    def render(ks):
+        renders.append(ks)
+        return "".join(f"{k}\n" for k in ks)
+
+    def staged(group, *args):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = Q._fixture(spark, str(sf), *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    path, _ = staged("fx-cold", "keys_v1.tsv", render)
+    assert path.startswith(str(tmp_path / "fx" / "keys_v1")) and path.endswith(".tsv")
+    assert open(path).read() == "1\n2\n3\n" and renders == [[1, 2, 3]]
+    assert staged("fx-cached", "keys_v1.tsv", render) == (path, 0)
+    assert len(renders) == 1
+    st = os.stat(nation)
+    os.utime(nation, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert staged("fx-relanded", "keys_v1.tsv", render)[0] == path
+    assert len(renders) == 2
+
+    (a, b), _ = staged("fx-dir", "pair_v1", lambda ks: [str(ks), b"\x00"],
+                       ["a.txt", "sub/b.bin"])
+    assert os.path.dirname(a) == os.path.dirname(os.path.dirname(b))
+    assert open(a).read() == "[1, 2, 3]" and open(b, "rb").read() == b"\x00"
+
+
+def test_scratch_dir_is_removed_at_exit(tmp_path):
+    """`queries._scratch_dir` creates a per-process directory, hands the
+    same one to every call in the process, and removes it at exit."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from orion_spark.plans import queries as Q\n"
+        f"Q._fixture_dir = lambda: {str(tmp_path)!r}\n"
+        "p = Q._scratch_dir('model_v1', '/data/sf1')\n"
+        "assert Q._scratch_dir('model_v1', '/data/sf1') == p\n"
+        "open(os.path.join(p, 'part-0'), 'w').close()\n"
+        "print(p)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], cwd=ENGINE.parent,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr
+    path = out.stdout.strip()
+    assert os.path.basename(path).startswith("model_v1_data_sf1_")
+    assert not os.path.exists(path) and os.listdir(tmp_path) == []
 
 
 def test_split_text_member(tmp_path):
