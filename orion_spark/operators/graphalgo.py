@@ -6,8 +6,9 @@ reusing the same nodes/edges data model).
 Scale design: each iteration is one broadcast-or-shuffle join plus one
 aggregate. Lineage follows one of two policies:
 
-- eager per round (`_rounds`: k-core, k-truss, label propagation, BFS,
-  connected components): every round's result is materialized with
+- eager per round (`eager_rounds`: k-core, k-truss, label propagation,
+  BFS, connected components, and the ChEBI role closure in
+  plans/parsers.py): every round's result is materialized with
   `localCheckpoint(eager=True)` before the next round reads it;
 - lazy (`pagerank`, `random_walks`): the rounds stay one plan, which the
   final action (or, for the walks, one checkpoint of the step union over
@@ -73,7 +74,7 @@ class NotConverged(RuntimeError):
     """An iterative operator reached its round cap before its fixed point."""
 
 
-def _rounds(
+def eager_rounds(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     n: int,
@@ -192,6 +193,30 @@ def pagerank_oracle_sql(
     """
 
 
+def _intersect(oriented: DataFrame) -> DataFrame:
+    """(src, dst, _common) per oriented edge: `_common` holds the nodes
+    both endpoints point at, so each triangle appears once, at its edge
+    between the two lowest endpoints of the order.
+
+    `oriented` holds unique (src, dst) edges under any strict total order
+    on the nodes. The plan is one groupBy building sorted out-neighbour
+    arrays and two equi-joins of the edges against them; the wedges are
+    enumerated inside array_intersect's hash probe and never become rows.
+    The adjacency side auto-broadcasts when its estimate fits and is a
+    shuffled join on the node key otherwise. An edge whose head points at
+    nothing closes no triangle and is dropped by the inner join."""
+    adj = oriented.groupBy("src").agg(
+        F.array_sort(F.collect_list("dst")).alias("_nbrs")
+    )
+    au = adj.select(F.col("src").alias("_u"), F.col("_nbrs").alias("_nu"))
+    av = adj.select(F.col("src").alias("_v"), F.col("_nbrs").alias("_nv"))
+    return (
+        oriented.join(au, F.col("src") == F.col("_u"))
+        .join(av, F.col("dst") == F.col("_v"))
+        .select("src", "dst", F.array_intersect("_nu", "_nv").alias("_common"))
+    )
+
+
 def triangle_count(pairs: DataFrame) -> DataFrame:
     """Global triangle count over an undirected edge list.
 
@@ -202,21 +227,7 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
     bounded (O(sqrt(|E|)) for any graph; hubs point only at higher-degree
     nodes) — the reason plain pair-joins die at scale and this does not.
 
-    Counting is ADJACENCY-INTERSECT (round 11, guide §2.3/§3): per
-    oriented edge (u, v), triangles through it = |N+(u) ∩ N+(v)|, so the
-    plan is one groupBy building sorted out-neighbor arrays (|V| rows,
-    |E| total elements) plus two equi-joins of the edge list against it
-    and a map-side array_intersect + sum. The previous wedge self-join
-    materialized and shuffled every path u->v->w — Σ_v in(v)·out(v) rows
-    (49.2M at sf0.1, 41× the 1.2M edges) — then hash-joined that against
-    the edge list; the intersect plan shuffles |E| + |V| rows total and
-    does the wedge enumeration inside array_intersect's hash probe,
-    never materializing a row per wedge. Measured at sf0.1: the count
-    phase fell 5.5 s -> 0.11 s, same 1,884,488 triangles; the orientation
-    prefix is unchanged. The adjacency side is a plain join (auto-
-    broadcast fires when the array table estimate fits; at cluster scale
-    it degrades to a shuffled equi-join on the node key, AQE-splittable,
-    with per-row arrays bounded by the orientation).
+    Counts with `_intersect`; plan history in OPTIMIZATION_r11.md.
 
     Returns one row: n_nodes, n_edges, n_triangles.
     """
@@ -247,17 +258,9 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
     ).localCheckpoint(eager=True)
-    adj = oriented.groupBy("src").agg(
-        F.array_sort(F.collect_list("dst")).alias("_nbrs")
-    )
-    au = adj.select(F.col("src").alias("_u"), F.col("_nbrs").alias("_nu"))
-    av = adj.select(F.col("src").alias("_v"), F.col("_nbrs").alias("_nv"))
     n_tri = (
-        oriented.join(au, F.col("src") == F.col("_u"))
-        # inner join: an edge whose head has no out-neighbors contributes
-        # zero triangles, so dropping it is exact
-        .join(av, F.col("dst") == F.col("_v"))
-        .select(F.size(F.array_intersect("_nu", "_nv")).alias("_c"))
+        _intersect(oriented)
+        .select(F.size("_common").alias("_c"))
         .agg(
             F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint").alias("n_triangles")
         )
@@ -265,28 +268,36 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
     return stats.crossJoin(n_tri)
 
 
-def triangle_count_oracle_sql(pairs_cte: str) -> str:
-    """DuckDB oracle: identical degree-oriented count. `pairs_cte` must
-    define a CTE named `pairs` with unique undirected (a, b), a < b."""
+def _triangle_ctes(src: str) -> str:
+    """Oracle CTEs `deg`, `oriented` and `tri` (one row, n_triangles): the
+    degree-oriented triangle count of CTE `src`, which holds unique
+    undirected (a, b), a < b. A three-way join of the oriented edges,
+    independent of the engine's adjacency intersect."""
     return f"""
-    WITH {pairs_cte},
     deg AS (
         SELECT node, COUNT(*) AS deg FROM (
-            SELECT a AS node FROM pairs UNION ALL SELECT b FROM pairs)
+            SELECT a AS node FROM {src} UNION ALL SELECT b FROM {src})
         GROUP BY node),
     oriented AS (
         SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
                     THEN p.a ELSE p.b END AS src,
                CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
                     THEN p.b ELSE p.a END AS dst
-        FROM pairs p
+        FROM {src} p
         JOIN deg da ON p.a = da.node
         JOIN deg db ON p.b = db.node),
     tri AS (
         SELECT COUNT(*) AS n_triangles
         FROM oriented e1
         JOIN oriented e2 ON e1.dst = e2.src
-        JOIN oriented e3 ON e3.src = e1.src AND e3.dst = e2.dst)
+        JOIN oriented e3 ON e3.src = e1.src AND e3.dst = e2.dst)"""
+
+
+def triangle_count_oracle_sql(pairs_cte: str) -> str:
+    """DuckDB oracle: identical degree-oriented count. `pairs_cte` must
+    define a CTE named `pairs` with unique undirected (a, b), a < b."""
+    return f"""
+    WITH {pairs_cte},{_triangle_ctes("pairs")}
     SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
            (SELECT COUNT(*) FROM pairs) AS n_edges,
            (SELECT n_triangles FROM tri) AS n_triangles
@@ -374,24 +385,7 @@ def triangle_count_sampled_oracle_sql(
         SELECT a, b FROM pairs
         WHERE ('0x' || substr(md5('{salt}' || '|' || CAST(a AS VARCHAR)
                                   || '|' || CAST(b AS VARCHAR)), 1, 8))::BIGINT
-              % {denom} < {keep}),
-    deg AS (
-        SELECT node, COUNT(*) AS deg FROM (
-            SELECT a AS node FROM spairs UNION ALL SELECT b FROM spairs)
-        GROUP BY node),
-    oriented AS (
-        SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
-                    THEN p.a ELSE p.b END AS src,
-               CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
-                    THEN p.b ELSE p.a END AS dst
-        FROM spairs p
-        JOIN deg da ON p.a = da.node
-        JOIN deg db ON p.b = db.node),
-    tri AS (
-        SELECT COUNT(*) AS n_triangles
-        FROM oriented e1
-        JOIN oriented e2 ON e1.dst = e2.src
-        JOIN oriented e3 ON e3.src = e1.src AND e3.dst = e2.dst)
+              % {denom} < {keep}),{_triangle_ctes("spairs")}
     SELECT (SELECT COUNT(*) FROM pairs) AS n_edges_total,
            (SELECT COUNT(*) FROM spairs) AS n_edges_sampled,
            (SELECT n_triangles FROM tri) AS n_triangles_sampled,
@@ -449,8 +443,8 @@ def kcore_prune(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     Scale design: one round = one degree aggregate plus two left-semi
     joins, all keyed on node ids — no row ever carries more than (a, b).
     The edge set shrinks monotonically and each round is materialized
-    (`_rounds`). Extension surface: the reference computes degree-style
-    aggregates only (orion/answercoalesce_build.py:100-165).
+    (`eager_rounds`). Extension surface: the reference computes
+    degree-style aggregates only (orion/answercoalesce_build.py:100-165).
     """
 
     def peel(e: DataFrame) -> DataFrame:
@@ -459,7 +453,9 @@ def kcore_prune(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
             keep, F.col("b") == keep["node"], "left_semi"
         )
 
-    e = _rounds(pairs.select("a", "b").localCheckpoint(eager=True), peel, rounds)
+    e = eager_rounds(
+        pairs.select("a", "b").localCheckpoint(eager=True), peel, rounds
+    )
     return node_degrees(e).withColumnRenamed("deg", "degree")
 
 
@@ -567,7 +563,7 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
             "id", F.col("_hl").alias("label")
         )
 
-    return _rounds(
+    return eager_rounds(
         _own_labels(sym), step, CC_MAX_ROUNDS,
         probe=F.sum(F.col("label").cast("decimal(38,0)")),
     )
@@ -582,7 +578,7 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
     round count is the bounded-cost variant (k rounds = k shuffles).
 
     `edges` needs src/dst columns; the graph is treated as undirected.
-    Returns (id, label) after `iterations` rounds (`_rounds`).
+    Returns (id, label) after `iterations` rounds (`eager_rounds`).
     """
     # checkpoint the caller's edges once: it cuts their derivation (for
     # the KGX graph, all_edges and its lineitem dropDuplicates exchange)
@@ -610,7 +606,7 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
         # before returning — no session-lifetime storage pin.
         .persist()
     )
-    labels = _rounds(
+    labels = eager_rounds(
         _own_labels(sym), lambda lab: _neighbour_min(sym, lab), iterations
     )
     sym.unpersist()
@@ -653,7 +649,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> Data
     are min-combined per round, so revisiting a node through a longer
     path never raises its distance. The symmetrized edge list is
     persisted pre-partitioned on the join key (shuffled once, reused
-    every round); the rounds are eager (`_rounds`).
+    every round); the rounds are eager (`eager_rounds`).
     """
     sym = (
         undirected(edges, "src", "dst", "a", "b")
@@ -673,7 +669,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> Data
         return dist.unionAll(expanded).groupBy("id").agg(F.min("dist").alias("dist"))
 
     dist0 = seeds.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
-    dist = _rounds(dist0, hop, max_hops)
+    dist = eager_rounds(dist0, hop, max_hops)
     sym.unpersist()
     return dist
 
@@ -712,38 +708,37 @@ def ktruss_prune(pairs: DataFrame, k: int = 3, rounds: int = 2) -> DataFrame:
     edges (a, b), a < b. Returns the surviving edges with their support
     in the surviving subgraph.
 
-    Scale design: the support join is the standard symmetrized
-    common-neighbor equi-join (the same shape as triangle counting —
-    shuffle on the shared-neighbor key, then one aggregate per unordered
-    pair); the edge set shrinks monotonically and each round is
-    materialized (`_rounds`). Completes the cohesive-subgraph family next
-    to kcore_prune. Extension surface: the reference computes
+    Scale design: support reads `_intersect` over the edges in their
+    a < b order, so each triangle is found once and credited to its three
+    edges; the edge set shrinks monotonically and each round is
+    materialized (`eager_rounds`). Completes the cohesive-subgraph family
+    next to kcore_prune. Extension surface: the reference computes
     degree-style aggregates only (orion/answercoalesce_build.py:100-165)."""
 
+    def edge(u: str, v: str) -> Column:
+        return F.struct(F.col(u).alias("u"), F.col(v).alias("v"))
+
     def support(e: DataFrame) -> DataFrame:
-        sym = undirected(e, "a", "b", "src", "dst")
-        s1 = sym.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-        s2 = sym.select(F.col("src").alias("v"), F.col("dst").alias("w2"))
-        # common neighbor w of the unordered pair (u, v), u < v
-        cn = s1.join(s2, (F.col("w") == F.col("w2")) & (F.col("u") < F.col("v")))
-        counts = cn.groupBy("u", "v").agg(F.count("*").alias("support"))
-        # only pairs that ARE edges carry truss support
-        return (
-            e.join(
-                counts,
-                (e["a"] == counts["u"]) & (e["b"] == counts["v"]),
-                "left",
-            )
-            .select(
-                "a",
-                "b",
-                F.coalesce(F.col("support"), F.lit(0)).cast("bigint").alias(
-                    "support"
-                ),
-            )
+        tri = _intersect(
+            e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        ).select("src", "dst", F.explode("_common").alias("w"))
+        # the triangle src < dst < w credits each of its three edges
+        counts = (
+            tri.select(F.explode(F.array(
+                edge("src", "dst"), edge("src", "w"), edge("dst", "w")
+            )).alias("_e"))
+            .groupBy("_e.u", "_e.v")
+            .agg(F.count("*").alias("support"))
+        )
+        return e.join(
+            counts, (e["a"] == counts["u"]) & (e["b"] == counts["v"]), "left"
+        ).select(
+            "a",
+            "b",
+            F.coalesce(F.col("support"), F.lit(0)).cast("bigint").alias("support"),
         )
 
-    e = _rounds(
+    e = eager_rounds(
         pairs.select("a", "b").localCheckpoint(eager=True),
         lambda e: support(e).where(F.col("support") >= k - 2).select("a", "b"),
         rounds,

@@ -33,6 +33,7 @@ from orion_spark.operators.extract import (
     hgvs_from_coords,
     predicate_remap,
 )
+from orion_spark.operators.graphalgo import eager_rounds
 from orion_spark.operators.merge import edge_endpoints
 from orion_spark.sources.fetch import (
     FetchError,
@@ -2269,14 +2270,16 @@ def pharos_like(
 # The reference loads relation.tsv into driver dicts and recurses from the
 # role root to accumulate each role's ancestors (loadChebiProperties.py:
 # 146-160), then flags compounds with CHEBI_ROLE_* boolean properties.
-# Here the closure is an iterative frontier join over the is_a edges
-# restricted to the role subtree — O(depth) bounded rounds with lineage
-# truncation — and the compound->role fan-out is one join + optional
+# Here the closure grows over the is_a edges of the role subtree, one
+# level per eager round (graphalgo.eager_rounds) until its pair count stops
+# changing, and the compound->role fan-out is one join + optional
 # pivot. At 100 TB the role hierarchy is a tiny dimension (closure cost
 # ~0); the compound side joins it broadcast and never shuffles.
 # ---------------------------------------------------------------------------
 
 CHEBI_ROLE_ROOT = "CHEBI:50906"
+# closure rounds: one per level below the root's children, one to confirm
+CHEBI_ROLE_MAX_DEPTH = 64
 CHEBI_ROLES_TO_IGNORE = [
     "CHEBI:50906",  # role
     "CHEBI:24432",  # biological role
@@ -2298,37 +2301,29 @@ def chebi_fixname(name: Column) -> Column:
 
 
 def chebi_role_ancestors(is_a: DataFrame) -> DataFrame:
-    """(node, anc) pairs for every role reachable from the role root,
+    """(child, anc) pairs for every role reachable from the role root,
     anc ranging over all proper ancestors up to and including the root —
     the closure update_ancestors builds recursively
-    (loadChebiProperties.py:146-153). `is_a` has columns (child, parent)."""
+    (loadChebiProperties.py:146-153). `is_a` has columns (child, parent).
+    A hierarchy deeper than `CHEBI_ROLE_MAX_DEPTH` raises
+    graphalgo.NotConverged."""
     edges = is_a.select("child", "parent")
-    # frontier: nodes whose full ancestor set became final last round
-    closure = (
-        edges.where(F.col("parent") == CHEBI_ROLE_ROOT)
-        .select("child", F.col("parent").alias("anc"))
-        .localCheckpoint()
+
+    def step(closure: DataFrame) -> DataFrame:
+        # kids of a closed role inherit it and each of its ancestors
+        up = edges.join(
+            closure.select(F.col("child").alias("parent"), "anc"), "parent"
+        ).select("child", F.explode(F.array("parent", "anc")).alias("anc"))
+        return closure.unionByName(up).distinct()
+
+    return eager_rounds(
+        edges.where(F.col("parent") == CHEBI_ROLE_ROOT).select(
+            "child", F.col("parent").alias("anc")
+        ),
+        step,
+        CHEBI_ROLE_MAX_DEPTH,
+        probe=F.count(F.lit(1)),
     )
-    frontier = closure.select("child", "anc")
-    while True:
-        # kids of the frontier inherit (parent) + (parent's ancestors)
-        step = edges.join(
-            frontier.select(
-                F.col("child").alias("parent"), F.col("anc").alias("_panc")
-            ).distinct(),
-            "parent",
-        )
-        new_pairs = (
-            step.select("child", F.col("parent").alias("anc"))
-            .unionByName(step.select("child", F.col("_panc").alias("anc")))
-            .distinct()
-            .exceptAll(closure)
-            .localCheckpoint()
-        )
-        if new_pairs.isEmpty():
-            return closure.distinct()
-        closure = closure.unionByName(new_pairs).localCheckpoint()
-        frontier = new_pairs
 
 
 def chebi_like(
@@ -2343,17 +2338,17 @@ def chebi_like(
     nodes is the KGX frame: pivot=False keeps the flag list as an
     array<string> property; pivot=True produces the reference's wide
     boolean columns (dimension-side pivot — distinct role vocabulary)."""
-    compounds = read_tabular(spark, compounds_path).select(
+    compounds = read_tabular(spark, compounds_path, infer_schema=False).select(
         F.col("chebi_accession").alias("id"), F.col("ascii_name").alias("name")
     )
-    relation = read_tabular(spark, relation_path)
+    relation = read_tabular(spark, relation_path, infer_schema=False)
     # relation.tsv triple is (final)-[type]->(init); 4=has_role, 5=is_a
     # (loadChebiProperties.py:12-14, 160-175)
     curie = lambda c: F.concat(F.lit("CHEBI:"), F.col(c))  # noqa: E731
-    has_role = relation.where(F.col("type_id") == 4).select(
+    has_role = relation.where(F.col("type_id") == "4").select(
         curie("final_id").alias("id"), curie("init_id").alias("role")
     )
-    is_a = relation.where(F.col("type_id") == 5).select(
+    is_a = relation.where(F.col("type_id") == "5").select(
         curie("final_id").alias("child"), curie("init_id").alias("parent")
     )
     anc = chebi_role_ancestors(is_a)
@@ -4779,20 +4774,21 @@ def foodb_like(
     first, SMILES second, else the row is skipped (loadFDB.py:230-259).
     One RO:0001019 edge per content row with ascii-scrubbed unit and
     orig_max amount ('' when absent)."""
-    food = read_tabular(spark, food_path, sep=",").select(
+    food = read_tabular(spark, food_path, sep=",", infer_schema=False).select(
         F.col("id").alias("_food_id"),
         F.coalesce(F.col("name_scientific"), F.col("name")).alias("_food_name"),
         F.col("ncbi_taxonomy_id").cast("long").alias("_taxon"),
     ).where(
         F.col("_taxon").isNotNull() & F.col("_food_name").isNotNull()
     )
+    # inferred: `amount` prints orig_max as the number it parses to
     content = read_tabular(spark, content_path, sep=",").select(
-        F.col("food_id").alias("_c_food"),
-        F.col("source_id").alias("_c_source"),
+        F.col("food_id").cast("string").alias("_c_food"),
+        F.col("source_id").cast("string").alias("_c_source"),
         F.col("orig_unit").alias("_unit"),
         F.col("orig_max").alias("_amount"),
     )
-    compound = read_tabular(spark, compound_path, sep=",").select(
+    compound = read_tabular(spark, compound_path, sep=",", infer_schema=False).select(
         F.col("id").alias("_cm_id"),
         F.col("name").alias("_cm_name"),
         F.col("moldb_inchikey").alias("_inchikey"),
@@ -5091,7 +5087,7 @@ def sgd_like(
         ).where(F.col("id").isNotNull()).dropDuplicates(["id"])
 
     # --- gene nodes (SGDAllGenes.csv) ---
-    genes_raw = read_tabular(spark, genes_path, sep=",")
+    genes_raw = read_tabular(spark, genes_path, sep=",", infer_schema=False)
     g = _pos(genes_raw)
     gene_nodes = node_frame(
         genes_raw,
@@ -5113,7 +5109,7 @@ def sgd_like(
     )
 
     # --- gene -> GO term ---
-    go_raw = read_tabular(spark, gene2go_path, sep=",")
+    go_raw = read_tabular(spark, gene2go_path, sep=",", infer_schema=False)
     c = _pos(go_raw)
     qualifier = c(9)
     go_predicate = qualifier
@@ -5127,7 +5123,7 @@ def sgd_like(
     go_nodes = node_frame(go_raw, c(5), c(6), [], {})
 
     # --- gene -> pathway ---
-    pw_raw = read_tabular(spark, gene2pathway_path, sep=",")
+    pw_raw = read_tabular(spark, gene2pathway_path, sep=",", infer_schema=False)
     p = _pos(pw_raw)
     gene_pathway_edges = edges_of(
         pw_raw, p(0), F.lit("biolink:participates_in"), p(2), empty_pubs, {},
@@ -5141,7 +5137,7 @@ def sgd_like(
     )
 
     # --- gene -> phenotype ---
-    ph_raw = read_tabular(spark, gene2phenotype_path, sep=",")
+    ph_raw = read_tabular(spark, gene2phenotype_path, sep=",", infer_schema=False)
     h = _pos(ph_raw)
     phen_id = F.replace(h(18), F.lit(" "), F.lit("_"))
     gene_phenotype_edges = edges_of(
@@ -5159,7 +5155,7 @@ def sgd_like(
     )
 
     # --- gene -> complex ---
-    cx_raw = read_tabular(spark, gene2complex_path, sep=",")
+    cx_raw = read_tabular(spark, gene2complex_path, sep=",", infer_schema=False)
     x = _pos(cx_raw)
     cpx_id = F.concat(F.lit("CPX:"), x(10))
     gene_complex_edges = edges_of(
@@ -5177,7 +5173,7 @@ def sgd_like(
     )
 
     # --- complex -> GO term ---
-    cg_raw = read_tabular(spark, complex2go_path, sep=",")
+    cg_raw = read_tabular(spark, complex2go_path, sep=",", infer_schema=False)
     q = _pos(cg_raw)
     complex_go_edges = edges_of(
         cg_raw, F.concat(F.lit("CPX:"), q(0)), q(3), q(1), empty_pubs, {},

@@ -4977,11 +4977,11 @@ def graph_kcore_q(spark, sf_dir):
 def graph_ktruss_q(spark, sf_dir):
     """Bounded 3-truss peeling on the same sparsified co-occurrence
     graph as graph_kcore: two rounds of per-edge support (common-
-    neighbor count, the triangle-join shape) with support >= 1 kept,
-    then the final support panel. Completes the cohesive-subgraph
-    family (k-core peels nodes by degree; k-truss peels edges by
-    triangle support). Oracle unrolls identical rounds as chained
-    CTEs."""
+    neighbor count, read from triangle_count's adjacency intersect)
+    with support >= 1 kept, then the final support panel. Completes
+    the cohesive-subgraph family (k-core peels nodes by degree; k-truss
+    peels edges by triangle support). Oracle unrolls identical rounds
+    as chained CTEs."""
     return ktruss_prune(_part_pairs(spark, sf_dir, min_quantity=45), k=3, rounds=2)
 
 

@@ -2,6 +2,7 @@
 
 import ast
 import pathlib
+import re
 import uuid
 from collections import Counter
 
@@ -225,6 +226,74 @@ def test_ktruss_peels_tail_edges(spark):
 
     t4 = {(r.a, r.b): r.support for r in ktruss_prune(pairs, k=4, rounds=2).collect()}
     assert set(t4) == set(k4)
+
+
+@pytest.mark.parametrize("k", [3, 4])
+@pytest.mark.parametrize("rounds", [1, 2, 3])
+def test_ktruss_matches_duckdb_on_a_hub_graph(spark, k, rounds):
+    """Seeded random graph on 40 nodes whose hub 0 touches most of them:
+    the surviving edges and their support equal the oracle's wedge
+    self-join, round for round."""
+    import random
+
+    import duckdb
+
+    from orion_spark.operators.graphalgo import ktruss_oracle_sql, ktruss_prune
+
+    rng = random.Random(13)
+    edges = sorted(
+        {(0, b) for b in range(1, 40) if rng.random() < 0.8}
+        | {(a, b) for a in range(1, 40) for b in range(a + 1, 40)
+           if rng.random() < 0.12}
+    )
+    pairs = spark.createDataFrame(edges, "a bigint, b bigint")
+    got = sorted(tuple(r) for r in ktruss_prune(pairs, k=k, rounds=rounds).collect())
+    con = duckdb.connect()
+    con.register("edge_fixture", pairs.toPandas())
+    want = sorted(
+        (int(a), int(b), int(s))
+        for a, b, s in con.sql(ktruss_oracle_sql(
+            "pairs AS (SELECT a, b FROM edge_fixture)", k=k, rounds=rounds
+        )).fetchall()
+    )
+    assert got == want and got
+
+
+def _neighbour_joins(plan: str) -> list[tuple[str, str]]:
+    """Equi-join key pairs of an optimized plan whose two sides are both
+    neighbour columns: the far endpoint of a directed edge (`dst`) or a
+    rename of one (`w`, `w2`), the key of a wedge self-join."""
+    neighbour = {"dst", "w", "w2"}
+    found = []
+    for line in plan.splitlines():
+        if "Join " not in line:
+            continue
+        for x, y in re.findall(r"\b(\w+)#\d+L? = (\w+)#\d+L?", line):
+            if x in neighbour and y in neighbour:
+                found.append((x, y))
+    return found
+
+
+def test_ktruss_support_reads_the_adjacency_intersect(spark):
+    """k-truss support intersects sorted out-neighbour arrays; no round
+    enumerates wedges with a self-join on the shared neighbour."""
+    from orion_spark.operators.graphalgo import ktruss_prune, undirected
+
+    pairs = _k4_pendant(spark)
+    plan = ktruss_prune(pairs, k=3, rounds=1)._jdf.queryExecution()
+    text = plan.optimizedPlan().toString()
+    assert "array_intersect" in text
+    assert _neighbour_joins(text) == []
+
+    # the guard sees the wedge self-join that support used to run
+    sym = undirected(pairs, "a", "b", "src", "dst")
+    wedges = sym.select(F.col("src").alias("u"), F.col("dst").alias("w")).join(
+        sym.select(F.col("src").alias("v"), F.col("dst").alias("w2")),
+        (F.col("w") == F.col("w2")) & (F.col("u") < F.col("v")),
+    )
+    assert _neighbour_joins(
+        wedges._jdf.queryExecution().optimizedPlan().toString()
+    ) == [("w", "w2")]
 
 
 def test_no_cache_pinned_after_multi_branch_ops(spark):
@@ -624,15 +693,13 @@ def _loop_materializations(tree):
 
 def test_per_round_materialization_lives_in_the_round_driver():
     """Across the whole engine, eager per-round truncation is decided in
-    `_rounds`. The other materializations inside a loop are listed here:
-    random_walks' lazy per-step persist (graphalgo's docstring names both
-    policies), the BPE merge loop and the ChEBI semi-naive closure (a
-    frontier plus a growing union: not one state replaced per round)."""
+    `eager_rounds`. The other materializations inside a loop are listed
+    here: random_walks' lazy per-step persist (graphalgo's docstring names
+    both policies) and the BPE merge loop."""
     allowed = {
-        ("operators/graphalgo.py", "_rounds", "localCheckpoint"),
+        ("operators/graphalgo.py", "eager_rounds", "localCheckpoint"),
         ("operators/graphalgo.py", "random_walks", "persist"),
         ("llm/textstats.py", "_bpe_learn", "localCheckpoint"),
-        ("plans/parsers.py", "chebi_role_ancestors", "localCheckpoint"),
     }
     found = {
         (path.relative_to(ENGINE).as_posix(), func, method)

@@ -5,6 +5,8 @@ import glob
 import json
 import os
 
+import pytest
+
 from orion_spark.plans import parsers as PP
 
 CTD_TSV = """\
@@ -976,11 +978,11 @@ def test_pharos_like_jdbc_end_to_end(spark, tmp_path):
     assert "UMLS:C0006142" in n
 
 
-def test_chebi_like_role_closure(spark, tmp_path):
+def test_chebi_like_role_closure(spark, tmp_path, monkeypatch):
     """loadChebiProperties.py semantics: swapped relation columns, role
     ancestor closure from the root (multi-parent dedupe), ignore-list
     filtering, orphan roles, fixname formatting, roleless-compound skip,
-    and the pivoted wide variant."""
+    the pivoted wide variant, and the closure's round cap."""
     (tmp_path / "compounds.tsv").write_text(
         "chebi_accession\tascii_name\n"
         "CHEBI:50906\trole\n"
@@ -1031,6 +1033,26 @@ def test_chebi_like_role_closure(spark, tmp_path):
     w = {r.id: r for r in wide.collect()}
     assert w["CHEBI:101"].CHEBI_ROLE_antibacterial_agent is True
     assert w["CHEBI:102"].CHEBI_ROLE_antibacterial_agent is None
+
+    # the closure alone: a diamond (D1 -> D2, D3 -> D4) and a three-level
+    # chain (C1 -> C2 -> C3) under the root, plus a chain off the root
+    root = PP.CHEBI_ROLE_ROOT
+    is_a = spark.createDataFrame(
+        [("D1", root), ("D2", "D1"), ("D3", "D1"), ("D4", "D2"), ("D4", "D3"),
+         ("C1", root), ("C2", "C1"), ("C3", "C2"), ("X2", "X1")],
+        "child string, parent string",
+    )
+    up = {"D1": [root], "D2": ["D1", root], "D3": ["D1", root],
+          "D4": ["D2", "D3", "D1", root], "C1": [root], "C2": ["C1", root],
+          "C3": ["C2", "C1", root]}
+    got = [tuple(r) for r in PP.chebi_role_ancestors(is_a).collect()]
+    assert sorted(got) == sorted((c, a) for c, ancs in up.items() for a in ancs)
+
+    from orion_spark.operators.graphalgo import NotConverged
+
+    monkeypatch.setattr(PP, "CHEBI_ROLE_MAX_DEPTH", 2)
+    with pytest.raises(NotConverged):
+        PP.chebi_role_ancestors(is_a)
 
 
 def _signor_row(**kw):
