@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orion_spark.llm.dedup import MINHASH_P, _hash_params
+from orion_spark.llm.dedup import family_positions, family_positions_sql
 from orion_spark.sources.kgx import read_parquet
 
 _WORD = 32  # bits per stored word
@@ -46,23 +46,6 @@ def _bit_mask(pos: Column) -> Column:
     2.0**n is integer-exact in a double for n <= 31, and the bigint cast
     recovers it losslessly."""
     return F.pow(F.lit(2.0), (pos % _WORD).cast("int")).cast("bigint")
-
-
-def _base_hash(key: Column) -> Column:
-    """32-bit md5-prefix base hash reduced mod P (same bridge the minhash
-    family uses; DuckDB reproduces it with ('0x'||substr(md5(k),1,8))::BIGINT)."""
-    return (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % MINHASH_P
-    )
-
-
-def bloom_positions(key: Column, m_bits: int, k: int) -> Column:
-    """Array of k bit positions in [0, m_bits) for a key, via the shared
-    universal-hash family over the md5-prefix base hash."""
-    x = _base_hash(key)
-    return F.array(
-        *[((F.lit(a) * x + F.lit(b)) % MINHASH_P) % m_bits for a, b in _hash_params(k)]
-    )
 
 
 def bloom_build(
@@ -77,7 +60,7 @@ def bloom_build(
     Output: (word_idx int, bits bigint), bits holding a 32-bit word.
     Incremental add = bloom_build(new) unioned with the old bitmap and
     re-aggregated with the same groupBy/bit_or (see bloom_merge)."""
-    pos = F.explode(bloom_positions(F.col(key_col), m_bits, k)).alias("pos")
+    pos = F.explode(family_positions(F.col(key_col), k, m_bits)).alias("pos")
     return (
         df.select(pos)
         .select(
@@ -139,7 +122,7 @@ def bloom_probe(
     )
     probed = df.crossJoin(F.broadcast(packed))
     hit = F.forall(
-        bloom_positions(F.col(key_col), m_bits, k),
+        family_positions(F.col(key_col), k, m_bits),
         lambda p: (
             F.element_at(F.col("_bloom"), (p / _WORD).cast("int") + 1)
             .bitwiseAND(_bit_mask(p))
@@ -171,19 +154,6 @@ def bloom_decontaminate(
 # DuckDB oracle builders (bit-for-bit reproductions)
 # ---------------------------------------------------------------------------
 
-def _positions_sql(key_expr: str, m_bits: int, k: int) -> str:
-    """DuckDB list expression mirroring bloom_positions."""
-    base = f"(('0x' || substr(md5({key_expr}), 1, 8))::BIGINT % {MINHASH_P})"
-    return (
-        "["
-        + ", ".join(
-            f"(({a} * {base} + {b}) % {MINHASH_P}) % {m_bits}"
-            for a, b in _hash_params(k)
-        )
-        + "]"
-    )
-
-
 def bloom_build_oracle_sql(
     history_sql: str, key_expr: str, m_bits: int, k: int
 ) -> str:
@@ -191,7 +161,7 @@ def bloom_build_oracle_sql(
     return f"""
     SELECT (pos // {_WORD})::INT AS word_idx,
            bit_or(1::BIGINT << (pos % {_WORD})::INT) AS bits
-    FROM (SELECT unnest({_positions_sql(key_expr, m_bits, k)}) AS pos
+    FROM (SELECT unnest({family_positions_sql(key_expr, k, m_bits)}) AS pos
           FROM ({history_sql}))
     GROUP BY 1
     """
@@ -211,7 +181,7 @@ def bloom_probe_oracle_sql(
     WITH bloom AS ({bloom_build_oracle_sql(history_sql, key_expr, m_bits, k)}),
     probe AS (
         SELECT {id_col} AS _pid,
-               unnest({_positions_sql(key_expr, m_bits, k)}) AS pos
+               unnest({family_positions_sql(key_expr, k, m_bits)}) AS pos
         FROM ({batch_sql}))
     SELECT p._pid AS {id_col},
            bool_and(coalesce(b.bits, 0) & (1::BIGINT << (p.pos % {_WORD})::INT) <> 0)

@@ -37,7 +37,7 @@ from itertools import permutations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orion_spark.llm.dedup import MINHASH_P
+from orion_spark.llm.dedup import base_hash, base_hash_sql
 
 D_BUCKETS = 4  # hashed word buckets; +1 bias feature => 5x5 system
 
@@ -57,13 +57,7 @@ def _perm_terms(n: int):
 
 def _word_buckets(text: Column, d: int) -> Column:
     w = F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda x: x != "")
-    return F.transform(
-        w,
-        lambda x: (
-            F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint") % MINHASH_P
-        )
-        % d,
-    )
+    return F.transform(w, lambda x: base_hash(x) % d)
 
 
 def hashed_features(text: Column, d: int = D_BUCKETS) -> list[Column]:
@@ -164,7 +158,7 @@ def ridge_quality_scores(
 
 def _feats_sql(text_expr: str, d: int) -> list[str]:
     b = (
-        f"[(('0x' || substr(md5(x), 1, 8))::BIGINT % {MINHASH_P}) % {d} "
+        f"[{base_hash_sql('x')} % {d} "
         f"for x in string_split_regex(lower(trim({text_expr})), '\\s+') "
         f"if x <> '']"
     )

@@ -30,6 +30,37 @@ def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
+def base_hash(key: Column) -> Column:
+    """The family's input: a 32-bit md5 prefix of `key`, reduced mod P.
+    DuckDB twin: `base_hash_sql`."""
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % MINHASH_P
+
+
+def base_hash_sql(key_expr: str) -> str:
+    return f"(('0x' || substr(md5({key_expr}), 1, 8))::BIGINT % {MINHASH_P})"
+
+
+def family_positions(key: Column, n: int, modulus: int) -> Column:
+    """Array of the first `n` family hashes of `key`, each mod `modulus`
+    (Bloom bit positions, Count-Min buckets). DuckDB twin:
+    `family_positions_sql`."""
+    x = base_hash(key)
+    return F.array(
+        *[((F.lit(a) * x + F.lit(b)) % MINHASH_P) % modulus for a, b in _hash_params(n)]
+    )
+
+
+def family_positions_sql(key_expr: str, n: int, modulus: int) -> str:
+    x = base_hash_sql(key_expr)
+    return (
+        "["
+        + ", ".join(
+            f"(({a} * {x} + {b}) % {MINHASH_P}) % {modulus}" for a, b in _hash_params(n)
+        )
+        + "]"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -43,29 +74,16 @@ def spread_narrow_input(
     df: DataFrame, *cols: str, barrier: bool = True
 ) -> DataFrame:
     """Round-robin-spread a NARROW input (small parquet files arrive in
-    1-2 scan partitions) so a compute-bound projection that follows runs
-    on every core — and MATERIALIZE the spread rows (localCheckpoint,
-    blocks released on GC) so the optimizer cannot push the projection
-    back below the exchange onto the narrow scan. Round 11, measured on
-    minhash_lsh_pairs: with a bare `repartition(n)` the md5-per-shingle
-    projection collapses into the exchange's MAP side and runs in the 2
-    scan tasks (3.1 s of a 5 s query); the checkpoint barrier pins it
-    after the spread. Inputs that already arrive parallel (generated
-    fixtures, many-file tables at scale) pass through untouched — no
-    shuffle, no materialization — so this costs nothing at cluster scale
-    where scans are wide by construction.
+    1-2 scan partitions) so the compute-bound projection that follows
+    runs on every core; inputs that already arrive parallel pass through
+    untouched. `cols` projects the frame down first.
 
-    `cols` optionally projects the frame down first (only materialize
-    what downstream needs — guide §4/§6 column-pruning discipline).
-
-    `barrier=False` (round 11) skips the localCheckpoint: right when
-    the compute that must run spread sits above a Generate (explode) or
-    a Python eval node — operators Catalyst never pushes below an
-    exchange — so the bare conditional repartition is enough and the
-    materialization job is pure overhead (measured +0.4-0.9 s per query
-    at sf0.1 on the dsir/bm25/perplexity family). Keep the default
-    barrier for codegen'd PROJECTIONS (hash/fold chains), which
-    CollapseProject happily evaluates on the exchange's map side.
+    With `barrier` (the default) the spread rows are materialized
+    (localCheckpoint), because Catalyst would otherwise evaluate a
+    codegen'd projection (hash/fold chains) on the exchange's map side,
+    in the narrow scan tasks. `barrier=False` skips that job where the
+    compute sits above a Generate or a Python eval node, which are never
+    pushed below an exchange. Measurements: OPTIMIZATION_r11.md.
     """
     if cols:
         df = df.select(*cols)
@@ -116,12 +134,8 @@ def word_shingles(text: Column, k: int = 5) -> Column:
 
 
 def shingle_hashes(shingles: Column) -> Column:
-    """32-bit base hash per shingle (md5 prefix), reduced mod P."""
-    return F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-        % MINHASH_P,
-    )
+    """`base_hash` of each shingle."""
+    return F.transform(shingles, base_hash)
 
 
 def minhash_lanes(hashes: Column, num_hashes: int = 16) -> list[Column]:
@@ -144,6 +158,49 @@ def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
     return F.array(*minhash_lanes(hashes, num_hashes))
 
 
+def _band_pairs(
+    keys: DataFrame,
+    out_a: str,
+    out_b: str,
+    max_bucket_freq: int | None = None,
+) -> DataFrame:
+    """The one LSH blocking join: candidate pairs are rows of `keys`
+    `(_id, _band, _bv, ...)` sharing a `(_band, _bv)` bucket, returned
+    once each as distinct `(out_a, out_b)` with out_a < out_b. Any other
+    column of `keys` rides to both sides as `<col>_a` / `<col>_b`, so a
+    verify that needs only those columns joins nothing back.
+
+    `max_bucket_freq` drops buckets holding more than that many rows
+    before the join, bounding per-bucket fan-out at max_bucket_freq^2:
+    featureless payloads (flat images, silence) all hash alike and would
+    otherwise make the join quadratic. The cap is deterministic, so
+    oracles mirror it exactly; it is the only recall loss blocking adds.
+    """
+    if max_bucket_freq is not None:
+        freq = keys.groupBy("_band", "_bv").agg(F.count("*").alias("_n"))
+        keys = keys.join(
+            freq.where(F.col("_n") <= max_bucket_freq).select("_band", "_bv"),
+            ["_band", "_bv"],
+        )
+    carry = [c for c in keys.columns if c not in ("_id", "_band", "_bv")]
+    return (
+        keys.alias("l")
+        .join(
+            keys.alias("r"),
+            (F.col("l._band") == F.col("r._band"))
+            & (F.col("l._bv") == F.col("r._bv"))
+            & (F.col("l._id") < F.col("r._id")),
+        )
+        .select(
+            F.col("l._id").alias(out_a),
+            F.col("r._id").alias(out_b),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry],
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -158,43 +215,27 @@ def minhash_lsh_pairs(
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
     """
-    # small-file inputs arrive in one partition; the shingle/minhash
-    # projection is compute-bound (md5 per shingle), so spread it across the
-    # cluster before doing the work. Shingles AND signatures are
-    # materialized in one frame (localCheckpoint — released on GC, not
-    # pinned in the cache manager): they feed four branches (both sides of
-    # the band self-join, both sides of the verify join) that would
-    # otherwise each recompute the md5-per-shingle + 16-hash projection.
-    base = (
+    # shingles and signatures are materialized once (localCheckpoint):
+    # they feed both sides of the band join and both sides of the verify,
+    # which would otherwise each recompute the md5-per-shingle projection
+    sig = (
         spread_narrow_input(df, id_col, text_col)
         .select(
             F.col(id_col).alias("_id"), word_shingles(F.col(text_col), k).alias("_sh")
         )
         .where(F.size("_sh") > 0)
-    )
-    sig = base.withColumn(
-        "_sig", minhash_signature(shingle_hashes(F.col("_sh")), num_hashes)
-    ).localCheckpoint(eager=True)
-    base = sig  # downstream shingle consumers read the cached frame
-    # band explode: (band_index, band_value) bucket keys
-    bands = sig.select(
-        "_id",
-        F.posexplode("_sig").alias("_band", "_bv"),
-    )
-    cand = (
-        bands.alias("l")
-        .join(
-            bands.alias("r"),
-            (F.col("l._band") == F.col("r._band"))
-            & (F.col("l._bv") == F.col("r._bv"))
-            & (F.col("l._id") < F.col("r._id")),
+        .withColumn(
+            "_sig", minhash_signature(shingle_hashes(F.col("_sh")), num_hashes)
         )
-        .select(F.col("l._id").alias("doc_a"), F.col("r._id").alias("doc_b"))
-        .distinct()
+        .localCheckpoint(eager=True)
     )
-    sh_a = base.select(F.col("_id").alias("doc_a"), F.col("_sh").alias("_sh_a"))
-    sh_b = base.select(F.col("_id").alias("doc_b"), F.col("_sh").alias("_sh_b"))
-    verified = (
+    cand = _band_pairs(
+        sig.select("_id", F.posexplode("_sig").alias("_band", "_bv")),
+        "doc_a", "doc_b",
+    )
+    sh_a = sig.select(F.col("_id").alias("doc_a"), F.col("_sh").alias("_sh_a"))
+    sh_b = sig.select(F.col("_id").alias("doc_b"), F.col("_sh").alias("_sh_b"))
+    return (
         cand.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
         .withColumn(
@@ -205,7 +246,6 @@ def minhash_lsh_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    return verified
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
@@ -311,9 +351,7 @@ def minhash_signature_oracle_sql(
               FROM {table})
         WHERE len(w) >= {k}),
     hashed AS (
-        SELECT doc_id,
-               [('0x' || substr(md5(s), 1, 8))::BIGINT % {MINHASH_P}
-                for s in sh] AS hs
+        SELECT doc_id, [{base_hash_sql("s")} for s in sh] AS hs
         FROM docs)
     SELECT doc_id,
            array_to_string([{sig_exprs}], ',') AS signature
@@ -325,20 +363,28 @@ def minhash_lsh_oracle_sql(
     k: int = 5, threshold: float = 0.5, table: str = "documents",
     id_col: str = "doc_id", text_col: str = "text",
 ) -> str:
-    """Brute-force DuckDB ground truth for minhash_lsh_pairs: exact Jaccard
-    over ALL pairs (the LSH result must equal it on the test data)."""
+    """DuckDB ground truth for minhash_lsh_pairs: exact shingle Jaccard,
+    no MinHash. Only pairs sharing at least one shingle are verified; a
+    pair sharing none has Jaccard 0, so the result equals the all-pairs
+    comparison for every threshold > 0."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0 (got {threshold})")
     return f"""
-    WITH docs AS (
+    WITH docs AS MATERIALIZED (
         SELECT {id_col} AS id,
                list_distinct([array_to_string(w[i:i+{k - 1}], ' ')
                               for i in range(1, len(w) - {k} + 2)]) AS sh
         FROM (SELECT {id_col}, string_split_regex(lower(trim({text_col})), '\\s+') AS w
               FROM {table})
-        WHERE len(w) >= {k})
+        WHERE len(w) >= {k}),
+    shingles AS MATERIALIZED (SELECT id, unnest(sh) AS s FROM docs),
+    cand AS (
+        SELECT DISTINCT x.id AS a, y.id AS b
+        FROM shingles x JOIN shingles y ON x.s = y.s AND x.id < y.id)
     SELECT a.id AS doc_a, b.id AS doc_b,
            round(len(list_intersect(a.sh, b.sh))::DOUBLE /
                  len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-    FROM docs a JOIN docs b ON a.id < b.id
+    FROM cand c JOIN docs a ON c.a = a.id JOIN docs b ON c.b = b.id
     WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
           len(list_distinct(a.sh || b.sh)) >= {threshold}
     """
@@ -396,8 +442,8 @@ def banded_chunking(sig_bits: int, max_hamming: int) -> tuple[int, int]:
     signature into n_chunks = max_hamming + 1 chunks — by pigeonhole, any
     pair within max_hamming differing bits has at least one chunk with
     ZERO differing bits, so the chunk-bucket equi-join recalls every true
-    pair (round-8 advice: 4 chunks at max_hamming=6 silently missed pairs
-    whose differing bits spread across all chunks). Returns
+    pair (fewer chunks miss pairs whose differing bits spread across all
+    of them). Returns
     (chunk_bits, n_chunks) with chunk_bits = ceil(sig_bits / n_chunks);
     the top chunk may cover fewer real bits, which is harmless (the high
     zero bits compare equal on both engines)."""
@@ -418,20 +464,12 @@ def hamming_banded_pairs(
     out_a: str = "id_a",
     out_b: str = "id_b",
 ) -> DataFrame:
-    """Shared blocking+verify core for every Hamming near-dup family
-    (text SimHash, image dHash, audio envelope fingerprint — round-8
-    advice: one helper, not per-modality copies): signatures are blocked
-    on chunk-bucket equi-joins with the guaranteed-recall chunking
-    (banded_chunking — n_chunks = max_hamming + 1, so blocking loses NO
-    true pair), candidates verified by exact Hamming distance.
-
-    Hot-bucket cap (`max_bucket_freq`, optional — the winnowing
-    max_doc_freq discipline): chunk values carried by more than
-    max_bucket_freq signatures are dropped before the self-join, bounding
-    per-bucket fan-out at max_bucket_freq^2 — featureless payloads (flat
-    images, silence, empty text) all hash near zero and would otherwise
-    drive the bucket join quadratic. The cap is the ONLY recall loss and
-    is deterministic, so oracles mirror it exactly.
+    """Blocking + verify for every Hamming near-dup family (text SimHash,
+    image dHash, audio and video fingerprints): each signature is cut
+    into the `banded_chunking` chunks (max_hamming + 1 of them, so
+    blocking loses no true pair), candidates come from `_band_pairs` on
+    (chunk index, chunk value) with its optional hot-bucket cap, and are
+    verified by exact Hamming distance.
 
     Returns (out_a, out_b, hamming) with out_a < out_b,
     hamming <= max_hamming. Signatures must be non-negative (<= 63 bits).
@@ -450,31 +488,10 @@ def hamming_banded_pairs(
                     for c in range(n_chunks)
                 ]
             )
-        ).alias("_chunk", "_cv"),
+        ).alias("_band", "_bv"),
     )
-    if max_bucket_freq is not None:
-        freq = chunks.groupBy("_chunk", "_cv").agg(F.count("*").alias("_n"))
-        chunks = chunks.join(
-            freq.where(F.col("_n") <= max_bucket_freq).select("_chunk", "_cv"),
-            ["_chunk", "_cv"],
-        )
-    cand = (
-        chunks.alias("l")
-        .join(
-            chunks.alias("r"),
-            (F.col("l._chunk") == F.col("r._chunk"))
-            & (F.col("l._cv") == F.col("r._cv"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias(out_a),
-            F.col("r._id").alias(out_b),
-            F.col("l._sg").alias("_ha"),
-            F.col("r._sg").alias("_hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
+    cand = _band_pairs(chunks, out_a, out_b, max_bucket_freq)
+    hamming = F.bit_count(F.col("_sg_a").bitwiseXOR(F.col("_sg_b")))
     return (
         cand.withColumn("hamming", hamming.cast("bigint"))
         .where(F.col("hamming") <= max_hamming)
@@ -524,10 +541,9 @@ def simhash_near_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     max_hamming: int = 8,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance through the shared
-    guaranteed-recall banding core (hamming_banded_pairs): every pair of
-    60-bit signatures within max_hamming is recalled by construction
-    (pigeonhole over max_hamming + 1 chunks), then verified exactly. No
+    """Near-dup pairs by SimHash hamming distance through
+    `hamming_banded_pairs`: every pair of 60-bit signatures within
+    max_hamming is recalled by construction, then verified exactly. No
     hot-bucket cap here — exact-duplicate text clusters are real near-dup
     signal for this operator (the capped variants live in the multimodal
     paths where featureless payloads are noise)."""
@@ -585,47 +601,25 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    n_planes: int = 0,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine similarity:
-    (id_a, id_b, cosine) with id_a < id_b and round(cosine, 6) >= threshold.
+    """Exact all-pairs embedding near-dup: (id_a, id_b, cosine) with
+    id_a < id_b and round(cosine, 6) >= threshold. O(n^2): the reference
+    the blocked `embedding_near_dup_pairs_banded` is checked against.
 
     Semantic-dedup complement to the lexical family (minhash/simhash):
     paraphrased or re-encoded duplicates share no shingles but sit at
-    cosine ~1 in embedding space.
-
-    n_planes == 0 runs the exact all-pairs scan (the ground-truth baseline;
-    O(n^2), validation scale only). n_planes > 0 blocks candidates with the
-    same deterministic random-hyperplane signature (`dim` required) before
-    the identical exact verify — the 100 TB path: the self-join runs
-    per-bucket (shuffle on the signature key) instead of as a cross join,
-    and two vectors at cosine >= t collide with probability
-    (1 - arccos(t)/pi)^n_planes per signature. The dot product is a
-    JVM-side zip_with + sequential fold (identical summation order to the
-    DuckDB oracle -> bit-identical doubles, same trick as brute_force_topk).
+    cosine ~1 in embedding space. The dot product is a JVM-side zip_with
+    + sequential fold (identical summation order to the DuckDB oracle ->
+    bit-identical doubles, same trick as brute_force_topk).
     """
-    from orion_spark.llm.similarity import cosine, hyperplane_signature
+    from orion_spark.llm.similarity import cosine
 
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col).alias("_id"), v.alias("_v"))
-    if n_planes > 0:
-        if dim is None:
-            raise ValueError("dim is required when n_planes > 0")
-        base = base.withColumn(
-            "_sig", hyperplane_signature(F.col("_v"), dim, n_planes)
-        )
-        left, right = base.alias("l"), base.alias("r")
-        cand = left.join(
-            right,
-            (F.col("l._sig") == F.col("r._sig"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-    else:
-        left, right = base.alias("l"), base.alias("r")
-        cand = left.join(right, F.col("l._id") < F.col("r._id"))
     return (
-        cand.select(
+        base.alias("l")
+        .join(base.alias("r"), F.col("l._id") < F.col("r._id"))
+        .select(
             F.col("l._id").alias("id_a"),
             F.col("r._id").alias("id_b"),
             F.round(cosine(F.col("l._v"), F.col("r._v")), 6).alias("cosine"),
@@ -643,16 +637,14 @@ def embedding_near_dup_pairs_banded(
     n_bands: int = 12,
     planes_per_band: int = 8,
 ) -> DataFrame:
-    """The 100 TB path for embedding near-dup: banded random-hyperplane
-    LSH blocking, then an exact cosine verify over the candidates only.
+    """Embedding near-dup at scale: banded random-hyperplane LSH blocking
+    through `_band_pairs`, then an exact cosine verify over the
+    candidates only.
 
-    Per band b, each vector gets a `planes_per_band`-bit signature from a
-    disjoint plane family; candidates are pairs sharing (band, signature)
-    in AT LEAST one band — an ordinary equi-join on the exploded
-    (band, sig) key, so the plan is shuffle-hash/sort-merge, never a
-    BroadcastNestedLoopJoin, and bucket size bounds the pair fan-out
-    (n/2^planes per bucket in expectation). Pair recall per the standard
-    SimHash analysis: a pair at cosine c collides in one band with
+    Band b gives each vector a `planes_per_band`-bit signature from
+    planes b*planes_per_band .. (b+1)*planes_per_band - 1
+    (`similarity.plane_coefficients`); candidates share (band, signature)
+    in at least one band. A pair at cosine c collides in one band with
     probability (1 - arccos(c)/pi)^planes_per_band; across 12 bands of 8
     planes, a true near-dup at c >= 0.99 is missed with probability
     < 1e-8, and an EXACT scaled copy (sign-identical projections) is
@@ -660,29 +652,17 @@ def embedding_near_dup_pairs_banded(
     fold-ordered cosine as the exact variant, so false candidates can't
     leak through.
     """
-    import hashlib
-
-    from orion_spark.llm.similarity import cosine
+    from orion_spark.llm.similarity import cosine, plane_coefficients
 
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col).alias("_id"), v.alias("_v"))
     # All band signatures in ONE nested-HOF expression over a single flat
-    # coefficient literal. Building 96 separate fold expressions through
-    # the Python Column API costs ~10s of py4j roundtrips per query; one
-    # expr() string + one lit(list) is two calls. Coefficient derivation
-    # is IDENTICAL to similarity.hyperplane_signature (md5('plane:p:i')
-    # prefix / 2^32 - 0.5, plane id = band*planes_per_band + p), so the
-    # buckets match the non-banded path's plane families.
+    # coefficient literal: building the folds through the Python Column
+    # API costs ~10s of py4j roundtrips per query; one expr() string is
+    # one call.
     ppb, nb = planes_per_band, n_bands
     flat = ",".join(
-        repr(
-            int(hashlib.md5(f"plane:{p}:{i}".encode()).hexdigest()[:8], 16)
-            / float(1 << 32)
-            - 0.5
-        )
-        + "D"
-        for p in range(nb * ppb)
-        for i in range(dim)
+        f"{c!r}D" for p in range(nb * ppb) for c in plane_coefficients(p, dim)
     )
     sig_expr = F.expr(
         f"""
@@ -695,26 +675,16 @@ def embedding_near_dup_pairs_banded(
                                    (b * {ppb} + p) * {dim} + 1, {dim}),
                              (x, c) -> x * c),
                     cast(0.0 AS DOUBLE), (a, x) -> a + x) > 0,
-                shiftleft(1L, p), 0L)) AS _sig))
+                shiftleft(1L, p), 0L)) AS _bv))
         """
     )
     sigs = base.select("_id", F.explode(sig_expr).alias("_bs")).select(
-        "_id", "_bs._band", "_bs._sig"
+        "_id", "_bs._band", "_bs._bv"
     )
-    # candidate ids only (narrow) -> distinct -> join vectors back for the
+    # candidate ids only (narrow), then the vectors joined back for the
     # verify: candidates << n^2, so two id-joins beat carrying the vectors
     # through every band
-    cand = (
-        sigs.alias("l")
-        .join(
-            sigs.alias("r"),
-            (F.col("l._band") == F.col("r._band"))
-            & (F.col("l._sig") == F.col("r._sig"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_pairs(sigs, "id_a", "id_b")
     va = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     vb = base.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
     return (

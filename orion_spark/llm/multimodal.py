@@ -26,33 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.llm.dedup import hamming_banded_pairs, spread_narrow_input
+
 MEDIA_SCHEMA = (
     "media_id bigint, media_type string, payload binary, "
     "width int, height int, duration_ms int"
 )
-
-
-def _spread_narrow(ids: DataFrame) -> DataFrame:
-    """Round-robin-spread a NARROW frame before a mapInPandas stage
-    (round 11, guide §2.2/§4): compact parquet scans arrive in 1-2
-    partitions, and a MapInPandas node is never pushed below an
-    exchange, so without this a payload GENERATOR stage runs every
-    payload on one core (measured at sf1: 7.6 s of a 12 s video query
-    in ONE task) while the old unconditional repartition in the
-    near-dup operators only spread the DECODE. Spreading the id-only
-    frame before generation means the payload bytes themselves never
-    cross a shuffle at all (guide §8: move heavy bytes zero times,
-    decide with small rows); the decode-side spread in the near-dup
-    operators goes through the same probe so already-spread synthesized
-    payloads are NOT reshuffled. Already-wide inputs pass through
-    untouched, so at cluster scale (many-file tables) this is inert.
-    No materialization barrier is needed: unlike a codegen'd
-    projection, a Python eval stage cannot collapse below the
-    exchange."""
-    parallelism = ids.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() >= max(2, parallelism // 2):
-        return ids
-    return ids.repartition(parallelism)
 
 
 def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -636,7 +615,7 @@ def synthesize_media(
                 payloads.append(enc(w, h, vals))
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -873,7 +852,7 @@ def synthesize_audio(
                 payloads.append(_wav_bytes(samples, nch, rate))
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -1205,7 +1184,7 @@ def synthesize_video(
                 )
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -1261,33 +1240,6 @@ def image_dhash(
     )
 
 
-def _hamming_banded_pairs(
-    sigs: DataFrame,
-    sig_col: str,
-    id_col: str,
-    sig_bits: int,
-    max_hamming: int,
-    max_bucket_freq: int,
-) -> DataFrame:
-    """Perceptual-hash near-dup blocking (image dHash, audio envelope,
-    video sequence hash): delegates to the ONE shared banded-Hamming core
-    in llm/dedup.py (round-8 advice — the simhash and multimodal paths
-    previously carried drift-prone copies). Guaranteed recall by
-    construction (n_chunks = max_hamming + 1 pigeonhole chunking); the
-    deterministic hot-bucket cap — featureless payloads (flat images,
-    silence) all hash near zero and would otherwise drive the bucket join
-    quadratic — is the only recall loss and is mirrored by the oracles.
-
-    Returns (media_a, media_b, hamming) with media_a < media_b,
-    hamming <= max_hamming."""
-    from orion_spark.llm.dedup import hamming_banded_pairs
-
-    return hamming_banded_pairs(
-        sigs, sig_col, id_col, sig_bits=sig_bits, max_hamming=max_hamming,
-        max_bucket_freq=max_bucket_freq, out_a="media_a", out_b="media_b",
-    )
-
-
 def image_near_dup_pairs(
     media: DataFrame,
     payload_col: str = "payload",
@@ -1295,25 +1247,22 @@ def image_near_dup_pairs(
     max_hamming: int = 6,
     max_bucket_freq: int = 64,
 ) -> DataFrame:
-    """Image near-duplicate pairs: 56-bit dHash signatures through the
-    shared guaranteed-recall blocking + Hamming verify core
-    (_hamming_banded_pairs; cap/blocking semantics documented there).
-
-    The decode spread is CONDITIONAL (round 11): synthesized media
-    already arrives round-robin-spread by _spread_narrow, and an
-    unconditional repartition here would shuffle every payload byte a
-    second time for nothing; only a genuinely narrow media frame (e.g.
-    a single-file real-media table) still pays the spread."""
+    """Image near-duplicate pairs: 56-bit dHash signatures through
+    `dedup.hamming_banded_pairs` (blocking, hot-bucket cap and verify
+    documented there). Only a narrow media frame is spread before the
+    decode: synthesized media already arrives spread, and payload bytes
+    should cross no shuffle they do not need (OPTIMIZATION_r11.md)."""
     sigs = (
         image_dhash(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col,
         )
         .localCheckpoint(eager=True)
     )
-    return _hamming_banded_pairs(
+    return hamming_banded_pairs(
         sigs, "dhash", id_col, sig_bits=56,
         max_hamming=max_hamming, max_bucket_freq=max_bucket_freq,
+        out_a="media_a", out_b="media_b",
     )
 
 
@@ -1468,19 +1417,19 @@ def audio_near_dup_pairs(
     max_bucket_freq: int = 64,
 ) -> DataFrame:
     """Audio near-duplicate pairs: 63-bit envelope fingerprints through
-    the shared guaranteed-recall blocking + Hamming verify core
-    (_hamming_banded_pairs; cap/blocking semantics documented there).
-    Conditional decode spread: see image_near_dup_pairs."""
+    `dedup.hamming_banded_pairs`. Decode spread: see
+    image_near_dup_pairs."""
     sigs = (
         audio_fingerprint(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col,
         )
         .localCheckpoint(eager=True)
     )
-    return _hamming_banded_pairs(
+    return hamming_banded_pairs(
         sigs, "afp", id_col, sig_bits=63,
         max_hamming=max_hamming, max_bucket_freq=max_bucket_freq,
+        out_a="media_a", out_b="media_b",
     )
 
 
@@ -1688,20 +1637,19 @@ def video_near_dup_pairs(
     frame_step: int = 2,
 ) -> DataFrame:
     """Video near-duplicate pairs: 56-bit majority-folded frame dHash
-    sequences through the shared guaranteed-recall blocking + Hamming
-    verify core (_hamming_banded_pairs) — completing the
-    image/audio/video modality set on ONE blocking core.
-    Conditional decode spread: see image_near_dup_pairs."""
+    sequences through `dedup.hamming_banded_pairs`. Decode spread: see
+    image_near_dup_pairs."""
     sigs = (
         video_fingerprint(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col, frame_step=frame_step,
         )
         .localCheckpoint(eager=True)
     )
-    return _hamming_banded_pairs(
+    return hamming_banded_pairs(
         sigs, "vhash", id_col, sig_bits=56,
         max_hamming=max_hamming, max_bucket_freq=max_bucket_freq,
+        out_a="media_a", out_b="media_b",
     )
 
 

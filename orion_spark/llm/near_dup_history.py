@@ -14,7 +14,7 @@ universal-hash minima → band key (band_index, minimum). A probe doc
 collides with history iff ANY of its `num_hashes` band keys exists in
 the store; P(miss) at Jaccard j is (1-j)^num_hashes (~4e-7 at j=0.6,
 num_hashes=16). Because batch and stream share the constants in
-`dedup._hash_params`, a document the batch dedup would pair with the
+`dedup.minhash_lanes`, a document the batch dedup would pair with the
 history is exactly a document the gate drops.
 
 Scale / lifecycle shape (deliberately different from the Bloom bitmap):

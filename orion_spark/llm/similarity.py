@@ -258,42 +258,35 @@ def ivf_topk(
 # LSH (random hyperplane) bucketing — the scale path
 # ---------------------------------------------------------------------------
 
-def hyperplane_signature(
-    vec: Column, dim: int, n_planes: int = 16, plane_offset: int = 0
-) -> Column:
-    """Sign bits against n_planes deterministic pseudo-random hyperplanes.
-    Plane coefficients come from md5(plane,coord) — reproducible anywhere,
-    no stored model. Returns a bigint bucket id. ``plane_offset`` selects a
-    disjoint plane family, so banded LSH derives independent per-band
-    signatures from the same generator."""
+def plane_coefficients(plane: int, dim: int) -> list[float]:
+    """Coefficients of deterministic pseudo-random hyperplane `plane`:
+    md5('plane:<plane>:<i>') prefix / 2^32 - 0.5 for i < dim, exact in
+    doubles, so DuckDB recomputes them bit for bit (lsh_topk_oracle_sql).
+    Computed at plan-build time: one list literal per plane keeps the
+    expression tree and the py4j traffic flat."""
     import hashlib
 
+    return [
+        int(hashlib.md5(f"plane:{plane}:{i}".encode()).hexdigest()[:8], 16)
+        / float(1 << 32)
+        - 0.5
+        for i in range(dim)
+    ]
+
+
+def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16) -> Column:
+    """Sign bits against hyperplanes 0 .. n_planes - 1
+    (`plane_coefficients`): reproducible anywhere, no stored model.
+    Returns a bigint bucket id."""
     bits = []
-    for p0 in range(n_planes):
-        p = p0 + plane_offset
-        # identical values to the original Catalyst-side derivation
-        # conv(substring(md5('plane:p:i'),1,8),16,10)/2^32 - 0.5, but
-        # computed ONCE at plan-build time: the expression-tree version
-        # cost O(dim * planes) analyzer/codegen work per query, and the
-        # per-element F.lit form cost O(dim * planes) py4j roundtrips —
-        # one list-literal call per plane keeps both flat
-        coeffs = F.lit(
-            [
-                int(hashlib.md5(f"plane:{p}:{i}".encode()).hexdigest()[:8], 16)
-                / float(1 << 32)
-                - 0.5
-                for i in range(dim)
-            ]
-        )
+    for p in range(n_planes):
         proj = F.aggregate(
-            F.zip_with(vec, coeffs, lambda x, c: x * c),
+            F.zip_with(vec, F.lit(plane_coefficients(p, dim)), lambda x, c: x * c),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         bits.append(
-            # bit index is the LOCAL plane index p0 — the offset only picks
-            # the plane family, it must not push the shift past 63 bits
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("bigint"), p0)).otherwise(
+            F.when(proj > 0, F.shiftleft(F.lit(1).cast("bigint"), p)).otherwise(
                 F.lit(0).cast("bigint")
             )
         )

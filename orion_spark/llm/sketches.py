@@ -21,27 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orion_spark.llm.dedup import MINHASH_P, _hash_params
+from orion_spark.llm.dedup import family_positions, family_positions_sql
 
 CM_DEPTH = 4
 CM_WIDTH = 1024
-
-
-def _base_hash(key: Column) -> Column:
-    return (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % MINHASH_P
-    )
-
-
-def _buckets(key: Column, depth: int, width: int) -> Column:
-    """Array of `depth` bucket indices for a key (row i uses family hash i)."""
-    x = _base_hash(key)
-    return F.array(
-        *[
-            ((F.lit(a) * x + F.lit(b)) % MINHASH_P) % width
-            for a, b in _hash_params(depth)
-        ]
-    )
 
 
 def _corpus_words(df: DataFrame, text_col: str) -> DataFrame:
@@ -67,7 +50,7 @@ def cm_build(
     words = _corpus_words(df, text_col)
     return (
         words.select(
-            F.posexplode(_buckets(F.col("word"), depth, width)).alias(
+            F.posexplode(family_positions(F.col("word"), depth, width)).alias(
                 "row", "bucket"
             )
         )
@@ -97,7 +80,7 @@ def cm_estimate(
     side takes one explode + one groupBy on its own key."""
     exploded = probes.select(
         word_col,
-        F.posexplode(_buckets(F.col(word_col), depth, width)).alias(
+        F.posexplode(family_positions(F.col(word_col), depth, width)).alias(
             "row", "bucket"
         ),
     )
@@ -138,11 +121,7 @@ def cm_topk_accuracy_oracle_sql(
     width: int = CM_WIDTH,
 ) -> str:
     """DuckDB reproduction from the same hash constants."""
-    base = f"(('0x' || substr(md5(word), 1, 8))::BIGINT % {MINHASH_P})"
-    bucket_list = "[" + ", ".join(
-        f"(({a} * {base} + {b}) % {MINHASH_P}) % {width}"
-        for a, b in _hash_params(depth)
-    ) + "]"
+    bucket_list = family_positions_sql("word", depth, width)
     return f"""
     WITH words AS (
         SELECT x AS word

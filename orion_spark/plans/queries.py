@@ -2362,9 +2362,10 @@ def dedup_clusters_q(spark, sf_dir):
 
 @query("dedup_simhash")
 def dedup_simhash_q(spark, sf_dir):
-    """SimHash near-dup pairs, 15-bit-chunk blocked. Oracle (registered at
-    module bottom) recomputes signatures + the exact candidate/verify
-    contract in DuckDB, so this is fully hash-checked, not rows-only."""
+    """SimHash near-dup pairs, blocked on max_hamming + 1 signature
+    chunks. Oracle (registered at module bottom) recomputes signatures
+    and every pair within max_hamming in DuckDB, so this is fully
+    hash-checked, not rows-only."""
     from orion_spark.llm import dedup as DD
 
     docs = _t(spark, sf_dir, "documents")
@@ -2434,21 +2435,21 @@ def multimodal_frame_sample_q(spark, sf_dir):
     return MM.frame_sample_plan(media, every_ms=1000)
 
 
-@query("dedup_embedding_cosine")
-def dedup_embedding_cosine_q(spark, sf_dir):
-    """Embedding-cosine near-duplicate detection on the SCALE path: banded
-    random-hyperplane LSH blocking + exact cosine verify (no
-    BroadcastNestedLoopJoin anywhere in the plan — candidates come from an
-    equi-join on the exploded (band, signature) key). The synthetic
-    embeddings carry no organic near-dups at the 0.95 operating point, so
-    the query injects deterministic ones: a ×2-scaled copy of each
-    vec_id < 50 (scaling by a power of two is exact in IEEE arithmetic, so
-    the copy's projections are sign-identical and its cosine is exactly
-    1.0 — LSH recall 1 by construction, and the DuckDB oracle reproduces
-    the same injection + exact all-pairs, making the hash check
-    non-trivial: 50 expected pairs, not 0)."""
-    from orion_spark.llm import dedup as DD
+# Every embedding plus a ×2-scaled copy of each vec_id < 50 (id + 100000):
+# the synthetic embeddings carry no organic near-dups at 0.95, and scaling
+# by a power of two is exact in IEEE arithmetic, so a copy's projections
+# are sign-identical (LSH recall 1) and its cosine to the original is
+# exactly 1.0.
+_SCALED_COPIES_SQL = """(
+    SELECT vec_id, embedding::DOUBLE[] AS embedding FROM embeddings
+    UNION ALL
+    SELECT vec_id + 100000 AS vec_id,
+           list_transform(embedding::DOUBLE[], x -> x * 2) AS embedding
+    FROM embeddings WHERE vec_id < 50)"""
 
+
+def _with_scaled_copies(spark, sf_dir):
+    """Spark twin of _SCALED_COPIES_SQL: (vec_id, embedding array<double>)."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -2456,8 +2457,21 @@ def dedup_embedding_cosine_q(spark, sf_dir):
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
     )
+    return emb.unionByName(copies)
+
+
+@query("dedup_embedding_cosine")
+def dedup_embedding_cosine_q(spark, sf_dir):
+    """Embedding-cosine near-duplicate detection on the SCALE path: banded
+    random-hyperplane LSH blocking + exact cosine verify (no
+    BroadcastNestedLoopJoin anywhere in the plan — candidates come from an
+    equi-join on the exploded (band, signature) key), over the embeddings
+    with scaled copies injected (_SCALED_COPIES_SQL): 50 expected pairs,
+    not 0, and the oracle is the exact all-pairs answer."""
+    from orion_spark.llm import dedup as DD
+
     return DD.embedding_near_dup_pairs_banded(
-        emb.unionByName(copies), dim=64, threshold=0.95
+        _with_scaled_copies(spark, sf_dir), dim=64, threshold=0.95
     )
 
 
@@ -2473,31 +2487,19 @@ def dedup_embedding_cosine_exact_q(spark, sf_dir):
     return DD.embedding_near_dup_pairs(emb, threshold=0.4)
 
 
-_SEMANTIC_PAIRS_SQL = """
-    SELECT id_a AS doc_a, id_b AS doc_b FROM (
-        WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-        v AS (
-            SELECT vec_id, ev FROM v0
-            UNION ALL
-            SELECT vec_id + 100000 AS vec_id,
-                   list_transform(ev, x -> x * 2) AS ev
-            FROM v0 WHERE vec_id < 50)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM v a JOIN v b ON a.vec_id < b.vec_id
-        WHERE round(
-            list_sum([a.ev[i] * b.ev[i] for i in range(1, len(a.ev) + 1)]) /
-            (sqrt(list_sum([a.ev[i] * a.ev[i] for i in range(1, len(a.ev) + 1)])) *
-             sqrt(list_sum([b.ev[i] * b.ev[i] for i in range(1, len(b.ev) + 1)]))),
-            6) >= 0.95)
-"""
-
-
 def _register_semantic_clusters():
-    from orion_spark.llm.dedup import dedup_clusters_oracle_sql_doubling
+    from orion_spark.llm.dedup import (
+        dedup_clusters_oracle_sql_doubling,
+        embedding_near_dup_oracle_sql,
+    )
+
+    pairs_sql = f"""
+    SELECT id_a AS doc_a, id_b AS doc_b
+    FROM ({embedding_near_dup_oracle_sql(0.95, table=_SCALED_COPIES_SQL)})"""
 
     @query(
         "dedup_semantic_clusters",
-        dedup_clusters_oracle_sql_doubling(_SEMANTIC_PAIRS_SQL),
+        dedup_clusters_oracle_sql_doubling(pairs_sql),
     )
     def dedup_semantic_clusters_q(spark, sf_dir):
         """The full semantic-dedup decision pipeline composed end-to-end:
@@ -2505,32 +2507,16 @@ def _register_semantic_clusters():
         feed connected components, so every document maps to its
         cluster's minimum id — the keep/drop assignment a 100 TB corpus
         dedup actually applies. Oracle: the same injection + exact
-        all-pairs inside a recursive-CTE reachability ground truth."""
+        all-pairs inside the unrolled components oracle."""
         from orion_spark.llm import dedup as DD
 
-        emb = _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        copies = emb.where(F.col("vec_id") < 50).select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
-        )
         pairs = DD.embedding_near_dup_pairs_banded(
-            emb.unionByName(copies), dim=64, threshold=0.95
+            _with_scaled_copies(spark, sf_dir), dim=64, threshold=0.95
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         return DD.dedup_clusters(pairs)
 
 
 _register_semantic_clusters()
-
-
-_SEMDEDUP_SOURCE_SQL = """
-    SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000 AS vec_id,
-           list_transform(embedding::DOUBLE[], x -> x * 2) AS ev
-    FROM embeddings WHERE vec_id < 50
-"""
 
 
 def _register_semdedup():
@@ -2541,7 +2527,7 @@ def _register_semdedup():
         semdedup_oracle_sql(
             n_clusters=semdedup_k_sql("SELECT COUNT(*) FROM v"),
             threshold=0.4,
-            source_sql=_SEMDEDUP_SOURCE_SQL,
+            source_sql=f"SELECT vec_id, embedding AS ev FROM {_SCALED_COPIES_SQL}",
         ),
     )
     def dedup_semdedup_prune_q(spark, sf_dir):
@@ -2565,15 +2551,8 @@ def _register_semdedup():
         exercised at every scale."""
         from orion_spark.llm import dedup as DD
 
-        emb = _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        copies = emb.where(F.col("vec_id") < 50).select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
-        )
         return DD.semdedup_prune(
-            emb.unionByName(copies), n_clusters=None, threshold=0.4
+            _with_scaled_copies(spark, sf_dir), n_clusters=None, threshold=0.4
         )
 
 
@@ -3878,26 +3857,9 @@ ORACLES["dedup_minhash_lsh"] = minhash_lsh_oracle_sql(k=5, threshold=0.5)
 ORACLES["dedup_embedding_cosine_exact"] = embedding_near_dup_oracle_sql(
     threshold=0.4
 )
-# scale-path query: same exact all-pairs oracle over the corpus PLUS the
-# deterministic scaled-copy injection — the banded LSH result must equal
-# the exact answer (recall 1 on sign-identical copies by construction)
-ORACLES["dedup_embedding_cosine"] = """
-    WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-    v AS (
-        SELECT vec_id, ev FROM v0
-        UNION ALL
-        SELECT vec_id + 100000 AS vec_id, list_transform(ev, x -> x * 2) AS ev
-        FROM v0 WHERE vec_id < 50),
-    pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(
-                   list_sum([a.ev[i] * b.ev[i] for i in range(1, len(a.ev) + 1)]) /
-                   (sqrt(list_sum([a.ev[i] * a.ev[i] for i in range(1, len(a.ev) + 1)])) *
-                    sqrt(list_sum([b.ev[i] * b.ev[i] for i in range(1, len(b.ev) + 1)]))),
-                   6) AS cosine
-        FROM v a JOIN v b ON a.vec_id < b.vec_id)
-    SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.95
-"""
+ORACLES["dedup_embedding_cosine"] = embedding_near_dup_oracle_sql(
+    0.95, table=_SCALED_COPIES_SQL
+)
 ORACLES["llm_curation_funnel"] = f"""
     WITH {_FUNNEL_STATS_SQL.strip()},
     near_pairs AS ({minhash_lsh_oracle_sql(k=5, threshold=0.5)}),

@@ -46,6 +46,7 @@ full-recompute oracle over the same merged data.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,47 +121,52 @@ def node_qc_partials(nodes: DataFrame) -> DataFrame:
 _PARTIAL_FNS = {"edges": edge_qc_partials, "nodes": node_qc_partials}
 
 
+def _write_partials(
+    spark: SparkSession,
+    bundle_path: str,
+    subdir: str,
+    partials: Callable[[DataFrame], DataFrame],
+    touched: list[int] | None = None,
+) -> str:
+    """Write `partials(bundle rows)` under `<bundle>/<subdir>`,
+    partitioned by SHARD_COL. With `touched=None`, or before any partials
+    exist, it rebuilds them from one grouped scan of the bundle. Otherwise
+    it recomputes only the touched shards (partition-pruned read) and
+    dynamically overwrites only those partitions — O(touched shards), not
+    O(bundle); an empty `touched` starts no job."""
+    out = os.path.join(bundle_path, subdir)
+    full = touched is None or not os.path.isdir(out)
+    if not full and not touched:
+        return out
+    if full:
+        df = read_parquet(spark, bundle_path, merge_schema=True)
+    else:
+        df = read_shards(spark, bundle_path, touched)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "static" if full else "dynamic")
+    try:
+        partials(df).write.mode("overwrite").partitionBy(SHARD_COL).parquet(out)
+    finally:
+        spark.conf.set(key, prev)
+    return out
+
+
 def write_qc_partials(
     spark: SparkSession, bundle_path: str, kind: str
 ) -> str:
     """Full partials (re)build: one grouped scan of the bundle."""
-    df = read_parquet(spark, bundle_path, merge_schema=True)
-    out = os.path.join(bundle_path, PARTIALS_DIR)
-    (
-        _PARTIAL_FNS[kind](df)
-        .write.mode("overwrite")
-        .partitionBy(SHARD_COL)
-        .parquet(out)
-    )
-    return out
+    return _write_partials(spark, bundle_path, PARTIALS_DIR, _PARTIAL_FNS[kind])
 
 
 def refresh_qc_partials(
     spark: SparkSession, bundle_path: str, touched: list[int], kind: str
 ) -> str:
-    """Recompute partials for ONLY the touched shards (partition-pruned
-    bundle read) and dynamically overwrite only those partials
-    partitions — O(touched shards), not O(bundle). Call with the shard
-    list `upsert_sharded_bundle` returned; an empty list refreshes
-    nothing."""
-    out = os.path.join(bundle_path, PARTIALS_DIR)
-    if not os.path.isdir(out):
-        return write_qc_partials(spark, bundle_path, kind)
-    if not touched:
-        return out
-    df = read_shards(spark, bundle_path, touched)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            _PARTIAL_FNS[kind](df)
-            .write.mode("overwrite")
-            .partitionBy(SHARD_COL)
-            .parquet(out)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return out
+    """Recompute partials for ONLY the touched shards — call with the
+    shard list `upsert_sharded_bundle` returned (`_write_partials`)."""
+    return _write_partials(
+        spark, bundle_path, PARTIALS_DIR, _PARTIAL_FNS[kind], touched
+    )
 
 
 def qc_totals(spark: SparkSession, bundle_path: str) -> DataFrame:
@@ -233,36 +239,19 @@ def edge_hll_partials(edges: DataFrame, lg_k: int = 12) -> DataFrame:
 def write_hll_partials(
     spark: SparkSession, bundle_path: str, lg_k: int = 12
 ) -> str:
-    out = os.path.join(bundle_path, HLL_PARTIALS_DIR)
-    (
-        edge_hll_partials(read_parquet(spark, bundle_path, merge_schema=True), lg_k)
-        .write.mode("overwrite")
-        .partitionBy(SHARD_COL)
-        .parquet(out)
+    return _write_partials(
+        spark, bundle_path, HLL_PARTIALS_DIR, lambda df: edge_hll_partials(df, lg_k)
     )
-    return out
 
 
 def refresh_hll_partials(
     spark: SparkSession, bundle_path: str, touched: list[int], lg_k: int = 12
 ) -> str:
     """Partition-pruned refresh — same contract as refresh_qc_partials."""
-    out = os.path.join(bundle_path, HLL_PARTIALS_DIR)
-    if not os.path.isdir(out):
-        return write_hll_partials(spark, bundle_path, lg_k)
-    df = read_shards(spark, bundle_path, touched)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            edge_hll_partials(df, lg_k)
-            .write.mode("overwrite")
-            .partitionBy(SHARD_COL)
-            .parquet(out)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return out
+    return _write_partials(
+        spark, bundle_path, HLL_PARTIALS_DIR,
+        lambda df: edge_hll_partials(df, lg_k), touched,
+    )
 
 
 def knowledge_source_hll_totals(

@@ -130,7 +130,10 @@ def curated_dedup_sink(
     but is ordinary static work on a micro-batch; the LM count tables
     are the stream-static side, read once per batch and
     vocabulary-sized. This is the production shape — the model artifact
-    refreshes on its own cadence, the stream just joins it.
+    refreshes on its own cadence, the stream just joins it. Either
+    setting without the other raises ValueError: a gate that filters
+    nothing must not pass for one that does. The same holds for the DSIR
+    pair below.
 
     `dsir_model_path` + `min_log_weight` add the DSIR target-likeness
     gate the same way: score each batch against a PERSISTED log-ratio
@@ -200,6 +203,15 @@ def curated_dedup_sink(
     batch's lifetime so a gate's count executes only the increment since
     the previous gate and the final write reads the last cache — one
     pass over the funnel total, not one full re-execution per gate."""
+    for path_arg, path, bound_arg, bound in (
+        ("lm_model_path", lm_model_path, "max_bits_per_token", max_bits_per_token),
+        ("dsir_model_path", dsir_model_path, "min_log_weight", min_log_weight),
+    ):
+        if (path is None) != (bound is None):
+            raise ValueError(
+                f"{path_arg} and {bound_arg} must be set together "
+                f"(got {path_arg}={path!r}, {bound_arg}={bound!r})"
+            )
     if near_dup_store_path is not None:
         import json as _json
         import warnings
@@ -318,7 +330,7 @@ def curated_dedup_sink(
                 .where(~F.col("bloom_hit"))
                 .drop("bloom_hit"),
             )
-        if lm_model_path is not None and max_bits_per_token is not None:
+        if lm_model_path is not None:
             from orion_spark.llm.textstats import score_with_lm_model
 
             scores = score_with_lm_model(
@@ -327,7 +339,7 @@ def curated_dedup_sink(
             b = _mark(
                 "lm_gate", b.join(scores.select("doc_id"), "doc_id", "left_semi")
             )
-        if dsir_model_path is not None and min_log_weight is not None:
+        if dsir_model_path is not None:
             from orion_spark.llm.dsir import score_with_dsir_model
 
             w = score_with_dsir_model(

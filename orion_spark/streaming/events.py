@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orion_spark.sources.kgx import read_parquet
-
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -81,38 +79,11 @@ def event_edges(events: DataFrame) -> DataFrame:
     )
 
 
-def merge_upsert_sink(bundle_path: str, checkpoint: str):
-    """foreachBatch sink: each micro-batch of edges is merged into the
-    persisted bundle with the batch merge engine (A3 semantics), giving an
-    incrementally-maintained KGX bundle.
-
-    Note: rewrite-on-merge per batch; at scale the target would be a
-    Delta/Iceberg MERGE INTO, but the merge SEMANTICS (the hard part) are
-    identical and live in orion_spark.operators.merge.
-    """
-    from orion_spark.operators.merge import merge_edges
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            existing = read_parquet(spark, bundle_path)
-            combined = existing.unionByName(batch_df, allowMissingColumns=True)
-        except Exception:
-            combined = batch_df
-        merged = merge_edges(combined.drop("ts"))
-        merged.write.mode("overwrite").parquet(bundle_path + "_tmp")
-        read_parquet(spark, bundle_path + "_tmp").write.mode("overwrite").parquet(
-            bundle_path
-        )
-
-    return _process
-
-
 def merge_upsert_sink_incremental(bundle_path: str, n_shards: int = 64):
     """foreachBatch sink over a hash-sharded bundle
     (sinks/incremental.py): each micro-batch rewrites only the shard
-    partitions its subjects touch — O(delta), not O(bundle), per batch.
-    This is the production form of merge_upsert_sink; the first batch
+    partitions its subjects touch — O(delta), not O(bundle), per batch,
+    through the crash-atomic staged-swap commit. The first batch
     bootstraps the sharded layout."""
     import os
 

@@ -653,3 +653,26 @@ def test_touched_shards_is_one_job_and_an_empty_delta_changes_nothing(
     assert INC.upsert_sharded_edges(spark, empty, path, n_shards=16) == []
     QCI.refresh_qc_partials(spark, path, [], "edges")
     assert _tree(path) == before
+
+
+def test_empty_partials_refresh_starts_no_job(spark, tmp_path):
+    """An empty touched list refreshes neither partials table: no Spark
+    job starts and no file changes."""
+    from orion_spark.sinks import qc_incremental as QCI
+
+    path = str(tmp_path / "bundle")
+    INC.write_sharded_bundle(merge_edges(_edges(spark, _base_rows())), path,
+                             ["subject"], n_shards=16)
+    QCI.write_qc_partials(spark, path, "edges")
+    QCI.write_hll_partials(spark, path)
+    before = _tree(path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("empty-refresh", "empty refresh")
+    try:
+        QCI.refresh_qc_partials(spark, path, [], "edges")
+        QCI.refresh_hll_partials(spark, path, [])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("empty-refresh")) == []
+    assert _tree(path) == before

@@ -226,18 +226,6 @@ def test_embedding_near_dup_exact(spark):
     assert got == {(1, 2), (1, 3), (2, 3), (4, 5)}
 
 
-def test_embedding_near_dup_lsh_blocked_matches_exact(spark):
-    # near-identical vectors land in the same hyperplane bucket, so the
-    # blocked scale path recovers exactly the exact-scan pairs here
-    exact = DD.embedding_near_dup_pairs(_emb(spark), threshold=0.999)
-    blocked = DD.embedding_near_dup_pairs(
-        _emb(spark), threshold=0.999, n_planes=8, dim=4
-    )
-    assert {(r.id_a, r.id_b, r.cosine) for r in blocked.collect()} == {
-        (r.id_a, r.id_b, r.cosine) for r in exact.collect()
-    }
-
-
 def test_embedding_near_dup_banded_matches_exact(spark):
     """Banded LSH (the registered scale path) must reproduce the exact
     answer on both synthetic clusters and the real embeddings table with
@@ -1896,6 +1884,63 @@ def test_hamming_banded_pairs_guaranteed_recall_property(spark):
         df, "sig", "sid", sig_bits=56, max_hamming=4
     ).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in found] == [(0, 1, 4)]
+
+
+def test_near_dup_families_share_one_blocking_kernel(spark, monkeypatch):
+    """MinHash, SimHash, image dHash and banded embedding near-dup all
+    block through `dedup._band_pairs`."""
+    from orion_spark.llm import multimodal as MM
+
+    calls = []
+    kernel = DD._band_pairs
+
+    def spy(keys, out_a, out_b, max_bucket_freq=None):
+        calls.append((out_a, out_b, max_bucket_freq))
+        return kernel(keys, out_a, out_b, max_bucket_freq)
+
+    monkeypatch.setattr(DD, "_band_pairs", spy)
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy cat")],
+        "doc_id long, text string",
+    )
+    assert [(r.doc_a, r.doc_b) for r in DD.minhash_lsh_pairs(
+        docs, threshold=0.5).collect()] == [(1, 2)]
+    DD.simhash_near_pairs(docs).collect()
+    media = MM.synthesize_media(
+        spark.range(8).select(F.col("id").alias("media_id")), near_dup_groups=4
+    )
+    MM.image_near_dup_pairs(media).collect()
+    DD.embedding_near_dup_pairs_banded(_emb(spark), dim=4).collect()
+    assert calls == [
+        ("doc_a", "doc_b", None),
+        ("doc_a", "doc_b", None),
+        ("media_a", "media_b", 64),
+        ("id_a", "id_b", None),
+    ]
+
+
+def test_family_positions_match_duckdb_twin(spark):
+    """The Spark hash family and its SQL twin give the same positions."""
+    import duckdb
+
+    keys = ["", "a", "the quick brown fox", "ünïcödé", "12345"]
+    for n, modulus in ((4, 1 << 20), (4, 1024), (7, 13)):
+        got = {
+            r.k: list(r.pos)
+            for r in spark.createDataFrame([(k,) for k in keys], "k string")
+            .select("k", DD.family_positions(F.col("k"), n, modulus).alias("pos"))
+            .collect()
+        }
+        want = {
+            k: list(pos)
+            for k, pos in duckdb.execute(
+                f"SELECT k, {DD.family_positions_sql('k', n, modulus)} "
+                "FROM (SELECT unnest($1::VARCHAR[]) AS k)",
+                [keys],
+            ).fetchall()
+        }
+        assert got == want, (n, modulus)
 
 
 def test_vectorized_decoder_matches_pure_python_reference():

@@ -3,6 +3,7 @@ memory sink — deterministic)."""
 
 import datetime
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -53,20 +54,36 @@ def test_streaming_dedup(spark, tmp_path):
 
 
 def test_merge_upsert_sink(spark, tmp_path):
+    """The incremental sink under a real foreachBatch stream: the first
+    file bootstraps the sharded bundle, the second upserts into it."""
+    from orion_spark.sinks.incremental import read_sharded_bundle
+
     src = str(tmp_path / "events_src3")
     bundle = str(tmp_path / "bundle_edges")
     ckpt = str(tmp_path / "ckpt")
     _write_events(spark, src)
-    stream = SE.event_edges(SE.read_event_stream(spark, src))
+    # a later file repeating event 3
+    spark.createDataFrame(
+        [Row(event_id=3, ts=datetime.datetime(2024, 1, 1, 1, 5), user_id=2,
+             event_type="view", value=3.0, props="{}")],
+        SE.EVENTS_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = SE.event_edges(
+        SE.read_event_stream(spark, src, max_files_per_trigger=1)
+    )
     q = (
-        stream.writeStream.foreachBatch(SE.merge_upsert_sink(bundle, ckpt))
+        stream.writeStream.foreachBatch(
+            SE.merge_upsert_sink_incremental(bundle, n_shards=4)
+        )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    merged = spark.read.parquet(bundle)
-    # 4 raw edge rows, the duplicated event_id=1 rows merge to one edge
+    # batch 0 bootstraps, batch 1 upserts
+    assert max(p["batchId"] for p in q.recentProgress) == 1
+    merged = read_sharded_bundle(spark, bundle)
+    # 5 raw edge rows; the repeated event_id=1 and event_id=3 rows merge
     assert merged.count() == 3
     assert "id" in merged.columns  # assigned merge key
 
@@ -661,3 +678,24 @@ def test_near_dup_r1_drop_gate_warns(spark, tmp_path):
         _w.simplefilter("error")
         C.curated_dedup_sink(spark, str(tmp_path / "o4"), str(tmp_path / "c4"),
                              near_dup_store_path=p4)
+
+
+@pytest.mark.parametrize(
+    "gate",
+    [
+        {"lm_model_path": "lm"},
+        {"max_bits_per_token": 9.0},
+        {"dsir_model_path": "dsir"},
+        {"min_log_weight": 0.0},
+    ],
+    ids=["lm_model_only", "max_bits_only", "dsir_model_only", "min_weight_only"],
+)
+def test_curation_gate_half_set_raises(spark, tmp_path, gate):
+    """A model gate given its model without its bound (or the reverse)
+    fails when the sink is built instead of filtering nothing."""
+    from orion_spark.streaming import curation as C
+
+    with pytest.raises(ValueError, match="must be set together"):
+        C.curated_dedup_sink(
+            spark, str(tmp_path / "out"), str(tmp_path / "ckpt"), **gate
+        )
