@@ -4,12 +4,18 @@ the whole-graph iterative family a large-scale graph pipeline needs,
 reusing the same nodes/edges data model).
 
 Scale design: each iteration is one broadcast-or-shuffle join plus one
-aggregate. Lineage follows one of two policies:
+aggregate. Lineage follows one of three policies:
 
 - eager per round (`eager_rounds`: k-core, k-truss, label propagation,
   BFS, connected components, and the ChEBI role closure in
   plans/parsers.py): every round's result is materialized with
-  `localCheckpoint(eager=True)` before the next round reads it;
+  `localCheckpoint(eager=True)` before the next round reads it. Label
+  propagation's first round needs no join (every label is still its
+  node's id): it is one group-by, checkpointed, and `eager_rounds` runs
+  the rest;
+- one input checkpoint (`triangle_count` and its sampled sibling): the
+  degree table, orientation, adjacency intersect and summary aggregate
+  are one plan over the checkpointed edges;
 - lazy (`pagerank`, `random_walks`): the rounds stay one plan, which the
   final action (or, for the walks, one checkpoint of the step union over
   lazily persisted steps) runs in a single pass.
@@ -203,15 +209,21 @@ def _intersect(oriented: DataFrame) -> DataFrame:
     arrays and two equi-joins of the edges against them; the wedges are
     enumerated inside array_intersect's hash probe and never become rows.
     The adjacency side auto-broadcasts when its estimate fits and is a
-    shuffled join on the node key otherwise. An edge whose head points at
-    nothing closes no triangle and is dropped by the inner join."""
+    shuffled join on the node key otherwise. The tail join is a left
+    join, equal to an inner one since every non-null tail has an
+    adjacency row: a left join can only build on the adjacency side, so
+    adaptive execution never lets whichever of the edges' and the
+    adjacency's concurrent stages finishes first pick the build side (and
+    with it the job count). An edge whose head points at nothing closes
+    no triangle and is dropped by the inner head join."""
+    oriented = oriented.where(F.col("src").isNotNull())
     adj = oriented.groupBy("src").agg(
         F.array_sort(F.collect_list("dst")).alias("_nbrs")
     )
     au = adj.select(F.col("src").alias("_u"), F.col("_nbrs").alias("_nu"))
     av = adj.select(F.col("src").alias("_v"), F.col("_nbrs").alias("_nv"))
     return (
-        oriented.join(au, F.col("src") == F.col("_u"))
+        oriented.join(au, F.col("src") == F.col("_u"), "left")
         .join(av, F.col("dst") == F.col("_v"))
         .select("src", "dst", F.array_intersect("_nu", "_nv").alias("_common"))
     )
@@ -229,26 +241,34 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
 
     Counts with `_intersect`; plan history in OPTIMIZATION_r11.md.
 
-    Returns one row: n_nodes, n_edges, n_triangles.
+    One eager job, the checkpoint of `pairs` (it also carries
+    `triangle_count_sampled`'s edge-total observation). The degree table
+    and the orientation stay lazy: the final plan builds the degree
+    aggregate and reuses its exchange for both orientation joins. Those
+    are left joins of the non-null pairs, equal to inner joins because
+    every endpoint has a degree row; a left join can only build on the
+    degree side, so adaptive execution never races the pairs' shuffle
+    against the degree table's for the build side. The summary is ONE
+    global aggregate over the degree rows (deg, null) and the intersect
+    rows (null, |common|): no 1-row side is cross-joined to another, a
+    join whose broadcast ran as a job of its own only when one side's
+    stage finished first.
+
+    Returns one row: n_nodes, n_edges, n_triangles (n_edges is null on an
+    empty graph, n_triangles 0).
     """
-    # pairs feeds the degree table AND the orientation join; deg feeds the
-    # orientation twice plus the node/edge summary. Materialize both with
-    # localCheckpoint (GC-releasable once the frame is dropped, unlike a
-    # never-unpersisted cache pinned in the cache manager for the whole
-    # session) so the multi-referenced subtrees compute once. Re-spreading
+    # pairs feeds the degree table AND the orientation join. localCheckpoint,
+    # not cache: GC-releasable once the frame is dropped. Re-spreading
     # pairs after the checkpoint measured worse (OPTIMIZATION_r11.md,
     # "Blind alley ... checkpoint-then-re-spread").
     pairs = pairs.localCheckpoint(eager=True)
-    deg = node_degrees(pairs).localCheckpoint(eager=True)
-    # one aggregate gives both summary scalars: sum(deg) == 2|E| exactly
-    stats = deg.agg(
-        F.count("*").alias("n_nodes"),
-        F.floor(F.sum("deg") / 2).cast("bigint").alias("n_edges"),
-    )
+    deg = node_degrees(pairs)
     da = deg.select(F.col("node").alias("_na"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("_nb"), F.col("deg").alias("deg_b"))
-    with_deg = pairs.join(da, pairs["a"] == F.col("_na")).join(
-        db, pairs["b"] == F.col("_nb")
+    with_deg = (
+        pairs.where(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .join(da, F.col("a") == F.col("_na"), "left")
+        .join(db, F.col("b") == F.col("_nb"), "left")
     )
     # orient by (deg, id): strict total order because ids are unique
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
@@ -257,15 +277,22 @@ def triangle_count(pairs: DataFrame) -> DataFrame:
     oriented = with_deg.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    ).localCheckpoint(eager=True)
-    n_tri = (
-        _intersect(oriented)
-        .select(F.size("_common").alias("_c"))
+    )
+    tri = _intersect(oriented).select(
+        F.lit(None).cast("bigint").alias("deg"),
+        F.size("_common").alias("_c"),
+    )
+    # count(deg) is count(*) over the degree table (deg >= 1 on every
+    # degree row, null on every intersect row); sum(deg) == 2|E| exactly
+    return (
+        deg.select("deg", F.lit(None).cast("int").alias("_c"))
+        .unionByName(tri)
         .agg(
-            F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint").alias("n_triangles")
+            F.count("deg").alias("n_nodes"),
+            F.floor(F.sum("deg") / 2).cast("bigint").alias("n_edges"),
+            F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint").alias("n_triangles"),
         )
     )
-    return stats.crossJoin(n_tri)
 
 
 def _triangle_ctes(src: str) -> str:
@@ -578,8 +605,18 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
     round count is the bounded-cost variant (k rounds = k shuffles).
 
     `edges` needs src/dst columns; the graph is treated as undirected.
-    Returns (id, label) after `iterations` rounds (`eager_rounds`).
+    Returns (id, label) after `iterations` rounds; `iterations=0` returns
+    the start labels (id, id) of every non-null endpoint, and a negative
+    count raises ValueError.
+
+    Round 1 needs no join: every label is still its node's own id, so a
+    node's first label is the min of its non-null `sym` neighbours (its
+    own self-loop included), one group-by over `sym`. The null filter
+    keeps it equal to the join form, where a null neighbour joins no
+    label. That round is checkpointed and `eager_rounds` runs the rest.
     """
+    if iterations < 0:
+        raise ValueError(f"iterations must be >= 0, got {iterations}")
     # checkpoint the caller's edges once: it cuts their derivation (for
     # the KGX graph, all_edges and its lineitem dropDuplicates exchange)
     # out of sym's lineage, and the same job counts them for the layout
@@ -598,16 +635,24 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
         _self_looped(edges, "src", "dst")
         .repartition(n_parts, "b")
         .dropDuplicates()
-        # persist (NOT localCheckpoint): the cached InMemoryRelation keeps
-        # the hashpartitioning(b) metadata so each round's join shuffles
-        # only the small labels side; a localCheckpoint's LogicalRDD drops
-        # outputPartitioning (measured: the big side re-exchanges every
-        # round). The eager rounds are actions, so sym is unpersisted
-        # before returning — no session-lifetime storage pin.
-        .persist()
+    )
+    if iterations == 0:
+        return _own_labels(sym)
+    # persist (NOT localCheckpoint): the cached InMemoryRelation keeps
+    # the hashpartitioning(b) metadata so each round's join shuffles
+    # only the small labels side; a localCheckpoint's LogicalRDD drops
+    # outputPartitioning (measured: the big side re-exchanges every
+    # round). The eager rounds are actions, so sym is unpersisted
+    # before returning — no session-lifetime storage pin.
+    sym = sym.persist()
+    first = (
+        sym.where(F.col("b").isNotNull())
+        .groupBy(F.col("a").alias("id"))
+        .agg(F.min("b").alias("label"))
+        .localCheckpoint(eager=True)
     )
     labels = eager_rounds(
-        _own_labels(sym), lambda lab: _neighbour_min(sym, lab), iterations
+        first, lambda lab: _neighbour_min(sym, lab), iterations - 1
     )
     sym.unpersist()
     return labels

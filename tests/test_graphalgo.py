@@ -100,6 +100,110 @@ def test_triangle_count_known_graph(spark):
     assert (row.n_nodes, row.n_edges, row.n_triangles) == (5, 7, 4)
 
 
+def test_triangle_count_empty_graph(spark):
+    """No edges: one row, 0 nodes, a null edge count (the sum over no
+    degree rows), 0 triangles."""
+    from orion_spark.operators.graphalgo import triangle_count
+
+    pairs = spark.createDataFrame([], "a int, b int")
+    assert [tuple(r) for r in triangle_count(pairs).collect()] == [(0, None, 0)]
+
+
+def _checkpoint_rdds(df) -> set[int]:
+    """Ids of the checkpointed RDDs the physical plan of `df` scans."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves().iterator()
+    ids = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "RDDScanExec":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def test_triangle_count_plan_is_one_checkpoint_and_one_aggregate(spark):
+    """The input checkpoint is the only eager barrier: the degree table
+    and the orientation are scanned from it inside the final plan, and
+    the summary is one aggregate, with no cross join of 1-row sides."""
+    from orion_spark.operators.graphalgo import triangle_count
+
+    df = triangle_count(_k4_pendant(spark))
+    assert len(_checkpoint_rdds(df)) == 1
+    assert df.collect()[0].n_triangles == 4
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_triangle_count_job_count_repeats_under_aqe(spark):
+    """With adaptive execution on, the same count runs the same number
+    of jobs every time (the cross join it replaced broadcast in a job of
+    its own only when one 1-row side's stage finished first)."""
+    from orion_spark.operators.graphalgo import triangle_count
+
+    pairs = _k4_pendant(spark)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        counts = [
+            _jobs(spark, lambda: triangle_count(pairs).collect())[1]
+            for _ in range(5)
+        ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(set(counts)) == 1, counts
+
+
+def _lpa_fixture(spark):
+    """Two components (the path B-C-D-E-F and X-Y), a null endpoint on
+    Y, a (null, null) edge and an isolated self-loop S."""
+    return spark.createDataFrame(
+        [("C", "B"), ("D", "C"), ("E", "D"), ("F", "E"), ("X", "Y"),
+         ("Y", None), (None, None), ("S", "S")],
+        "src string, dst string",
+    )
+
+
+@pytest.mark.parametrize("iterations", [1, 2, 3])
+def test_label_propagation_first_round_equals_the_join_form(spark, iterations):
+    """Round 1 as a group-by gives the rows the all-join rounds give,
+    null id and all."""
+    from orion_spark.operators.graphalgo import (
+        _neighbour_min,
+        _own_labels,
+        _self_looped,
+        eager_rounds,
+        label_propagation_min,
+    )
+
+    edges = _lpa_fixture(spark)
+    sym = _self_looped(edges, "src", "dst").dropDuplicates()
+    want = eager_rounds(
+        _own_labels(sym), lambda lab: _neighbour_min(sym, lab), iterations
+    )
+    got = label_propagation_min(edges, iterations=iterations)
+    assert got.columns == ["id", "label"]
+    assert Counter(map(tuple, got.collect())) == Counter(
+        map(tuple, want.collect())
+    )
+    if iterations == 3:
+        assert dict(map(tuple, got.collect()))["F"] == "C"
+
+
+def test_label_propagation_zero_rounds_is_the_start_labels(spark):
+    """iterations=0 returns every non-null endpoint labelled with itself;
+    a negative round count is refused."""
+    from orion_spark.operators.graphalgo import label_propagation_min
+
+    edges = _lpa_fixture(spark)
+    got = sorted(map(tuple, label_propagation_min(edges, iterations=0).collect()))
+    assert got == [(n, n) for n in "BCDEFSXY"]
+    with pytest.raises(ValueError):
+        label_propagation_min(edges, iterations=-1)
+
+
 def test_label_propagation_converges_to_components(spark):
     """Two disjoint paths: after enough rounds every node carries its
     component's min id."""

@@ -1,13 +1,16 @@
-"""tools/merge_correctness_shards.py: reassembling sharded sweep artifacts.
+"""tools/merge_correctness_shards.py: reassembling sharded sweep artifacts,
+and the artifacts tools/check_correctness.py --json leaves behind.
 
-Pure-python (no Spark): fabricates per-shard --json records over the real
-registry names and checks the merged artifact is exactly what a single
-end-to-end tools/check_correctness.py --json run would have produced —
-registry-complete, registry-ordered, with duplicate/missing shard
-membership rejected loudly.
+The shard tests are pure-python (no Spark): they fabricate per-shard
+--json records over the real registry names and check the merged
+artifact is exactly what a single end-to-end tools/check_correctness.py
+--json run would have produced — registry-complete, registry-ordered,
+with duplicate/missing shard membership rejected loudly. The last test
+runs check_correctness.py itself on one query at sf0.001.
 """
 
 import json
+import os
 import subprocess
 import sys
 
@@ -76,3 +79,20 @@ def test_merge_rejects_duplicate_query(tmp_path):
     proc = _run(tmp_path / "merged.json", paths)
     assert proc.returncode != 0
     assert "more than one shard" in proc.stdout
+
+
+def test_check_correctness_json_leaves_no_partial(tmp_path):
+    """A complete `check_correctness.py --json OUT` run leaves OUT with
+    every record and no `OUT.partial` beside it."""
+    out = tmp_path / "out.json"
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "check_correctness.py"),
+         "--json", str(out), "/root/testdata/sf0.001",
+         "tpch_q6_forecast_revenue"],
+        capture_output=True, text=True, timeout=420,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    results = json.loads(out.read_text())["results"]
+    assert results["tpch_q6_forecast_revenue"]["hash_match"] is True
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["out.json"]

@@ -51,3 +51,19 @@ def test_deduped_flags_single_entry():
         "h#1, doc_id#2L ASC NULLS FIRST"
     )
     assert window_flags(two) == ["ContentKeyWindow(h)"]
+
+
+def test_stale_whitelist_entries_flag():
+    """A whitelist entry whose audited query no longer carries its
+    pattern is stale; an entry whose query still carries it, or was not
+    audited, is not."""
+    from plan_audit import WINDOW, stale_entries
+
+    bnlj = "BroadcastNestedLoopJoin"
+    assert stale_entries({"ann_cosine_topk": {bnlj}}) == []
+    assert stale_entries({"ann_cosine_topk": set()}) == [(bnlj, "ann_cosine_topk")]
+    assert stale_entries({"text_bm25_topk": {bnlj, WINDOW}}) == []
+    assert stale_entries({"text_bm25_topk": {bnlj}}) == [(WINDOW, "text_bm25_topk")]
+    # a query no whitelist names, or none audited, flags nothing
+    assert stale_entries({"graph_triangle_count": set()}) == []
+    assert stale_entries({}) == []

@@ -18,6 +18,7 @@ target scale, e.g. recursive-CTE reachability at sf0.1.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -70,18 +71,18 @@ def main() -> int:
     failures, passed, no_oracle, bounded = [], [], [], []
     records: dict[str, dict] = {}
 
-    def record(name, *, rows=None, orows=None, rm=None, sm=None, hm=None, err=None):
+    def record(name, *, rows=None, orows=None, rm=None, sm=None, hm=None,
+               err=None, **extra):
         records[name] = {
             "rows_match": rm, "schema_match": sm, "hash_match": hm,
-            "spark_rows": rows, "oracle_rows": orows, "err": err,
+            "spark_rows": rows, "oracle_rows": orows, "err": err, **extra,
         }
-
-    def flush_partial():
         # Long sweeps (sf0.1: hours of single-core DuckDB oracle time) are
-        # run as killable shards; dump after every query so a killed shard
+        # run as killable shards; dump after every record so a killed shard
         # keeps its finished records.  The .partial suffix marks the run as
-        # possibly incomplete — the final artifact is still written once at
-        # the end, and merge_correctness_shards.py validates completeness.
+        # possibly incomplete: the final artifact is written once at the
+        # end, which removes the .partial, and merge_correctness_shards.py
+        # validates completeness.
         if json_out:
             with open(json_out + ".partial", "w") as fh:
                 json.dump({"sf_dir": sf_dir, "results": records}, fh, indent=2)
@@ -89,7 +90,6 @@ def main() -> int:
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
-        flush_partial()
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -111,13 +111,9 @@ def main() -> int:
                     print(f"FAIL  {name}: bound check error: {str(e)[:300]}")
                     record(name, rows=len(sdf), err=f"bound: {str(e)[:300]}")
                     continue
-                records[name] = {
-                    "rows_match": None, "schema_match": None,
-                    "hash_match": None, "bound_ok": ok,
-                    "spark_rows": len(sdf), "oracle_rows": None,
-                    "err": None if ok else f"bound violated: {detail}",
-                    "bound_detail": detail,
-                }
+                record(name, rows=len(sdf),
+                       err=None if ok else f"bound violated: {detail}",
+                       bound_ok=ok, bound_detail=detail)
                 if ok:
                     bounded.append(name)
                     print(f"PASS  {name} (bound-checked: {detail}, "
@@ -178,6 +174,8 @@ def main() -> int:
     if json_out:
         with open(json_out, "w") as fh:
             json.dump({"sf_dir": sf_dir, "results": records}, fh, indent=2)
+        if os.path.exists(json_out + ".partial"):
+            os.remove(json_out + ".partial")
         print(f"wrote {json_out} ({len(records)} records)")
     return 1 if failures else 0
 

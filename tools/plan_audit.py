@@ -21,8 +21,10 @@ flags the patterns that do not survive scale:
     already bounded (e.g. rank over a TakeOrdered k-row frame).
 
 Intentional exceptions are whitelisted WITH the reason, so a new
-offender is a loud diff, not background noise. Exit code 1 on any
-non-whitelisted flag — usable as a CI gate.
+offender is a loud diff, not background noise. A whitelist entry whose
+audited query no longer carries its pattern is flagged too (it excuses
+nothing and would hide a later regression). Exit code 1 on any flag —
+usable as a CI gate.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -42,20 +44,13 @@ WHITELIST: dict[str, dict[str, str]] = {
         "ann_cosine_topk_fixed_batch": "same exact-scoring contract with a fixed 64-query broadcast batch — one candidate scan, O(|C|) per batch",
         "yeast_histone_gene_edges": "deliberate crossJoin of windows x 3-row broadcast PTM dim (yeast_histone_bins); the gene overlap itself is the bin-bucketed equi-join",
         "gse61888_like_edges": "same windows x PTM broadcast cross as yeast_histone_gene_edges; window assignment is the bin-bucketed point-interval equi-join",
-        "ann_lsh_topk": "bucket-limited pair scoring after LSH blocking",
         "ann_ivf_topk": "probe-list-limited pair scoring after IVF routing",
         "ann_ivf_topk_fixed": "broadcast centroid cross for assignment/probing (n_clusters rows) + non-equi self-pair filter — the IVF contract",
         "ann_ivf_index_upsert_search": "broadcast centroid cross for assignment/probing (n_clusters rows) + non-equi self-pair filter — the persisted-index IVF contract",
         "dedup_embedding_cosine_exact": "exact variant scores all pairs (dedup_embedding_cosine is the LSH-banded scale path, no BNLJ)",
         "tpch_q11_important_parts": "scalar-aggregate broadcast (1 row) joined under every group",
-        "tpch_q15_top_supplier": "scalar max (1 row) compared against every supplier revenue",
         "tpch_q22_sales_opportunity": "scalar aggregate (1 row) cross-multiplied against customers",
-        "qc_knowledge_source_breakdown": "denominator row (1 row) joined under every group",
-        "llm_curation_funnel": "funnel-total scalars (1 row each) joined per stage",
         "text_tfidf_top_terms": "corpus-size scalar (1 row) broadcast into the score expression",
-        "graph_triangle_count": "1-row summary aggregates combined into the output row",
-        "graph_triangle_count_sampled": "1-row summary aggregates (total-edge count x sampled-count row) combined into the output row",
-        "skew_triangle_doulion": "1-row summary aggregates (total-edge count x sampled-count row) combined into the output row",
         "text_ngram_lm_perplexity": "1-row LM constants (N, V) broadcast under every scored token",
         "text_ngram_lm_persisted": "1-row LM constants (N, V) broadcast under every scored token",
         "documents_drift_report": "1-row totals frame broadcast under the vocabulary-sized KL fold + 1-row x 1-row output combine",
@@ -72,13 +67,7 @@ WHITELIST: dict[str, dict[str, str]] = {
         "documents_bloom_fp_accounting": "same single-row Bloom bitmap broadcast as the history filter",
         "documents_quality_clf_scores": "1-row ridge weight vector broadcast onto the corpus for scoring",
     },
-    "ArrowEvalPython": {
-        "multimodal_decode_features": "real PPM/BMP byte decode is a declared mapInPandas boundary",
-        "multimodal_frame_sample": "frame sampling over binary payloads — same boundary",
-        "multimodal_audio_features": "real RIFF/WAVE PCM16 byte decode is a declared mapInPandas boundary",
-        "multimodal_resize_images": "nearest-neighbor thumbnail over real image bytes — same declared boundary",
-        "multimodal_video_metadata": "ISO-BMFF box-tree metadata parse — same declared boundary",
-    },
+    "ArrowEvalPython": {},
     "BatchEvalPython": {},
     "CartesianProduct": {},
 }
@@ -87,13 +76,6 @@ WHITELIST: dict[str, dict[str, str]] = {
 WINDOW_WHITELIST: dict[str, str] = {
     "text_bm25_topk": "GlobalWindow ranks an already-reduced frame: "
     "TakeOrderedAndProject(k=20) runs upstream, the window sees k rows",
-    "graph_walk_skipgrams": "degree-gated adjacency ranking: the src "
-    "window only sees srcs with outdeg <= WALK_HUB_DEGREE_THRESHOLD "
-    "(8192); hubs are broadcast-anti-joined out and ranked two-level "
-    "(graphalgo.random_walks)",
-    "skew_walk_skipgrams": "same degree gate; the 50k-spoke skewgraph "
-    "hub routes to the two-level path, certified by this query's full "
-    "value oracle in every sweep",
 }
 
 # partition-key base names that identify a content-derived window key
@@ -165,6 +147,20 @@ def window_flags(plan: str) -> list[str]:
     return sorted(set(flags))
 
 
+# the pattern name under which WINDOW_WHITELIST entries are checked
+WINDOW = "Window"
+
+
+def stale_entries(found: dict[str, set[str]]) -> list[tuple[str, str]]:
+    """(pattern, query) for every whitelist entry whose query was audited
+    (a key of `found`, mapped to the whitelisted patterns its plan
+    carries, with `WINDOW` for any window flag) and whose plan no longer
+    carries the pattern."""
+    entries = [(p, q) for p, allowed in WHITELIST.items() for q in allowed]
+    entries += [(WINDOW, q) for q in WINDOW_WHITELIST]
+    return sorted((p, q) for p, q in entries if q in found and p not in found[q])
+
+
 EXCHANGE_REPORT_THRESHOLD = 6
 
 
@@ -179,6 +175,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     failures = []
+    found: dict[str, set[str]] = {}
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
@@ -187,6 +184,9 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"plan compilation failed: {e}"))
             continue
+        found[name] = {p for p in WHITELIST if p in plan}
+        if window_flags(plan):
+            found[name].add(WINDOW)
         for pattern, allowed in WHITELIST.items():
             if pattern in plan:
                 if name in allowed:
@@ -218,6 +218,8 @@ def main() -> int:
         )
         if n_ex >= EXCHANGE_REPORT_THRESHOLD:
             print(f"note  {name}: {n_ex} shuffle Exchanges (review chain)")
+    for pattern, name in stale_entries(found):
+        failures.append((name, f"stale whitelist entry: no {pattern} in the plan"))
 
     if failures:
         print("\n== FLAGS ==")
