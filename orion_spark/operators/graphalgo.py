@@ -6,19 +6,18 @@ reusing the same nodes/edges data model).
 Scale design: each iteration is one broadcast-or-shuffle join plus one
 aggregate. Lineage follows one of three policies:
 
-- eager per round (`eager_rounds`: k-core, k-truss, label propagation,
-  BFS, connected components, and the ChEBI role closure in
-  plans/parsers.py): every round's result is materialized with
-  `localCheckpoint(eager=True)` before the next round reads it. Label
-  propagation's first round needs no join (every label is still its
-  node's id): it is one group-by, checkpointed, and `eager_rounds` runs
-  the rest;
+- eager per round (`eager_rounds`: k-core, k-truss, BFS, connected
+  components, and the ChEBI role closure in plans/parsers.py): every
+  round's result is materialized with `localCheckpoint(eager=True)`
+  before the next round reads it;
 - one input checkpoint (`triangle_count` and its sampled sibling): the
   degree table, orientation, adjacency intersect and summary aggregate
   are one plan over the checkpointed edges;
-- lazy (`pagerank`, `random_walks`): the rounds stay one plan, which the
-  final action (or, for the walks, one checkpoint of the step union over
-  lazily persisted steps) runs in a single pass.
+- lazy (`pagerank`, `label_propagation_min`, `random_walks`): the rounds
+  stay one plan, which the final action (or, for the walks, one
+  checkpoint of the step union over lazily persisted steps) runs in a
+  single pass. Label propagation's rounds share one exchange of the
+  symmetrized edges and shuffle only their aggregates.
 
 SCALE.md and OPTIMIZATION_r11.md record the measurements behind each.
 """
@@ -91,8 +90,7 @@ def eager_rounds(
     The eager per-round truncation is load-bearing: a round reads the
     previous round's result more than once (k-core's edges feed the degree
     aggregate and both semi-joins), so an untruncated plan grows
-    multiplicatively with the round count, and the 3-round single-plan
-    label propagation runs out of memory at sf0.1 (measured).
+    multiplicatively with the round count.
     localCheckpoint, not persist: the blocks go when the frame is dropped
     and nothing stays registered in the cache manager.
 
@@ -536,14 +534,20 @@ def _own_labels(sym: DataFrame) -> DataFrame:
     )
 
 
-def _neighbour_min(sym: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label round: each node takes the min label over its `sym`
-    neighbours, itself included through its self-loop."""
-    return (
-        sym.join(labels, sym["b"] == labels["id"])
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.min("label").alias("label"))
+def _neighbour_labels(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """(id, label): each labelled node's label offered to each of its
+    `sym` neighbours, itself included through its self-loop. `sym` is
+    symmetric, so joining on `a` and keying the offers on `b` reaches
+    the neighbours the mirrored form does, and a `sym` hash-partitioned
+    on `a` joins without an exchange of its own."""
+    return sym.join(labels, sym["a"] == labels["id"]).select(
+        F.col("b").alias("id"), "label"
     )
+
+
+def _min_label(rows: DataFrame) -> DataFrame:
+    """(id, label): the min label offered to each id in `rows`."""
+    return rows.groupBy("id").agg(F.min("label").alias("label"))
 
 
 # Path halving needs O(diameter) rounds, not O(log diameter) (Kiveris et
@@ -568,9 +572,9 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     never rise); decimal(38,0) keeps 1e9 labels of 1e18-scale ids from
     overflowing it. A null endpoint raises `NullEndpointError`.
 
-    Unlike label propagation, `sym` is checkpointed, not persisted
-    pre-partitioned on `b`: with the hop's self-join, that layout measured
-    90 builder jobs against 60 on graph_connected_components at sf0.01."""
+    `sym` is checkpointed, not persisted pre-partitioned on `b`: with the
+    hop's self-join, that layout measured 90 builder jobs against 60 on
+    graph_connected_components at sf0.01."""
     n_null = Observation()
     sym = (
         _self_looped(edges, src, dst)
@@ -584,7 +588,7 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         )
 
     def step(labels: DataFrame) -> DataFrame:
-        nbr = _neighbour_min(sym, labels)
+        nbr = _min_label(_neighbour_labels(sym, labels))
         hop = nbr.select(F.col("id").alias("_h"), F.col("label").alias("_hl"))
         return nbr.join(hop, nbr["label"] == hop["_h"]).select(
             "id", F.col("_hl").alias("label")
@@ -606,56 +610,42 @@ def label_propagation_min(edges: DataFrame, iterations: int = 3) -> DataFrame:
 
     `edges` needs src/dst columns; the graph is treated as undirected.
     Returns (id, label) after `iterations` rounds; `iterations=0` returns
-    the start labels (id, id) of every non-null endpoint, and a negative
-    count raises ValueError.
+    the start labels (id, id), and a negative count raises ValueError.
+    A null endpoint is no node: it labels no neighbour, and the null id
+    (present when an edge has a null endpoint) keeps a null label.
 
-    Round 1 needs no join: every label is still its node's own id, so a
-    node's first label is the min of its non-null `sym` neighbours (its
-    own self-loop included), one group-by over `sym`. The null filter
-    keeps it equal to the join form, where a null neighbour joins no
-    label. That round is checkpointed and `eager_rounds` runs the rest.
+    One lazy plan; the builder starts no job. `sym` holds both directions
+    of every non-null pair plus one self-loop per non-null endpoint, and
+    is hash-partitioned on `a` once: that exchange serves its dedup, round
+    1 (every label is still its node's id, so a node's first label is the
+    min of its `sym` neighbours, one group-by on `a`) and every later
+    round's join on `a`, so a later round shuffles only its aggregate.
+    The null id's row joins the last aggregate from the self-looped rows
+    with a null `a`; that filter stays above the explode, so the read
+    shares the edges' plan, and any exchange in it, with `sym`. Kept in
+    `sym`, the row would take a join-inferred `isnotnull(a)` into some
+    reads of `sym` and not others, and those reads would stop sharing
+    its exchange.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    # checkpoint the caller's edges once: it cuts their derivation (for
-    # the KGX graph, all_edges and its lineitem dropDuplicates exchange)
-    # out of sym's lineage, and the same job counts them for the layout
-    # below
-    n_edges = Observation()
-    edges = (
-        edges.select("src", "dst")
-        .observe(n_edges, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    # sym ≤ 3|E| rows: both directions + one self-loop per node
-    n_parts = _cached_join_parts(edges, 3 * n_edges.get["n"])
-    # the dedup after repartition("b") needs no exchange of its own.
-    # History: OPTIMIZATION_r11.md, "graph_label_propagation".
+    looped = _self_looped(edges, "src", "dst")
     sym = (
-        _self_looped(edges, "src", "dst")
-        .repartition(n_parts, "b")
+        looped.where(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .repartition("a")
         .dropDuplicates()
     )
+    null = F.lit(None).cast(sym.schema["a"].dataType)
+    null_id = looped.where(F.col("a").isNull()).select(
+        null.alias("id"), null.alias("label")
+    )
     if iterations == 0:
-        return _own_labels(sym)
-    # persist (NOT localCheckpoint): the cached InMemoryRelation keeps
-    # the hashpartitioning(b) metadata so each round's join shuffles
-    # only the small labels side; a localCheckpoint's LogicalRDD drops
-    # outputPartitioning (measured: the big side re-exchanges every
-    # round). The eager rounds are actions, so sym is unpersisted
-    # before returning — no session-lifetime storage pin.
-    sym = sym.persist()
-    first = (
-        sym.where(F.col("b").isNotNull())
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.min("b").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    labels = eager_rounds(
-        first, lambda lab: _neighbour_min(sym, lab), iterations - 1
-    )
-    sym.unpersist()
-    return labels
+        rows = _own_labels(sym)
+    else:
+        rows = sym.select(F.col("a").alias("id"), F.col("b").alias("label"))
+        for _ in range(iterations - 1):
+            rows = _neighbour_labels(sym, _min_label(rows))
+    return _min_label(rows.unionByName(null_id))
 
 
 def label_propagation_oracle_sql(edges_cte: str, iterations: int = 3) -> str:
@@ -700,10 +690,11 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> Data
         undirected(edges, "src", "dst", "a", "b")
         .distinct()
         .repartition("b")
-        # persist + unpersist-after-loop, same reasoning as
-        # label_propagation_min: cached partitioning metadata keeps the big
-        # side shuffle-once, and the eager rounds are the actions that
-        # make the final unpersist safe
+        # persist + unpersist-after-loop: the cached InMemoryRelation
+        # keeps the hashpartitioning(b) metadata, so each round's join
+        # shuffles only the small side (a localCheckpoint's scan drops
+        # it), and the eager rounds are the actions that make the final
+        # unpersist safe
         .persist()
     )
 
@@ -888,8 +879,8 @@ def random_walks(
 
     The adjacency is built once and persisted pre-partitioned on the
     join key; each of the `walk_length` rounds then shuffles only the
-    walk frontier (|starts| rows) against it — label_propagation_min's
-    reuse discipline. k steps = k bounded frontier joins, no per-round
+    walk frontier (|starts| rows) against it — bfs_distances' reuse
+    discipline. k steps = k bounded frontier joins, no per-round
     growth.
 
     Returns (walk_id, step, node) with step 0 = the start node.

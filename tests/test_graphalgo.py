@@ -156,52 +156,76 @@ def test_triangle_count_job_count_repeats_under_aqe(spark):
     assert len(set(counts)) == 1, counts
 
 
+# two components (the path B-C-D-E-F and X-Y), a null endpoint on Y, a
+# (null, null) edge and an isolated self-loop S
+_LPA_EDGES = [("C", "B"), ("D", "C"), ("E", "D"), ("F", "E"), ("X", "Y"),
+              ("Y", None), (None, None), ("S", "S")]
+
+
 def _lpa_fixture(spark):
-    """Two components (the path B-C-D-E-F and X-Y), a null endpoint on
-    Y, a (null, null) edge and an isolated self-loop S."""
-    return spark.createDataFrame(
-        [("C", "B"), ("D", "C"), ("E", "D"), ("F", "E"), ("X", "Y"),
-         ("Y", None), (None, None), ("S", "S")],
-        "src string, dst string",
-    )
+    """`_LPA_EDGES` as a local relation (no RDD scan in its plan)."""
+    def lit(v):
+        return "NULL" if v is None else f"'{v}'"
+
+    values = ", ".join(f"({lit(s)}, {lit(d)})" for s, d in _LPA_EDGES)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t(src, dst)")
 
 
-@pytest.mark.parametrize("iterations", [1, 2, 3])
-def test_label_propagation_first_round_equals_the_join_form(spark, iterations):
-    """Round 1 as a group-by gives the rows the all-join rounds give,
-    null id and all."""
+@pytest.mark.parametrize("iterations", [0, 1, 2, 3])
+def test_label_propagation_matches_the_oracle(spark, iterations):
+    """Null endpoints and all, every round count gives the DuckDB
+    oracle's rows: the null id keeps a null label and labels no one."""
+    import duckdb
+
     from orion_spark.operators.graphalgo import (
-        _neighbour_min,
-        _own_labels,
-        _self_looped,
-        eager_rounds,
         label_propagation_min,
+        label_propagation_oracle_sql,
     )
 
-    edges = _lpa_fixture(spark)
-    sym = _self_looped(edges, "src", "dst").dropDuplicates()
-    want = eager_rounds(
-        _own_labels(sym), lambda lab: _neighbour_min(sym, lab), iterations
-    )
-    got = label_propagation_min(edges, iterations=iterations)
+    got = label_propagation_min(_lpa_fixture(spark), iterations=iterations)
     assert got.columns == ["id", "label"]
-    assert Counter(map(tuple, got.collect())) == Counter(
-        map(tuple, want.collect())
-    )
-    if iterations == 3:
-        assert dict(map(tuple, got.collect()))["F"] == "C"
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lpa_edges (src VARCHAR, dst VARCHAR)")
+    con.executemany("INSERT INTO lpa_edges VALUES (?, ?)", _LPA_EDGES)
+    want = con.sql(label_propagation_oracle_sql(
+        "lp_edges AS (SELECT src, dst FROM lpa_edges)", iterations
+    )).fetchall()
+    assert Counter(map(tuple, got.collect())) == Counter(want)
+    assert (None, None) in want
 
 
 def test_label_propagation_zero_rounds_is_the_start_labels(spark):
-    """iterations=0 returns every non-null endpoint labelled with itself;
-    a negative round count is refused."""
+    """iterations=0 labels every endpoint, the null id included, with
+    itself; a negative round count is refused."""
     from orion_spark.operators.graphalgo import label_propagation_min
 
     edges = _lpa_fixture(spark)
-    got = sorted(map(tuple, label_propagation_min(edges, iterations=0).collect()))
-    assert got == [(n, n) for n in "BCDEFSXY"]
+    got = label_propagation_min(edges, iterations=0).collect()
+    assert {r.id for r in got} == {n for e in _LPA_EDGES for n in e}
+    assert all(r.id == r.label for r in got if r.id is not None)
     with pytest.raises(ValueError):
         label_propagation_min(edges, iterations=-1)
+
+
+def test_label_propagation_is_one_lazy_plan(spark):
+    """The builder starts no job, and the final plan shuffles the
+    symmetrized edges once: every other read of them is a reuse of that
+    exchange, and nothing is cached or checkpointed."""
+    from orion_spark.operators.graphalgo import label_propagation_min
+
+    edges = _lpa_fixture(spark)
+    df, n_jobs = _jobs(spark, lambda: label_propagation_min(edges, iterations=3))
+    assert n_jobs == 0
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    sym = [ln for ln in final.splitlines() if "REPARTITION_BY_COL" in ln]
+    assert len([ln for ln in sym if "ReusedExchange" not in ln]) == 1, final
+    # round 1's group-by and rounds 2 and 3's joins each read sym
+    assert len(sym) == 3, final
+    assert "InMemoryRelation" not in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_label_propagation_converges_to_components(spark):

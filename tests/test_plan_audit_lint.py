@@ -1,6 +1,7 @@
 """Unit contract for tools/plan_audit.py's window lint: content-derived
 window partition keys (the one shuffle AQE cannot skew-split) and
-global no-partition windows are flagged; bounded entity keys pass.
+global no-partition windows are flagged; bounded entity keys pass. The
+node patterns are pinned too: Python over Arrow batches is flagged.
 
 The full-registry audit (python tools/plan_audit.py) is the CI gate;
 this pins the classifier itself so a parser regression can't silently
@@ -67,3 +68,19 @@ def test_stale_whitelist_entries_flag():
     # a query no whitelist names, or none audited, flags nothing
     assert stale_entries({"graph_triangle_count": set()}) == []
     assert stale_entries({}) == []
+
+
+def test_map_in_pandas_and_arrow_plans_flag(spark):
+    """mapInPandas / mapInArrow plans print `MapInPandas` / `MapInArrow`
+    (no `ArrowEvalPython`): each is flagged unless the query is
+    whitelisted under that pattern."""
+    from plan_audit import pattern_flags
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    pandas = plan(spark.range(4).mapInPandas(lambda it: it, schema="id long"))
+    arrow = plan(spark.range(4).mapInArrow(lambda it: it, schema="id long"))
+    assert pattern_flags("new_query", pandas) == ["MapInPandas"]
+    assert pattern_flags("new_query", arrow) == ["MapInArrow"]
+    assert pattern_flags("multimodal_decode_features", pandas) == []
